@@ -24,39 +24,7 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE post-shuffle coalescing floor: STOCK 1 MB default (r17). The
-      // r16 global 64k floor kept extra post-shuffle partitions alive on
-      // tiny iterative frames (LBFGS fits, CC label rounds) and the extra
-      // per-job task dispatch regressed whole code-untouched families on
-      // the driver bench (pu 0.66x, q 0.80x — VERDICT r16); r17 re-measured
-      // the same on this box (stock floor: dedup 0.83x, q/pu 0.89x). The
-      // few genuinely compute-dense small-byte frames (PCA/whiten scans)
-      // are instead spread with an explicit pinned width at their source
-      // (Spread.pinIfNarrow), which AQE cannot re-coalesce — guide §1.2:
-      // fix the algorithm's partitioning, not a global config. Env knob
-      // kept for cluster overrides; at production scale every shuffle
-      // partition sits far above any floor, so the knob is inert there.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED", "1m"))
-      // AQE runtime SMJ->SHJ conversion: DEFAULT OFF ("0" = stock). The
-      // r16 128m threshold shipped with no runtime plan evidence and the
-      // r17 full-bench A/B (bench_r17_mid1 vs bench_r17_shj0) measured
-      // off as equal-or-better (208.7s vs 213.0s total, geomean 0.972,
-      // no family regression) — an unverified knob stays out of the
-      // comparison surface (VERDICT r16 item 2). Env knob kept so a
-      // cluster with measured SMJ-sort pain can re-enable it.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "0"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession()
     // Harness-only (not library policy): every releaseStragglers unpersist
     // of a locally-checkpointed RDD makes Spark 4.1.2 WARN "lineage has been
     // truncated…" — benign (present in fully green runs), but a burst of

@@ -1,46 +1,42 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev utility: dump `.explain("formatted")` of named queries to files —
   * the plan evidence the optimization rounds commit under plans/rNN/.
   * Usage: sbt "runMain graft.PlanDump <outDir> <suffix> <query> [query...]"
-  * writes <outDir>/<query>_<suffix>.txt for each query.
+  * writes <outDir>/<query>_<suffix>.txt for each query, and exits 1 if any
+  * query failed to plan.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED", "1m"))
-      // AQE runtime SMJ->SHJ conversion: DEFAULT OFF ("0" = stock) — see
-      // Bench.scala for the r17 A/B that retired the r16 128m setting.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "0"))
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Tables.localSession()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     Files.createDirectories(Paths.get(outDir))
-    for (q <- args.drop(2)) {
+    val failed = args.drop(2).filterNot { q =>
       try {
         val df = SparkEntry.queries(q)(spark, sf)
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         Files.writeString(Paths.get(s"$outDir/${q}_$suffix.txt"), plan)
         println(s"[plandump] wrote $q")
+        true
       } catch { case e: Throwable =>
         println(s"[plandump] $q FAILED: ${e.getMessage}")
+        false
+      } finally {
+        spark.catalog.clearCache()
+        CheckpointUtil.releaseStragglers()
       }
-      spark.catalog.clearCache()
-      CheckpointUtil.releaseStragglers()
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[plandump] ${failed.length} queries FAILED: " +
+        failed.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

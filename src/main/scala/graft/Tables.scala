@@ -22,8 +22,8 @@ object Tables {
     * Spark 4 rejects NANOS outright otherwise), and timestamp[us] with
     * isAdjustedToUTC=false (surfaced as TIMESTAMP_NTZ). Functions like
     * `unix_micros` only accept TIMESTAMP, so both flavors are normalized
-    * to TimestampType here — the session timezone is pinned UTC everywhere
-    * (Verify/Bench/localSession), making the NTZ→LTZ cast exact and
+    * to TimestampType here — the session timezone is pinned UTC in
+    * [[localSession]], making the NTZ→LTZ cast exact and
     * engine-parity-safe (DuckDB reads the same field values).
     */
   private val tsColumns = Set("ts", "o_orderdate", "l_shipdate")
@@ -55,22 +55,23 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
-  /** Local session for tests / ad-hoc runs. Verify/Bench build their own
-    * (driver contract); this one matches their config knobs.
+  /** The one SparkSession builder: every main, perfbench and the specs
+    * get their session here, so the engine config cannot drift between
+    * them. `cores` defaults to `SPARK_GRAFT_CPUS` (else 4).
+    *
+    * AQE post-shuffle coalescing and runtime SMJ->SHJ conversion stay at
+    * Spark stock: a 64k coalescing floor regressed the pu and q query
+    * families on `Bench` (VERDICT.md), and a full-bench A/B
+    * (bench_r17_mid1.json vs bench_r17_shj0.json) measured the stock
+    * SMJ->SHJ setting as equal or better than a 128m threshold.
     */
-  def localSession(cores: Int = 4, appName: String = "graft"): SparkSession = {
+  def localSession(
+      cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4),
+      appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      // same stock coalescing floor + pinned-spread policy as Bench (see Bench.scala)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED", "1m"))
-      // AQE runtime SMJ->SHJ conversion: DEFAULT OFF ("0" = stock) — see
-      // Bench.scala for the r17 A/B that retired the r16 128m setting.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "0"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // Fail LOUDLY if any generated code stops compiling (e.g. a kernel

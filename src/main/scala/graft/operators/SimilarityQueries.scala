@@ -237,7 +237,7 @@ object SimilarityQueries {
       _ => new java.util.concurrent.ConcurrentHashMap[String, FutureArtifact]())
     def run(f: FutureArtifact): MaxsimArtifact =
       try { val a = build(); f.complete(a); a }
-      catch { case e: Throwable => f.completeExceptionally(e); memo.remove(dir); throw e }
+      catch { case e: Throwable => f.completeExceptionally(e); memo.remove(dir, f); throw e }
     val mine = new FutureArtifact()
     val existing = memo.putIfAbsent(dir, mine)
     val got = if (existing == null) run(mine) else existing.join()
@@ -1487,7 +1487,7 @@ object SimilarityQueries {
       _ => new java.util.concurrent.ConcurrentHashMap[String, ServingArtifact]())
     val got = memo.computeIfAbsent(dir, _ => buildIvfPqServing(s, dir, corpus))
     if (s.catalog.tableExists(got._1)) got
-    else { memo.remove(dir); memo.computeIfAbsent(dir, _ => buildIvfPqServing(s, dir, corpus)) }
+    else { memo.remove(dir, got); memo.computeIfAbsent(dir, _ => buildIvfPqServing(s, dir, corpus)) }
   }
 
   /** The memoized materialized-BM25 scratch table for `dir` (the served
@@ -1503,7 +1503,7 @@ object SimilarityQueries {
     }
     val got = memo.computeIfAbsent(dir, _ => build())
     if (s.catalog.tableExists(got)) got
-    else { memo.remove(dir); memo.computeIfAbsent(dir, _ => build()) }
+    else { memo.remove(dir, got); memo.computeIfAbsent(dir, _ => build()) }
   }
 
   /** The deterministic serving quantizers: first-[[NCentroids]] coarse

@@ -1,0 +1,59 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+/** Pins the single-session-builder contract: `Tables.localSession` is the
+  * only place under src/main that builds a SparkSession, so every main,
+  * perfbench and the specs run under one engine config. Also pins what
+  * that config must carry, and that the AQE keys it leaves alone really
+  * resolve to Spark's stock defaults (the env knobs that used to override
+  * them defaulted to exactly those values).
+  */
+class SessionConfigSpec extends SparkSuite {
+
+  private def scalaFiles(root: String): Seq[Path] = {
+    val s = Files.walk(Paths.get(root))
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally s.close()
+  }
+
+  /** Source text with block and line comments removed, so a doc-comment
+    * usage example does not count as a builder. */
+  private def code(p: Path): String =
+    Files.readString(p)
+      .replaceAll("(?s)/\\*.*?\\*/", "")
+      .replaceAll("//[^\n]*", "")
+
+  test("SparkSession.builder appears under src/main only in Tables.scala") {
+    val builders = scalaFiles("src/main")
+      .filter(p => code(p).contains("SparkSession.builder"))
+      .map(_.getFileName.toString)
+    assert(builders == Seq("Tables.scala"), builders)
+  }
+
+  test("the retired AQE env knobs appear nowhere") {
+    val knobs = Seq("MIN_COALESCED", "SHJ_THRESHOLD").map("SPARK_GRAFT_" + _)
+    val texts = (scalaFiles("src") ++ Seq(Paths.get("README.md")))
+      .map(p => p -> Files.readString(p))
+    val hits = for ((p, t) <- texts; k <- knobs if t.contains(k)) yield s"$p: $k"
+    assert(hits.isEmpty, hits)
+  }
+
+  test("localSession pins codegen fallback off, UTC and nanos-as-long") {
+    assert(spark.conf.get("spark.sql.codegen.fallback") == "false")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+  }
+
+  test("AQE keys localSession leaves alone resolve to SQLConf's defaults") {
+    val stock = new org.apache.spark.sql.internal.SQLConf
+    for (key <- Seq(
+        "spark.sql.adaptive.enabled",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize",
+        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold")) {
+      assert(!spark.sparkContext.getConf.contains(key), s"$key is set")
+      assert(spark.conf.get(key) == stock.getConfString(key), key)
+    }
+  }
+}
