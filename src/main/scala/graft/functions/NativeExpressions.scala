@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.GraftColumnBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, IntegerType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -181,19 +182,22 @@ object NativeExpressions {
   }
 
   /** round(v_i * scale) as array<tinyint> — identical to
-    * `transform(v, x -> round(x * scale).cast("tinyint"))`. See
+    * `transform(v, x -> round(x * scale).cast("tinyint"))`, with the
+    * cast's ANSI mode read from the executing session's conf (the Column
+    * is built before any session is known, so not at construction). See
     * [[NativeKernels.scaleRoundInt8]]. */
   case class ScaleRoundInt8(left: Expression, right: Expression)
       extends BinaryExpression {
     override def dataType: DataType = ArrayType(ByteType, containsNull = false)
     override protected def withNewChildrenInternal(l: Expression, r: Expression): ScaleRoundInt8 =
       copy(left = l, right = r)
+    private lazy val ansi = SQLConf.get.ansiEnabled
 
     override protected def nullSafeEval(v: Any, s: Any): Any =
-      NativeKernels.scaleRoundInt8(v.asInstanceOf[ArrayData], s.asInstanceOf[Double])
+      NativeKernels.scaleRoundInt8(v.asInstanceOf[ArrayData], s.asInstanceOf[Double], ansi)
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (v, s) => s"$Kernels.scaleRoundInt8($v, $s)")
+      defineCodeGen(ctx, ev, (v, s) => s"$Kernels.scaleRoundInt8($v, $s, $ansi)")
   }
 
   /** v_i / d as array<double> — identical to `transform(v, x -> x / d)`.

@@ -418,15 +418,17 @@ object NativeKernels {
   }
 
   /** max(|v_i|) in one pass — identical to `array_max(transform(v, abs))`
-    * on non-null-element double arrays (inputs here are cast float arrays).
-    * Empty array → the caller's expression layer returns null (array_max's
-    * contract), see [[graft.functions.NativeExpressions.MaxAbs]]. */
+    * on non-null-element double arrays (inputs here are cast float arrays),
+    * including its ordering's NaN-is-largest rule. Empty array → the
+    * caller's expression layer returns null (array_max's contract), see
+    * [[graft.functions.NativeExpressions.MaxAbs]]. */
   def maxAbs(v: ArrayData): Double = {
     val n = v.numElements()
     var mx = Double.NegativeInfinity
     var i = 0
     while (i < n) {
       val a = math.abs(v.getDouble(i))
+      if (a.isNaN) return a
       if (a > mx) mx = a
       i += 1
     }
@@ -436,15 +438,20 @@ object NativeKernels {
   /** Symmetric int8 quantization pass: round(v_i * scale) as tinyint —
     * identical to `transform(v, x -> round(x * scale).cast("tinyint"))`:
     * same multiply, the same HALF_UP decimal rounding Spark's `round`
-    * performs on doubles, then the same integral cast. */
-  def scaleRoundInt8(v: ArrayData, scale: Double): ArrayData = {
+    * performs on doubles (NaN/±Inf pass through), then the same cast
+    * (CAST_OVERFLOW under `ansi`, else int-then-byte narrowing). */
+  def scaleRoundInt8(v: ArrayData, scale: Double, ansi: Boolean): ArrayData = {
     val n = v.numElements()
     val out = new Array[Byte](n)
     var i = 0
     while (i < n) {
-      out(i) = java.math.BigDecimal.valueOf(v.getDouble(i) * scale)
-        .setScale(0, java.math.RoundingMode.HALF_UP)
-        .doubleValue().toByte
+      val x = v.getDouble(i) * scale
+      val r = if (x.isNaN || x.isInfinite) x
+        else java.math.BigDecimal.valueOf(x)
+          .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue()
+      if (ansi && !(math.floor(r) <= Byte.MaxValue && math.ceil(r) >= Byte.MinValue))
+        throw org.apache.spark.sql.GraftColumnBridge.byteCastOverflow(r)
+      out(i) = r.toByte
       i += 1
     }
     ArrayData.toArrayData(out)

@@ -13,6 +13,12 @@ object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** Spark's ANSI CAST_OVERFLOW error for double → tinyint, so a fused
+    * kernel raises what the cast it replaces raises. */
+  def byteCastOverflow(d: Double): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.castingCauseOverflowError(
+      d, org.apache.spark.sql.types.DoubleType, org.apache.spark.sql.types.ByteType)
+
   /** Deterministic listener-event drain for dev tooling (graft.Profile):
     * `SparkContext.listenerBus` is `private[spark]`, so the wait goes
     * through this in-package shim. */

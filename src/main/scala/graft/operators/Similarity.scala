@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.functions.NativeExpressions
@@ -74,6 +74,34 @@ object Similarity {
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
       .withColumn("cen_id",
         explode(NativeExpressions.topNCosineIds(col("qv"), col("qnrm"), centSeq, nProbe)))
+
+  /** Serve-batch probe-collect bound (ADVICE r15): every serving caller
+    * is constant-bounded (a query batch, a stream micro-batch), but a
+    * probe collect would silently pull a corpus-sized frame if a future
+    * caller handed it one — the exact mistake `joinPqTopK` exists to
+    * avoid. 1<<16 probe rows ≈ 16k queries/batch: far above any serve
+    * batch, far below corpus scale. */
+  val ProbeRowsMax: Int = 1 << 16
+
+  /** `df` collected to the driver, failing loudly (naming `caller`) past
+    * [[ProbeRowsMax]] rows instead of pulling a corpus-sized frame. */
+  private[graft] def collectBounded(df: DataFrame, caller: String): Array[Row] = {
+    val rows = df.limit(ProbeRowsMax + 1).collect()
+    require(rows.length <= ProbeRowsMax, s"$caller: serve batch exceeds " +
+      s"$ProbeRowsMax probe rows; route corpus-sized query relations through " +
+      "the distributed join arm (joinPqTopK's shape), not a driver collect")
+    rows
+  }
+
+  /** [[probesOf]] collected once as `(query_id, qv, qnrm, cen_id)` — the
+    * serving paths' ONE driver roundtrip, yielding both the literal probe
+    * ids for bucket pruning and the broadcast probe relation. */
+  private[graft] def collectProbes(queries: DataFrame,
+      centSeq: Seq[(Long, Seq[Double], Double)], nProbe: Int,
+      caller: String): Seq[(Long, Seq[Double], Double, Long)] =
+    collectBounded(probesOf(queries, centSeq, nProbe), caller)
+      .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2), r.getLong(3)))
+      .toSeq
 
   /** Self-exclusion + exact cosine over candidate (corpus × probe) rows —
     * the ONE scoring rule downstream of every cen_id join. */

@@ -198,10 +198,7 @@ object SimilarityQueries {
   }
 
   private type MaxsimArtifact = (String, Seq[(Long, Seq[Double], Double)])
-  private val maxsimCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String,
-        java.util.concurrent.CompletableFuture[MaxsimArtifact]]]())
+  private val maxsimMemo = new graft.SessionMemo[MaxsimArtifact]
 
   /** The memoized (tbl, centSeq) maxsim chunk-serving artifact for `dir`'s
     * corpus — the [[ivfPqServing]] lifecycle for the late-interaction
@@ -210,8 +207,8 @@ object SimilarityQueries {
     * once in production; queries only read), and the shared scratch-table
     * name previously assumed strictly sequential execution (ADVICE r15). */
   private[operators] def maxsimServing(s: SparkSession, dir: String,
-      docs: => DataFrame): MaxsimArtifact = {
-    def build(): MaxsimArtifact = {
+      docs: => DataFrame): MaxsimArtifact =
+    maxsimMemo.getOrBuild(s, dir, a => s.catalog.tableExists(a._1)) {
       // scoped persist: the chunk frame feeds the centroid collect AND the
       // bucketed write, both materialized inside this call — released here,
       // not left for the between-queries sweep
@@ -223,32 +220,6 @@ object SimilarityQueries {
         (tbl, centSeq)
       } finally graft.CheckpointUtil.releasePersist(ch)
     }
-    // memoize a FUTURE, not the artifact (ADVICE r16): computeIfAbsent
-    // holds the map bin for the mapping function's whole duration, and
-    // build() runs Spark jobs — a concurrent caller for another dir hashing
-    // to the same bin would block behind the build. Registering the future
-    // is O(1) under the lock; the build runs outside it, and concurrent
-    // callers for the SAME dir await one build. The stale-table recheck is
-    // a compute() replace, so invalidation can't race a fresh rebuild: the
-    // thread that observes the dropped table swaps the entry atomically
-    // (only if unchanged) and everyone converges on one rebuild future.
-    type FutureArtifact = java.util.concurrent.CompletableFuture[MaxsimArtifact]
-    val memo = maxsimCache.computeIfAbsent(s,
-      _ => new java.util.concurrent.ConcurrentHashMap[String, FutureArtifact]())
-    def run(f: FutureArtifact): MaxsimArtifact =
-      try { val a = build(); f.complete(a); a }
-      catch { case e: Throwable => f.completeExceptionally(e); memo.remove(dir, f); throw e }
-    val mine = new FutureArtifact()
-    val existing = memo.putIfAbsent(dir, mine)
-    val got = if (existing == null) run(mine) else existing.join()
-    if (s.catalog.tableExists(got._1)) got
-    else {
-      val fresh = new FutureArtifact()
-      val winner = memo.compute(dir,
-        (_, cur) => if (cur == null || cur.isDone) fresh else cur)
-      if (winner eq fresh) run(fresh) else winner.join()
-    }
-  }
 
   /** The chunk-grain coarse quantizer: first chunk of the first
     * [[NCentroids]] docs (the oracle-able stand-in — same convention as
@@ -278,15 +249,10 @@ object SimilarityQueries {
     * the shared [[maxsimTail]]. */
   private def maxsimProbeServed(s: SparkSession, tbl: String, ch: DataFrame,
       centSeq: Seq[(Long, Seq[Double], Double)], k: Int): DataFrame = {
-    import graft.functions.NativeExpressions
     import s.implicits._
-    val probeRows = ch.filter(col("doc_id") === MaxsimQueryDoc)
-      .select(col("chunk_idx").as("qi"), col("v").as("qv"), col("nrm").as("qnrm"))
-      .withColumn("cen_id", explode(
-        NativeExpressions.topNCosineIds(col("qv"), col("qnrm"), centSeq, MaxsimNProbe)))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2), r.getLong(3)))
-      .toSeq
+    val probeRows = Similarity.collectProbes(
+      ch.filter(col("doc_id") === MaxsimQueryDoc).withColumnRenamed("chunk_idx", "vec_id"),
+      centSeq, MaxsimNProbe, "maxsimProbeServed")
     val probes = probeRows.toDF("qi", "qv", "qnrm", "cen_id")
     val probeIds = probeRows.map(_._4).distinct.sorted
     maxsimTail(
@@ -323,32 +289,18 @@ object SimilarityQueries {
     * fixed-point floor, integer sum — and the per-query ranking is a
     * [[TopKAgg]] keyed on qdoc, so a thousand concurrent queries rank in
     * parallel with O(k) state each and no window anywhere. */
-  /** Serve-batch probe-collect bound (ADVICE r15): every batch caller is
-    * constant-bounded (MultiNQueries, a stream micro-batch), but the
-    * collect below would silently pull a corpus-sized frame if a future
-    * caller handed it one — the exact mistake `joinPqTopK` exists to
-    * avoid. 1<<16 probe rows ≈ 16k query chunks/batch: far above any
-    * serve batch, far below corpus scale. */
-  val MaxsimProbeRowsMax: Int = 1 << 16
-
   private[graft] def maxsimProbeMulti(s: SparkSession, tbl: String,
       qchunks: DataFrame, centSeq: Seq[(Long, Seq[Double], Double)],
       k: Int): DataFrame = {
     import graft.functions.NativeExpressions
     import s.implicits._
-    val probeRows = qchunks
-      .withColumn("cen_id", explode(
-        NativeExpressions.topNCosineIds(col("qv"), col("qnrm"), centSeq, MaxsimNProbe)))
-      .limit(MaxsimProbeRowsMax + 1)
-      .collect()
+    val probeRows = Similarity.collectBounded(
+      qchunks.withColumn("cen_id", explode(
+        NativeExpressions.topNCosineIds(col("qv"), col("qnrm"), centSeq, MaxsimNProbe))),
+      "maxsimProbeMulti")
       .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2),
         r.getDouble(3), r.getLong(4)))
       .toSeq
-    require(probeRows.length <= MaxsimProbeRowsMax,
-      s"maxsimProbeMulti: serve batch exceeds $MaxsimProbeRowsMax probe rows " +
-        "— this is the driver-collect serving path; route corpus-sized " +
-        "query relations through the distributed join arm (joinPqTopK's " +
-        "shape), not a driver probe collect")
     val probes = probeRows.toDF("qdoc", "qi", "qv", "qnrm", "cen_id")
     val probeIds = probeRows.map(_._5).distinct.sorted
     val cand = s.table(tbl)
@@ -420,17 +372,11 @@ object SimilarityQueries {
     * ServedRetrieveSpec). */
   private[operators] def hybridRrfServed(s: SparkSession, dir: String,
       nProbe: Int = NProbe, candidates: Int = NCandidates): DataFrame = {
-    import graft.functions.NativeExpressions
     val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
     val (tbl, centSeq, codebook) = ivfPqServing(s, dir, corpus)
     val lex = lexTopK(s.table(bm25Served(s, dir)))
-    val probeRows = corpus.filter(col("vec_id") === HybridQueryVec)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-      .withColumn("cen_id", explode(
-        NativeExpressions.topNCosineIds(col("qv"), col("qnrm"), centSeq, nProbe)))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2), r.getLong(3)))
-      .toSeq
+    val probeRows = Similarity.collectProbes(corpus.filter(col("vec_id") === HybridQueryVec),
+      centSeq, nProbe, "hybridRrfServed")
     val vec = probePqLists(s, tbl, codebook, PqM, probeRows, candidates, HybridK)
       .select(col("vec_id").as("doc_id"), col("rank").as("vec_rank"))
     rrfFuse(lex, vec)
@@ -1424,17 +1370,16 @@ object SimilarityQueries {
        |${(1 to PcaIters).map(iter).mkString(",\n")}""".stripMargin
   }
 
-  /** Builds (once per run) the persisted IVF-PQ serving artifact — the
-    * corpus assigned to the first-[[NCentroids]] quantizer, PQ-encoded
-    * against the first-[[PqCodewords]] codebook, written cen_id-bucketed
-    * carrying (vec_id, cen_id, codes, nrm, v) — and returns the table name
-    * with the collected quantizers. ONE constructor behind
-    * `src_ivfpq_bucketed` and the served retrieval chain
-    * ([[hybridRrfServed]]), so the index layout cannot fork. */
-  /** The table name is DIR-TAGGED: a session that serves two corpora (a
-    * spec suite touching two SFs, the adversarial sweep) must not have the
-    * second build overwrite the table a first-dir memo entry still points
-    * at. */
+  /** Builds the persisted IVF-PQ serving artifact — the corpus assigned
+    * to the first-[[NCentroids]] quantizer, PQ-encoded against the
+    * first-[[PqCodewords]] codebook, written cen_id-bucketed carrying
+    * (vec_id, cen_id, codes, nrm, v) — and returns the table name with the
+    * collected quantizers. ONE constructor behind `src_ivfpq_bucketed` and
+    * the served retrieval chain ([[hybridRrfServed]]), so the index layout
+    * cannot fork. The table name is DIR-TAGGED: a session that serves two
+    * corpora (a spec suite touching two SFs, the adversarial sweep) must
+    * not have the second build overwrite the table a first-dir memo entry
+    * still points at. */
   private def buildIvfPqServing(s: SparkSession, dir: String,
       corpus: DataFrame): ServingArtifact = {
     val (centSeq, codebook) = ivfPqQuantizers(corpus)
@@ -1455,25 +1400,18 @@ object SimilarityQueries {
 
   private type ServingArtifact =
     (String, Seq[(Long, Seq[Double], Double)], Seq[Seq[Double]])
-  /** Per-session serving-build memos, keyed weakly on the session (the
-    * [[Spread]] pattern) then by corpus dir: `hybridRrfServed` is invoked
-    * independently by `pipeline_e2e_retrieve_served`, `pipeline_context_pack`,
-    * `sim_retrieve_fidelity`, `pipeline_retrieve_multi` and now the bulk
-    * join — without the memo each of them rebuilt the SAME IVF-PQ table
-    * and re-materialized the SAME BM25 scores per run (the index is built
-    * once in production; queries only read). `computeIfAbsent` under the
-    * synchronized map also removes the old strictly-sequential-execution
-    * assumption on the shared scratch-table name. */
-  private val servingCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, ServingArtifact]]())
-  private val bm25Cache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, String]]())
+  private val ivfPqMemo = new graft.SessionMemo[ServingArtifact]
+  private val bm25Memo = new graft.SessionMemo[String]
 
   /** The memoized (tbl, centSeq, codebook) IVF-PQ serving artifact for
     * `dir`'s corpus — built at most once per (session, dir); rebuilt only
     * if something dropped the scratch table out from under the memo.
+    * `hybridRrfServed` is invoked independently by
+    * `pipeline_e2e_retrieve_served`, `pipeline_context_pack`,
+    * `sim_retrieve_fidelity`, `pipeline_retrieve_multi` and the bulk join;
+    * without the memo each of them rebuilt the SAME IVF-PQ table and
+    * re-materialized the SAME BM25 scores per run (the index is built
+    * once in production; queries only read).
     *
     * STATIC-DIR-PER-SESSION ASSUMPTION (ADVICE r15): the memo carries no
     * data fingerprint, so a caller that rewrites `dir`'s parquet files
@@ -1482,29 +1420,19 @@ object SimilarityQueries {
     * that regenerates a fixture in place must drop the scratch table (or
     * use a fresh dir) to invalidate. */
   private[operators] def ivfPqServing(s: SparkSession, dir: String,
-      corpus: => DataFrame): ServingArtifact = {
-    val memo = servingCache.computeIfAbsent(s,
-      _ => new java.util.concurrent.ConcurrentHashMap[String, ServingArtifact]())
-    val got = memo.computeIfAbsent(dir, _ => buildIvfPqServing(s, dir, corpus))
-    if (s.catalog.tableExists(got._1)) got
-    else { memo.remove(dir, got); memo.computeIfAbsent(dir, _ => buildIvfPqServing(s, dir, corpus)) }
-  }
+      corpus: => DataFrame): ServingArtifact =
+    ivfPqMemo.getOrBuild(s, dir, a => s.catalog.tableExists(a._1))(
+      buildIvfPqServing(s, dir, corpus))
 
   /** The memoized materialized-BM25 scratch table for `dir` (the served
     * lexical arm's artifact) — same lifecycle as [[ivfPqServing]]. */
-  private def bm25Served(s: SparkSession, dir: String): String = {
-    val memo = bm25Cache.computeIfAbsent(s,
-      _ => new java.util.concurrent.ConcurrentHashMap[String, String]())
-    def build(): String = {
+  private def bm25Served(s: SparkSession, dir: String): String =
+    bm25Memo.getOrBuild(s, dir, s.catalog.tableExists) {
       val lexTbl = scratchTable(s, "graft_bm25_scores" + dirTag(dir))
       TrainingDataQueries.bm25Scored(s, dir)
         .write.mode("overwrite").saveAsTable(lexTbl)
       lexTbl
     }
-    val got = memo.computeIfAbsent(dir, _ => build())
-    if (s.catalog.tableExists(got)) got
-    else { memo.remove(dir, got); memo.computeIfAbsent(dir, _ => build()) }
-  }
 
   /** The deterministic serving quantizers: first-[[NCentroids]] coarse
     * centroids + first-[[PqCodewords]] codebook by vec_id, collected once
@@ -1527,16 +1455,9 @@ object SimilarityQueries {
     * probe caller. */
   private def serveProbeRows(corpus: DataFrame,
       centSeq: Seq[(Long, Seq[Double], Double)],
-      nQueries: Int = NQueriesServe): Seq[(Long, Seq[Double], Double, Long)] = {
-    import graft.functions.NativeExpressions
-    corpus.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-      .withColumn("cen_id", explode(
-        NativeExpressions.topNCosineIds(col("qv"), col("qnrm"), centSeq, NProbe)))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2), r.getLong(3)))
-      .toSeq
-  }
+      nQueries: Int = NQueriesServe): Seq[(Long, Seq[Double], Double, Long)] =
+    Similarity.collectProbes(corpus.filter(col("vec_id") < nQueries),
+      centSeq, NProbe, "serveProbeRows")
 
   /** One assign+encode+write pass of `part` into the cen_id-bucketed
     * IVF-PQ layout under FIXED quantizers — shared by the base build and
@@ -1576,17 +1497,8 @@ object SimilarityQueries {
     * replaced exactly that; pinned by CacheHygieneSpec).
     */
   private[operators] def probeBucketed(s: SparkSession, tbl: String, corpus: DataFrame,
-                            centSeq: Seq[(Long, Seq[Double], Double)]): DataFrame = {
-    import graft.functions.NativeExpressions
-    val probeRows = corpus.filter(col("vec_id") < NQueriesServe)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-      .withColumn("cen_id", explode(
-        NativeExpressions.topNCosineIds(col("qv"), col("qnrm"), centSeq, NProbe)))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2), r.getLong(3)))
-      .toSeq
-    probeListsPruned(s, tbl, probeRows, K)
-  }
+                            centSeq: Seq[(Long, Seq[Double], Double)]): DataFrame =
+    probeListsPruned(s, tbl, serveProbeRows(corpus, centSeq), K)
 
   /** The shared COMPRESSED serving read against a PQ-coded bucketed list
     * table (vec_id, cen_id, codes, nrm, v): coarse ADC pass bucket-pruned

@@ -57,10 +57,8 @@ object Spread {
 
   private def spreadIfNarrow(df: DataFrame, apply: Boolean => DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    val perSession = sessionProbes(df.sparkSession)
-    if (perSession.size > 256) perSession.clear() // bases are few; bound anyway
-    val n = perSession.computeIfAbsent(
-      planKey(df.queryExecution.analyzed.canonicalized), _ => df.rdd.getNumPartitions)
+    val n = probes.getOrBuild(df.sparkSession,
+      planKey(df.queryExecution.analyzed.canonicalized))(df.rdd.getNumPartitions)
     apply(n < target)
   }
 
@@ -71,7 +69,7 @@ object Spread {
     * and schema. Deliberately a String, never the plan object: a
     * LogicalRelation retains its HadoopFsRelation's SparkSession, and a
     * plan-object key in the inner map would chain the weak session key
-    * strongly to itself (the classic WeakHashMap value→key pin). */
+    * strongly to itself (see [[graft.SessionMemo]]). */
   private[operators] def planKey(
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): String = {
     val leaves = plan.collectLeaves().map {
@@ -90,20 +88,8 @@ object Spread {
     plan.treeString + leaves.mkString("|")
   }
 
-  private type PlanProbes = java.util.concurrent.ConcurrentHashMap[String, Int]
-
-  /** Per-session probe memos, keyed WEAKLY on the session (identity —
-    * SparkSession doesn't override equals): a long-lived driver cycling
-    * many sessions can't pin canonicalized plans of sessions that are
-    * gone, and one session's clear() never evicts another's hot entries.
-    * (Collections.synchronizedMap overrides computeIfAbsent with a
-    * synchronized variant, so the outer lookup is atomic.) */
-  private val probeCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, PlanProbes]())
-
-  private def sessionProbes(s: org.apache.spark.sql.SparkSession): PlanProbes =
-    probeCache.computeIfAbsent(s, _ => new PlanProbes())
+  private val probes = new graft.SessionMemo[Int]
 
   /** Number of sessions currently holding probe memos (test hook). */
-  private[operators] def probeSessionCount: Int = probeCache.size
+  private[operators] def probeSessionCount: Int = probes.sessionCount
 }

@@ -214,15 +214,11 @@ object StreamingDedup {
   private def collectProbeRows(batch: DataFrame, idCol: String, embCol: String,
       cents: Seq[(Long, Seq[Double], Double)], nProbe: Int):
       Seq[(Long, Seq[Double], Double, Long)] =
-    batch
-      .select(col(idCol).as("query_id"), Dedup.toDoubleArray(col(embCol)).as("qv"))
-      .withColumn("qnrm", Dedup.l2norm(col("qv")))
-      .filter(col("qnrm") > 0.0)
-      .withColumn("cen_id", explode(graft.functions.NativeExpressions
-        .topNCosineIds(col("qv"), col("qnrm"), cents, nProbe)))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2), r.getLong(3)))
-      .toSeq
+    graft.operators.Similarity.collectProbes(
+      batch.select(col(idCol).as("vec_id"), Dedup.toDoubleArray(col(embCol)).as("v"))
+        .withColumn("nrm", Dedup.l2norm(col("v")))
+        .filter(col("nrm") > 0.0),
+      cents, nProbe, "StreamingDedup.collectProbeRows")
 
   /** Streaming INDEX MAINTENANCE: continuous vector ingest into the
     * persisted bucketed IVF list table — the write half of the serving

@@ -5,7 +5,8 @@ import scala.jdk.CollectionConverters._
 
 /** Pins the single-session-builder contract: `Tables.localSession` is the
   * only place under src/main that builds a SparkSession, so every main,
-  * perfbench and the specs run under one engine config. Also pins what
+  * perfbench and the specs run under one engine config; likewise
+  * `SessionMemo` is the only per-session memo. Also pins what
   * that config must carry, and that the AQE keys it leaves alone really
   * resolve to Spark's stock defaults (the env knobs that used to override
   * them defaulted to exactly those values).
@@ -25,12 +26,18 @@ class SessionConfigSpec extends SparkSuite {
       .replaceAll("(?s)/\\*.*?\\*/", "")
       .replaceAll("//[^\n]*", "")
 
-  test("SparkSession.builder appears under src/main only in Tables.scala") {
-    val builders = scalaFiles("src/main")
-      .filter(p => code(p).contains("SparkSession.builder"))
-      .map(_.getFileName.toString)
-    assert(builders == Seq("Tables.scala"), builders)
-  }
+  // (pattern, the one src/main file allowed to use it): one session
+  // builder, and one hand-rolled per-session memo
+  for ((pattern, owner) <- Seq(
+      "SparkSession.builder" -> "Tables.scala",
+      "WeakHashMap" -> "SessionMemo.scala",
+      "CompletableFuture" -> "SessionMemo.scala"))
+    test(s"$pattern appears under src/main only in $owner") {
+      val users = scalaFiles("src/main")
+        .filter(p => code(p).contains(pattern))
+        .map(_.getFileName.toString)
+      assert(users == Seq(owner), users)
+    }
 
   test("the retired AQE env knobs appear nowhere") {
     val knobs = Seq("MIN_COALESCED", "SHJ_THRESHOLD").map("SPARK_GRAFT_" + _)

@@ -349,29 +349,52 @@ class NativeExpressionsSpec extends SparkSuite {
 
   test("MaxAbs / ScaleRoundInt8 / DivArray == their HOF formulations") {
     // the exact quantize()/normalize formulations they replace, over the
-    // embedding corpus plus sign/zero edges
-    val e = Tables.embeddings(spark, sf0001)
+    // embedding corpus plus sign/zero edges, and NaN/±Inf rows (a vector
+    // holding ±Inf passes prepare's nrm > 0 filter on its way to quantize)
+    val finite = Tables.embeddings(spark, sf0001)
       .select(col("embedding").cast("array<double>").as("v"))
       .unionAll(spark.sql(
         "SELECT CAST(array(-1.5, 0.0, 2.5, -0.49999, 126.5) AS array<double>) v"))
       .unionAll(spark.sql("SELECT CAST(array() AS array<double>) v"))
-    val qmHof = array_max(transform(col("v"), x => abs(x)))
-    val withScale = e
-      .withColumn("qm", NativeExpressions.maxAbs(col("v")))
-      .withColumn("qmh", qmHof)
-      .withColumn("qscale",
-        when(col("qmh") === 0.0, lit(0.0)).otherwise(lit(127.0) / col("qmh")))
-      .withColumn("nrm", sqrt(NativeExpressions.dot(col("v"), col("v"))))
-    val diff = withScale
-      .filter(!(col("qm") <=> col("qmh")) ||
-        (size(col("v")) > 0 && (
-          not(NativeExpressions.scaleRoundInt8(col("v"), col("qscale")) ===
-            transform(col("v"), x => round(x * col("qscale")).cast("tinyint"))) ||
-          (col("nrm") > 0.0 &&
-            not(NativeExpressions.divArray(col("v"), col("nrm")) ===
-              transform(col("v"), x => x / col("nrm")))))))
-      .count()
-    assert(diff == 0)
+    val nonFiniteRows = Seq("array(1.5, CAST('NaN' AS DOUBLE), -2.0)",
+      "array(0.5, CAST('Infinity' AS DOUBLE))", "array(CAST('-Infinity' AS DOUBLE), 3.0)")
+      .map(a => spark.sql(s"SELECT $a v"))
+    val nonFinite = nonFiniteRows.reduce(_ unionAll _)
+    def scaled(e: org.apache.spark.sql.DataFrame) = {
+      val qmHof = array_max(transform(col("v"), x => abs(x)))
+      e.withColumn("qm", NativeExpressions.maxAbs(col("v")))
+        .withColumn("qmh", qmHof)
+        .withColumn("qscale",
+          when(col("qmh") === 0.0, lit(0.0)).otherwise(lit(127.0) / col("qmh")))
+        .withColumn("nrm", sqrt(NativeExpressions.dot(col("v"), col("v"))))
+    }
+    // defs: an expression instance keeps the ANSI mode it first ran under
+    def native = NativeExpressions.scaleRoundInt8(col("v"), col("qscale"))
+    def hof = transform(col("v"), x => round(x * col("qscale")).cast("tinyint"))
+    def mismatches(e: org.apache.spark.sql.DataFrame, rounded: Boolean): Long =
+      scaled(e)
+        .filter(!(col("qm") <=> col("qmh")) ||
+          (size(col("v")) > 0 && (
+            (if (rounded) not(native === hof) else lit(false)) ||
+            (col("nrm") > 0.0 &&
+              not(NativeExpressions.divArray(col("v"), col("nrm")) ===
+                transform(col("v"), x => x / col("nrm")))))))
+        .count()
+    val ansiKey = "spark.sql.ansi.enabled"
+    val prior = spark.conf.get(ansiKey)
+    try for (ansi <- Seq(false, true)) {
+      spark.conf.set(ansiKey, ansi)
+      assert(mismatches(finite, rounded = true) == 0, s"ansi=$ansi")
+      if (!ansi) assert(mismatches(nonFinite, rounded = true) == 0)
+      else {
+        // the cast overflows on NaN: both arms raise CAST_OVERFLOW per row
+        assert(mismatches(nonFinite, rounded = false) == 0)
+        for (row <- nonFiniteRows; arm <- Seq(native, hof)) {
+          val err = intercept[Exception](scaled(row).select(arm).collect())
+          assert(String.valueOf(err.getMessage).contains("CAST_OVERFLOW"), err)
+        }
+      }
+    } finally spark.conf.set(ansiKey, prior)
   }
 
   test("DsirScore == transform(pmod) + aggregate(element_at) fold") {
