@@ -1,61 +1,80 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.atomic.AtomicLong
 
-/** Release helpers for iterative operators that roll generations of
-  * persisted / localCheckpoint'd DataFrames.
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row}
+import org.apache.spark.sql.functions.{count, lit}
+
+/** How operators store a generation of intermediate state, and how that
+  * storage is freed.
   *
-  * Two distinct release operations — conflating them frees blocks that are
-  * still someone's recompute root:
+  * [[materialize]] is the one way a generation is stored: one eager
+  * `localCheckpoint` job, its loop metrics observed in that same job, and a
+  * plan leaf that carries the generation's measured size. A materialized
+  * generation is lineage-free — its plan is a bare `LogicalRDD` leaf — so
+  * nothing reads the generation before it once it exists: a loop frees the
+  * superseded generation with [[releaseCheckpoint]] as soon as its
+  * successor is materialized. (Only then: a locally-checkpointed RDD cannot
+  * be recomputed after its blocks are freed.)
   *
-  *  - [[releasePersist]]: a superseded `persist()` generation. Frees ONLY
-  *    the CacheManager entry for this df. Its logical plan may EMBED an
-  *    earlier generation's checkpoint `LogicalRDD` as a leaf; those blocks
-  *    must NOT be freed here — live later generations still root their
-  *    lineage at that checkpoint (losing a persist block is recoverable by
-  *    recompute exactly as long as the checkpoint underneath survives).
-  *  - [[releaseCheckpoint]]: a superseded `localCheckpoint()` generation —
-  *    its plan is a bare `LogicalRDD` leaf (lineage truncated), and
-  *    `Dataset.unpersist` never reaches the checkpointed RDD's blocks.
-  *    Only call when NO live generation's lineage can reach it anymore; a
-  *    locally-checkpointed RDD cannot be recomputed after unpersisting.
-  *
-  * Storage that outlives its builder (a returned result's caches, a loop's
-  * last generations, helper-scoped persists) is registered here by
-  * [[track]]/[[trackPersist]] and freed BETWEEN queries via
-  * [[releaseStragglers]] — after the query's output is fully materialized —
-  * because `spark.catalog.clearCache()` never reaches checkpoint blocks
-  * (ADVICE r01). References are STRONG: release must be deterministic (a
-  * round-9 weak-ref design raced the GC — a collected weak entry could
-  * never be unpersisted again, because the CacheManager's InMemoryRelation
-  * pins cached RDDs against ContextCleaner forever). The registry is the
-  * library caller's whole release story: materialize, then ONE
-  * releaseStragglers(). A caller that never drains leaks exactly what an
-  * unreleased cache always leaked — nothing more — and the registry itself
-  * only adds the Dataset handles. The driver harness (Verify/Bench) and
-  * every spec drain between queries.
+  * Storage that outlives its builder (a returned result's checkpoint, a
+  * loop's last generation, helper-scoped persists) is registered by
+  * [[track]] and freed BETWEEN queries via [[releaseStragglers]] — after the
+  * query's output is fully materialized — because
+  * `spark.catalog.clearCache()` never reaches checkpoint blocks (ADVICE
+  * r01). References are STRONG: release must be deterministic (a round-9
+  * weak-ref design raced the GC — a collected weak entry could never be
+  * unpersisted again, because the CacheManager's InMemoryRelation pins
+  * cached RDDs against ContextCleaner forever). A caller that never drains
+  * leaks exactly what an unreleased cache always leaked; the driver harness
+  * (Verify/Bench) and every spec drain between queries.
   */
 object CheckpointUtil {
 
   private val stragglers =
     scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
-  /** Record a just-created localCheckpoint (or loop-surviving persist) df;
-    * anything not explicitly released by its loop is freed at the next
+  private val observeIds = new AtomicLong
+
+  /** Record a frame whose storage outlives its builder; anything not
+    * explicitly released by its loop is freed at the next
     * [[releaseStragglers]]. */
   def track(df: DataFrame): DataFrame = synchronized {
     stragglers += df
     df
   }
 
-  /** [[track]] for helper-scoped `persist()`s — same registry, named at
-    * the call site for the persist-vs-checkpoint release distinction
-    * documented above. */
-  def trackPersist(df: DataFrame): DataFrame = track(df)
+  /** Store `df` as a tracked, eager localCheckpoint and return it with the
+    * row observed in the same job: `graft_rows` (the row count), then the
+    * caller's `metrics` (aggregate columns over `df`), readable by name.
+    *
+    * The checkpoint's `LogicalRDD` leaf is rebuilt with the stored bytes of
+    * its RDD and the observed row count. Spark 4.1 otherwise carries the
+    * ORIGIN plan's estimated statistics into the leaf, and a loop whose
+    * round plan references the previous generation several times (connected
+    * components) MULTIPLIES that estimate every round — measured: BigInt
+    * stats reaching millions of bits by round 16, round-11 planning alone
+    * taking 110 s in BigInteger math, and the inflated sizes disqualifying
+    * every static broadcast join. Measured stats plan each round against
+    * real (tiny) sizes.
+    *
+    * The metrics ride a NAMED observe (a CollectMetrics node) read back from
+    * the executed plan's accumulators. NOT the Observation helper:
+    * registering an Observation poisons the session's ObservationManager
+    * into every later closure that captures the SparkSession (e.g. an ML
+    * model's training summary) — "Task not serializable" for unrelated
+    * queries (Spark 4.1.2).
+    */
+  def materialize(df: DataFrame, metrics: Column*): (DataFrame, Row) = {
+    val name = s"graft_materialize_${observeIds.incrementAndGet()}"
+    val observed = df.observe(name, count(lit(1)).as("graft_rows"), metrics: _*)
+    val checkpointed = observed.localCheckpoint(eager = true)
+    val row = observed.queryExecution.observedMetrics(name)
+    (track(GraftColumnBridge.withMeasuredStats(checkpointed, row.getLong(0))), row)
+  }
 
-  def releasePersist(df: DataFrame): Unit =
-    df.unpersist(blocking = false)
-
+  /** Free a superseded generation now. Only call when NO live frame's
+    * lineage can reach it anymore. */
   def releaseCheckpoint(df: DataFrame): Unit = {
     synchronized { stragglers.filterInPlace(_ ne df) }
     freeBlocks(df)

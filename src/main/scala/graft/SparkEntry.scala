@@ -215,10 +215,8 @@ object SparkEntry {
       val base = puEmb(s, dir).select(col("vec_id"), col("puLabel"))
         .withColumn("prev", when(col("puLabel") === 1, 1).otherwise(-1))
         .withColumn("cur", PUExpressions.binarize(stubScore, col("prev"), 0.5))
-      val m = PUExpressions.iterMetrics(base, "prev", "cur")
-      val spark = s
-      import spark.implicits._
-      Seq((m.newRelNeg, m.totalPos, m.totalRelNeg, m.totalUndef))
+      val ms = PUExpressions.iterMetricCols("prev", "cur")
+      base.agg(ms.head, ms.tail: _*)
         .toDF("new_relneg", "total_pos", "total_relneg", "total_undef")
     }),
 

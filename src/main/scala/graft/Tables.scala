@@ -84,4 +84,19 @@ object Tables {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** A child of `s` with `confs` set, so library code can run with other
+    * settings without changing its caller's session. It shares the
+    * SparkContext, CacheManager and catalog (persisted frames and saved
+    * tables are still hit; rebind a frame with `GraftColumnBridge.ofRows`),
+    * and is built once per (session, confs): a fresh session's first query
+    * pays ~0.2 s of session-state construction. */
+  def scopedSession(s: SparkSession, confs: (String, String)*): SparkSession =
+    scopedChildren.getOrBuild(s, confs.mkString(",")) {
+      val child = s.newSession()
+      confs.foreach { case (k, v) => child.conf.set(k, v) }
+      child
+    }
+
+  private val scopedChildren = new SessionMemo[SparkSession]
 }

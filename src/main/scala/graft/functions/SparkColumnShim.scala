@@ -25,6 +25,32 @@ object GraftColumnBridge {
   def waitForListeners(spark: SparkSession, timeoutMs: Long): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
 
+  /** `df`'s plan as a frame of `session` — e.g. a child session with its
+    * own conf (`Dataset.ofRows` is `private[sql]`). */
+  def ofRows(session: SparkSession, df: DataFrame): DataFrame =
+    classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession],
+      df.queryExecution.analyzed)
+
+  /** An eager checkpoint (a bare `LogicalRDD` leaf) rebuilt with the same
+    * RDD, partitioning and ordering, but planned against the bytes its RDD
+    * actually stores and `rowCount` instead of its origin plan's estimate.
+    * The block-manager status is `private[spark]`; the master holds every
+    * block's status synchronously once the checkpoint job has finished. */
+  def withMeasuredStats(checkpointed: DataFrame, rowCount: Long): DataFrame = {
+    val leaf = checkpointed.queryExecution.logical
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+    val session = checkpointed.sparkSession.asInstanceOf[classic.SparkSession]
+    val rddId = leaf.rdd.id
+    val bytes = session.sparkContext.env.blockManager.master.getStorageStatus
+      .iterator.flatMap(_.rddBlocks).collect {
+        case (org.apache.spark.storage.RDDBlockId(`rddId`, _), st) => st.memSize + st.diskSize
+      }.sum
+    val stats = org.apache.spark.sql.catalyst.plans.logical.Statistics(
+      sizeInBytes = BigInt(bytes), rowCount = Some(BigInt(rowCount)))
+    classic.Dataset.ofRows(session,
+      leaf.copy()(session, Some(stats), Some(leaf.constraints)))
+  }
+
   /** Register a function into a LIVE session's registry (the
     * SparkSessionExtensions path only applies at session construction). */
   def registerFunction(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType}
 
+import graft.CheckpointUtil.materialize
 import graft.Tables
 import graft.functions.{NativeExpressions, TextFunctions}
 
@@ -102,7 +103,7 @@ object CurationPipeline {
   def paragraphAgg(qdocs: DataFrame, wide: Boolean = false): DataFrame =
     // persist: the exploded paragraph set feeds the canonical agg AND the
     // join-back (same reasoning as dedup_paragraph)
-    paragraphAggOf(graft.CheckpointUtil.trackPersist(
+    paragraphAggOf(graft.CheckpointUtil.track(
       explodeParagraphs(qdocs, wide).persist()))
 
   /** [[paragraphAgg]] over an already-exploded (and persisted) paragraph
@@ -141,7 +142,7 @@ object CurationPipeline {
     * tau-similarity greedy-by-id within a list. Returns
     * (doc_id, cen_id) for kept docs. */
   def semanticSurvivors(survDocs: DataFrame): DataFrame = {
-    val emb = graft.CheckpointUtil.trackPersist(embed(survDocs).persist())
+    val emb = graft.CheckpointUtil.track(embed(survDocs).persist())
     Dedup.semanticDedupWith(emb,
         Similarity.lowestIdCentroids(emb, SemCentroids), SemTau)
       .filter(col("keep"))
@@ -197,7 +198,7 @@ object CurationPipeline {
     // shingle semi-join would run twice (measured +2.7 s on the e2e chain
     // at sf0.1). The limit bounds what the probe MATERIALIZES; on
     // overflow the partial cache is released before the Bloom arm.
-    val contaminated = graft.CheckpointUtil.trackPersist(train
+    val contaminated = graft.CheckpointUtil.track(train
       .select(col("doc_id"), explode(shh).as("sh"))
       .join(broadcast(evalShh), Seq("sh"), "left_semi")
       .select(col("doc_id")).distinct()
@@ -214,7 +215,7 @@ object CurationPipeline {
     if (exactFits)
       train.join(broadcast(contaminated), Seq("doc_id"), "left_anti")
     else {
-      graft.CheckpointUtil.releasePersist(contaminated)
+      contaminated.unpersist(blocking = false)
       val bloom = evalShh.agg(new BloomFilterAgg(DecontBloomBits,
         TrainingDataQueries.BloomK).column(col("sh")).as("bloom"))
       train.crossJoin(broadcast(bloom))
@@ -380,11 +381,11 @@ object CurationPipeline {
   private def stages2to4(docs: DataFrame, q: DataFrame): (DataFrame, DataFrame) = {
     // stage 2: paragraph dedup
     val pagg = paragraphAgg(q)
-    val s2 = graft.CheckpointUtil.trackPersist(paragraphSurvivors(pagg).persist())
+    val s2 = graft.CheckpointUtil.track(paragraphSurvivors(pagg).persist())
     // stage 3: semantic dedup over the stage-2 survivors
     val s3 = semanticSurvivors(q.join(s2.select("doc_id"), "doc_id"))
     // stage 4: decontaminate vs the RAW eval slice
-    val s4 = graft.CheckpointUtil.trackPersist(decontaminate(q.join(s3, "doc_id"),
+    val s4 = graft.CheckpointUtil.track(decontaminate(q.join(s3, "doc_id"),
         docs.filter(col("source") === "src19"))
       .persist()) // feeds the BPE vocab collect AND the apply pass
     (s2, s4)
@@ -470,7 +471,7 @@ object CurationPipeline {
     // compared surface.
     "pipeline_decontaminate_semantic" -> ((s, dir) => {
       val docs = Spread.ifNarrow(Tables.documents(s, dir), col("doc_id"))
-      val emb = graft.CheckpointUtil.trackPersist(docs.select(col("doc_id"), col("source"),
+      val emb = graft.CheckpointUtil.track(docs.select(col("doc_id"), col("source"),
           NativeExpressions.hashEmbed(col("text"), SemDim).as("v"))
         .withColumn("nrm", Dedup.l2norm(col("v")))
         .filter(col("nrm") > 0.0)
@@ -485,7 +486,7 @@ object CurationPipeline {
         if (cents.isEmpty)
           emb.select(col("doc_id")).where(lit(false)).withColumn("graft_sem", lit(true))
         else {
-          val asgn = graft.CheckpointUtil.trackPersist(emb.withColumn("cen_id",
+          val asgn = graft.CheckpointUtil.track(emb.withColumn("cen_id",
             NativeExpressions.argMaxCosine(col("v"), col("nrm"), cents)).persist())
           asgn.filter(col("source") =!= "src19")
             .select(col("cen_id"), col("doc_id"), col("v").as("cv"), col("nrm").as("cnrm"))
@@ -534,7 +535,7 @@ object CurationPipeline {
       val docs = Spread.ifNarrow(Tables.documents(s, dir), col("doc_id"))
       // stage 1: quality — persisted: feeds paragraphs, embeddings, and
       // the survivor joins below
-      val q = graft.CheckpointUtil.trackPersist(qualitySurvivors(docs).persist())
+      val q = graft.CheckpointUtil.track(qualitySurvivors(docs).persist())
       stages2to7(docs, q)
     }),
 
@@ -561,7 +562,7 @@ object CurationPipeline {
     // pinned through the manifest's counts and ordered key-list hash.
     "pipeline_e2e_full" -> ((s, dir) => {
       val docs = Spread.ifNarrow(Tables.documents(s, dir), col("doc_id"))
-      val q = graft.CheckpointUtil.trackPersist(qualitySurvivors(docs).persist())
+      val q = graft.CheckpointUtil.track(qualitySurvivors(docs).persist())
       val (_, s4) = stages2to4(docs, q)
       // stages 5-7 ([[dagTrainSeqs]]), then pack + per-pack manifest
       Packing.packAssignments(dagTrainSeqs(s4), "seq_key", "n_tokens", PackTokens)
@@ -587,7 +588,7 @@ object CurationPipeline {
     // training order.
     "pipeline_e2e_train_order" -> ((s, dir) => {
       val docs = Spread.ifNarrow(Tables.documents(s, dir), col("doc_id"))
-      val q = graft.CheckpointUtil.trackPersist(qualitySurvivors(docs).persist())
+      val q = graft.CheckpointUtil.track(qualitySurvivors(docs).persist())
       val (_, s4) = stages2to4(docs, q)
       val P = TextFunctions.HashMod
       val binned = dagTrainSeqs(s4)
@@ -641,29 +642,24 @@ object CurationPipeline {
       val boundary = maxId * 4 / 5
       val corpus = docs.filter(col("doc_id") <= boundary)
       val batch = docs.filter(col("doc_id") > boundary)
-      // ---- standing-corpus state. Eager localCheckpoint, not persist:
+      // ---- standing-corpus state. Materialized, not persisted:
       // this IS the materialized standing state of a production deployment
       // (lineage-free, computed once, probed by every batch), and
       // truncating the corpus lineage here keeps every downstream batch
       // plan free of the corpus's own build plan. Tracked for release,
       // same discipline as Packing.globalCumSum. ----
-      val qC = graft.CheckpointUtil.track(
-        qualitySurvivors(corpus).localCheckpoint(true))
-      val parasC = graft.CheckpointUtil.track(
-        explodeParagraphs(qC).localCheckpoint(true))
+      val qC = materialize(qualitySurvivors(corpus))._1
+      val parasC = materialize(explodeParagraphs(qC))._1
       val s2C = paragraphSurvivors(paragraphAggOf(parasC))
-      val embC = graft.CheckpointUtil.track(
-        embed(qC.join(s2C.select("doc_id"), "doc_id")).localCheckpoint(true))
+      val embC = materialize(embed(qC.join(s2C.select("doc_id"), "doc_id")))._1
       val cents = Similarity.collectCentroids(
         Similarity.lowestIdCentroids(embC, SemCentroids))
       // ---- the batch's incremental stages 1-4. The multiply-consumed
       // batch frames are eagerly materialized as well (batch-scale, tiny —
       // a production incremental job writes exactly these as its own
       // output/state-update), which keeps every downstream plan shallow. ----
-      val qN = graft.CheckpointUtil.track(
-        qualitySurvivors(batch).localCheckpoint(true))
-      val parasN = graft.CheckpointUtil.track(
-        explodeParagraphs(qN).localCheckpoint(true))
+      val qN = materialize(qualitySurvivors(batch))._1
+      val parasN = materialize(explodeParagraphs(qN))._1
       val corpusHits = parasC
         .join(broadcast(parasN.select("h").distinct()), Seq("h"), "left_semi")
         .select("h").distinct().withColumn("in_corpus", lit(true))
@@ -671,14 +667,13 @@ object CurationPipeline {
         .agg(min(struct(col("doc_id"), col("pidx"))).as("c"))
         .select(col("h"), col("c").getField("doc_id").as("c_doc"),
           col("c").getField("pidx").as("c_pidx"))
-      val paggN = graft.CheckpointUtil.track(parasN.join(canonN, "h")
+      val paggN = materialize(parasN.join(canonN, "h")
         .join(broadcast(corpusHits), Seq("h"), "left")
         .withColumn("kept", not(coalesce(col("in_corpus"), lit(false))) &&
           col("doc_id") === col("c_doc") && col("pidx") === col("c_pidx"))
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_paras"),
-          sum(when(col("kept"), 0L).otherwise(1L)).as("n_dup"))
-        .localCheckpoint(true))
+          sum(when(col("kept"), 0L).otherwise(1L)).as("n_dup")))._1
       val s2N = paragraphSurvivors(paggN)
       if (cents.isEmpty)
         // an empty standing corpus has no quantizer: nothing to dedup
@@ -687,9 +682,8 @@ object CurationPipeline {
           lit(0L).as("n_dup"), lit(0L).as("cen_id")).where(lit(false))
       else {
         val asgC = Similarity.ivfAssignWith(embC, cents)
-        val asgN = graft.CheckpointUtil.track(Similarity.ivfAssignWith(
-          embed(qN.join(s2N.select("doc_id"), "doc_id")), cents)
-          .localCheckpoint(true))
+        val asgN = materialize(Similarity.ivfAssignWith(
+          embed(qN.join(s2N.select("doc_id"), "doc_id")), cents))._1
         val vsC = asgC
           .select(col("cen_id"), col("v").as("cv"), col("nrm").as("cnrm"))
           .join(broadcast(asgN), "cen_id")
@@ -733,12 +727,12 @@ object CurationPipeline {
       // persist: consumed by the stage-1 gate AND the final evidence join —
       // unpersisted, the second join would re-run the whole PU scoring
       // lineage (full-corpus quality scan + the loop's transform chain).
-      val puKeep = graft.CheckpointUtil.trackPersist(puStubScores(s, dir)
+      val puKeep = graft.CheckpointUtil.track(puStubScores(s, dir)
         .filter(col("pu_final") === 1 || col("score") >= 0.5)
         .select(col("doc_id"), col("score").as("pu_score"))
         .persist())
       // stage 1: Gopher rules AND the model's keep decision
-      val q = graft.CheckpointUtil.trackPersist(
+      val q = graft.CheckpointUtil.track(
         qualitySurvivors(docs).join(puKeep, "doc_id").persist())
       stages2to7(docs, q)
         .join(puKeep, "doc_id")
@@ -762,12 +756,12 @@ object CurationPipeline {
     // stage-1 decision engine changes.
     "pipeline_e2e_curate_pulea" -> ((s, dir) => {
       val docs = Spread.ifNarrow(Tables.documents(s, dir), col("doc_id"))
-      val puKeep = graft.CheckpointUtil.trackPersist(puLeaStubScores(s, dir)
+      val puKeep = graft.CheckpointUtil.track(puLeaStubScores(s, dir)
         .filter(col("pu_final") === 1 || col("score") >= LeaKeepTau)
         .select(col("doc_id"), col("score").as("pu_score"))
         .persist())
       // stage 1 IS the learned keep set (no Gopher conjunct — see above)
-      val q = graft.CheckpointUtil.trackPersist(
+      val q = graft.CheckpointUtil.track(
         docs.join(puKeep, "doc_id").persist())
       stages2to7(docs, q)
         .join(puKeep, "doc_id")

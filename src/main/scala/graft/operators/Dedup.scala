@@ -289,7 +289,7 @@ object Dedup {
       return corpus.select(col("vec_id"),
         lit(null).cast(LongType).as("cen_id"), lit(true).as("keep"))
     }
-    val assigned = graft.CheckpointUtil.trackPersist(
+    val assigned = graft.CheckpointUtil.track(
       Similarity.ivfAssignWith(corpus, collected).persist())
     val a = assigned.select(col("cen_id"), col("vec_id").as("id_a"),
       col("v").as("v_a"), col("nrm").as("nrm_a"))
@@ -357,11 +357,11 @@ object Dedup {
     * O(log diameter) — a 100 TB-safe bound (2^20 diameter inside the
     * default maxIters).
     *
-    * One Spark action per round: the convergence metric (count of changed
-    * labels) rides the localCheckpoint materialization via `observe`, not a
-    * second join+count action. Lineage is truncated per round
-    * (localCheckpoint) and the superseded round's checkpoint blocks are
-    * freed explicitly — nothing accumulates across queries.
+    * One stored copy and one Spark action per round: each generation of
+    * labels is [[graft.CheckpointUtil.materialize]]d (lineage-free, planned
+    * against its measured size) with the convergence metric riding the
+    * same job, and the superseded round is freed as soon as the next
+    * exists — nothing accumulates across rounds or queries.
     *
     * Exits only on the fixpoint; hitting maxIters without convergence
     * throws (an unconverged labelling is silently-wrong dedup keep/drop
@@ -384,31 +384,21 @@ object Dedup {
   // sort-merge joins every round. The orchestration jobs are the cheap
   // part.
   def connectedComponentsWithStats(pairs: DataFrame, maxIters: Int = 20): (DataFrame, Int) = {
-    // Checkpoints carry their ORIGIN PLAN's estimated statistics into the
-    // LogicalRDD leaf (Spark 4.1), and a CC round's plan references
-    // `labels` several times, so the carried sizeInBytes MULTIPLIES every
-    // round — measured: 2^(growing) BigInt stats reaching millions of bits
-    // by round 16 (and 200M+ with multi-level jumping), with round-11
-    // planning alone taking 110 s in BigInteger math, while the inflated
-    // estimates also disqualify every static broadcast join. The fix:
-    // persist + materialize (count) each generation — a materialized
-    // InMemoryRelation reports its ACTUAL cached bytes, so every round
-    // plans against real (tiny) sizes, picks broadcast joins statically,
-    // and the next checkpoint carries real numbers instead of the product.
-    def pinStats(df: DataFrame): DataFrame = {
-      val cached = graft.CheckpointUtil.track(df.persist())
-      cached.count()
-      cached
-    }
-    val edges = pinStats(
+    import graft.CheckpointUtil.{materialize, releaseCheckpoint}
+    // Labels only ever decrease (each round takes a min that includes the
+    // old label), so a round changed nothing iff the label sum held still.
+    // Summed as decimal: a long sum of ids could overflow.
+    val labelSum = sum(col("canonical_id").cast("decimal(38,0)")).as("label_sum")
+    def sumOf(m: org.apache.spark.sql.Row): Any = m.getAs[Any]("label_sum")
+    val edges = materialize(
       pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
         .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-        .distinct()
-        .localCheckpoint(true))
-    var labels = pinStats(edges.groupBy(col("src"))
+        .distinct())._1
+    val (labels0, m0) = materialize(edges.groupBy(col("src"))
       .agg(least(col("src"), min(col("dst"))).as("canonical_id"))
-      .select(col("src").as("id"), col("canonical_id"))
-      .localCheckpoint(true))
+      .select(col("src").as("id"), col("canonical_id")), labelSum)
+    var labels = labels0
+    var prevSum = sumOf(m0)
     var converged = false
     var iter = 0
     while (!converged && iter < maxIters) {
@@ -419,7 +409,7 @@ object Dedup {
         .groupBy(col("src").as("id"))
         .agg(min(col("canonical_id")).as("neighbor_min"))
       val half = labels.join(viaNeighbors, Seq("id"), "left")
-        .select(col("id"), col("canonical_id").as("old_label"),
+        .select(col("id"),
           least(col("canonical_id"), coalesce(col("neighbor_min"), col("canonical_id")))
             .as("half_label"))
       // (2) pointer doubling: follow my (propagated) label's label. Label
@@ -432,31 +422,20 @@ object Dedup {
       // the right cost.)
       val byId = labels.select(col("id").as("lbl"), col("canonical_id").as("grand"))
       val doubled = half.join(byId, half("half_label") === byId("lbl"), "left")
-        .select(col("id"), col("old_label"),
+        .select(col("id"),
           least(col("half_label"), coalesce(col("grand"), col("half_label")))
             .as("canonical_id"))
-      // (3) one action: checkpoint the new labels; the convergence metric
-      // rides the same job via a NAMED observe (CollectMetrics node) read
-      // back from the executed plan's accumulators. NOT the Observation
-      // helper: registering an Observation poisons the session's
-      // ObservationManager into every later closure that captures the
-      // SparkSession (e.g. an ML model's training summary) —
-      // "Task not serializable" for unrelated queries (Spark 4.1.2).
-      val metricName = s"graft_cc_round_$iter"
-      val preCheckpoint = doubled
-        .observe(metricName, sum(when(col("canonical_id") =!= col("old_label"), 1L)
-          .otherwise(0L)).as("changed"))
-        .select(col("id"), col("canonical_id"))
-      val next = pinStats(preCheckpoint.localCheckpoint(true))
-      val changed = preCheckpoint.queryExecution.observedMetrics.get(metricName)
-        .flatMap(r => Option(r.getAs[Long]("changed"))).getOrElse(0L)
+      // (3) one action: materialize the new labels, the label sum riding
+      // the same job
+      val (next, m) = materialize(doubled, labelSum)
       // safe: `next` is EAGER and its plan is its own bare leaf, so the
       // superseded round is referenced by nothing once `next` exists
-      graft.CheckpointUtil.releaseCheckpoint(labels)
+      releaseCheckpoint(labels)
       labels = next
-      converged = changed == 0L
+      converged = sumOf(m) == prevSum
+      prevSum = sumOf(m)
     }
-    graft.CheckpointUtil.releaseCheckpoint(edges)
+    releaseCheckpoint(edges)
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIters rounds — " +

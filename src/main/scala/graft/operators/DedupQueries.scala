@@ -517,7 +517,7 @@ object DedupQueries {
   private[operators] def leakproofSplit(s: SparkSession, dir: String,
       maxRows: Long = AdaptiveJoin.DefaultMaxBroadcastRows): DataFrame = {
     // persist: the probe and the join both consume the cluster map
-    val canon = graft.CheckpointUtil.trackPersist(nearDupClusters(s, dir)
+    val canon = graft.CheckpointUtil.track(nearDupClusters(s, dir)
       .select(col("id").as("doc_id"), col("canonical_id"))
       .persist())
     val bucket = pmod(
@@ -555,7 +555,7 @@ object DedupQueries {
     // band: longer >= EdMinLen and |la-lb| <= EdK implies shorter >=
     // EdMinLen - EdK); only the INDEX role requires the full EdMinLen
     // (its k+1 anchor blocks must exist).
-    val d = graft.CheckpointUtil.trackPersist(docs
+    val d = graft.CheckpointUtil.track(docs
       .filter(length(col("text")) >= EdMinLen - EdK)
       .select(col("doc_id"), col("text"), length(col("text")).as("l"))
       .persist())
@@ -583,7 +583,7 @@ object DedupQueries {
       docs: DataFrame, isNew: org.apache.spark.sql.Column): DataFrame = {
     // persist: probe/index explodes and both text join-backs re-consume
     // the filtered slice (same band rationale as editDistPairsUnordered)
-    val d = graft.CheckpointUtil.trackPersist(docs
+    val d = graft.CheckpointUtil.track(docs
       .filter(length(col("text")) >= EdMinLen - EdK)
       .select(col("doc_id"), col("text"), length(col("text")).as("l"))
       .persist())
@@ -658,9 +658,9 @@ object DedupQueries {
     import Packing.DivOps
     // persist: the LSH->CC lineage would otherwise evaluate THRICE
     // (size agg, member join, and the adaptive probe)
-    val members = graft.CheckpointUtil.trackPersist(
+    val members = graft.CheckpointUtil.track(
       nearDupClusters(s, dir).persist()) // (id, canonical_id)
-    val sized = graft.CheckpointUtil.trackPersist(members.join(
+    val sized = graft.CheckpointUtil.track(members.join(
       members.groupBy(col("canonical_id")).agg(count(lit(1)).as("n_members")),
       "canonical_id")
       .select(col("id").as("doc_id"), col("canonical_id"), col("n_members"))
@@ -721,7 +721,7 @@ object DedupQueries {
       maxRows: Long = AdaptiveJoin.DefaultMaxBroadcastRows): DataFrame = {
     // persist: the probe and the anti-join both consume the victim list,
     // and its LSH->CC lineage is the expensive part
-    val victims = graft.CheckpointUtil.trackPersist(nearDupClusters(s, dir)
+    val victims = graft.CheckpointUtil.track(nearDupClusters(s, dir)
       .filter(col("id") =!= col("canonical_id"))
       .select(col("id").as("doc_id"))
       .persist())

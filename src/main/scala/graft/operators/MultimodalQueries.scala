@@ -72,7 +72,7 @@ object MultimodalQueries {
     // registry-tracked (ADVICE r15): both persists outlive this builder —
     // the between-queries sweep frees them instead of accumulating blocks
     // over a 212-query bench session
-    val f = graft.CheckpointUtil.trackPersist(
+    val f = graft.CheckpointUtil.track(
       feats.persist()) // bands + two verify join-backs
     // only NONZERO bands generate candidates: an all-zero band is the
     // absence of evidence, and on a same-length cohort it matches every
@@ -87,13 +87,13 @@ object MultimodalQueries {
         slice(col("hist"), (col("bi") * 16 + 1).cast("int"), lit(16)).as("bc"))
       .filter(aggregate(col("bc"), lit(0L), (a, x) => a + x) > 0)
       .persist()
-    graft.CheckpointUtil.trackPersist(allBands)
+    graft.CheckpointUtil.track(allBands)
     // the frequency cap (see [[PerceptualBandDf]]): one band-grain agg +
     // anti-join. The hot set is tiny on any discriminative corpus (a
     // value is hot because many rows share it, so there are few such
     // values) but adversarially it is corpus-proportional (bands/cap), so
     // the join degrades through AdaptiveJoin, never a forced broadcast.
-    val hot = graft.CheckpointUtil.trackPersist(
+    val hot = graft.CheckpointUtil.track(
       allBands.groupBy(col("bi"), col("n_bytes"), col("bc"))
         .agg(count(lit(1)).as("m"))
         .filter(col("m") > PerceptualBandDf)

@@ -59,19 +59,18 @@ object Packing {
   def globalCumSum(df: DataFrame, orderCol: String, valueCol: String,
                    outCol: String): DataFrame = {
     val spark = df.sparkSession
-    // localCheckpoint (eager), NOT persist: the pinned graft_pid column is
-    // only trustworthy while the materialized blocks survive. With persist,
-    // a lost cache block is silently recomputed from lineage inside the
-    // downstream stage's task, where spark_partition_id() re-evaluates to
-    // the STAGE-local index — corrupting the offset lookup without any
+    // materialize (an eager checkpoint), NOT persist: the pinned graft_pid
+    // column is only trustworthy while the materialized blocks survive. With
+    // persist, a lost cache block is silently recomputed from lineage inside
+    // the downstream stage's task, where spark_partition_id() re-evaluates
+    // to the STAGE-local index — corrupting the offset lookup without any
     // error. Truncated lineage turns block loss into a loud job failure
     // instead of a wrong cumsum.
-    val ordered = graft.CheckpointUtil.track(df
+    val ordered = graft.CheckpointUtil.materialize(df
       .withColumn(valueCol, col(valueCol).cast(LongType))
       .repartitionByRange(col(orderCol))
       .sortWithinPartitions(col(orderCol))
-      .withColumn("graft_pid", spark_partition_id())
-      .localCheckpoint(true))
+      .withColumn("graft_pid", spark_partition_id()))._1
     val sizes = ordered.groupBy(col("graft_pid"))
       .agg(sum(col(valueCol)).as("s"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.CheckpointUtil.materialize
 import graft.Tables
 
 /** Driver-facing similarity-search queries over `embeddings.parquet`.
@@ -218,7 +219,7 @@ object SimilarityQueries {
         val tbl = scratchTable(s, "graft_maxsim_lists" + dirTag(dir))
         writeMaxsimChunks(ch, tbl, centSeq)
         (tbl, centSeq)
-      } finally graft.CheckpointUtil.releasePersist(ch)
+      } finally ch.unpersist(blocking = false)
     }
 
   /** The chunk-grain coarse quantizer: first chunk of the first
@@ -482,13 +483,12 @@ object SimilarityQueries {
     // union — the equivalence is exact, so this shares sim_knn_graph's
     // twin construction verbatim.
     "sim_knn_graph_incremental" -> ((s, dir) => {
-      import graft.CheckpointUtil.track
       val full = Similarity.prepare(Tables.embeddings(s, dir)).persist()
       val isBatch = col("vec_id") >= NCentroids && col("vec_id") % 10 === 7
       val standing = full.filter(!isBatch)
-      val g = track(
-        Similarity.ivfJoinTopK(standing, standing, NCentroids, NProbe, KGraph)
-          .localCheckpoint(true)) // the pre-existing graph, standing state
+      // the pre-existing graph, standing state
+      val g = materialize(
+        Similarity.ivfJoinTopK(standing, standing, NCentroids, NProbe, KGraph))._1
       Similarity.knnGraphIncremental(standing, g, full.filter(isBatch),
           NCentroids, NProbe, KGraph)
         .orderBy("query_id", "rank")
@@ -567,16 +567,15 @@ object SimilarityQueries {
     // which is exactly why the full-rebuild oracle applies verbatim) and
     // appended into the same bucket layout. Probe == full rebuild.
     "src_maxsim_append" -> ((s, dir) => {
-      // registry-tracked; eager localCheckpoint, NOT persist (r17): the two
+      // materialized (eager localCheckpoint), NOT persisted (r17): the two
       // bucketed WRITE passes below are saveAsTable commands, and profiling
       // showed them re-running the whole chunk+embed pipeline from parquet
       // instead of reading the persisted frame (8.5 s + 17 s executor CPU
       // re-embedding) — a checkpoint's lineage is a materialized leaf, so
       // nothing can recompute it. The probe consumes ch lazily, so the
       // checkpoint outlives this builder — the between-queries sweep frees it
-      val ch = graft.CheckpointUtil.track(chunkVecs(
-        Spread.ifNarrow(Tables.documents(s, dir), col("doc_id")))
-        .localCheckpoint(true))
+      val ch = materialize(chunkVecs(
+        Spread.ifNarrow(Tables.documents(s, dir), col("doc_id"))))._1
       val base = ch.filter(col("doc_id") < MaxsimSplit)
       // base-slice centroids == full-corpus centroids BY CONTAINMENT:
       // the quantizer window (doc_id < NCentroids) sits inside the base
@@ -634,11 +633,10 @@ object SimilarityQueries {
     // compacted table must be row-identical to the in-flight index —
     // the shared full-rebuild oracle proves it.
     "src_maxsim_compact" -> ((s, dir) => {
-      // eager localCheckpoint for the same reason as src_maxsim_append: the
-      // write passes re-ran the chunk+embed pipeline past the persist
-      val ch = graft.CheckpointUtil.track(chunkVecs(
-        Spread.ifNarrow(Tables.documents(s, dir), col("doc_id")))
-        .localCheckpoint(true))
+      // materialized for the same reason as src_maxsim_append: the write
+      // passes re-ran the chunk+embed pipeline past the persist
+      val ch = materialize(chunkVecs(
+        Spread.ifNarrow(Tables.documents(s, dir), col("doc_id"))))._1
       val base = ch.filter(col("doc_id") < MaxsimSplit)
       val centSeq = maxsimCentroids(base)
       val tbl = scratchTable(s, "graft_maxsim_precompact")
@@ -940,20 +938,18 @@ object SimilarityQueries {
     // "changed at round t" (disagreement with the neighborhood == the
     // standard noisy-label signal).
     "sim_label_prop" -> ((s, dir) => {
-      import graft.CheckpointUtil.track
       val corpus = Similarity.prepareWith(Tables.embeddings(s, dir), col("label"))
         .persist() // feeds both join sides of the graph build + the seeds
-      // iterative state rolls as eager localCheckpoints (the loop
+      // iterative state rolls as materialized generations (the loop
       // convention): each round's plan roots at lineage-free leaves, so
       // round T's plan — and the assembly's — never re-embeds the graph
       // build T times
-      val g = track(
+      val g = materialize( // both vote rounds scan this edge list
         Similarity.ivfJoinTopK(corpus, corpus, NCentroids, NProbe, KGraph)
-          .select(col("query_id").as("node"), col("vec_id").as("nbr"))
-          .localCheckpoint(true)) // both vote rounds scan this edge list
-      val l0 = track(corpus.select(col("vec_id").as("node"),
-        col("label").cast("long").as("l")).localCheckpoint(true))
-      val l1 = track(Similarity.lpRound(g, l0).localCheckpoint(true))
+          .select(col("query_id").as("node"), col("vec_id").as("nbr")))._1
+      val l0 = materialize(corpus.select(col("vec_id").as("node"),
+        col("label").cast("long").as("l")))._1
+      val l1 = materialize(Similarity.lpRound(g, l0))._1
       val l2 = Similarity.lpRound(g, l1)
       l0.join(l1.select(col("node"), col("l").as("l1")), Seq("node"))
         .join(l2.select(col("node"), col("l").as("l2")), Seq("node"))
@@ -1295,21 +1291,20 @@ object SimilarityQueries {
     // multi-split corpus never repartitions. Persisted across the rounds:
     // every round re-reads the SAME spread frame — without the persist the
     // scan + spread exchange re-runs per round (4 identical shuffles).
-    val emb = graft.CheckpointUtil.trackPersist(
-      Spread.pinIfNarrow(Tables.embeddings(s, dir), col("vec_id"))
-        .select(col("embedding")).persist())
+    val emb = Spread.pinIfNarrow(Tables.embeddings(s, dir), col("vec_id"))
+      .select(col("embedding")).persist()
     var v = Array.fill(64)(0.125)
     var su = Array.fill(64)(0L)
-    // AQE off for the loop's own tiny actions: each round is ONE 64-long
-    // aggregate over the persisted spread frame, but under AQE every
-    // exchange materializes as its own job (plus re-planning), so the
-    // 4-round loop ran 14 driver jobs of pure orchestration (profiled:
-    // stage time 0.4 s vs 1.4 s wall). With AQE off each round is exactly
-    // one 2-stage job. Scoped and restored — only the loop's internal
-    // actions are affected, and its output is collected literals.
-    val aqePrev = s.conf.get("spark.sql.adaptive.enabled", "true")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
     try {
+      // AQE off for the loop's own tiny actions: each round is ONE 64-long
+      // aggregate over the persisted spread frame, but under AQE every
+      // exchange materializes as its own job (plus re-planning), so the
+      // 4-round loop ran 14 driver jobs of pure orchestration (profiled:
+      // stage time 0.4 s vs 1.4 s wall). With AQE off each round is exactly
+      // one 2-stage job. Run on a child session, so the caller's session is
+      // untouched; it shares the CacheManager, so `emb`'s cache is still hit.
+      val embOff = GraftColumnBridge.ofRows(
+        Tables.scopedSession(s, "spark.sql.adaptive.enabled" -> "false"), emb)
       for (_ <- 0 until PcaIters) {
         val vLit = array(v.toSeq.map(lit): _*)
         // native sequential dot (bit-identical to the aggregate(zip_with...)
@@ -1325,7 +1320,7 @@ object SimilarityQueries {
         val sumCols = (0 until 64).map(j =>
           sum(floor(col("y") * element_at(col("embedding"), j + 1).cast("double")
             * 1048576.0).cast("long")).as(s"s$j"))
-        val row = emb.select(y.as("y"), col("embedding"))
+        val row = embOff.select(y.as("y"), col("embedding"))
           .agg(sumCols.head, sumCols.tail: _*)
           .collect()(0)
         su = Array.tabulate(64)(j => if (row.isNullAt(j)) 0L else row.getLong(j))
@@ -1333,10 +1328,7 @@ object SimilarityQueries {
         val norm = math.sqrt(z.foldLeft(0.0)((a, x) => a + x * x))
         v = z.map(_ / norm)
       }
-    } finally {
-      s.conf.set("spark.sql.adaptive.enabled", aqePrev)
-      graft.CheckpointUtil.releasePersist(emb)
-    }
+    } finally emb.unpersist(blocking = false)
     (v, su)
   }
 

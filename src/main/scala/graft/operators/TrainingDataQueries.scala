@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 
+import graft.CheckpointUtil.materialize
 import graft.Tables
 import graft.functions.{NativeExpressions, TextFunctions}
 
@@ -250,7 +251,7 @@ object TrainingDataQueries {
       .select(col("doc_id"), col("pos"), col("sh"))
     // persisted (registry-tracked): the size probe and the join both
     // consume it — unpersisted, the shingle-grain shuffle would run twice
-    val owners = graft.CheckpointUtil.trackPersist(ps.groupBy(col("sh"))
+    val owners = graft.CheckpointUtil.track(ps.groupBy(col("sh"))
       .agg(min(col("doc_id")).as("own"), max(col("doc_id")).as("mx"))
       .filter(col("own") =!= col("mx"))
       .select(col("sh"), col("own"))
@@ -284,9 +285,8 @@ object TrainingDataQueries {
     val boundary = idBoundary(docs)
     val corpus = docs.filter(col("doc_id") <= boundary)
     val batch = docs.filter(col("doc_id") > boundary)
-    val corpusShh = graft.CheckpointUtil.track(
-      positionalShingles(corpus, SubstrNgram, wide).select(col("sh")).distinct()
-        .localCheckpoint(true))
+    val corpusShh = materialize(
+      positionalShingles(corpus, SubstrNgram, wide).select(col("sh")).distinct())._1
     val psB = positionalShingles(batch, SubstrNgram, wide)
       .select(col("doc_id"), col("pos"), col("sh"))
     val corpusHits = psB.join(corpusShh, Seq("sh"), "left_semi")
@@ -339,13 +339,13 @@ object TrainingDataQueries {
              else NativeExpressions.windowHashes(col("text"), w)
     // persist: the exploded paragraph set feeds the frequency chain AND
     // the drop join — without it the scan + kernel pass runs twice
-    val paras = graft.CheckpointUtil.trackPersist(docs
+    val paras = graft.CheckpointUtil.track(docs
       .select(col("doc_id"), posexplode(wh))
       .select(col("doc_id"), col("pos").cast(LongType).as("pidx"),
         col("col").as("h"))
       .persist())
     // persisted: the size probe and the join both consume it
-    val boiler = graft.CheckpointUtil.trackPersist(paras
+    val boiler = graft.CheckpointUtil.track(paras
       .groupBy(col("h"), col("doc_id"))
       .agg(count(lit(1)).as("occ"))
       .groupBy(col("h")).agg(count(lit(1)).as("nd"))
@@ -370,7 +370,7 @@ object TrainingDataQueries {
   private[operators] def tokenDrift(docs: DataFrame): DataFrame = {
     import Packing.DivOps
     val boundary = idBoundary(docs)
-    val counts = graft.CheckpointUtil.trackPersist(docs
+    val counts = graft.CheckpointUtil.track(docs
       .select((col("doc_id") <= boundary).as("base"),
         explode(TextFunctions.tokens(col("text"))).as("tok"))
       .groupBy(col("tok"))
@@ -433,14 +433,13 @@ object TrainingDataQueries {
     import Packing.DivOps
     val boundary = idBoundary(docs)
     val shh = TextFunctions.shingleHashes(col("text"), SubstrNgram)
-    // base set: distinct + localCheckpoint (corpus-proportional; the
+    // base set: distinct + materialize (corpus-proportional; the
     // lineage above it must not replay into both consumers)
-    val baseShh = graft.CheckpointUtil.track(docs
+    val baseShh = materialize(docs
       .filter(col("doc_id") <= boundary)
-      .select(explode(shh).as("sh")).distinct()
-      .localCheckpoint(true))
+      .select(explode(shh).as("sh")).distinct())._1
     // batch arrays computed ONCE (explode consumer + size consumer)
-    val batch = graft.CheckpointUtil.trackPersist(docs
+    val batch = graft.CheckpointUtil.track(docs
       .filter(col("doc_id") > boundary)
       .select(col("doc_id"), shh.as("shh"))
       .persist())
@@ -1299,7 +1298,7 @@ object TrainingDataQueries {
     // pass: excise a new batch (top ~20% of ids, the incremental chain's
     // batch rule) against STANDING corpus state without touching the
     // corpus. The state is the corpus's distinct shingle set, computed
-    // once and materialized (eager localCheckpoint — the production
+    // once and materialized (CheckpointUtil.materialize — the production
     // artifact a deployment persists); every batch position whose shingle
     // exists in the state is a hit outright (the owner lives in the
     // corpus — every corpus id precedes every batch id), and shingles the
@@ -1334,12 +1333,12 @@ object TrainingDataQueries {
       // stage 1+2: quality ∧ importance gates
       val keep = dsirRanked(s, dir).filter(col("keep"))
         .select(col("doc_id"), col("dsir_rank"))
-      val surv = graft.CheckpointUtil.trackPersist(
+      val surv = graft.CheckpointUtil.track(
         CurationPipeline.qualitySurvivors(docsSpread(s, dir))
           .join(keep, "doc_id").persist())
       // stage 3: surgical substring excision within the survivor corpus
       val cov = excisedCoverage(repeatedSpanHits(surv), SubstrNgram)
-      val after = graft.CheckpointUtil.trackPersist(surv
+      val after = graft.CheckpointUtil.track(surv
         .select(col("doc_id"), col("dsir_rank"),
           TextFunctions.tokenCount(col("text")).cast(LongType).as("n_before"))
         .join(cov, Seq("doc_id"), "left")

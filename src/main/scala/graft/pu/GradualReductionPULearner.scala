@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions.col
   * seeded with Long.MaxValue (reference :51).
   *
   * The reference runs 4 separate `count()` actions per iteration
-  * (reference :41-49, :74-79) — here they fuse into one
-  * [[PUExpressions.iterMetrics]] pass.
+  * (reference :41-49, :74-79) — here they fuse into
+  * [[PUExpressions.iterMetricCols]], riding the job that materializes the
+  * iteration.
   */
 class GradualReductionPULearner[
     E <: ProbabilisticClassifier[Vector, E, M],
@@ -37,16 +38,15 @@ class GradualReductionPULearner[
 
     val prevLabel = "prevLabel"
     val curLabel = "curLabel"
-    val state = new IterationState()
-
-    var curDF = replaceZerosByUndefLabel(oneStepPUDF, labelColumnName, prevLabel, undefLabel)
+    val state = new TwoStepPULearner.IterationState(prevLabel, curLabel)
 
     // entry thresholding considers undefined rows (reference :35-40)
-    curDF = state.advance(
-      curDF.withColumn(curLabel,
-        binarize(col(finalLabel), col(prevLabel), relNegThreshold, undefLabel)))
+    val (entryDF, entry) = state.advance(
+      replaceZerosByUndefLabel(oneStepPUDF, labelColumnName, prevLabel, undefLabel)
+        .withColumn(curLabel,
+          binarize(col(finalLabel), col(prevLabel), relNegThreshold, undefLabel)))
+    var curDF = entryDF
 
-    val entry = iterMetrics(curDF, prevLabel, curLabel)
     var newRelNegCount = entry.newRelNeg
     val totalPosCount = entry.totalPos
 
@@ -77,11 +77,10 @@ class GradualReductionPULearner[
 
       // inner re-thresholding of RELIABLE NEGATIVES: the ones now scoring
       // >= threshold are promoted back to undefined (reference :70-71)
-      curDF = state.advance(
+      val (next, m) = state.advance(
         curDF.withColumn(curLabel,
           binarize(col(finalLabel), col(prevLabel), relNegThreshold, relNegLabel)))
-
-      val m = iterMetrics(curDF, prevLabel, curLabel)
+      curDF = next
       val prevNewRelNegCount = newRelNegCount
       // in-loop, "new" and "total" reliable negatives coincide (reference
       // :74-79 computes the same filter twice; one fused pass here)

@@ -100,20 +100,18 @@ object PU {
     // exchange: spark_partition_id() is physical, so re-evaluating it
     // after any later exchange would read the wrong partition. The count
     // pass and the ranked output must see ONE execution of the range
-    // exchange — and localCheckpoint (eager), NOT persist: graft_pid and the
-    // monotonically_increasing_id record numbers are only trustworthy while
-    // the materialized blocks survive — with persist, a lost cache block
-    // would be silently recomputed inside the downstream stage's task,
-    // where spark_partition_id() re-evaluates to the STAGE-local index and
-    // the offset lookup goes wrong without any error. Truncated lineage
+    // exchange — and materialize (an eager checkpoint), NOT persist:
+    // graft_pid and the monotonically_increasing_id record numbers are only
+    // trustworthy while the materialized blocks survive — with persist, a
+    // lost cache block would be silently recomputed inside the downstream
+    // stage's task, where spark_partition_id() re-evaluates to the
+    // STAGE-local index and the offset lookup goes wrong without any error. Truncated lineage
     // turns block loss into a loud job failure instead of a wrong rank.
-    // (Freed for non-harness callers when the df becomes unreachable —
-    // weak registry — or at releaseStragglers.)
-    val ordered = graft.CheckpointUtil.track(df
+    // (Tracked: freed at the caller's next releaseStragglers.)
+    val ordered = graft.CheckpointUtil.materialize(df
       .repartitionByRange(order: _*)
       .sortWithinPartitions(order: _*)
-      .withColumn("graft_pid", spark_partition_id())
-      .localCheckpoint(true))
+      .withColumn("graft_pid", spark_partition_id()))._1
     val sizes = ordered
       .groupBy(col("graft_pid"))
       .agg(count(lit(1)).as("n"))

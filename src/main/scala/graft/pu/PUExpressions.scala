@@ -2,7 +2,7 @@ package graft.pu
 
 import org.apache.spark.ml.attribute.NominalAttribute
 import org.apache.spark.ml.functions.vector_to_array
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
@@ -76,28 +76,29 @@ object PUExpressions {
     * TraditionalPULearner.scala:47-50) to 4 (PU-LEA,
     * GradualReductionPULearner.scala:41-49,74-79) separate `count()` actions
     * per iteration — each a full pass over the data. At 100 TB that is the
-    * dominant per-iteration cost; one `agg` with conditional sums does all of
-    * them in a single pass (map-side partial aggregation, one tiny shuffle).
+    * dominant per-iteration cost; here they are conditional sums
+    * ([[iterMetricCols]]) that ride the job materializing the iteration
+    * (see `TwoStepPULearner.IterationState`), so they cost no pass at all.
     */
   case class IterMetrics(newRelNeg: Long, totalPos: Long, totalRelNeg: Long,
                          totalUndef: Long)
 
-  /** One fused agg pass replacing the reference's 1–4 separate `count()`s
-    * per iteration. This is also the action that MATERIALIZES the freshly
-    * persisted iteration (persist is lazy), so per iteration there is
-    * exactly one metrics pass + the fit's passes — `Dataset.observe` could
-    * not fuse further: loop control needs these numbers BEFORE deciding
-    * whether the next fit happens at all, so they can't ride along on a
-    * later action. */
-  def iterMetrics(df: DataFrame, prevLabel: String, curLabel: String): IterMetrics = {
-    val row = df.agg(
-      sum(when(col(prevLabel) === undefLabel && col(curLabel) === relNegLabel, 1L)
-        .otherwise(0L)).as("newRelNeg"),
-      sum(when(col(curLabel) === posLabel, 1L).otherwise(0L)).as("totalPos"),
-      sum(when(col(curLabel) === relNegLabel, 1L).otherwise(0L)).as("totalRelNeg"),
-      sum(when(col(curLabel) === undefLabel, 1L).otherwise(0L)).as("totalUndef")
-    ).head()
-    def l(i: Int): Long = if (row.isNullAt(i)) 0L else row.getLong(i)
-    IterMetrics(l(0), l(1), l(2), l(3))
+  object IterMetrics {
+    /** Read from a row carrying the [[iterMetricCols]] (by name; the null
+      * sum of an empty frame is 0). */
+    def apply(row: Row): IterMetrics = {
+      def l(name: String): Long =
+        Option(row.getAs[java.lang.Long](name)).fold(0L)(_.longValue)
+      IterMetrics(l("newRelNeg"), l("totalPos"), l("totalRelNeg"), l("totalUndef"))
+    }
   }
+
+  /** The [[IterMetrics]] as aggregate columns over one iteration's frame —
+    * the reference's 1–4 `count()`s per iteration fused into one set. */
+  def iterMetricCols(prevLabel: String, curLabel: String): Seq[Column] = Seq(
+    sum(when(col(prevLabel) === undefLabel && col(curLabel) === relNegLabel, 1L)
+      .otherwise(0L)).as("newRelNeg"),
+    sum(when(col(curLabel) === posLabel, 1L).otherwise(0L)).as("totalPos"),
+    sum(when(col(curLabel) === relNegLabel, 1L).otherwise(0L)).as("totalRelNeg"),
+    sum(when(col(curLabel) === undefLabel, 1L).otherwise(0L)).as("totalUndef"))
 }

@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions.col
   * (reference: src/main/scala/ru/ispras/pu4spark/TraditionalPULearner.scala:9-76).
   *
   * Control flow lives on the driver (ML iteration, not tuple-at-a-time);
-  * data stays distributed. Per iteration: one fused metrics pass
-  * ([[PUExpressions.iterMetrics]] — the reference runs a separate `count()`)
-  * + one fit + one transform.
+  * data stays distributed. Per iteration: one materializing job carrying
+  * the fused metrics ([[PUExpressions.iterMetricCols]] — the reference runs
+  * a separate `count()`) + one fit + one transform.
   */
 class TraditionalPULearner[
     E <: ProbabilisticClassifier[Vector, E, M],
@@ -35,22 +35,21 @@ class TraditionalPULearner[
 
     // 0 -> undefined(-1), 1 stays positive (reference :40)
     var curDF = replaceZerosByUndefLabel(oneStepPUDF, labelColumnName, prevLabel, undefLabel)
-    val state = new IterationState()
+    val state = new TwoStepPULearner.IterationState(prevLabel, curLabel)
 
     for (_ <- 1 to maxIters) {
       // threshold unlabeled rows into reliable negatives (reference :44-46)
-      curDF = state.advance(
+      val (thresholded, metrics) = state.advance(
         curDF.withColumn(curLabel,
           binarize(col(finalLabel), col(prevLabel), relNegThreshold, undefLabel)))
 
       // newly-converted reliable negatives; early exit when none (reference :47-55)
-      val metrics = iterMetrics(curDF, prevLabel, curLabel)
       if (metrics.newRelNeg == 0) {
-        return curDF.drop(ProbabilisticClassifierConfig.featuresName)
+        return thresholded.drop(ProbabilisticClassifierConfig.featuresName)
       }
 
       // refit on positives + reliable negatives, rescore all rows (reference :56-71)
-      curDF = refitAndRescore(curDF, curLabel, finalLabel)
+      curDF = refitAndRescore(thresholded, curLabel, finalLabel)
       // rotate labels for the next iteration (reference :72-73)
       curDF = curDF.drop(prevLabel).withColumnRenamed(curLabel, prevLabel)
     }

@@ -5,7 +5,6 @@ import org.apache.spark.ml.feature.VectorIndexer
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.apache.spark.storage.StorageLevel
 
 /** Two-step PU learning skeleton: step one picks "reliable negatives" from
   * the unlabeled pool, step two trains a binary classifier on positives +
@@ -14,7 +13,7 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale changes vs the reference (SURVEY.md §4.3):
   *  - per-row logic is native expressions (see [[PUExpressions]]), no UDFs;
-  *  - iteration state management truncates lineage and unpersists superseded
+  *  - iteration state management truncates lineage and frees superseded
   *    iterations (the reference `cache()`s every iteration and never frees —
   *    unbounded plan growth + a memory leak at scale).
   */
@@ -73,47 +72,27 @@ abstract class TwoStepPULearner[
       .drop(transientCols: _*)
   }
 
-  /** Iteration-state manager: persists the current iteration (explicit
-    * MEMORY_AND_DISK for deterministic spill), truncates lineage every
-    * `checkpointEvery` iterations via localCheckpoint (iterative
-    * withColumn/rename otherwise grows an unbounded Catalyst plan — analysis
-    * time blows up past ~10 iterations), and unpersists the superseded
-    * iteration once the new one is materialized.
-    */
-  protected final class IterationState(checkpointEvery: Int = 3) {
-    private var prev: Option[(DataFrame, Boolean)] = None
-    private var prevPrev: Option[(DataFrame, Boolean)] = None
-    // a superseded CHECKPOINT can't be freed when its two-generation turn
-    // comes: the still-live persist generations after it root their lineage
-    // at it (they recompute from it if their own blocks are evicted). It is
-    // unreachable only once the NEXT checkpoint has truncated lineage and
-    // every persist generation rooted at the old one has itself been
-    // superseded — which is exactly when the next checkpoint's own release
-    // turn arrives. So checkpoint frees are deferred one checkpoint cycle.
-    private var deferredCheckpoint: Option[DataFrame] = None
-    private var iter = 0
+}
 
-    def advance(df: DataFrame): DataFrame = {
-      iter += 1
-      val isCheckpoint = checkpointEvery > 0 && iter % checkpointEvery == 0
-      val cur =
-        if (isCheckpoint)
-          graft.CheckpointUtil.track(df.localCheckpoint(eager = true))
-        else
-          df.persist(StorageLevel.MEMORY_AND_DISK)
-      // persist() is lazy: unpersisting `prev` NOW would evict it before
-      // `cur` is ever materialized, forcing a full lineage recompute. Keep
-      // two generations — by the next advance(), actions (iterMetrics/fit)
-      // have materialized `cur`, so its grandparent is safely evictable.
-      prevPrev.foreach { case (g, wasCheckpoint) =>
-        if (wasCheckpoint) {
-          deferredCheckpoint.foreach(graft.CheckpointUtil.releaseCheckpoint)
-          deferredCheckpoint = Some(g)
-        } else graft.CheckpointUtil.releasePersist(g)
-      }
-      prevPrev = prev
-      prev = Some((cur, isCheckpoint))
-      cur
+object TwoStepPULearner {
+  import PUExpressions.{IterMetrics, iterMetricCols}
+
+  /** Iteration-state manager: every generation is
+    * [[graft.CheckpointUtil.materialize]]d — lineage-free (iterative
+    * withColumn/rename otherwise grows an unbounded Catalyst plan —
+    * analysis time blows up past ~10 iterations) — with its
+    * [[IterMetrics]] observed in that same job, and the superseded
+    * generation is freed as soon as the new one exists.
+    */
+  private[graft] final class IterationState(prevLabel: String, curLabel: String) {
+    private var prev: Option[DataFrame] = None
+
+    def advance(df: DataFrame): (DataFrame, IterMetrics) = {
+      val (cur, metrics) =
+        graft.CheckpointUtil.materialize(df, iterMetricCols(prevLabel, curLabel): _*)
+      prev.foreach(graft.CheckpointUtil.releaseCheckpoint)
+      prev = Some(cur)
+      (cur, IterMetrics(metrics))
     }
   }
 }

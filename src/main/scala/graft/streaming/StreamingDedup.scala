@@ -284,14 +284,16 @@ object StreamingDedup {
         .bucketBy(nBuckets, "cen_id").sortBy("cen_id", "vec_id")
         .saveAsTable(tbl)
     } else {
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "dynamic")
-      try assigned.write.mode("overwrite").insertInto(tbl)
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
+      // dynamic overwrite replaces only this batch's partition, so a
+      // replayed batch stays idempotent. Set on a child session (V1
+      // insertInto ignores the writer option), so the caller's conf is left
+      // alone; the caller's cached file listing of `tbl` is then refreshed,
+      // as a write in its own session would have done.
+      val dynamic = graft.Tables.scopedSession(s,
+        "spark.sql.sources.partitionOverwriteMode" -> "dynamic")
+      org.apache.spark.sql.GraftColumnBridge.ofRows(dynamic, assigned)
+        .write.mode("overwrite").insertInto(tbl)
+      s.catalog.refreshTable(tbl)
     }
   }
 

@@ -6,7 +6,8 @@ import scala.jdk.CollectionConverters._
 /** Pins the single-session-builder contract: `Tables.localSession` is the
   * only place under src/main that builds a SparkSession, so every main,
   * perfbench and the specs run under one engine config; likewise
-  * `SessionMemo` is the only per-session memo. Also pins what
+  * `SessionMemo` is the only per-session memo, `CheckpointUtil.materialize`
+  * the only checkpoint, and `Tables.scopedSession` the only conf write. Also pins what
   * that config must carry, and that the AQE keys it leaves alone really
   * resolve to Spark's stock defaults (the env knobs that used to override
   * them defaulted to exactly those values).
@@ -26,17 +27,22 @@ class SessionConfigSpec extends SparkSuite {
       .replaceAll("(?s)/\\*.*?\\*/", "")
       .replaceAll("//[^\n]*", "")
 
-  // (pattern, the one src/main file allowed to use it): one session
-  // builder, and one hand-rolled per-session memo
+  // (pattern, the one src/main file allowed to use it, or None for no
+  // file): one session builder, one hand-rolled per-session memo, one way
+  // to store a generation, and no library code changing a session's conf
+  // (scoped settings go through Tables.scopedSession's child session)
   for ((pattern, owner) <- Seq(
-      "SparkSession.builder" -> "Tables.scala",
-      "WeakHashMap" -> "SessionMemo.scala",
-      "CompletableFuture" -> "SessionMemo.scala"))
-    test(s"$pattern appears under src/main only in $owner") {
+      "SparkSession.builder" -> Some("Tables.scala"),
+      "WeakHashMap" -> Some("SessionMemo.scala"),
+      "CompletableFuture" -> Some("SessionMemo.scala"),
+      "localCheckpoint(" -> Some("CheckpointUtil.scala"),
+      "conf.set(" -> Some("Tables.scala"),
+      "conf.unset(" -> None))
+    test(s"$pattern appears under src/main ${owner.fold("nowhere")("only in " + _)}") {
       val users = scalaFiles("src/main")
         .filter(p => code(p).contains(pattern))
         .map(_.getFileName.toString)
-      assert(users == Seq(owner), users)
+      assert(users == owner.toSeq, users)
     }
 
   test("the retired AQE env knobs appear nowhere") {

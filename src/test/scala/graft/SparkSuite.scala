@@ -11,6 +11,22 @@ trait SparkSuite extends AnyFunSuite {
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 
+  /** `body`'s result and the number of jobs started while it ran. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.GraftColumnBridge.waitForListeners(spark, 10000)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.sql.GraftColumnBridge.waitForListeners(spark, 10000)
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   /** The AdaptiveJoin degrade-arm pin, shared by every call-site spec
     * (boilerplate, ownership, soft-weight, corpus-prep, leakproof
     * split): the two arms are row-identical AND the physical join

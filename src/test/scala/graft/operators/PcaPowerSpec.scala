@@ -32,6 +32,16 @@ class PcaPowerSpec extends SparkSuite {
       s"Rayleigh(v)=$rayV must approach/beat the best axis ($axis)")
   }
 
+  test("the power loop runs one job per round, with the caller's AQE left on") {
+    val pca = SparkEntry.queries("sim_pca_power")
+    pca(spark, sf001) // the spread probe is memoized per session: warm it
+    val (_, jobs) = jobsDuring(pca(spark, sf001))
+    // one per round, plus the parquet schema read and the spread exchange
+    // under the cached frame (built at persist, under the caller's AQE)
+    assert(jobs == SimilarityQueries.PcaIters + 2, s"$jobs jobs")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+  }
+
   test("whitening removes exactly the projected mass (Pythagoras per row)") {
     val w = SparkEntry.queries("sim_whiten_topdrop")(spark, sf001).persist()
     assert(w.count() == Tables.embeddings(spark, sf001).count())

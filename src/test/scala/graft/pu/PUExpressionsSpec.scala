@@ -75,7 +75,8 @@ class PUExpressionsSpec extends SparkSuite {
     // (prev, cur): 2 new relnegs, 3 pos, 3 relneg total, 2 undef
     val df = Seq((-1, 0), (-1, 0), (0, 0), (1, 1), (1, 1), (1, 1), (-1, -1), (-1, -1))
       .toDF("prev", "cur")
-    val m = iterMetrics(df, "prev", "cur")
+    val ms = iterMetricCols("prev", "cur")
+    val m = IterMetrics(df.agg(ms.head, ms.tail: _*).head())
     assert(m == IterMetrics(2, 3, 3, 2))
   }
 }

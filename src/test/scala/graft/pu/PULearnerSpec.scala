@@ -41,7 +41,8 @@ class PULearnerSpec extends SparkSuite {
     val learner = TraditionalPULearnerConfig(0.0, 5, LogisticRegressionConfig()).build()
     val out = learner.weight(pu.toDF(), "puLabel", "features", "out")
     // early-exit branch returns the thresholded frame: curLabel all undef/pos
-    val m = PUExpressions.iterMetrics(out, "prevLabel", "curLabel")
+    val ms = PUExpressions.iterMetricCols("prevLabel", "curLabel")
+    val m = PUExpressions.IterMetrics(out.agg(ms.head, ms.tail: _*).head())
     assert(m.newRelNeg == 0 && m.totalRelNeg == 0)
   }
 
