@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions.{count, lit}
   * weak-ref design raced the GC — a collected weak entry could never be
   * unpersisted again, because the CacheManager's InMemoryRelation pins
   * cached RDDs against ContextCleaner forever). A caller that never drains
-  * leaks exactly what an unreleased cache always leaked; the driver harness
-  * (Verify/Bench) and every spec drain between queries.
+  * leaks exactly what an unreleased cache always leaked; the Verify and
+  * Bench mains and every spec drain between queries.
   */
 object CheckpointUtil {
 
