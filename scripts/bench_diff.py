@@ -2,8 +2,10 @@
 """Compare two bench_out.json files (full-precision per-query doubles).
 
 Usage: bench_diff.py BEFORE.json AFTER.json [threshold_sec]
-Prints total/geomean and per-query movers beyond 1.5x (at >0.3s materiality),
-plus family subtotals.
+Prints total/geomean, the cold-sweep and steady-sweep totals, per-query
+movers beyond 1.5x (at >0.3s materiality), plus family subtotals. The two
+sweep totals show which sweep a change moved: compile and other one-off cost
+lands in the cold sweep, per-pass cost in both.
 """
 import json
 import math
@@ -30,6 +32,14 @@ def main() -> None:
     geo = math.exp(sum(math.log(r) for r in ratios) / len(ratios))
     print(f"total {ta:.1f}s -> {tb:.1f}s ({tb / ta:.3f}x of before); "
           f"geomean after/before {geo:.3f}")
+    ca, cb = a.get("cold_total_sec"), b.get("cold_total_sec")
+    if ca is not None and cb is not None:
+        print(f"cold sweep {ca:.1f}s -> {cb:.1f}s ({cb / ca:.3f}x)")
+    sa, sb = a.get("sweeps", {}).get("steady"), b.get("sweeps", {}).get("steady")
+    if sa and sb:
+        ssa = sum(max(sa[q], 0) for q in common)
+        ssb = sum(max(sb[q], 0) for q in common)
+        print(f"steady sweep {ssa:.1f}s -> {ssb:.1f}s ({ssb / ssa:.3f}x)")
     fams = {}
     for q in common:
         f = fam(q)

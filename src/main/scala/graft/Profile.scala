@@ -1,12 +1,16 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Dev utility (guide §1: measure first): run queries with a stage-metrics
   * listener and report, per query, the job count, stage count, task count,
   * total executor run time, shuffle bytes, and the slowest stages — the
   * numbers that say whether a query's wall-clock is scheduling overhead,
-  * shuffle latency, or real compute.
+  * shuffle latency, or real compute. Each line also carries the Janino
+  * compiles and compile time the query caused: the warm line reads 0 while
+  * the codegen cache holds the query's classes.
   * Usage: sbt "runMain graft.Profile <query> [query...]"
   */
 object Profile {
@@ -38,9 +42,12 @@ object Profile {
     for (q <- args) {
       for (round <- Seq("cold", "warm")) {
         stages.synchronized { stages.clear(); jobs = 0 }
+        val (cg0, cgNs0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
         val t0 = System.nanoTime()
         SparkEntry.queries(q)(spark, sf).write.format("noop").mode("overwrite").save()
         val wall = (System.nanoTime() - t0) / 1e9
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - cg0
+        val compileMs = (CodeGenerator.compileTime - cgNs0) / 1e6
         spark.catalog.clearCache()
         CheckpointUtil.releaseStragglers()
         // drain listener events deterministically (ADVICE r16: the fixed
@@ -51,7 +58,7 @@ object Profile {
         val totExec = snap.map(_.execMs).sum
         val totStageWall = snap.map(_.wallMs).sum
         val shufW = snap.map(_.shufWriteB).sum
-        println(f"== $q [$round] wall=$wall%.2fs jobs=$nJobs stages=${snap.size} tasks=$totTasks execCpu=${totExec / 1e3}%.2fs stageWallSum=${totStageWall / 1e3}%.2fs shufWrite=${shufW / 1e6}%.1fMB")
+        println(f"== $q [$round] wall=$wall%.2fs jobs=$nJobs stages=${snap.size} tasks=$totTasks execCpu=${totExec / 1e3}%.2fs stageWallSum=${totStageWall / 1e3}%.2fs shufWrite=${shufW / 1e6}%.1fMB compiles=$compiles compileMs=$compileMs%.0f")
         if (round == "warm") {
           for (s <- snap.sortBy(-_.wallMs).take(12))
             println(f"   stage ${s.id}%4d wall=${s.wallMs / 1e3}%6.2fs exec=${s.execMs / 1e3}%6.2fs tasks=${s.tasks}%4d in=${s.inputB / 1e6}%7.1fMB sr=${s.shufReadB / 1e6}%6.1fMB sw=${s.shufWriteB / 1e6}%6.1fMB  ${s.name.take(60)}")

@@ -59,6 +59,12 @@ class SessionConfigSpec extends SparkSuite {
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
   }
 
+  test("localSession sizes the codegen class cache to 4096 entries") {
+    val key = "spark.sql.codegen.cache.maxEntries"
+    assert(spark.sparkContext.getConf.get(key) == "4096")
+    assert(spark.conf.get(key) == "4096")
+  }
+
   test("AQE keys localSession leaves alone resolve to SQLConf's defaults") {
     val stock = new org.apache.spark.sql.internal.SQLConf
     for (key <- Seq(
