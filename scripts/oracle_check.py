@@ -28,7 +28,7 @@ def main():
     for t in TABLES:
         con.sql(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     sqls = json.load(open(f"{out_dir}/oracle_sql.json"))
-    ok, bad = 0, 0
+    ok, bad, rows_only = 0, 0, 0
     # A query that THREW leaves no output directory — without this it
     # would be silently absent from the sweep (exactly how the PQ-family
     # zero-vector collapse hid from the adversarial sweep for two rounds).
@@ -55,6 +55,7 @@ def main():
             status = "ROWS_ONLY_OK" if len(got) > 0 else "ROWS_ONLY_EMPTY"
             print(f"{status:16s} {name} rows={len(got)}")
             ok += status == "ROWS_ONLY_OK"
+            rows_only += status == "ROWS_ONLY_OK"
             bad += status != "ROWS_ONLY_OK"
             continue
         sql = sqls[name]
@@ -91,7 +92,7 @@ def main():
         else:
             print(f"OK               {name} rows={len(g)}")
             ok += 1
-    print(f"\n{ok} ok, {bad} bad")
+    print(f"\n{ok} ok ({ok - rows_only} hash, {rows_only} rows-only), {bad} bad")
     sys.exit(1 if bad else 0)
 
 if __name__ == "__main__":

@@ -91,10 +91,14 @@ object CheckpointUtil {
     pending.foreach(freeBlocks)
   }
 
-  /** CacheManager entry + any checkpoint blocks behind LogicalRDD leaves. */
+  /** A frame's OWN storage: its CacheManager entry, plus its checkpoint
+    * blocks when its plan IS the `LogicalRDD` leaf [[materialize]] returns.
+    * Leaves deeper in the plan belong to other generations, each tracked or
+    * released on its own; freeing them here too released a generation
+    * twice when a tracked persist was built over it. */
   private def freeBlocks(df: DataFrame): Unit = {
     df.unpersist(blocking = false)
-    df.queryExecution.logical.foreach {
+    df.queryExecution.logical match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false)
       case _ =>

@@ -9,8 +9,8 @@ import graft.functions.NativeExpressions
 
 /** Approximate/exact nearest-neighbor search over an embedding column
   * (`array<float>`). Tiers trading recall for scan cost — brute force,
-  * IVF (first-N / k-means / injected centers), int8 scalar quantization,
-  * PQ/ADC, the IVF-PQ composition, and Spark-ML LSH:
+  * IVF (first-N / Lloyd-trained / injected centers), int8 scalar
+  * quantization, PQ/ADC, the IVF-PQ composition, and Spark-ML LSH:
   *
   *  1. [[bruteForceTopK]] — exact: broadcast the (small) query set against
   *     the corpus, cosine per pair, per-query top-k. The baseline and the
@@ -162,9 +162,9 @@ object Similarity {
   }
 
   /** Deterministic coarse centroids: the first `nCentroids` corpus vectors
-    * by id. A production pipeline would k-means sample-train these; the
-    * IVF *machinery* (assign → bucket → probe) is identical and is what
-    * this operator exercises. */
+    * by id — the untrained quantizer. [[lloydCentroids]] trains the same
+    * set on a sample; the IVF machinery (assign → bucket → probe) is
+    * identical for both. */
   def centroids(corpus: DataFrame, nCentroids: Int): DataFrame =
     corpus.filter(col("vec_id") < nCentroids)
       .select(col("vec_id").as("cen_id"), col("v").as("cv"), col("nrm").as("cnrm"))
@@ -205,87 +205,69 @@ object Similarity {
         NativeExpressions.argMaxCosine(col("v"), col("nrm"), cents))
       .select(col("vec_id"), col("cen_id"), col("v"), col("nrm"))
 
-  /** Trained coarse centroids via Spark ML k-means (k-means|| init, fixed
-    * seed): the production alternative to [[centroids]]. Vectors are
-    * L2-normalized before training (spherical k-means), so Euclidean argmin
-    * on the trained centers agrees with the cosine argmax [[ivfAssign]]
-    * uses. Balanced lists mean probe cost is ~|corpus|·nProbe/nCentroids
-    * even on clustered corpora, where first-N centroids can degenerate.
-    *
-    * `samplePct` < 100 trains the quantizer on a CONSISTENT-HASH sample of
-    * the corpus — the 100 TB shape: a coarse quantizer needs thousands of
-    * training points per centroid, not the corpus, and the hash draw is
-    * stable under reruns, repartitioning, and corpus growth (unlike
-    * df.sample's partition-dependent draw).
-    *
-    * Seeded-deterministic per Spark version but not oracle-replicable
-    * (like [[lshTopK]]) → rows-only driver check + recall spec. */
-  def kmeansCentroids(corpus: DataFrame, nCentroids: Int, maxIter: Int = 5,
-                      seed: Long = 42L, samplePct: Int = 100): DataFrame = {
-    val spark = corpus.sparkSession
-    val training =
-      if (samplePct >= 100) corpus
-      else corpus.filter(pmod(graft.functions.TextFunctions.polyHash(
-        col("vec_id").cast("string")), lit(100)) < samplePct)
-    val unit = training.select(
-      array_to_vector(NativeExpressions.divArray(col("v"), col("nrm")))
-        .as("features"))
-    val model = new org.apache.spark.ml.clustering.KMeans()
-      .setK(nCentroids).setMaxIter(maxIter).setSeed(seed)
-      .setFeaturesCol("features")
-      .fit(unit)
-    val rows = model.clusterCenters.zipWithIndex.toSeq
-      .map { case (c, i) => (i.toLong, c.toArray) }
-    import spark.implicits._
-    rows.toDF("cen_id", "cv").withColumn("cnrm", Dedup.l2norm(col("cv")))
-  }
+  /** Training sizes of the trained tiers (`sim_topk_ivf_kmeans`,
+    * `sim_topk_pq_trained`, `sim_topk_ivfpq_trained`): a 60%
+    * consistent-hash sample capped at 4096 vectors, 10 Lloyd iterations.
+    * Their DuckDB twins replay training at the same sizes. The trainers'
+    * defaults are the smaller Lloyd tier shape (`sim_topk_ivf_lloyd`,
+    * `sim_topk_pq_lloyd`). */
+  val TrainSamplePct = 60
+  val TrainMaxSample = 4096
+  val TrainIters = 10
 
-  /** ORACLE-REPLICABLE trained coarse centroids: driver-side Lloyd over a
-    * capped consistent-hash sample, with every non-SQL-expressible choice
-    * removed — stride init over the vec_id-ordered sample instead of
-    * seeded k-means++ (no RNG), fixed `iters`, argmin ties to the lowest
-    * center index, an emptied cluster keeps its previous center, and
-    * every float fold (distances, per-cluster sums, norms) runs in a
-    * DECLARED order (dims ascending; points in vec_id order) so a DuckDB
-    * twin reproduces the centers bit-exactly with in-order list_reduce
-    * folds. This is the hash-exact twin arm of [[kmeansCentroids]]
-    * (Spark ML k-means||, whose distributed init draws and unordered
-    * float reductions are genuinely non-replicable cross-engine).
-    *
-    * 100 TB shape: like [[trainPqCodebook]], the sample is capped at
-    * `maxSample` vectors (TakeOrdered — distributed, k-bounded), so the
-    * driver collect is maxSample·dim doubles regardless of corpus size; a
-    * coarse quantizer needs thousands of points per centroid, not the
-    * corpus. Training is a bounded driver loop; everything downstream
-    * (assignment, probing, scoring) stays in-scan via [[ivfTopKWith]]. */
-  def lloydCentroids(corpus: DataFrame, nCentroids: Int, iters: Int = 3,
-                     samplePct: Int = 60, maxSample: Int = 512): DataFrame = {
-    val spark = corpus.sparkSession
-    val sample: Array[Array[Double]] = corpus
+  /** The capped consistent-hash training sample: `vecs` of the first
+    * `maxSample` corpus rows (by vec_id) whose id hashes under
+    * `samplePct`, in vec_id order. The cap is applied IN the query
+    * (TakeOrdered — distributed, k-bounded), so the driver collect is
+    * maxSample·dim doubles regardless of corpus size, and the draw is
+    * stable under reruns, repartitioning and corpus growth (unlike
+    * df.sample's partition-dependent draw). */
+  private def trainingSample(corpus: DataFrame, vecs: Column, samplePct: Int,
+                             maxSample: Int): Array[Array[Double]] = {
+    val sample = corpus
       .filter(pmod(graft.functions.TextFunctions.polyHash(
         col("vec_id").cast("string")), lit(100)) < samplePct)
-      .select(col("vec_id"),
-        NativeExpressions.divArray(col("v"), col("nrm")).as("u"))
+      .select(col("vec_id"), vecs)
       .orderBy(col("vec_id")).limit(maxSample)
       .collect()
       .map(_.getSeq[Double](1).toArray)
-    val centers = lloydStride(sample, nCentroids, iters)
+    require(sample.nonEmpty, "empty quantizer training sample")
+    sample
+  }
+
+  /** Trained coarse centroids: [[lloydStride]] over the unit vectors of
+    * the [[trainingSample]] (spherical k-means, so the Euclidean argmin of
+    * training agrees with the cosine argmax [[ivfAssign]] uses). Balanced
+    * lists keep probe cost near |corpus|·nProbe/nCentroids even on
+    * clustered corpora, where first-N centroids can degenerate. Every
+    * choice is SQL-expressible, so the DuckDB twin (`lloydCtes`) replays
+    * training bit-exactly and the tier is hash-checked.
+    *
+    * 100 TB shape: a coarse quantizer needs thousands of points per
+    * centroid, not the corpus; training is a bounded driver loop over a
+    * bounded collect, and everything downstream (assignment, probing,
+    * scoring) stays in-scan via [[ivfTopKWith]]. */
+  def lloydCentroids(corpus: DataFrame, nCentroids: Int, iters: Int = 3,
+                     samplePct: Int = 60, maxSample: Int = 512): DataFrame = {
+    val spark = corpus.sparkSession
+    val sample = trainingSample(corpus,
+      NativeExpressions.divArray(col("v"), col("nrm")), samplePct, maxSample)
     import spark.implicits._
-    centers.toSeq.zipWithIndex
+    lloydStride(sample, nCentroids, iters).toSeq.zipWithIndex
       .map { case (c, j) => (j.toLong, c.toSeq) }
       .toDF("cen_id", "cv")
       .withColumn("cnrm", Dedup.l2norm(col("cv")))
   }
 
-  /** The oracle-replicable Lloyd core behind [[lloydCentroids]] and
-    * [[trainPqCodebookStride]]: stride init over the (already vec_id-
-    * ordered) point array, fixed `iters`, argmin ties to the lowest
-    * center index, an emptied cluster keeps its previous center, every
-    * float fold in declared order (dims ascending; points in array
-    * order). */
+  /** The one k-means, behind [[lloydCentroids]] and [[trainPqCodebook]]:
+    * Lloyd with every non-SQL-expressible choice removed — stride init
+    * over the (already vec_id-ordered) point array instead of an RNG draw
+    * (center j = the point at rank j·n/k, so a sample smaller than k
+    * repeats points), fixed `iters`, argmin ties to the lowest center
+    * index, an emptied cluster keeps its previous center, every float
+    * fold in declared order (dims ascending; points in array order). */
   private def lloydStride(pts: Array[Array[Double]], k: Int,
                           iters: Int): Array[Array[Double]] = {
-    require(pts.length >= k, s"sample ${pts.length} smaller than k=$k")
     val n = pts.length
     val dim = pts.head.length
     def d2(a: Array[Double], b: Array[Double]): Double = {
@@ -322,25 +304,18 @@ object Similarity {
     centers
   }
 
-  /** ORACLE-REPLICABLE trained PQ codebooks: [[trainPqCodebook]]'s
-    * per-subspace Lloyd with every non-SQL-expressible choice removed,
-    * exactly as [[lloydCentroids]] did for the coarse quantizer — stride
-    * init (no seeded k-means++ RNG), declared fold orders, pinned ties.
-    * The sample ranks are shared across subspaces (one consistent-hash
-    * capped sample, sliced per subspace), so the DuckDB twin trains all
-    * m chains from one unrolled CTE sequence grouped by subspace.
-    * Composite codeword j = concat over subspaces of center (s, j). */
-  def trainPqCodebookStride(corpus: DataFrame, ks: Int, m: Int,
-                            samplePct: Int = 60, maxSample: Int = 512,
-                            iters: Int = 3): Seq[Seq[Double]] = {
-    val sample: Array[Array[Double]] = corpus
-      .filter(pmod(graft.functions.TextFunctions.polyHash(
-        col("vec_id").cast("string")), lit(100)) < samplePct)
-      .select(col("vec_id"), col("v"))
-      .orderBy(col("vec_id")).limit(maxSample)
-      .collect()
-      .map(_.getSeq[Double](1).toArray)
-    require(sample.nonEmpty, "empty PQ training sample")
+  /** Trained per-subspace PQ codebooks: per subspace `s`, [[lloydStride]]
+    * on the `s`-slice of the raw [[trainingSample]] vectors; the
+    * per-subspace centers are reassembled into `ks` COMPOSITE full-dim
+    * codewords (codeword j's slice for subspace s is subspace s's center
+    * j), so [[graft.functions.NativeKernels.pqEncode]] and
+    * [[graft.functions.NativeKernels.pqAdc]] run unchanged — they always
+    * slice the codeword by subspace. The sample ranks are shared across
+    * subspaces, so the DuckDB twin (`pqLloydCtes`) trains all m chains
+    * from one unrolled CTE sequence grouped by subspace. */
+  def trainPqCodebook(corpus: DataFrame, ks: Int, m: Int, samplePct: Int = 60,
+                      maxSample: Int = 512, iters: Int = 3): Seq[Seq[Double]] = {
+    val sample = trainingSample(corpus, col("v"), samplePct, maxSample)
     val dim = sample.head.length
     require(m >= 1 && dim % m == 0, s"dim $dim not divisible by m=$m")
     val dsub = dim / m
@@ -367,15 +342,7 @@ object Similarity {
               nProbe: Int, k: Int): DataFrame =
     ivfTopKWith(centroids(corpus, nCentroids), corpus, queryPred, nProbe, k)
 
-  /** IVF top-k over k-means-trained lists — same probe machinery, trained
-    * coarse quantizer (`samplePct` < 100 trains it on a consistent-hash
-    * sample — the 100 TB regime, see [[kmeansCentroids]]). */
-  def ivfTopKKMeans(corpus: DataFrame, queryPred: Column, nCentroids: Int,
-                    nProbe: Int, k: Int, samplePct: Int = 100): DataFrame =
-    ivfTopKWith(kmeansCentroids(corpus, nCentroids, samplePct = samplePct),
-      corpus, queryPred, nProbe, k)
-
-  /** Probe machinery shared by the deterministic, k-means, and
+  /** Probe machinery shared by the first-N, Lloyd-trained, and
     * injected-centers tiers. Plan shape: assignment and probe selection are
     * both in-scan kernel calls over the constant centroid set; the probe
     * set (|Q|·nProbe rows) broadcasts into a hash join against the assigned
@@ -714,38 +681,48 @@ object Similarity {
     topKPerQuery(rescored, k)
   }
 
+  /** The first-N quantizers from ONE driver collect: the lowest
+    * `nCentroids` surviving vec_ids as coarse centroids and the lowest `ks`
+    * as the PQ codebook. Lowest SURVIVING ids, not vec_id < N: a zero-norm
+    * vector inside the prefix must not collapse the code space (prepare
+    * drops it and the next surviving id takes its slot — mirrored by the
+    * twins' ORDER BY vec_id LIMIT n). One collect covers both sets because
+    * each is a prefix of the same ordering; two jobs would scan the corpus
+    * twice for the same rows. The require guards the dense codeword index
+    * the encode kernel and the twins assume. */
+  def firstNQuantizers(corpus: DataFrame, nCentroids: Int, ks: Int)
+      : (Seq[(Long, Seq[Double], Double)], Seq[Seq[Double]]) = {
+    val all = collectCentroids(
+      lowestIdCentroids(corpus, math.max(nCentroids, ks)))
+    val codebook: Seq[Seq[Double]] = all.take(ks).map(_._2)
+    require(codebook.length == ks,
+      s"PQ codebook collapsed to ${codebook.length}/$ks codewords " +
+        "(fewer than ks nonzero vectors in the corpus?)")
+    (all.take(nCentroids), codebook)
+  }
+
   /** Product-quantization (PQ/ADC) top-k — the FAISS-canonical compression
     * tier. The corpus is encoded in-scan to `m` bytes per vector (codeword
     * index per contiguous subspace, codebook = a constant set of reference
     * vectors — here the first `ks` corpus vectors, deterministic like
-    * [[centroids]]; a production build k-means-trains per-subspace books,
-    * same machinery). The coarse pass scores query × code via the
-    * asymmetric-distance dot (full-precision query against the PQ
-    * reconstruction, [[graft.functions.NativeKernels.pqAdc]]) reading ONLY
-    * the m-byte code + norm on the corpus side — at dim 64 / m 8 a 64×
+    * [[centroids]]; [[pqTopKTrained]] swaps in [[trainPqCodebook]]'s
+    * per-subspace books over the same machinery). The coarse pass scores
+    * query × code via the asymmetric-distance dot (full-precision query
+    * against the PQ reconstruction,
+    * [[graft.functions.NativeKernels.pqAdc]]) reading ONLY the m-byte
+    * code + norm on the corpus side — at dim 64 / m 8 a 64×
     * narrower scan than raw doubles (vs 8× for the int8 tier). Survivors
     * rescore exactly from the full vectors. Every step is deterministic
     * double arithmetic with pinned tie-breaks → hash-exact oracle, rare
     * for a PQ index.
     */
   def pqTopK(corpus: DataFrame, queryPred: Column, ks: Int, m: Int,
-             candidates: Int, k: Int): DataFrame = {
-    // lowest-ks SURVIVING ids, not vec_id < ks: a zero-norm vector inside
-    // the first-ks prefix must not collapse the code space (it is dropped
-    // by prepare, and the next surviving id takes its codebook slot —
-    // mirrored by the twin's ORDER BY vec_id LIMIT ks). The require now
-    // only guards a corpus with fewer than ks usable vectors.
-    val codebook: Seq[Seq[Double]] =
-      collectCentroids(lowestIdCentroids(corpus, ks)).map(_._2)
-    require(codebook.length == ks,
-      s"PQ codebook collapsed to ${codebook.length}/$ks codewords " +
-        "(fewer than ks nonzero vectors in the corpus?)")
-    pqTopKWith(corpus, queryPred, codebook, m, candidates, k)
-  }
+             candidates: Int, k: Int): DataFrame =
+    pqTopKWith(corpus, queryPred, firstNQuantizers(corpus, 0, ks)._2, m,
+      candidates, k)
 
-  /** [[pqTopK]] over a caller-supplied codebook (first-N for the
-    * hash-exact oracle tier, [[trainPqCodebook]] for the production
-    * recall tier — the encode/ADC machinery is identical). */
+  /** [[pqTopK]] over a caller-supplied codebook (first-N or
+    * [[trainPqCodebook]]'s — the encode/ADC machinery is identical). */
   def pqTopKWith(corpus: DataFrame, queryPred: Column, codebook: Seq[Seq[Double]],
                  m: Int, candidates: Int, k: Int): DataFrame = {
     val slim = corpus
@@ -781,21 +758,12 @@ object Similarity {
     */
   def ivfPqTopK(corpus: DataFrame, queryPred: Column, nCentroids: Int,
                 nProbe: Int, ks: Int, m: Int, candidates: Int, k: Int): DataFrame = {
-    // one driver collect covers both constant sets (each is a lowest-N
-    // prefix of the SURVIVING ids — two separate jobs would scan the
-    // corpus twice for the same rows); see pqTopK for why lowest-N
-    // survivors, not vec_id < N
-    val all = collectCentroids(
-      lowestIdCentroids(corpus, math.max(nCentroids, ks)))
-    val centSeq = all.take(nCentroids)
-    val codebook: Seq[Seq[Double]] = all.take(ks).map(_._2)
-    require(codebook.length == ks, // same dense-index contract as pqTopK
-      s"PQ codebook collapsed to ${codebook.length}/$ks codewords")
+    val (centSeq, codebook) = firstNQuantizers(corpus, nCentroids, ks)
     ivfPqTopKWith(centSeq, codebook, corpus, queryPred, nProbe, m, candidates, k)
   }
 
   /** [[ivfPqTopK]] over caller-supplied coarse centroids and codebook —
-    * the seam the trained production tier shares with the oracle tier. */
+    * the seam the trained tier shares with the first-N tier. */
   def ivfPqTopKWith(centSeq: Seq[(Long, Seq[Double], Double)],
                     codebook: Seq[Seq[Double]], corpus: DataFrame,
                     queryPred: Column, nProbe: Int, m: Int,
@@ -825,144 +793,26 @@ object Similarity {
     topKPerQuery(rescored, k)
   }
 
-  /** Deterministic per-subspace PQ codebook TRAINING — the production
-    * alternative to the first-N reference vectors [[pqTopK]] uses for its
-    * hash-exact oracle. Per subspace `s`, plain Lloyd k-means (seeded
-    * k-means++ init, fixed iteration count, argmin ties to the lowest
-    * center index) runs on the `s`-slice of a consistent-hash sample of
-    * the corpus; the per-subspace centers are then reassembled into `ks`
-    * COMPOSITE full-dim codewords (codeword j's slice for subspace s is
-    * subspace s's trained center j), so [[graft.functions.NativeKernels
-    * .pqEncode]]/[[graft.functions.NativeKernels.pqAdc]] run UNCHANGED —
-    * they always slice the codeword by subspace.
-    *
-    * 100 TB shape: a PQ codebook needs thousands of training points per
-    * codeword, not the corpus — the consistent-hash sample (stable under
-    * reruns/growth, like `pipeline_sample`) is capped at `maxSample`
-    * vectors, bounding the driver collect at maxSample·dim doubles
-    * (4096·64 ≈ 2 MB) regardless of corpus size. Deterministic end to end
-    * given (seed, sample), but k-means internals aren't oracle-replicable
-    * → the trained tiers are rows-only like [[kmeansCentroids]], with
-    * recall pinned in SimilaritySpec/RecallProbe.
-    */
-  def trainPqCodebook(corpus: DataFrame, ks: Int, m: Int, samplePct: Int = 60,
-                      maxSample: Int = 4096, iters: Int = 10,
-                      seed: Long = 42L): Seq[Seq[Double]] = {
-    // the maxSample cap is applied IN the query (TakeOrdered — distributed,
-    // k-bounded) so the driver collect really is bounded at maxSample*dim
-    // doubles regardless of corpus size; a post-collect .take would pull
-    // samplePct of the whole corpus first
-    val sample = corpus
-      .filter(pmod(graft.functions.TextFunctions.polyHash(
-        col("vec_id").cast("string")), lit(100)) < samplePct)
-      .select(col("vec_id"), col("v"))
-      .orderBy(col("vec_id")).limit(maxSample)
-      .collect()
-      .map(r => r.getSeq[Double](1).toArray)
-    require(sample.nonEmpty, "empty PQ training sample")
-    val dim = sample.head.length
-    require(m >= 1 && dim % m == 0, s"dim $dim not divisible by m=$m")
-    val dsub = dim / m
-    val perSub: Array[Array[Array[Double]]] = Array.tabulate(m) { s =>
-      val pts = sample.map(v => java.util.Arrays.copyOfRange(v, s * dsub, (s + 1) * dsub))
-      kmeansLloyd(pts, ks, iters, seed + s)
-    }
-    (0 until ks).map { j =>
-      (0 until m).flatMap(s => perSub(s)(j).toSeq).toVector: Seq[Double]
-    }
-  }
-
-  /** Driver-side Lloyd k-means for [[trainPqCodebook]]'s subspace slices
-    * (points = a bounded sample, never corpus-sized). Deterministic:
-    * seeded k-means++ init, fixed `iters`, argmin ties keep the lowest
-    * center index, an emptied cluster keeps its previous center. */
-  private def kmeansLloyd(pts: Array[Array[Double]], k: Int, iters: Int,
-                          seed: Long): Array[Array[Double]] = {
-    val rnd = new scala.util.Random(seed)
-    val n = pts.length
-    def d2(a: Array[Double], b: Array[Double]): Double = {
-      var acc = 0.0
-      var i = 0
-      while (i < a.length) { val d = a(i) - b(i); acc += d * d; i += 1 }
-      acc
-    }
-    val dimS = pts.head.length
-    val centers = new Array[Array[Double]](k)
-    centers(0) = pts(rnd.nextInt(n)).clone()
-    // k-means++ : each next center drawn proportional to squared distance
-    // from the nearest chosen one
-    val minD = Array.fill(n)(Double.MaxValue)
-    var c = 1
-    while (c < k) {
-      var i = 0
-      while (i < n) {
-        val d = d2(pts(i), centers(c - 1))
-        if (d < minD(i)) minD(i) = d
-        i += 1
-      }
-      val total = minD.sum
-      centers(c) =
-        if (total <= 0.0) pts(rnd.nextInt(n)).clone()
-        else {
-          var r = rnd.nextDouble() * total
-          var j = 0
-          while (j < n - 1 && r > minD(j)) { r -= minD(j); j += 1 }
-          pts(j).clone()
-        }
-      c += 1
-    }
-    var it = 0
-    while (it < iters) {
-      val sums = Array.fill(k)(new Array[Double](dimS))
-      val counts = new Array[Int](k)
-      var i = 0
-      while (i < n) {
-        var best = 0
-        var bestD = d2(pts(i), centers(0))
-        var j = 1
-        while (j < k) {
-          val d = d2(pts(i), centers(j))
-          if (d < bestD) { best = j; bestD = d }
-          j += 1
-        }
-        val s = sums(best)
-        var t = 0
-        while (t < dimS) { s(t) += pts(i)(t); t += 1 }
-        counts(best) += 1
-        i += 1
-      }
-      var j = 0
-      while (j < k) {
-        if (counts(j) > 0) {
-          var t = 0
-          while (t < dimS) { sums(j)(t) /= counts(j); t += 1 }
-          centers(j) = sums(j)
-        }
-        j += 1
-      }
-      it += 1
-    }
-    centers
-  }
-
-  /** PQ/ADC over TRAINED per-subspace codebooks — same plan as
-    * [[pqTopK]], production recall (the first-N codebook's recall is what
-    * a quantizer looks like before training). */
+  /** PQ/ADC over [[trainPqCodebook]]'s per-subspace codebooks at the
+    * `Train*` sizes — same plan as [[pqTopK]], trained recall (the first-N
+    * codebook's recall is what a quantizer looks like before training). */
   def pqTopKTrained(corpus: DataFrame, queryPred: Column, ks: Int, m: Int,
                     candidates: Int, k: Int): DataFrame =
-    pqTopKWith(corpus, queryPred, trainPqCodebook(corpus, ks, m), m, candidates, k)
+    pqTopKWith(corpus, queryPred,
+      trainPqCodebook(corpus, ks, m, TrainSamplePct, TrainMaxSample, TrainIters),
+      m, candidates, k)
 
-  /** IVF-PQ with BOTH quantizers trained on consistent-hash samples —
-    * sample-trained spherical k-means coarse lists, per-subspace Lloyd
-    * codebooks. The full production composition; probe/encode plan
-    * identical to the oracle-gated [[ivfPqTopK]]. */
+  /** IVF-PQ with BOTH quantizers trained at the `Train*` sizes —
+    * [[lloydCentroids]] coarse lists, [[trainPqCodebook]] codebooks; probe
+    * and encode plan identical to [[ivfPqTopK]]. */
   def ivfPqTopKTrained(corpus: DataFrame, queryPred: Column, nCentroids: Int,
                        nProbe: Int, ks: Int, m: Int, candidates: Int,
-                       k: Int): DataFrame = {
-    val cents = collectCentroids(kmeansCentroids(corpus, nCentroids, samplePct = 60))
-    ivfPqTopKWith(cents, trainPqCodebook(corpus, ks, m), corpus, queryPred,
-      nProbe, m, candidates, k)
-  }
+                       k: Int): DataFrame =
+    ivfPqTopKWith(
+      collectCentroids(lloydCentroids(corpus, nCentroids, TrainIters,
+        TrainSamplePct, TrainMaxSample)),
+      trainPqCodebook(corpus, ks, m, TrainSamplePct, TrainMaxSample, TrainIters),
+      corpus, queryPred, nProbe, m, candidates, k)
 
   /** Spark ML LSH scale path: seeded BucketedRandomProjectionLSH
     * approxSimilarityJoin then per-query top-k by actual cosine.

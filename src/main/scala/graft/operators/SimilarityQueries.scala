@@ -834,23 +834,24 @@ object SimilarityQueries {
           maxDist = 1.35)
         .orderBy("query_id", "rank")
     }),
-    // trained coarse quantizer: k-means|| internals aren't oracle-replicable
-    // (like sim_topk_lsh) — rows-only driver check; recall vs brute force is
-    // spec-pinned in SimilaritySpec. samplePct=60: the quantizer trains on
-    // a consistent-hash sample, the 100 TB regime (a coarse quantizer
-    // never needs the corpus).
+    // trained coarse quantizer at the production training sizes
+    // (Similarity.Train*: 60% consistent-hash sample capped at 4096, 10
+    // iterations — the 100 TB regime, a coarse quantizer never needs the
+    // corpus); recall vs brute force is spec-pinned in AnnStressSpec. The
+    // trainer is the stride-init Lloyd below, so the twin replays training
+    // and the tier is hash-exact.
     "sim_topk_ivf_kmeans" -> ((s, dir) => {
       val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
-      Similarity.ivfTopKKMeans(corpus, col("vec_id") < NQueries, NCentroids, NProbe, K,
-          samplePct = 60)
+      Similarity.ivfTopKLloyd(corpus, col("vec_id") < NQueries, NCentroids, NProbe, K,
+          Similarity.TrainIters, Similarity.TrainSamplePct, Similarity.TrainMaxSample)
         .orderBy("query_id", "rank")
     }),
-    // the HASH-EXACT trained-quantizer arm ([[Similarity.lloydCentroids]]):
-    // driver-side Lloyd on a capped consistent-hash sample with stride
-    // init, declared fold orders, and pinned ties — so the DuckDB twin
-    // replays the training loop as unrolled in-order list_reduce CTEs and
-    // the whole tier (training included) is hash-exact, where the Spark-ML
-    // k-means|| arm above can only ever be rows-only.
+    // the trained-quantizer arm at the small Lloyd tier shape
+    // ([[Similarity.lloydCentroids]]): driver-side Lloyd on a capped
+    // consistent-hash sample with stride init, declared fold orders, and
+    // pinned ties — so the DuckDB twin replays the training loop as
+    // unrolled in-order list_reduce CTEs and the whole tier (training
+    // included) is hash-exact.
     "sim_topk_ivf_lloyd" -> ((s, dir) => {
       val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
       Similarity.ivfTopKLloyd(corpus, col("vec_id") < NQueries, NCentroids,
@@ -981,35 +982,35 @@ object SimilarityQueries {
         PqCodewords, PqM, NCandidates, K)
         .orderBy("query_id", "rank")
     }),
-    // TRAINED PQ codebooks, hash-exact arm: per-subspace stride-init
-    // Lloyd on the shared capped sample (Similarity.trainPqCodebookStride
-    // — the PQ sibling of the sim_topk_ivf_lloyd quantizer), pushed
-    // through the UNCHANGED pqTopKWith encode/ADC path; the DuckDB twin
+    // TRAINED PQ codebooks at the Lloyd tier shape: per-subspace
+    // stride-init Lloyd on the shared capped sample
+    // (Similarity.trainPqCodebook — the PQ sibling of the
+    // sim_topk_ivf_lloyd quantizer), pushed through the UNCHANGED
+    // pqTopKWith encode/ADC path; the DuckDB twin
     // replays all m training chains as one subspace-grouped unrolled CTE
     // sequence, so codebook training itself is inside the driver gate.
     "sim_topk_pq_lloyd" -> ((s, dir) => {
       val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
       Similarity.pqTopKWith(corpus, col("vec_id") < NQueries,
-          Similarity.trainPqCodebookStride(corpus, PqCodewords, PqM,
+          Similarity.trainPqCodebook(corpus, PqCodewords, PqM,
             samplePct = 60, maxSample = LloydMaxSample, iters = LloydIters),
           PqM, NCandidates, K)
         .orderBy("query_id", "rank")
     }),
-    // TRAINED PQ codebooks (per-subspace Lloyd k-means on a consistent-hash
-    // sample, composite codewords — Similarity.trainPqCodebook): the
-    // production recall tier over the SAME encode/ADC kernels and plan as
-    // sim_topk_pq. Its seeded k-means++ internals aren't oracle-replicable
-    // (scala Random draws) → rows-only driver check; recall@10 >= 0.9 is
-    // pinned in SimilaritySpec, and sim_topk_pq_lloyd pins the trained-
-    // codebook PATH hash-exactly.
+    // TRAINED PQ codebooks at the production shape (16 x 128 codewords
+    // trained at the Similarity.Train* sizes, composite codewords): the
+    // recall tier over the SAME encode/ADC kernels and plan as
+    // sim_topk_pq; recall@10 >= 0.9 is pinned in SimilaritySpec, and the
+    // twin replays training, so the tier is hash-exact.
     "sim_topk_pq_trained" -> ((s, dir) => {
       val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
       Similarity.pqTopKTrained(corpus, col("vec_id") < NQueries,
         PqCodewordsTrained, PqMTrained, NCandidatesTrained, K)
         .orderBy("query_id", "rank")
     }),
-    // Full production IVF-PQ: sample-trained spherical k-means coarse
-    // lists + trained per-subspace codebooks. Rows-only; recall spec-pinned.
+    // Full production IVF-PQ: Lloyd-trained spherical coarse lists +
+    // trained per-subspace codebooks, both at the Train* sizes. Recall is
+    // spec-pinned; the twin replays both trainers, so the tier is hash-exact.
     "sim_topk_ivfpq_trained" -> ((s, dir) => {
       val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
       Similarity.ivfPqTopKTrained(corpus, col("vec_id") < NQueries, NCentroids,
@@ -1019,8 +1020,7 @@ object SimilarityQueries {
     // Injected-centers IVF: stride-selected corpus vectors (vec_id = 3+7i)
     // with REINDEXED cen_ids 0..15 pushed through ivfTopKWith — proves the
     // probe machinery is hash-exact for externally supplied centers (cen_id
-    // independent of vec_id), the oracle-able stand-in for the k-means tier
-    // whose centers aren't replicable cross-engine.
+    // independent of vec_id), whatever produced them.
     "sim_topk_ivf_fixed" -> ((s, dir) => {
       val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
       val cents = corpus
@@ -1095,7 +1095,7 @@ object SimilarityQueries {
       // quantizers from the BASE partition — identical to full-corpus
       // training by construction (centroids() takes vec_id < 16 ⊂ base),
       // which is exactly why the full-rebuild oracle applies verbatim
-      val (centSeq, codebook) = ivfPqQuantizers(base)
+      val (centSeq, codebook) = Similarity.firstNQuantizers(base, NCentroids, PqCodewords)
       require(centSeq.length == NCentroids,
         s"coarse quantizer collapsed to ${centSeq.length}/$NCentroids")
       val tbl = scratchTable(s, "graft_ivfpq_append")
@@ -1374,7 +1374,7 @@ object SimilarityQueries {
     * still points at. */
   private def buildIvfPqServing(s: SparkSession, dir: String,
       corpus: DataFrame): ServingArtifact = {
-    val (centSeq, codebook) = ivfPqQuantizers(corpus)
+    val (centSeq, codebook) = Similarity.firstNQuantizers(corpus, NCentroids, PqCodewords)
     val tbl = scratchTable(s, "graft_ivfpq_lists" + dirTag(dir))
     writeIvfPq(corpus, tbl, centSeq, codebook)
     (tbl, centSeq, codebook)
@@ -1425,22 +1425,6 @@ object SimilarityQueries {
         .write.mode("overwrite").saveAsTable(lexTbl)
       lexTbl
     }
-
-  /** The deterministic serving quantizers: first-[[NCentroids]] coarse
-    * centroids + first-[[PqCodewords]] codebook by vec_id, collected once
-    * (bounded driver state at any corpus size). */
-  private def ivfPqQuantizers(corpus: DataFrame)
-      : (Seq[(Long, Seq[Double], Double)], Seq[Seq[Double]]) = {
-    // lowest-N SURVIVORS (not vec_id < N): a zero-norm vector among the
-    // first ids must not collapse the code space — see Similarity.pqTopK
-    val all = Similarity.collectCentroids(
-      Similarity.lowestIdCentroids(corpus, math.max(NCentroids, PqCodewords)))
-    val centSeq = all.take(NCentroids)
-    val codebook: Seq[Seq[Double]] = all.take(PqCodewords).map(_._2)
-    require(codebook.length == PqCodewords, // dense-index oracle contract
-      s"PQ codebook collapsed to ${codebook.length}/$PqCodewords codewords")
-    (centSeq, codebook)
-  }
 
   /** The serving-regime probe set ([[NQueriesServe]] queries ×
     * [[NProbe]] lists), collected once — shared by every bucketed-PQ
@@ -1869,7 +1853,10 @@ object SimilarityQueries {
     // list_reduce; points in vec_id order via list(u ORDER BY vec_id)),
     // same lowest-index ties and empty-cluster-keeps-previous rule.
     // Iterations unroll as CTEs la{t}/lm{t}/lc{t}; centers end in
-    // lc{iters} (cen_id, cv).
+    // lc{iters} (cen_id, cv). AS MATERIALIZED: each lc{t} is read twice by
+    // step t+1 (assignment and the keep-previous join), so an inlined
+    // chain would re-derive every generation 2^iters-fold; smp is read by
+    // every step.
     def lloydCtes(k: Int, iters: Int, samplePct: Int, maxSample: Int): String = {
       val zero = "list_transform(range(1, 65), z0 -> CAST(0.0 AS DOUBLE))"
       val d2 = "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
@@ -1888,49 +1875,30 @@ object SimilarityQueries {
            |  FROM (SELECT cen_id, vec_id, u,
            |        count(*) OVER (PARTITION BY cen_id) AS cnt FROM la$t)
            |  GROUP BY cen_id, cnt),
-           |lc$t AS (
+           |lc$t AS MATERIALIZED (
            |  SELECT p.cen_id,
            |    CASE WHEN m.cen_id IS NULL THEN p.cv
            |         ELSE list_transform(m.sv, sx -> sx / m.cnt) END AS cv
            |  FROM lc${t - 1} p LEFT JOIN lm$t m ON m.cen_id = p.cen_id)""".stripMargin
       }.mkString(",\n")
       s"""
-         |smp AS (SELECT vec_id, list_transform(range(1, 65), ui -> v[ui] / nrm) AS u
+         |smp AS MATERIALIZED (SELECT vec_id, list_transform(range(1, 65), ui -> v[ui] / nrm) AS u
          |  FROM nn WHERE (${DedupQueries.ph("CAST(vec_id AS VARCHAR)", "si")}) % 100 < $samplePct
          |  ORDER BY vec_id LIMIT $maxSample),
          |sidx AS (SELECT u, row_number() OVER (ORDER BY vec_id) - 1 AS rn FROM smp),
          |sn AS (SELECT count(*) AS n FROM smp),
-         |lc0 AS (SELECT CAST(g.j AS BIGINT) AS cen_id, s.u AS cv
+         |lc0 AS MATERIALIZED (SELECT CAST(g.j AS BIGINT) AS cen_id, s.u AS cv
          |  FROM range(0, $k) g(j) JOIN sidx s ON s.rn = (g.j * (SELECT n FROM sn)) // $k),
          |""".stripMargin + iterCtes + ","
     }
-    // PQ/ADC twin body, parameterized by the codeword CTE (`cbSql` must
-    // yield (j, cv) with cv a full-dim composite codeword) and optional
-    // training CTEs inserted after nn: encode per (vec_id, subspace) by
-    // argmin squared L2 on the slice (ties to lowest codeword),
-    // reconstruct, ADC-rank, exact-rescore survivors — identical tail for
+    // PQ/ADC twin body over the shared encode/reconstruct chain
+    // ([[pqReconCtes]]) with optional training CTEs inserted after nn:
+    // ADC-rank, exact-rescore the top `candidates` — identical tail for
     // the first-N and the trained-codebook tiers.
-    def pqOracle(cbSql: String, preCtes: String = ""): String = {
-      val dsub = 8 // 64-dim embeddings / PqM subspaces
-      val sq = s"(nn.v[gs.s*$dsub + t] - cb.cv[gs.s*$dsub + t])"
+    def pqOracle(cbSql: String, preCtes: String = "", m: Int = PqM,
+                 candidates: Int = NCandidates): String =
       s"""WITH e AS ($e), nn AS ($n),$preCtes
-         |cb AS ($cbSql),
-         |cbl AS (SELECT list(cv ORDER BY j) AS cbs FROM cb),
-         |sub AS (
-         |  SELECT nn.vec_id, gs.s, cb.j,
-         |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |      list_transform(range(1, ${dsub + 1}), t -> $sq * $sq)),
-         |      (acc, x) -> acc + x) AS dist
-         |  FROM nn, cb, range(0, $PqM) gs(s)),
-         |codes AS (
-         |  SELECT vec_id, list(j ORDER BY s) AS code FROM (
-         |    SELECT vec_id, s, j,
-         |      row_number() OVER (PARTITION BY vec_id, s ORDER BY dist, j) AS rn
-         |    FROM sub) WHERE rn = 1 GROUP BY vec_id),
-         |recon AS (
-         |  SELECT c.vec_id, list_transform(range(1, ${PqM * dsub + 1}),
-         |    i -> cbl.cbs[CAST(c.code[CAST((i-1)//$dsub AS BIGINT) + 1] AS BIGINT) + 1][i]) AS rv
-         |  FROM codes c, cbl),
+         |${pqReconCtes(cbSql, m)},
          |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM nn WHERE vec_id < $NQueries),
          |coarse AS (
          |  SELECT q.query_id, n.vec_id,
@@ -1938,7 +1906,7 @@ object SimilarityQueries {
          |      ${dotSql("q.qv", "r.rv")} / (q.qnrm * n.nrm) DESC, n.vec_id) AS crn
          |  FROM q, recon r JOIN nn n ON r.vec_id = n.vec_id
          |  WHERE n.vec_id <> q.query_id),
-         |cand AS (SELECT query_id, vec_id FROM coarse WHERE crn <= $NCandidates),
+         |cand AS (SELECT query_id, vec_id FROM coarse WHERE crn <= $candidates),
          |res AS (
          |  SELECT cand.query_id, cand.vec_id,
          |    ${dotSql("qq.qv", "n.v")} / (qq.qnrm * n.nrm) AS cos
@@ -1950,13 +1918,15 @@ object SimilarityQueries {
          |  FROM res)
          |SELECT query_id, rank, vec_id, cos FROM ranked
          |WHERE rank <= $K ORDER BY query_id, rank""".stripMargin
-    }
     // Subspace-grouped unrolled Lloyd chains — the twin of
-    // Similarity.trainPqCodebookStride: one consistent-hash capped sample
+    // Similarity.trainPqCodebook: one consistent-hash capped sample
     // (shared ranks across subspaces), per-subspace stride init, the same
     // declared fold orders / tie / empty-cluster rules as lloydCtes, all
     // m chains trained at once via GROUP BY subspace. Ends in cbw
-    // (j, cv) with cv the flattened composite codeword.
+    // (j, cv) with cv the flattened composite codeword. Its sample CTEs
+    // (ps/psi/psn/sp) are named apart from lloydCtes' so the IVF-PQ twin
+    // can train both quantizers in one WITH chain; pc{t} and sp are
+    // MATERIALIZED for the same 2^iters reason as lc{t}.
     def pqLloydCtes(ks: Int, m: Int, iters: Int, samplePct: Int,
                     maxSample: Int): String = {
       val dsub = 64 / m
@@ -1977,26 +1947,32 @@ object SimilarityQueries {
            |  FROM (SELECT s, j, vec_id, u,
            |        count(*) OVER (PARTITION BY s, j) AS cnt FROM pa$t)
            |  GROUP BY s, j, cnt),
-           |pc$t AS (
+           |pc$t AS MATERIALIZED (
            |  SELECT p.s, p.j,
            |    CASE WHEN w.j IS NULL THEN p.cv
            |         ELSE list_transform(w.sv, sx -> sx / w.cnt) END AS cv
            |  FROM pc${t - 1} p LEFT JOIN pm$t w ON w.s = p.s AND w.j = p.j)""".stripMargin
       }.mkString(",\n")
       s"""
-         |smp AS (SELECT vec_id, v FROM nn
+         |ps AS (SELECT vec_id, v FROM nn
          |  WHERE (${DedupQueries.ph("CAST(vec_id AS VARCHAR)", "si")}) % 100 < $samplePct
          |  ORDER BY vec_id LIMIT $maxSample),
-         |sidx AS (SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) - 1 AS rn FROM smp),
-         |sn AS (SELECT count(*) AS n FROM smp),
-         |sp AS (SELECT s0.vec_id, s0.rn, gs.s,
+         |psi AS (SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) - 1 AS rn FROM ps),
+         |psn AS (SELECT count(*) AS n FROM ps),
+         |sp AS MATERIALIZED (SELECT s0.vec_id, s0.rn, gs.s,
          |    list_transform(range(1, ${dsub + 1}), t -> s0.v[gs.s*$dsub + t]) AS u
-         |  FROM sidx s0, range(0, $m) gs(s)),
-         |pc0 AS (SELECT sp.s, CAST(g.j AS BIGINT) AS j, sp.u AS cv
-         |  FROM range(0, $ks) g(j) JOIN sp ON sp.rn = (g.j * (SELECT n FROM sn)) // $ks),
+         |  FROM psi s0, range(0, $m) gs(s)),
+         |pc0 AS MATERIALIZED (SELECT sp.s, CAST(g.j AS BIGINT) AS j, sp.u AS cv
+         |  FROM range(0, $ks) g(j) JOIN sp ON sp.rn = (g.j * (SELECT n FROM psn)) // $ks),
          |""".stripMargin + iterCtes + s""",
          |cbw AS (SELECT j, flatten(list(cv ORDER BY s)) AS cv FROM pc$iters GROUP BY j),""".stripMargin
     }
+    // the trained tiers' training replays, at Similarity.Train* sizes
+    import Similarity.{TrainIters, TrainMaxSample, TrainSamplePct}
+    val trainedLloyd = lloydCtes(NCentroids, TrainIters, TrainSamplePct, TrainMaxSample)
+    val trainedCents = s"SELECT cen_id, cv, ${normSql("cv")} AS cnrm FROM lc$TrainIters"
+    val trainedPq = pqLloydCtes(PqCodewordsTrained, PqMTrained, TrainIters,
+      TrainSamplePct, TrainMaxSample)
     def ivfOracle(centsSql: String, nQueries: Int = NQueries,
                   qPred: Option[String] = None, k: Int = K,
                   preCtes: String = "",
@@ -2276,6 +2252,8 @@ object SimilarityQueries {
       "sim_topk_ivf_lloyd" -> ivfOracle(
         s"SELECT cen_id, cv, ${normSql("cv")} AS cnrm FROM lc$LloydIters",
         preCtes = lloydCtes(NCentroids, LloydIters, 60, LloydMaxSample)),
+      // the same chain at the production training sizes
+      "sim_topk_ivf_kmeans" -> ivfOracle(trainedCents, preCtes = trainedLloyd),
       // domain discovery: the SAME Lloyd chain trains the centers, then
       // full-corpus nearest-center assignment and the per-domain report —
       // training, assignment, and shares all replayed exactly
@@ -2411,17 +2389,18 @@ object SimilarityQueries {
       // Parameterized by the codeword CTE (`cbSql` must yield (j, cv)):
       // first-N vectors for sim_topk_pq, the stride-Lloyd-trained
       // composite codewords for sim_topk_pq_lloyd.
-      "sim_topk_pq" -> pqOracle(
-        s"""SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS j, v AS cv
-           |  FROM (SELECT vec_id, v FROM nn ORDER BY vec_id LIMIT $PqCodewords)""".stripMargin),
+      "sim_topk_pq" -> pqOracle(firstNCbSql),
       // trained-codebook twin: training REPLAYED in SQL — all PqM
       // per-subspace Lloyd chains unroll as one subspace-grouped CTE
       // sequence (same sample ranks, stride init, in-order folds, tie
-      // and empty-cluster rules as trainPqCodebookStride), composite
+      // and empty-cluster rules as trainPqCodebook), composite
       // codewords = flatten over subspace order; then the identical
       // encode/ADC/rescore tail
       "sim_topk_pq_lloyd" -> pqOracle("SELECT j, cv FROM cbw",
         preCtes = pqLloydCtes(PqCodewords, PqM, LloydIters, 60, LloydMaxSample)),
+      // the production-shape codebook (16 x 128 at the Train* sizes)
+      "sim_topk_pq_trained" -> pqOracle("SELECT j, cv FROM cbw",
+        preCtes = trainedPq, m = PqMTrained, candidates = NCandidatesTrained),
       // IVF-PQ twin: IVF assignment + probe selection from the ivf twin,
       // PQ encode + reconstruction from the pq twin, ADC coarse ranking
       // restricted to probed lists, exact rescore. Parameterized by query
@@ -2436,6 +2415,16 @@ object SimilarityQueries {
       // build — same oracle verbatim (quantizers are base-trained ==
       // full-corpus first-N by construction)
       "src_ivfpq_append" -> ivfPqOracle(NQueriesServe),
+      // both quantizers trained in one WITH chain (lloydCtes for the
+      // coarse lists, pqLloydCtes for the codebook), then the shared
+      // IVF-PQ replay at the trained tier's shape
+      "sim_topk_ivfpq_trained" ->
+        s"""WITH e AS ($e), nn AS ($n),$trainedLloyd$trainedPq
+           |${ivfPqRankedCtesWhere(s"vec_id < $NQueries", trainedCents,
+                "SELECT j, cv FROM cbw", PqMTrained, NProbeTrained,
+                NCandidatesIvfPqTrained)}
+           |SELECT query_id, rank, vec_id, cos FROM ranked
+           |WHERE rank <= $K ORDER BY query_id, rank""".stripMargin,
       "sim_recall_report" ->
         s"""${ivfCandCtes(s"SELECT vec_id AS cen_id, v AS cv, nrm AS cnrm FROM nn WHERE vec_id < $NCentroids")},
            |ivfr AS (SELECT query_id, vec_id FROM (
@@ -2538,63 +2527,84 @@ object SimilarityQueries {
   private def ivfPqRankedCtes(nQueries: Int): String =
     ivfPqRankedCtesWhere(s"vec_id < $nQueries")
 
-  private def ivfPqRankedCtesWhere(qPredSql: String): String = {
-    val dsub = 8
+  /** The first-[[PqCodewords]] codebook over an in-scope `nn`: lowest
+    * SURVIVING ids, j renumbered densely 0..ks-1 because recon indexes
+    * positionally — the twin of Similarity.firstNQuantizers. */
+  private def firstNCbSql: String =
+    s"""SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS j, v AS cv
+       |  FROM (SELECT vec_id, v FROM nn ORDER BY vec_id LIMIT $PqCodewords)""".stripMargin
+
+  /** PQ encode + reconstruction replay over an in-scope `nn(vec_id, v,
+    * nrm)` and codewords `cbSql` (yielding (j, cv), cv a full-dim composite
+    * codeword): each (vec_id, subspace) encodes by argmin squared L2 on the
+    * `64/m`-dim slice (ties to the lowest codeword), ending in
+    * `recon(vec_id, rv)`. ONE chain behind the PQ and IVF-PQ twins, with
+    * the same sequential-sum arithmetic as the pqEncode/pqAdc kernels. */
+  private def pqReconCtes(cbSql: String, m: Int): String = {
+    val dsub = 64 / m
     val sq = s"(nn.v[gs.s*$dsub + t] - cb.cv[gs.s*$dsub + t])"
-    // quantizers = lowest-N SURVIVING ids (ORDER BY vec_id LIMIT n), the
-    // twin of Similarity.lowestIdCentroids: a zero-norm vector among the
-    // first ids shifts the prefix instead of collapsing it; the codebook
-    // renumbers j densely 0..ks-1 because recon indexes positionally
-    s"""cents AS (SELECT vec_id AS cen_id, v AS cv, nrm AS cnrm FROM nn ORDER BY vec_id LIMIT $NCentroids),
-           |assigned AS (
-           |  SELECT vec_id, cen_id FROM (
-           |    SELECT nn.vec_id, cents.cen_id,
-           |      row_number() OVER (PARTITION BY nn.vec_id
-           |        ORDER BY ${dotSql("nn.v", "cents.cv")} / (nn.nrm * cents.cnrm) DESC, cents.cen_id) AS crn
-           |    FROM nn, cents) WHERE crn = 1),
-           |cb AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS j, v AS cv
-           |  FROM (SELECT vec_id, v FROM nn ORDER BY vec_id LIMIT $PqCodewords)),
-           |cbl AS (SELECT list(cv ORDER BY j) AS cbs FROM cb),
-           |sub AS (
-           |  SELECT nn.vec_id, gs.s, cb.j,
-           |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-           |      list_transform(range(1, ${dsub + 1}), t -> $sq * $sq)),
-           |      (acc, x) -> acc + x) AS dist
-           |  FROM nn, cb, range(0, $PqM) gs(s)),
-           |codes AS (
-           |  SELECT vec_id, list(j ORDER BY s) AS code FROM (
-           |    SELECT vec_id, s, j,
-           |      row_number() OVER (PARTITION BY vec_id, s ORDER BY dist, j) AS rn
-           |    FROM sub) WHERE rn = 1 GROUP BY vec_id),
-           |recon AS (
-           |  SELECT c.vec_id, list_transform(range(1, ${PqM * dsub + 1}),
-           |    i -> cbl.cbs[CAST(c.code[CAST((i-1)//$dsub AS BIGINT) + 1] AS BIGINT) + 1][i]) AS rv
-           |  FROM codes c, cbl),
-           |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM nn WHERE $qPredSql),
-           |probes AS (
-           |  SELECT query_id, qv, qnrm, cen_id FROM (
-           |    SELECT q.query_id, q.qv, q.qnrm, cents.cen_id,
-           |      row_number() OVER (PARTITION BY q.query_id
-           |        ORDER BY ${dotSql("q.qv", "cents.cv")} / (q.qnrm * cents.cnrm) DESC, cents.cen_id) AS prn
-           |    FROM q, cents) WHERE prn <= $NProbe),
-           |coarse AS (
-           |  SELECT p.query_id, a.vec_id,
-           |    row_number() OVER (PARTITION BY p.query_id ORDER BY
-           |      ${dotSql("p.qv", "r.rv")} / (p.qnrm * n.nrm) DESC, a.vec_id) AS crn2
-           |  FROM probes p
-           |  JOIN assigned a ON p.cen_id = a.cen_id
-           |  JOIN recon r ON a.vec_id = r.vec_id
-           |  JOIN nn n ON a.vec_id = n.vec_id
-           |  WHERE a.vec_id <> p.query_id),
-           |cand AS (SELECT query_id, vec_id FROM coarse WHERE crn2 <= $NCandidates),
-           |res AS (
-           |  SELECT cand.query_id, cand.vec_id,
-           |    ${dotSql("qq.qv", "n.v")} / (qq.qnrm * n.nrm) AS cos
-           |  FROM cand JOIN q qq ON cand.query_id = qq.query_id
-           |            JOIN nn n ON cand.vec_id = n.vec_id),
-           |ranked AS (
-           |  SELECT query_id, vec_id, cos,
-           |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS BIGINT) AS rank
-           |  FROM res)""".stripMargin
+    s"""cb AS ($cbSql),
+       |cbl AS (SELECT list(cv ORDER BY j) AS cbs FROM cb),
+       |sub AS (
+       |  SELECT nn.vec_id, gs.s, cb.j,
+       |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+       |      list_transform(range(1, ${dsub + 1}), t -> $sq * $sq)),
+       |      (acc, x) -> acc + x) AS dist
+       |  FROM nn, cb, range(0, $m) gs(s)),
+       |codes AS (
+       |  SELECT vec_id, list(j ORDER BY s) AS code FROM (
+       |    SELECT vec_id, s, j,
+       |      row_number() OVER (PARTITION BY vec_id, s ORDER BY dist, j) AS rn
+       |    FROM sub) WHERE rn = 1 GROUP BY vec_id),
+       |recon AS (
+       |  SELECT c.vec_id, list_transform(range(1, ${m * dsub + 1}),
+       |    i -> cbl.cbs[CAST(c.code[CAST((i-1)//$dsub AS BIGINT) + 1] AS BIGINT) + 1][i]) AS rv
+       |  FROM codes c, cbl)""".stripMargin
   }
+
+  /** [[ivfPqRankedCtes]] at an arbitrary query predicate and quantizer
+    * set: `centsSql` yields (cen_id, cv, cnrm), `cbSql` the codewords (see
+    * [[pqReconCtes]]); defaults are the first-N serving quantizers at the
+    * demo shape. */
+  private def ivfPqRankedCtesWhere(qPredSql: String,
+      centsSql: String = s"SELECT vec_id AS cen_id, v AS cv, nrm AS cnrm FROM nn ORDER BY vec_id LIMIT $NCentroids",
+      cbSql: String = firstNCbSql, m: Int = PqM, nProbe: Int = NProbe,
+      candidates: Int = NCandidates): String =
+    // first-N quantizers = lowest-N SURVIVING ids (ORDER BY vec_id LIMIT
+    // n), the twin of Similarity.firstNQuantizers: a zero-norm vector
+    // among the first ids shifts the prefix instead of collapsing it
+    s"""cents AS ($centsSql),
+       |assigned AS (
+       |  SELECT vec_id, cen_id FROM (
+       |    SELECT nn.vec_id, cents.cen_id,
+       |      row_number() OVER (PARTITION BY nn.vec_id
+       |        ORDER BY ${dotSql("nn.v", "cents.cv")} / (nn.nrm * cents.cnrm) DESC, cents.cen_id) AS crn
+       |    FROM nn, cents) WHERE crn = 1),
+       |${pqReconCtes(cbSql, m)},
+       |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM nn WHERE $qPredSql),
+       |probes AS (
+       |  SELECT query_id, qv, qnrm, cen_id FROM (
+       |    SELECT q.query_id, q.qv, q.qnrm, cents.cen_id,
+       |      row_number() OVER (PARTITION BY q.query_id
+       |        ORDER BY ${dotSql("q.qv", "cents.cv")} / (q.qnrm * cents.cnrm) DESC, cents.cen_id) AS prn
+       |    FROM q, cents) WHERE prn <= $nProbe),
+       |coarse AS (
+       |  SELECT p.query_id, a.vec_id,
+       |    row_number() OVER (PARTITION BY p.query_id ORDER BY
+       |      ${dotSql("p.qv", "r.rv")} / (p.qnrm * n.nrm) DESC, a.vec_id) AS crn2
+       |  FROM probes p
+       |  JOIN assigned a ON p.cen_id = a.cen_id
+       |  JOIN recon r ON a.vec_id = r.vec_id
+       |  JOIN nn n ON a.vec_id = n.vec_id
+       |  WHERE a.vec_id <> p.query_id),
+       |cand AS (SELECT query_id, vec_id FROM coarse WHERE crn2 <= $candidates),
+       |res AS (
+       |  SELECT cand.query_id, cand.vec_id,
+       |    ${dotSql("qq.qv", "n.v")} / (qq.qnrm * n.nrm) AS cos
+       |  FROM cand JOIN q qq ON cand.query_id = qq.query_id
+       |            JOIN nn n ON cand.vec_id = n.vec_id),
+       |ranked AS (
+       |  SELECT query_id, vec_id, cos,
+       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS BIGINT) AS rank
+       |  FROM res)""".stripMargin
 }

@@ -10,8 +10,9 @@ import graft.pu.TwoStepPULearner.IterationState
 
 /** Pins [[CheckpointUtil.materialize]] as the one way an iterative loop
   * stores a generation: one job per generation, no CacheManager copy, a
-  * plan leaf that carries the generation's real row count, and the
-  * superseded generation freed as soon as the next exists. */
+  * plan leaf that carries the generation's real row count, the
+  * superseded generation freed as soon as the next exists, and every
+  * stored RDD released exactly once. */
 class MaterializeSpec extends SparkSuite {
 
   private def cacheIsEmpty: Boolean =
@@ -57,5 +58,35 @@ class MaterializeSpec extends SparkSuite {
     assert(!spark.sparkContext.getPersistentRDDs.contains(firstRdd))
     assert(second.count() == 300)
     CheckpointUtil.releaseStragglers()
+  }
+
+  test("release frees each stored RDD once, even under a tracked persist built over it") {
+    import java.util.concurrent.ConcurrentHashMap
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerUnpersistRDD}
+    CheckpointUtil.releaseStragglers()
+    // the curate_corpus shape: a materialized generation, and a tracked
+    // persist whose plan reads it (semantic survivors over CC labels)
+    val (gen, _) = CheckpointUtil.materialize(spark.range(0, 100).toDF("id"))
+    val derived = CheckpointUtil.track(
+      gen.withColumn("sq", col("id") * col("id")).persist())
+    assert(derived.count() == 100)
+    val releases = new ConcurrentHashMap[Int, AtomicInteger]
+    val listener = new SparkListener {
+      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit =
+        releases.computeIfAbsent(e.rddId, _ => new AtomicInteger).incrementAndGet()
+    }
+    org.apache.spark.sql.GraftColumnBridge.waitForListeners(spark, 10000)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      CheckpointUtil.releaseStragglers()
+      org.apache.spark.sql.GraftColumnBridge.waitForListeners(spark, 10000)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val genRdd = checkpointRddId(gen)
+    val counts = scala.jdk.CollectionConverters.MapHasAsScala(releases).asScala
+      .map { case (id, n) => id -> n.get }
+    assert(counts.get(genRdd).contains(1), s"generation RDD $genRdd releases: $counts")
+    assert(counts.values.forall(_ == 1), s"an RDD was released twice: $counts")
+    assert(!spark.sparkContext.getPersistentRDDs.contains(genRdd))
   }
 }

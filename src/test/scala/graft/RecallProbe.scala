@@ -31,7 +31,9 @@ object RecallProbe {
     println(f"ivf      recall@10 = ${recall(Similarity.ivfTopK(corpus, pred, 16, 4, 10))}%.3f")
     println(f"pq-tr    recall@10 = ${recall(Similarity.pqTopKTrained(corpus, pred, 128, 16, 48, 10))}%.3f")
     println(f"ivfpq-tr recall@10 = ${recall(Similarity.ivfPqTopKTrained(corpus, pred, 16, 12, 128, 16, 64, 10))}%.3f")
-    println(f"ivf-km60 recall@10 = ${recall(Similarity.ivfTopKKMeans(corpus, pred, 16, 4, 10, samplePct = 60))}%.3f")
+    val ivfTr = recall(Similarity.ivfTopKLloyd(corpus, pred, 16, 4, 10,
+      Similarity.TrainIters, Similarity.TrainSamplePct, Similarity.TrainMaxSample))
+    println(f"ivf-tr   recall@10 = $ivfTr%.3f")
     println(f"srp      recall@10 = ${recall(Similarity.srpTopK(corpus, pred, 10))}%.3f")
     spark.stop()
   }

@@ -63,10 +63,12 @@ class AnnStressSpec extends SparkSuite {
   test("recall@10 pins hold at 50k: IVF, sampled k-means IVF, trained IVF-PQ") {
     assert(brute.size >= 45, s"query fan-in ${brute.size}")
     val rIvf = recall(Similarity.ivfTopK(corpus, queryPred, Clusters, 8, 10))
-    // quantizer trained on a 10% consistent-hash sample — the 100 TB
-    // regime: ~78 training points per centroid, corpus never fully read
-    val rKm = recall(Similarity.ivfTopKKMeans(
-      corpus, queryPred, Clusters, 8, 10, samplePct = 10))
+    // quantizer trained on a 10% consistent-hash sample capped at 4096 —
+    // the 100 TB regime: 64 training points per centroid, corpus never
+    // fully read
+    val rKm = recall(Similarity.ivfTopKLloyd(corpus, queryPred, Clusters, 8, 10,
+      iters = Similarity.TrainIters, samplePct = 10,
+      maxSample = Similarity.TrainMaxSample))
     val rIvfPq = recall(Similarity.ivfPqTopKTrained(
       corpus, queryPred, Clusters, 8, 128, 16, 256, 10))
     // the no-training SRP-LSH tier: modest on the near-isotropic driver

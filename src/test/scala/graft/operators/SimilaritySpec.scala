@@ -89,7 +89,9 @@ class SimilaritySpec extends SparkSuite {
   test("k-means IVF: k rows per query, top-1 recall at nProbe=4/16") {
     val brute = Similarity.bruteForceTopK(corpus, corpus.filter(col("vec_id") < 16), 1)
       .select("query_id", "vec_id").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val km = Similarity.ivfTopKKMeans(corpus, col("vec_id") < 16, 16, 4, 5)
+    // the trained tier's quantizer: Lloyd at the production Train* sizes
+    val km = Similarity.ivfTopKLloyd(corpus, col("vec_id") < 16, 16, 4, 5,
+        Similarity.TrainIters, Similarity.TrainSamplePct, Similarity.TrainMaxSample)
       .select("query_id", "rank", "vec_id").collect()
     assert(km.groupBy(_.getLong(0)).values.forall(_.length == 5))
     val top1 = km.filter(_.getLong(1) == 1L).map(r => r.getLong(0) -> r.getLong(2)).toMap
@@ -102,16 +104,18 @@ class SimilaritySpec extends SparkSuite {
     // centers actually trained: after 3 iterations at least one center
     // must differ from its stride-init point (an untouched init would make
     // the "trained" tier a relabeled sim_topk_ivf_fixed)
-    val trained = Similarity.lloydCentroids(corpus, 16)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    val rows = Similarity.lloydCentroids(corpus, 16).collect()
+    val trained = rows.map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     val init = Similarity.lloydCentroids(corpus, 16, iters = 0)
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     assert(trained.keySet == (0L until 16L).toSet)
     assert((0L until 16L).exists(j => trained(j) != init(j)),
       "vacuous: 3 Lloyd iterations left every stride-init center untouched")
+    // centers are means of unit vectors (spherical k-means): norm in (0, 1]
+    assert(rows.forall(r => r.getDouble(2) > 0.0 && r.getDouble(2) <= 1.0 + 1e-9))
     // determinism is STRUCTURAL (sorted capped collect + driver loop), so
     // the centers must be bit-identical under a corpus repartition — the
-    // property Spark-ML k-means|| (unordered float reduce) cannot give
+    // property a distributed k-means (unordered float reduce) cannot give
     val reparted = Similarity.lloydCentroids(corpus.repartition(7), 16)
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     assert(reparted == trained, "centers vary with partitioning")
@@ -171,16 +175,21 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("stride-trained PQ codebook: moves off init, repartition-invariant, recall holds") {
-    val trained = Similarity.trainPqCodebookStride(corpus, 16, 8)
+    val trained = Similarity.trainPqCodebook(corpus, 16, 8)
+    // ks composite codewords of the full dim
     assert(trained.length == 16 && trained.forall(_.length == 64))
     // iterations non-vacuous: the trained composite codewords must differ
     // from the 0-iteration stride init (else the tier is a relabeled
     // sample selection)
-    val init = Similarity.trainPqCodebookStride(corpus, 16, 8, iters = 0)
+    val init = Similarity.trainPqCodebook(corpus, 16, 8, iters = 0)
     assert(trained != init, "3 Lloyd iterations left every codeword untouched")
+    // composite codewords are NOT corpus vectors: subspace s of codeword j
+    // is subspace s's trained center j (a mean), so at least one codeword
+    // must differ from every corpus vector
+    val vs = corpus.select("v").collect().map(_.getSeq[Double](0)).toSet
+    assert(trained.exists(cw => !vs.contains(cw)))
     // structural determinism (sorted capped collect + driver loop)
-    val reparted = Similarity.trainPqCodebookStride(
-      corpus.repartition(7), 16, 8)
+    val reparted = Similarity.trainPqCodebook(corpus.repartition(7), 16, 8)
     assert(reparted == trained, "codebook varies with partitioning")
     // the trained tier fills k and keeps the PQ recall floor
     val brute = Similarity.bruteForceTopK(corpus, corpus.filter(col("vec_id") < 8), 10)
@@ -199,15 +208,17 @@ class SimilaritySpec extends SparkSuite {
     assert(recall >= 0.5, s"trained-PQ recall@10 $recall below the PQ floor")
   }
 
-  test("k-means centroids are unit-norm and deterministic under the seed") {
-    val a = Similarity.kmeansCentroids(corpus, 8).collect()
-      .map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    val b = Similarity.kmeansCentroids(corpus, 8).collect()
-      .map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    assert(a.keySet == (0L until 8L).toSet)
-    assert(a == b) // same seed, same centers
-    // centers are means of unit vectors: norm in (0, 1]
-    assert(a.values.forall(n => n > 0.0 && n <= 1.0 + 1e-9))
+  test("a sample smaller than k trains: stride init repeats points, output is k centers") {
+    // 55 sample points against ks = 128 (the adversarial fixture's shape):
+    // center j starts at the point of rank j*55/128, so points repeat; a
+    // repeated center loses every tie to its lowest-index copy and keeps
+    // its init, and the codebook still has all ks codewords
+    val book = Similarity.trainPqCodebook(corpus, 128, 16, maxSample = 55)
+    assert(book.length == 128 && book.forall(_.length == 64))
+    assert(Similarity.trainPqCodebook(corpus.repartition(7), 128, 16,
+      maxSample = 55) == book, "codebook varies with partitioning")
+    val cents = Similarity.lloydCentroids(corpus, 128, maxSample = 55)
+    assert(cents.count() == 128)
   }
 
   test("quantized tier: int8 bounds hold; top-1 survives coarse+rescore") {
@@ -353,12 +364,13 @@ class SimilaritySpec extends SparkSuite {
     assert(recall(Similarity.srpTopK(corpus, pred, 10)) >= 0.3)
   }
 
-  test("TRAINED codebooks lift recall@10 to >= 0.9 (measured 0.975 / 0.938 via RecallProbe)") {
+  test("TRAINED codebooks lift recall@10 to >= 0.9 (measured 0.950 / 0.925 via RecallProbe)") {
     // the production tiers: per-subspace Lloyd codebooks (16 x 128, still a
-    // 16-byte code) + sample-trained coarse lists; everything seeded, so
-    // the pin is exact-repeatable. The fixture is near-isotropic — the
-    // hardest regime for quantization recall — hence the deeper rescore
-    // pool / probe fraction documented in SimilarityQueries.
+    // 16-byte code) + sample-trained coarse lists; training is
+    // deterministic (stride init, no RNG), so the pin is exact-repeatable.
+    // The fixture is near-isotropic — the hardest regime for quantization
+    // recall — hence the deeper rescore pool / probe fraction documented
+    // in SimilarityQueries.
     val pred = col("vec_id") < 8
     def ids(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
       df.select("query_id", "vec_id").collect()
@@ -373,19 +385,6 @@ class SimilaritySpec extends SparkSuite {
     }
     assert(recall(Similarity.pqTopKTrained(corpus, pred, 128, 16, 48, 10)) >= 0.9)
     assert(recall(Similarity.ivfPqTopKTrained(corpus, pred, 16, 12, 128, 16, 64, 10)) >= 0.9)
-  }
-
-  test("trainPqCodebook is deterministic under the seed and shaped (ks composite codewords)") {
-    val a = Similarity.trainPqCodebook(corpus, ks = 32, m = 8)
-    val b = Similarity.trainPqCodebook(corpus, ks = 32, m = 8)
-    assert(a == b)
-    assert(a.length == 32)
-    assert(a.forall(_.length == 64))
-    // composite codewords are NOT corpus vectors: subspace s of codeword j
-    // is subspace s's trained center j (a mean), so at least one codeword
-    // must differ from every corpus vector
-    val vs = corpus.select("v").collect().map(_.getSeq[Double](0)).toSet
-    assert(a.exists(cw => !vs.contains(cw)))
   }
 
   test("LSH tier returns k rows per query") {
