@@ -1,6 +1,9 @@
 package graft.operators
 
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.internal.SQLConf
 
 /** Parallelism gate for the ingest-side "spreading" repartition.
   *
@@ -18,6 +21,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   * fixtures, false for any real multi-split corpus — so "the corpus is
   * never shuffled" holds literally on wide inputs (pinned by
   * SpreadGateSpec).
+  *
+  * [[toMeasuredSize]] goes the other way: it narrows a stored frame to the
+  * partition count its measured bytes warrant.
   */
 object Spread {
 
@@ -53,6 +59,38 @@ object Spread {
   def pinIfNarrow(df: DataFrame, key: Column): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     spreadIfNarrow(df, w => if (w) df.repartition(target, key) else df)
+  }
+
+  /** `stored`, a frame [[graft.CheckpointUtil.materialize]] returned,
+    * coalesced to ceil(stored bytes / the session's
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`) partitions, clamped
+    * to [1, its current partitions]: the size AQE treats as one task's
+    * input. Narrow, so never a shuffle, and never wider; a frame whose
+    * partitions already average the advisory size comes back as it is.
+    *
+    * The bytes are the ones `materialize` measured from the stored blocks
+    * and put on the `LogicalRDD` leaf, never an optimizer estimate:
+    * Catalyst sizes a vector column at `VectorUDT.defaultSize`, 17 bytes,
+    * whatever its length (a 64-dim dense vector holds 512 bytes of values
+    * alone), so estimates of derived frames undercount by about the vector
+    * width.
+    *
+    * Why it matters for the PU fits: Spark 4.1.2's LBFGS loss runs one
+    * `treeAggregate` per iteration with `finalAggregateOnExecutor`, which
+    * adds a shuffle to a single task whenever its input has more than one
+    * partition: over two partitions every iteration is two stages and
+    * three tasks, over one it is one stage and one task. */
+  def toMeasuredSize(stored: DataFrame): DataFrame = {
+    val leaf = stored.queryExecution.logical match {
+      case lr: LogicalRDD => lr
+      case other => throw new IllegalArgumentException(
+        s"toMeasuredSize needs a materialized frame, got ${other.nodeName}")
+    }
+    val advisory = JavaUtils.byteStringAsBytes(
+      stored.sparkSession.conf.get(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES.key))
+    val have = leaf.rdd.getNumPartitions
+    val want = ((leaf.stats.sizeInBytes + advisory - 1) / advisory).min(have).max(1).toInt
+    if (want < have) stored.coalesce(want) else stored
   }
 
   private def spreadIfNarrow(df: DataFrame, apply: Boolean => DataFrame): DataFrame = {

@@ -33,12 +33,12 @@ class GradualReductionPULearner[
 
   override def weight(df: DataFrame, labelColumnName: String,
                       featuresColumnName: String, finalLabel: String): DataFrame = {
-    val oneStepPUDF = zeroStep(df, labelColumnName, featuresColumnName, finalLabel)
-      .drop(transientCols: _*)
+    val (input, zeroScored) = storedZeroStep(df, labelColumnName, featuresColumnName, finalLabel)
+    val oneStepPUDF = zeroScored.drop(transientCols: _*)
 
     val prevLabel = "prevLabel"
     val curLabel = "curLabel"
-    val state = new TwoStepPULearner.IterationState(prevLabel, curLabel)
+    val state = new TwoStepPULearner.IterationState(prevLabel, curLabel, Some(input))
 
     // entry thresholding considers undefined rows (reference :35-40)
     val (entryDF, entry) = state.advance(

@@ -27,15 +27,15 @@ class TraditionalPULearner[
 
   override def weight(df: DataFrame, labelColumnName: String,
                       featuresColumnName: String, finalLabel: String): DataFrame = {
-    val oneStepPUDF = zeroStep(df, labelColumnName, featuresColumnName, finalLabel)
-      .drop(transientCols: _*)
+    val (input, zeroScored) = storedZeroStep(df, labelColumnName, featuresColumnName, finalLabel)
+    val oneStepPUDF = zeroScored.drop(transientCols: _*)
 
     val prevLabel = "prevLabel"
     val curLabel = "curLabel"
 
     // 0 -> undefined(-1), 1 stays positive (reference :40)
     var curDF = replaceZerosByUndefLabel(oneStepPUDF, labelColumnName, prevLabel, undefLabel)
-    val state = new TwoStepPULearner.IterationState(prevLabel, curLabel)
+    val state = new TwoStepPULearner.IterationState(prevLabel, curLabel, Some(input))
 
     for (_ <- 1 to maxIters) {
       // threshold unlabeled rows into reliable negatives (reference :44-46)

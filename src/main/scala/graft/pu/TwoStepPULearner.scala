@@ -15,7 +15,13 @@ import org.apache.spark.sql.functions.col
   *  - per-row logic is native expressions (see [[PUExpressions]]), no UDFs;
   *  - iteration state management truncates lineage and frees superseded
   *    iterations (the reference `cache()`s every iteration and never frees —
-  *    unbounded plan growth + a memory leak at scale).
+  *    unbounded plan growth + a memory leak at scale);
+  *  - the input is stored once and narrowed to the partitions its measured
+  *    bytes warrant ([[graft.operators.Spread.toMeasuredSize]]), and every
+  *    fit trains on that narrowed frame: each LBFGS iteration is then one
+  *    stage and one task on a small input instead of a map stage plus a
+  *    shuffle to one task, while an input whose partitions already average
+  *    the advisory size keeps all of them.
   */
 abstract class TwoStepPULearner[
     E <: ProbabilisticClassifier[Vector, E, M],
@@ -41,20 +47,35 @@ abstract class TwoStepPULearner[
     * behavioral parity (it is the identity on continuous features).
     * A deliberately-skipped MinMaxScaler in the reference
     * (TwoStepPULearner.scala:43-45) is likewise not reproduced.
+    *
+    * The input is stored for the fit and freed at the next
+    * [[graft.CheckpointUtil.releaseStragglers]].
     */
   def zeroStep(df: DataFrame, labelColumnName: String, featuresColumnName: String,
-               finalLabel: String): DataFrame = {
-    val dfWithMeta =
-      indexLabelColumn(df, labelColumnName, ProbabilisticClassifierConfig.labelName, Seq("0", "1"))
+               finalLabel: String): DataFrame =
+    storedZeroStep(df, labelColumnName, featuresColumnName, finalLabel)._2
+
+  /** [[zeroStep]], with the stored input it scored. The input is
+    * materialized once and narrowed by its measured bytes; the indexer fit,
+    * the classifier fit and the transform all read the narrowed frame, so
+    * every generation computed from the scores keeps its partition count.
+    * The stored input stays tracked: a caller that runs iterations hands it
+    * to [[TwoStepPULearner.IterationState]], which frees it once the first
+    * generation exists. */
+  protected def storedZeroStep(df: DataFrame, labelColumnName: String,
+      featuresColumnName: String, finalLabel: String): (DataFrame, DataFrame) = {
+    val (stored, _) = graft.CheckpointUtil.materialize(
+      indexLabelColumn(df, labelColumnName, ProbabilisticClassifierConfig.labelName, Seq("0", "1")))
+    val input = graft.operators.Spread.toMeasuredSize(stored)
     val featureIndexer = new VectorIndexer()
       .setInputCol(featuresColumnName)
       .setOutputCol(ProbabilisticClassifierConfig.featuresName)
       .setMaxCategories(4) // >4 distinct values => treated as continuous
-    val preparedDf = featureIndexer.fit(dfWithMeta).transform(dfWithMeta)
+    val preparedDf = featureIndexer.fit(input).transform(input)
 
     val model: M = classifier.fit(preparedDf)
     val predictions = model.transform(preparedDf)
-    predictions.withColumn(finalLabel, probOfPositive(col("probability")))
+    (stored, predictions.withColumn(finalLabel, probOfPositive(col("probability"))))
   }
 
   /** Fit on the currently-labeled subset and rescore ALL rows, overwriting
@@ -82,10 +103,13 @@ object TwoStepPULearner {
     * withColumn/rename otherwise grows an unbounded Catalyst plan —
     * analysis time blows up past ~10 iterations) — with its
     * [[IterMetrics]] observed in that same job, and the superseded
-    * generation is freed as soon as the new one exists.
+    * generation is freed as soon as the new one exists. `input`, a stored
+    * frame the first generation is computed from (the zero step's input),
+    * is freed like a superseded generation.
     */
-  private[graft] final class IterationState(prevLabel: String, curLabel: String) {
-    private var prev: Option[DataFrame] = None
+  private[graft] final class IterationState(prevLabel: String, curLabel: String,
+      input: Option[DataFrame] = None) {
+    private var prev: Option[DataFrame] = input
 
     def advance(df: DataFrame): (DataFrame, IterMetrics) = {
       val (cur, metrics) =

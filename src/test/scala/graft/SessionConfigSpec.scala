@@ -45,6 +45,18 @@ class SessionConfigSpec extends SparkSuite {
       assert(users == owner.toSeq, users)
     }
 
+  test("the advisory partition size is read only by Spread's measured-size rule") {
+    val readers = scalaFiles("src/main").filter { p =>
+      val c = code(p)
+      c.contains("ADVISORY_PARTITION_SIZE_IN_BYTES") || c.contains("advisoryPartitionSizeInBytes")
+    }.map(_.getFileName.toString)
+    assert(readers == Seq("Spread.scala"), readers)
+    // the PU learners are narrowed by that rule, never by a coalesce of their own
+    val puCoalesce = scalaFiles("src/main/scala/graft/pu")
+      .filter(p => code(p).contains("coalesce(")).map(_.getFileName.toString)
+    assert(puCoalesce.isEmpty, puCoalesce)
+  }
+
   test("the retired AQE env knobs appear nowhere") {
     val knobs = Seq("MIN_COALESCED", "SHJ_THRESHOLD").map("SPARK_GRAFT_" + _)
     val texts = (scalaFiles("src") ++ Seq(Paths.get("README.md")))

@@ -11,19 +11,24 @@ trait SparkSuite extends AnyFunSuite {
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 
-  /** `body`'s result and the number of jobs started while it ran. */
-  def jobsDuring[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+  /** `body`'s result and the jobs, stages and tasks that ran while it
+    * ran. Stages count only those submitted: a stage a job skips because
+    * its shuffle output already exists is not counted. */
+  def jobsDuring[T](body: => T): (T, SparkSuite.Sched) = {
+    import org.apache.spark.scheduler._
+    val jobs, stages, tasks = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        stages.incrementAndGet()
+      override def onTaskStart(e: SparkListenerTaskStart): Unit = tasks.incrementAndGet()
     }
     org.apache.spark.sql.GraftColumnBridge.waitForListeners(spark, 10000)
     spark.sparkContext.addSparkListener(listener)
     try {
       val out = body
       org.apache.spark.sql.GraftColumnBridge.waitForListeners(spark, 10000)
-      (out, jobs.get)
+      (out, SparkSuite.Sched(jobs.get, stages.get, tasks.get))
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -43,4 +48,9 @@ trait SparkSuite extends AnyFunSuite {
     val dp = degraded.queryExecution.executedPlan.toString
     assert(dp.contains("ShuffledHashJoin"), dp)
   }
+}
+
+object SparkSuite {
+  /** Scheduler work counted by [[SparkSuite.jobsDuring]]. */
+  final case class Sched(jobs: Int, stages: Int, tasks: Int)
 }

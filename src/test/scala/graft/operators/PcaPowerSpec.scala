@@ -35,7 +35,7 @@ class PcaPowerSpec extends SparkSuite {
   test("the power loop runs one job per round, with the caller's AQE left on") {
     val pca = SparkEntry.queries("sim_pca_power")
     pca(spark, sf001) // the spread probe is memoized per session: warm it
-    val (_, jobs) = jobsDuring(pca(spark, sf001))
+    val jobs = jobsDuring(pca(spark, sf001))._2.jobs
     // one per round, plus the parquet schema read and the spread exchange
     // under the cached frame (built at persist, under the caller's AQE)
     assert(jobs == SimilarityQueries.PcaIters + 2, s"$jobs jobs")

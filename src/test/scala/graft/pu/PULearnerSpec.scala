@@ -35,6 +35,54 @@ class PULearnerSpec extends SparkSuite {
     assert(out.columns.contains("vec_id") && out.columns.contains("embedding"))
   }
 
+  /** The fixture over two cached partitions (its own scan is one). */
+  private lazy val twoParts = {
+    val d = pu.toDF().repartition(2, col("vec_id")).cache()
+    assert(d.count() > 0 && d.rdd.getNumPartitions == 2)
+    d
+  }
+
+  private val lrLearner = TraditionalPULearnerConfig(0.5, 3, LogisticRegressionConfig())
+
+  test("LR weight() on a two-partition input runs one stage per job, one task per fit job") {
+    val in = twoParts // cached before counting
+    val (_, s) = jobsDuring(lrLearner.build().weight(in, "puLabel", "features", "out"))
+    // LBFGS's treeAggregate shuffles its partial sums to one task whenever
+    // its input has more than one partition: two stages per iteration
+    assert(s.stages == s.jobs, s)
+    // every job runs one task, but the input's store: one per input partition
+    assert(s.tasks == s.jobs + 1, s)
+    graft.CheckpointUtil.releaseStragglers()
+  }
+
+  test("the measured-size rule: one partition stays one, a tiny advisory size keeps all, " +
+      "and LR scores agree either way") {
+    import graft.CheckpointUtil.materialize
+    import graft.operators.Spread.toMeasuredSize
+    val (one, _) = materialize(pu.toDF())
+    assert(one.rdd.getNumPartitions == 1 && toMeasuredSize(one).rdd.getNumPartitions == 1)
+    val (two, _) = materialize(twoParts)
+    assert(toMeasuredSize(two).rdd.getNumPartitions == 1)
+    val tiny = graft.Tables.scopedSession(spark,
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k")
+    val wideIn = org.apache.spark.sql.GraftColumnBridge.ofRows(tiny, twoParts)
+    val (twoTiny, _) = materialize(wideIn)
+    assert(toMeasuredSize(twoTiny) eq twoTiny)
+
+    def scored(in: org.apache.spark.sql.DataFrame) =
+      lrLearner.build().weight(in, "puLabel", "features", "out")
+        .select(col("vec_id"), col("out"), col("prevLabel"))
+        .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getInt(2))).toMap
+    val (narrowed, wide) = (scored(twoParts), scored(wideIn))
+    assert(narrowed.keySet == wide.keySet && narrowed.nonEmpty)
+    val worst = narrowed.map { case (id, (p, _)) => math.abs(p - wide(id)._1) }.max
+    assert(worst < 1e-6, s"scores differ by $worst")
+    def relNeg(m: Map[Long, (Double, Int)]) =
+      m.collect { case (id, (_, l)) if l == PUExpressions.relNegLabel => id }.toSet
+    assert(relNeg(narrowed).nonEmpty && relNeg(narrowed) == relNeg(wide))
+    graft.CheckpointUtil.releaseStragglers()
+  }
+
   test("TraditionalPULearner early-exits when threshold converts nothing") {
     // theta = 0: score < 0 never holds -> zero new reliable negatives ->
     // early return after the first thresholding (reference :53-55 semantics)
