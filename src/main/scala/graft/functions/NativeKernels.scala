@@ -7,9 +7,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * emitted by whole-stage codegen (`NativeExpressions`).
   *
   * TOP-LEVEL on purpose: Janino compiles generated code against *binary*
-  * class names. A nested Scala object like `NativeExpressions.PolyHash`
-  * has binary name `graft.functions.NativeExpressions$PolyHash$`, and the
-  * dotted source form `NativeExpressions.PolyHash$` does not resolve —
+  * class names. A nested Scala object like `NativeExpressions.KernelCall`
+  * has binary name `graft.functions.NativeExpressions$KernelCall$`, and the
+  * dotted source form `NativeExpressions.KernelCall$` does not resolve —
   * codegen would silently fall back to full-interpreted execution for the
   * whole stage. A top-level object's module class
   * (`graft.functions.NativeKernels$`) is directly addressable from Java.

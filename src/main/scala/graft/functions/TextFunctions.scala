@@ -36,9 +36,9 @@ object TextFunctions {
     filter(split(trim(text), "\\s+"), t => length(t) > 0)
 
   /** The fused one-pass stats vector `[len, nTokens, sumTokenLen, nStop,
-    * nPunct, nSubwords]` ([[NativeExpressions.TextStats]]). The scalar
+    * nPunct, nSubwords]` ([[NativeExpressions.textStats]]). The scalar
     * accessors below are `getItem` projections of this node — identical
-    * TextStats subtrees in one projection are common-subexpression-
+    * `textStats` subtrees in one projection are common-subexpression-
     * eliminated by whole-stage codegen, so a query reading five stats still
     * walks each document once (the previous HOF formulations re-tokenized
     * per stat). */
@@ -48,9 +48,6 @@ object TextFunctions {
   def tokenCount(text: Column): Column =
     textStats(text).getItem(1).cast(IntegerType)
 
-  private[functions] def tokenCountHof(text: Column): Column =
-    when(length(trim(text)) === 0, lit(0)).otherwise(size(tokens(text)))
-
   /** A BPE-ish sub-word proxy count: tokens split further on letter/digit
     * boundaries and long tokens counted per 4-char chunk — a deterministic
     * stand-in for a real BPE vocab (not shippable in-container), with the
@@ -59,15 +56,10 @@ object TextFunctions {
     */
   def subwordCount(text: Column): Column = textStats(text).getItem(5)
 
-  private[functions] def subwordCountHof(text: Column): Column =
-    when(length(trim(text)) === 0, lit(0L)).otherwise(
-      aggregate(tokens(text), lit(0L),
-        (acc, t) => acc + ceil(length(t).cast(DoubleType) / lit(4.0)).cast(LongType)))
-
   /** Polynomial rolling hash over the string's characters:
     * `acc := (acc*31 + char) mod 1e9+7`, acc0 = 0. The document fingerprint
     * primitive; also the token/shingle hash for MinHash/SimHash. Backed by
-    * a codegen'd native expression ([[NativeExpressions.PolyHash]]) —
+    * a codegen'd native expression ([[NativeExpressions.polyHash]]) —
     * bit-identical to the HOF formulation
     * `aggregate(split(s,""), 0L, (a,c) -> (a*31+ascii(c)) % P)`.
     */
@@ -97,7 +89,7 @@ object TextFunctions {
     size(regexp_extract_all(text, lit(PiiIpRe), lit(0))).cast(LongType)
 
   /** Per-token hashes (for MinHash / SimHash signature building) —
-    * codegen'd single pass ([[NativeExpressions.TokenHashes]]), identical
+    * codegen'd single pass ([[NativeExpressions.tokenHashes]]), identical
     * to `transform(tokens(text), polyHash)` with the blank-string guard. */
   def tokenHashes(text: Column): Column = NativeExpressions.tokenHashes(text)
 
@@ -130,7 +122,7 @@ object TextFunctions {
     *
     * A shingle's hash is the base-31 combine of its tokens' [[polyHash]]es
     * (NOT the hash of the joined string). Backed by the fused codegen'd
-    * kernel ([[NativeExpressions.ShingleHashes]]) — bit-identical to the
+    * kernel ([[NativeExpressions.shingleHashes]]) — bit-identical to the
     * HOF formulation
     * `array_sort(array_distinct(transform(windows over tokenHashes, base31)))`
     * (pinned by NativeExpressionsSpec), which interprets per element and
@@ -173,32 +165,16 @@ object TextFunctions {
   def stopwordCount(text: Column): Column =
     textStats(text).getItem(3).cast(IntegerType)
 
-  private[functions] def stopwordCountHof(text: Column): Column =
-    when(length(trim(text)) === 0, lit(0)).otherwise(
-      size(filter(tokens(text), t => t.isInCollection(Stopwords))))
-
   /** Fraction of characters that are not alphanumeric/whitespace. */
   def punctRatio(text: Column): Column =
     when(length(text) === 0, lit(0.0)).otherwise(
       textStats(text).getItem(4).cast(DoubleType) / length(text).cast(DoubleType))
-
-  private[functions] def punctRatioHof(text: Column): Column =
-    when(length(text) === 0, lit(0.0)).otherwise(
-      length(regexp_replace(text, "[A-Za-z0-9\\s]", "")).cast(DoubleType)
-        / length(text).cast(DoubleType))
 
   /** Mean token length in characters (0 for blank docs). */
   def meanTokenLen(text: Column): Column = {
     val n = textStats(text).getItem(1)
     when(n === 0, lit(0.0)).otherwise(
       textStats(text).getItem(2).cast(DoubleType) / n.cast(DoubleType))
-  }
-
-  private[functions] def meanTokenLenHof(text: Column): Column = {
-    val n = tokenCountHof(text)
-    when(n === 0, lit(0.0)).otherwise(
-      aggregate(tokens(text), lit(0L), (acc, t) => acc + length(t))
-        .cast(DoubleType) / n.cast(DoubleType))
   }
 
   /** Composite quality score in [0,1] — the standard pretraining-filter
@@ -241,25 +217,13 @@ object TextFunctions {
   /** All predictable language codes in counts/tie order. */
   val LangNames: Seq[String] = NativeKernels.LangNames
 
-  def langMarkerScore(text: Column, markers: Seq[String]): Column =
-    when(length(trim(text)) === 0, lit(0)).otherwise(
-      size(filter(tokens(text), t => t.isInCollection(markers))))
-
-  /** Per-character script-range hit count (HOF formulation — `split` by
-    * the empty pattern yields code points, and all ranges are BMP, so
-    * this matches the kernel's UTF-16 walk exactly; see the kernel note). */
-  private[functions] def scriptScoreHof(text: Column, ranges: Seq[(Int, Int)]): Column =
-    size(filter(split(text, ""), c =>
-      ranges.map { case (lo, hi) => ascii(c) >= lo && ascii(c) <= hi }
-        .reduce((a, b) => a || b)))
-
   /** Predicted language: argmax over token-marker counts (Latin-script
     * languages) and script-range character counts (CJK/Cyrillic/Arabic/…),
     * ties broken by [[LangNames]] order, "und" when nothing hits. All
     * counts come from ONE native pass
-    * ([[NativeExpressions.LangMarkerCounts]], CSE'd like [[textStats]]);
+    * ([[NativeExpressions.langMarkerCounts]], CSE'd like [[textStats]]);
     * the argmax/tie logic stays in Column space, bit-identical to the
-    * per-language HOF formulations ([[langIdHof]], spec-pinned).
+    * per-language HOF formulations (`HofTwins.langIdHof`, spec-pinned).
     */
   def langId(text: Column): Column = {
     val cts = NativeExpressions.langMarkerCounts(text)
@@ -269,15 +233,10 @@ object TextFunctions {
     argmaxLang(scores)
   }
 
-  private def argmaxLang(scores: Seq[(String, Column)]): Column = {
+  private[functions] def argmaxLang(scores: Seq[(String, Column)]): Column = {
     val best = scores.map(_._2).reduce((a, b) => greatest(a, b))
     scores.reverse.foldLeft(lit("und")) { case (acc, (lang, s)) =>
       when(s === best && best > 0, lit(lang)).otherwise(acc)
     }
   }
-
-  private[functions] def langIdHof(text: Column): Column =
-    argmaxLang(
-      LangMarkers.map { case (lang, ms) => lang -> langMarkerScore(text, ms) } ++
-        LangScripts.map { case (lang, rs) => lang -> scriptScoreHof(text, rs) })
 }

@@ -46,7 +46,7 @@ object Dedup {
     * every position (matches the oracle's coalesce). The j-th universal
     * hash is `(a_j*h + b_j) mod P` with params derived from j by an LCG
     * step — identical constants inline into the DuckDB oracle. Codegen'd
-    * kernel ([[graft.functions.NativeExpressions.MinHashSignature]]);
+    * kernel ([[graft.functions.NativeExpressions.minhashSignature]]);
     * bit-equality with the HOF formulation is pinned by
     * NativeExpressionsSpec.
     */
@@ -62,7 +62,7 @@ object Dedup {
     * changes, which at 100 TB is the dominant scan-side CPU of the minhash
     * family. Empty shingle set → sentinel P everywhere, matching
     * [[minhashSignature]]. Codegen'd kernel
-    * ([[graft.functions.NativeExpressions.OphSignature]]); bit-equality
+    * ([[graft.functions.NativeExpressions.ophSignature]]); bit-equality
     * with the HOF formulation pinned by NativeExpressionsSpec.
     */
   def ophSignature(shingleHashes: Column, k: Int = MinHashK): Column =
@@ -122,7 +122,7 @@ object Dedup {
     * ([[TextFunctions.shingleHashes]] guarantees both); |A∩B| /
     * (|A|+|B|-|A∩B|), 0.0 when both empty. Intersection size is the
     * codegen'd two-pointer merge
-    * ([[graft.functions.NativeExpressions.SortedIntersectSize]]) — same
+    * ([[graft.functions.NativeExpressions.sortedIntersectSize]]) — same
     * value as `size(array_intersect(a,b))` on sorted-distinct input, minus
     * the per-row hash-set build that made Jaccard verification the
     * post-banding hot path. */
@@ -160,7 +160,7 @@ object Dedup {
 
   /** Frequency-weighted SimHash over a token-hash array: bit j of the
     * result is set iff sum over tokens of (bit j of hash ? +1 : -1) > 0.
-    * Codegen'd kernel ([[graft.functions.NativeExpressions.SimHash]]) —
+    * Codegen'd kernel ([[graft.functions.NativeExpressions.simhash]]) —
     * the HOF formulation re-walked the token array once PER BIT,
     * interpreted; bit-equality pinned by NativeExpressionsSpec.
     */

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{GraftColumnBridge, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, GraftColumnBridge, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -33,58 +33,52 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
+  /** One SQL function, built through the same Column-level def the Scala
+    * DSL calls, so both reach the same node. */
+  private def function(name: String, usage: String)(build: Seq[Column] => Column)
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""),
+      (args: Seq[Expression]) =>
+      GraftColumnBridge.expression(build(args.map(GraftColumnBridge.column))))
 
   val registrations: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
     Seq(
-      (FunctionIdentifier("graft_polyhash"),
-        info("graft_polyhash", "graft_polyhash(str) - rolling hash mod 1e9+7"),
-        (args: Seq[Expression]) => PolyHash(args.head)),
-      (FunctionIdentifier("graft_token_hashes"),
-        info("graft_token_hashes", "graft_token_hashes(str) - per-token rolling hashes"),
-        (args: Seq[Expression]) => TokenHashes(args.head)),
-      (FunctionIdentifier("graft_dot"),
-        info("graft_dot", "graft_dot(arr, arr) - sequential-order dot product"),
-        (args: Seq[Expression]) => DotProduct(args(0), args(1))),
-      (FunctionIdentifier("graft_text_stats"),
-        info("graft_text_stats",
-          "graft_text_stats(str) - [len, nTokens, sumTokLen, nStop, nPunct, nSubwords] in one pass"),
-        (args: Seq[Expression]) => TextStats(args.head)),
-      (FunctionIdentifier("graft_lang_marker_counts"),
-        info("graft_lang_marker_counts",
-          "graft_lang_marker_counts(str) - per-language marker-token hit counts"),
-        (args: Seq[Expression]) => LangMarkerCounts(args.head)),
-      (FunctionIdentifier("graft_shingle_hashes"),
-        info("graft_shingle_hashes",
-          "graft_shingle_hashes(str, n) - sorted-distinct word n-gram hashes"),
-        (args: Seq[Expression]) => ShingleHashes(args(0), intArg(args(1), "n"))),
-      (FunctionIdentifier("graft_minhash"),
-        info("graft_minhash", "graft_minhash(arr, k) - k-long MinHash signature"),
-        (args: Seq[Expression]) => MinHashSignature(args(0), intArg(args(1), "k"))),
-      (FunctionIdentifier("graft_simhash"),
-        info("graft_simhash", "graft_simhash(arr) - 30-bit frequency-weighted SimHash"),
-        (args: Seq[Expression]) => SimHash(args.head)),
-      (FunctionIdentifier("graft_band_hashes"),
-        info("graft_band_hashes",
-          "graft_band_hashes(sig, bands, rows) - per-band base-31 combines"),
-        (args: Seq[Expression]) =>
-          BandHashes(args(0), intArg(args(1), "bands"), intArg(args(2), "rows"))),
-      (FunctionIdentifier("graft_repetition_stats"),
-        info("graft_repetition_stats",
-          "graft_repetition_stats(str) - [nTokens, nDistinct, topFreq, nBigrams, nDistinctBigrams] in one pass"),
-        (args: Seq[Expression]) => RepetitionStats(args.head)),
-      (FunctionIdentifier("graft_int_dot"),
-        info("graft_int_dot", "graft_int_dot(arr<tinyint>, arr<tinyint>) - exact integer dot as bigint"),
-        (args: Seq[Expression]) => IntDot(args(0), args(1))),
-      (FunctionIdentifier("graft_sorted_intersect_size"),
-        info("graft_sorted_intersect_size",
-          "graft_sorted_intersect_size(a, b) - |a ∩ b| of strictly-ascending arrays"),
-        (args: Seq[Expression]) => SortedIntersectSize(args(0), args(1))))
+      function("graft_polyhash", "graft_polyhash(str) - rolling hash mod 1e9+7")(
+        a => polyHash(a(0))),
+      function("graft_token_hashes", "graft_token_hashes(str) - per-token rolling hashes")(
+        a => tokenHashes(a(0))),
+      function("graft_dot", "graft_dot(arr, arr) - sequential-order dot product")(
+        a => dot(a(0), a(1))),
+      function("graft_text_stats",
+        "graft_text_stats(str) - [len, nTokens, sumTokLen, nStop, nPunct, nSubwords] in one pass")(
+        a => textStats(a(0))),
+      function("graft_lang_marker_counts",
+        "graft_lang_marker_counts(str) - per-language marker-token hit counts")(
+        a => langMarkerCounts(a(0))),
+      function("graft_shingle_hashes",
+        "graft_shingle_hashes(str, n) - sorted-distinct word n-gram hashes")(
+        a => shingleHashes(a(0), intArg(a(1), "n"))),
+      function("graft_minhash", "graft_minhash(arr, k) - k-long MinHash signature")(
+        a => minhashSignature(a(0), intArg(a(1), "k"))),
+      function("graft_simhash", "graft_simhash(arr) - 30-bit frequency-weighted SimHash")(
+        a => simhash(a(0))),
+      function("graft_band_hashes",
+        "graft_band_hashes(sig, bands, rows) - per-band base-31 combines")(
+        a => bandHashes(a(0), intArg(a(1), "bands"), intArg(a(2), "rows"))),
+      function("graft_repetition_stats",
+        "graft_repetition_stats(str) - [nTokens, nDistinct, topFreq, nBigrams, nDistinctBigrams] in one pass")(
+        a => repetitionStats(a(0))),
+      function("graft_int_dot",
+        "graft_int_dot(arr<tinyint>, arr<tinyint>) - exact integer dot as bigint")(
+        a => intDot(a(0), a(1))),
+      function("graft_sorted_intersect_size",
+        "graft_sorted_intersect_size(a, b) - |a ∩ b| of strictly-ascending arrays")(
+        a => sortedIntersectSize(a(0), a(1))))
 
   /** Shape parameters (shingle width, signature length, banding) must be
     * literal ints — they select a kernel specialization, they are not data. */
-  private def intArg(e: Expression, name: String): Int = e match {
+  private def intArg(c: Column, name: String): Int = GraftColumnBridge.expression(c) match {
     case Literal(v: Int, IntegerType) => v
     case other => throw new IllegalArgumentException(
       s"$name must be an integer literal, got $other")

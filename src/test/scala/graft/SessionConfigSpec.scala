@@ -29,15 +29,18 @@ class SessionConfigSpec extends SparkSuite {
 
   // (pattern, the one src/main file allowed to use it, or None for no
   // file): one session builder, one hand-rolled per-session memo, one way
-  // to store a generation, and no library code changing a session's conf
-  // (scoped settings go through Tables.scopedSession's child session)
+  // to store a generation, no library code changing a session's conf
+  // (scoped settings go through Tables.scopedSession's child session), and
+  // one home for codegen nodes (a new kernel goes through KernelCall or
+  // sits beside the few classes that do per-row work around their call)
   for ((pattern, owner) <- Seq(
       "SparkSession.builder" -> Some("Tables.scala"),
       "WeakHashMap" -> Some("SessionMemo.scala"),
       "CompletableFuture" -> Some("SessionMemo.scala"),
       "localCheckpoint(" -> Some("CheckpointUtil.scala"),
       "conf.set(" -> Some("Tables.scala"),
-      "conf.unset(" -> None))
+      "conf.unset(" -> None,
+      "doGenCode" -> Some("NativeExpressions.scala")))
     test(s"$pattern appears under src/main ${owner.fold("nowhere")("only in " + _)}") {
       val users = scalaFiles("src/main")
         .filter(p => code(p).contains(pattern))

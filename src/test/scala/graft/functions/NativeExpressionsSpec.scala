@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 import graft.{SparkSuite, Tables}
+import HofTwins._
 
 /** The codegen'd native expressions must be BIT-IDENTICAL to the built-in
   * higher-order formulations they replaced (the DuckDB oracle mirrors the
