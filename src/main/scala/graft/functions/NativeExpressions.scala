@@ -114,33 +114,41 @@ object NativeExpressions {
     }
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val evals = children.map(_.genCode(ctx))
       val literals = consts.flatMap {
         case p: Payload =>
           p.javaTypes.zip(p.objects).map { case (t, o) => ctx.addReferenceObj("graftConst", o, t) }
         case i: Int => Seq(i.toString)
         case l: Long => Seq(s"${l}L")
-        case d: Double if !d.isNaN && !d.isInfinite => Seq(s"${d}D")
+        case d: Double if !d.isNaN && !d.isInfinite => Seq(d.toString)
         case d: Double =>
           Seq(s"java.lang.Double.longBitsToDouble(${java.lang.Double.doubleToRawLongBits(d)}L)")
       }
+      val evals = children.map(_.genCode(ctx))
       val args = (evals.map(_.value.toString) ++ literals).mkString(", ")
       val call = s"${ev.value} = $Kernels.$fn($args);"
-      val javaType = CodeGenerator.javaType(dataType)
-      if (nullable) {
-        // BinaryExpression.nullSafeCodeGen, one nesting level per child
+      val init = s"${CodeGenerator.javaType(dataType)} ${ev.value} = " +
+        s"${CodeGenerator.defaultValue(dataType)};"
+      // the code UnaryExpression's and Binary/TernaryExpression's
+      // nullSafeCodeGen emit, the latter with one nesting level per child
+      if (!nullable) {
+        ev.copy(code = code"""
+          ${evals.map(_.code.toString).mkString("\n")}
+          $init
+          $call""", isNull = FalseLiteral)
+      } else if (evals.length == 1) {
+        ev.copy(code = code"""
+          ${evals.head.code}
+          boolean ${ev.isNull} = ${evals.head.isNull};
+          $init
+          ${ctx.nullSafeExec(children.head.nullable, evals.head.isNull)(call)}""")
+      } else {
         val body = evals.zip(children).foldRight(s"${ev.isNull} = false;\n$call") {
           case ((e, c), inner) => s"${e.code}\n" + ctx.nullSafeExec(c.nullable, e.isNull)(inner)
         }
         ev.copy(code = code"""
           boolean ${ev.isNull} = true;
-          $javaType ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+          $init
           $body""")
-      } else {
-        ev.copy(code = code"""
-          ${evals.map(_.code.toString).mkString("\n")}
-          $javaType ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
-          $call""", isNull = FalseLiteral)
       }
     }
   }
