@@ -67,7 +67,7 @@ object NativeExpressions {
     * analysis (array nullability aside).
     */
   case class KernelCall(fn: String, dataType: DataType, children: Seq[Expression],
-      consts: Seq[Any] = Nil, inputTypes: Seq[DataType] = Nil) extends Expression {
+      consts: Seq[Any], inputTypes: Seq[DataType]) extends Expression {
 
     override def nullable: Boolean = children.exists(_.nullable)
     override def foldable: Boolean = children.forall(_.foldable)
