@@ -17,6 +17,14 @@ import org.apache.spark.sql.functions.{count, lit}
   * successor is materialized. (Only then: a locally-checkpointed RDD cannot
   * be recomputed after its blocks are freed.)
   *
+  * A multiply-read intermediate is materialized, not persisted: Spark 4.1's
+  * AQE re-describes the whole running query after every stage, and a
+  * persisted frame prints its cached plan under each reference, doubling
+  * the text per nesting level (a materialized leaf is one line). In one
+  * curation-chain update an InMemoryRelation printed 1,120 times (2.67 MB);
+  * materializing three of its persists cut a run's plan text from 42.6 MB
+  * to 7.3 MB, text the driver had spent 45% of its samples building.
+  *
   * Storage that outlives its builder (a returned result's checkpoint, a
   * loop's last generation, helper-scoped persists) is registered by
   * [[track]] and freed BETWEEN queries via [[releaseStragglers]] — after the

@@ -72,12 +72,17 @@ object CurationPipeline {
   // composition, the spec audits them stage by stage)
   // ------------------------------------------------------------------
 
-  /** Stage 1: Gopher-rule survivors of `docs` (all columns kept). */
-  def qualitySurvivors(docs: DataFrame): DataFrame = {
-    val st = NativeExpressions.textStats(col("text"))
-    val rep = NativeExpressions.repetitionStats(col("text"))
-    docs.filter(Gopher.keep(st, rep))
-  }
+  /** Stage 1: Gopher-rule survivors of `docs` (all columns kept). Filters
+    * get no common-subexpression elimination in codegen (`Gopher.keep`
+    * over the kernel calls tokenized each doc 9 times) and the optimizer
+    * inlines a projected alias back into its filter, so the stats come
+    * from a one-row generator no predicate on them is pushed below. */
+  def qualitySurvivors(docs: DataFrame): DataFrame =
+    docs.select(col("*"), inline(array(struct(
+        NativeExpressions.textStats(col("text")).as("graft_st"),
+        NativeExpressions.repetitionStats(col("text")).as("graft_rep")))))
+      .filter(Gopher.keep(col("graft_st"), col("graft_rep")))
+      .drop("graft_st", "graft_rep")
 
   /** One (doc_id, pidx, h) row per [[ParaWindow]]-token paragraph of each
     * doc — the exploded frame behind [[paragraphAgg]] and the incremental
@@ -101,12 +106,11 @@ object CurationPipeline {
     * false dups from ~10⁵ paragraphs up (DedupStressSpec measures exactly
     * the predicted 20 at 200k); the wide hash defers that to n ≈ 2³². */
   def paragraphAgg(qdocs: DataFrame, wide: Boolean = false): DataFrame =
-    // persist: the exploded paragraph set feeds the canonical agg AND the
-    // join-back (same reasoning as dedup_paragraph)
-    paragraphAggOf(graft.CheckpointUtil.track(
-      explodeParagraphs(qdocs, wide).persist()))
+    // materialized: the exploded paragraph set feeds the canonical agg AND
+    // the join-back (same reasoning as dedup_paragraph)
+    paragraphAggOf(materialize(explodeParagraphs(qdocs, wide))._1)
 
-  /** [[paragraphAgg]] over an already-exploded (and persisted) paragraph
+  /** [[paragraphAgg]] over an already-exploded (and materialized) paragraph
     * frame — the incremental chain reuses its corpus paras for the state
     * probe as well. */
   private[graft] def paragraphAggOf(paras: DataFrame): DataFrame = {
@@ -142,7 +146,7 @@ object CurationPipeline {
     * tau-similarity greedy-by-id within a list. Returns
     * (doc_id, cen_id) for kept docs. */
   def semanticSurvivors(survDocs: DataFrame): DataFrame = {
-    val emb = graft.CheckpointUtil.track(embed(survDocs).persist())
+    val emb = materialize(embed(survDocs))._1
     Dedup.semanticDedupWith(emb,
         Similarity.lowestIdCentroids(emb, SemCentroids), SemTau)
       .filter(col("keep"))
@@ -193,29 +197,26 @@ object CurationPipeline {
       else TextFunctions.shingleHashes(col("text"), DecontNgram)
     val evalShh = evalDocs.select(explode(shh).as("sh")).distinct()
     val train = survDocs.filter(col("source") =!= "src19")
-    // persisted (and registry-tracked): the size probe and the exact-arm
-    // broadcast both consume it — unpersisted, the whole corpus-side
-    // shingle semi-join would run twice (measured +2.7 s on the e2e chain
-    // at sf0.1). The limit bounds what the probe MATERIALIZES; on
-    // overflow the partial cache is released before the Bloom arm.
-    val contaminated = graft.CheckpointUtil.track(train
-      .select(col("doc_id"), explode(shh).as("sh"))
-      .join(broadcast(evalShh), Seq("sh"), "left_semi")
-      .select(col("doc_id")).distinct()
-      .persist())
     // the probe is Int-limited; a budget at/above Int.MaxValue could never
     // be exceeded by it and would silently disable the degrade — refuse it
     // (2^31 8-byte ids is already a ~17 GB broadcast, far past any sane
     // budget)
     require(maxExactBroadcast < Int.MaxValue,
       s"maxExactBroadcast $maxExactBroadcast would defeat the size probe")
-    val exactFits = contaminated
-      .limit(maxExactBroadcast.toInt + 1)
-      .count() <= maxExactBroadcast
-    if (exactFits)
+    // the size probe IS the store: one job materializes at most
+    // `maxExactBroadcast + 1` contaminated ids and counts them, so the
+    // corpus-side shingle semi-join runs once for both the probe and the
+    // exact arm's broadcast. On overflow the partial set is released
+    // before the Bloom arm.
+    val (contaminated, probe) = materialize(train
+      .select(col("doc_id"), explode(shh).as("sh"))
+      .join(broadcast(evalShh), Seq("sh"), "left_semi")
+      .select(col("doc_id")).distinct()
+      .limit(maxExactBroadcast.toInt + 1))
+    if (probe.getLong(0) <= maxExactBroadcast)
       train.join(broadcast(contaminated), Seq("doc_id"), "left_anti")
     else {
-      contaminated.unpersist(blocking = false)
+      graft.CheckpointUtil.releaseCheckpoint(contaminated)
       val bloom = evalShh.agg(new BloomFilterAgg(DecontBloomBits,
         TrainingDataQueries.BloomK).column(col("sh")).as("bloom"))
       train.crossJoin(broadcast(bloom))
@@ -367,30 +368,30 @@ object CurationPipeline {
   // The composed query
   // ------------------------------------------------------------------
 
+  /** Stages 2-4 (paragraph dedup → semantic dedup → decontamination) over
+    * stage-1 survivors `q`. Returns (s2 paragraph evidence, s4 survivors) —
+    * both materialized (each feeds at least two downstream consumers). Shared
+    * by [[stages2to7]] and the `pipeline_e2e_full` DAG tail — one survivor
+    * chain, no fork. */
+  private def stages2to4(docs: DataFrame, q: DataFrame): (DataFrame, DataFrame) = {
+    // stage 2: paragraph dedup
+    val pagg = paragraphAgg(q)
+    val s2 = materialize(paragraphSurvivors(pagg))._1
+    // stage 3: semantic dedup over the stage-2 survivors
+    val s3 = semanticSurvivors(q.join(s2.select("doc_id"), "doc_id"))
+    // stage 4: decontaminate vs the RAW eval slice
+    // feeds the BPE vocab collect AND the apply pass
+    val s4 = materialize(decontaminate(q.join(s3, "doc_id"),
+      docs.filter(col("source") === "src19")))._1
+    (s2, s4)
+  }
+
   /** Stages 2-7 of the curation chain over stage-1 survivors `q` (document
     * rows — `doc_id`/`text`/`source` at least). Shared by
     * `pipeline_e2e_curate` (Gopher stage 1) and `pipeline_e2e_curate_pu`
     * (Gopher AND the PU quality model) — one chain body, no fork. Returns
     * the per-doc evidence frame ordered by doc_id. `docs` is the RAW corpus
     * (stage 4 decontaminates against its unfiltered eval slice). */
-  /** Stages 2-4 (paragraph dedup → semantic dedup → decontamination) over
-    * stage-1 survivors `q`. Returns (s2 paragraph evidence, s4 survivors) —
-    * both persisted (each feeds at least two downstream consumers). Shared
-    * by [[stages2to7]] and the `pipeline_e2e_full` DAG tail — one survivor
-    * chain, no fork. */
-  private def stages2to4(docs: DataFrame, q: DataFrame): (DataFrame, DataFrame) = {
-    // stage 2: paragraph dedup
-    val pagg = paragraphAgg(q)
-    val s2 = graft.CheckpointUtil.track(paragraphSurvivors(pagg).persist())
-    // stage 3: semantic dedup over the stage-2 survivors
-    val s3 = semanticSurvivors(q.join(s2.select("doc_id"), "doc_id"))
-    // stage 4: decontaminate vs the RAW eval slice
-    val s4 = graft.CheckpointUtil.track(decontaminate(q.join(s3, "doc_id"),
-        docs.filter(col("source") === "src19"))
-      .persist()) // feeds the BPE vocab collect AND the apply pass
-    (s2, s4)
-  }
-
   private def stages2to7(docs: DataFrame, q: DataFrame): DataFrame = {
     val (s2, s4) = stages2to4(docs, q)
     // stage 5: BPE — merge table learned ON the survivors. An empty
@@ -420,6 +421,13 @@ object CurationPipeline {
         col("n_tokens"), col("n_pieces"), col("pieces_hash"),
         col("pack_id"), col("pack_offset"), col("shard_id"))
       .orderBy("doc_id")
+  }
+
+  /** [[stages2to7]] over a PU-gated `q`, the model's `pu_score` joined in
+    * as the evidence row's second column. */
+  private def puGatedChain(docs: DataFrame, q: DataFrame, puKeep: DataFrame): DataFrame = {
+    val ev = stages2to7(docs, q)
+    ev.join(puKeep, "doc_id").select("doc_id", "pu_score" +: ev.columns.tail: _*).orderBy("doc_id")
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -471,11 +479,11 @@ object CurationPipeline {
     // compared surface.
     "pipeline_decontaminate_semantic" -> ((s, dir) => {
       val docs = Spread.ifNarrow(Tables.documents(s, dir), col("doc_id"))
-      val emb = graft.CheckpointUtil.track(docs.select(col("doc_id"), col("source"),
+      // feeds centroid collect, both assignment sides
+      val emb = materialize(docs.select(col("doc_id"), col("source"),
           NativeExpressions.hashEmbed(col("text"), SemDim).as("v"))
         .withColumn("nrm", Dedup.l2norm(col("v")))
-        .filter(col("nrm") > 0.0)
-        .persist()) // feeds centroid collect, both assignment sides
+        .filter(col("nrm") > 0.0))._1
       val evalSide = emb.filter(col("source") === "src19")
       val cents = Similarity.collectCentroids(Similarity.lowestIdCentroids(
         evalSide.select(col("doc_id").as("vec_id"), col("v"), col("nrm")),
@@ -486,8 +494,8 @@ object CurationPipeline {
         if (cents.isEmpty)
           emb.select(col("doc_id")).where(lit(false)).withColumn("graft_sem", lit(true))
         else {
-          val asgn = graft.CheckpointUtil.track(emb.withColumn("cen_id",
-            NativeExpressions.argMaxCosine(col("v"), col("nrm"), cents)).persist())
+          val asgn = materialize(emb.withColumn("cen_id",
+            NativeExpressions.argMaxCosine(col("v"), col("nrm"), cents)))._1
           asgn.filter(col("source") =!= "src19")
             .select(col("cen_id"), col("doc_id"), col("v").as("cv"), col("nrm").as("cnrm"))
             // the eval side is small BY DEFINITION (an eval set is a
@@ -533,9 +541,8 @@ object CurationPipeline {
 
     "pipeline_e2e_curate" -> ((s, dir) => {
       val docs = Spread.ifNarrow(Tables.documents(s, dir), col("doc_id"))
-      // stage 1: quality — persisted: feeds paragraphs, embeddings, and
-      // the survivor joins below
-      val q = graft.CheckpointUtil.track(qualitySurvivors(docs).persist())
+      // stage 1: quality — feeds paragraphs, embeddings and the survivor joins
+      val q = materialize(qualitySurvivors(docs))._1
       stages2to7(docs, q)
     }),
 
@@ -562,7 +569,7 @@ object CurationPipeline {
     // pinned through the manifest's counts and ordered key-list hash.
     "pipeline_e2e_full" -> ((s, dir) => {
       val docs = Spread.ifNarrow(Tables.documents(s, dir), col("doc_id"))
-      val q = graft.CheckpointUtil.track(qualitySurvivors(docs).persist())
+      val q = materialize(qualitySurvivors(docs))._1
       val (_, s4) = stages2to4(docs, q)
       // stages 5-7 ([[dagTrainSeqs]]), then pack + per-pack manifest
       Packing.packAssignments(dagTrainSeqs(s4), "seq_key", "n_tokens", PackTokens)
@@ -588,7 +595,7 @@ object CurationPipeline {
     // training order.
     "pipeline_e2e_train_order" -> ((s, dir) => {
       val docs = Spread.ifNarrow(Tables.documents(s, dir), col("doc_id"))
-      val q = graft.CheckpointUtil.track(qualitySurvivors(docs).persist())
+      val q = materialize(qualitySurvivors(docs))._1
       val (_, s4) = stages2to4(docs, q)
       val P = TextFunctions.HashMod
       val binned = dagTrainSeqs(s4)
@@ -724,22 +731,15 @@ object CurationPipeline {
       val docs = Spread.ifNarrow(Tables.documents(s, dir), col("doc_id"))
       // stage 0: the PU quality model ([[puStubScores]] — the
       // pu_pipeline_filter_stub model, one definition, no fork).
-      // persist: consumed by the stage-1 gate AND the final evidence join —
-      // unpersisted, the second join would re-run the whole PU scoring
+      // materialized: consumed by the stage-1 gate AND the final evidence
+      // join — unstored, the second join would re-run the whole PU scoring
       // lineage (full-corpus quality scan + the loop's transform chain).
-      val puKeep = graft.CheckpointUtil.track(puStubScores(s, dir)
+      val puKeep = materialize(puStubScores(s, dir)
         .filter(col("pu_final") === 1 || col("score") >= 0.5)
-        .select(col("doc_id"), col("score").as("pu_score"))
-        .persist())
+        .select(col("doc_id"), col("score").as("pu_score")))._1
       // stage 1: Gopher rules AND the model's keep decision
-      val q = graft.CheckpointUtil.track(
-        qualitySurvivors(docs).join(puKeep, "doc_id").persist())
-      stages2to7(docs, q)
-        .join(puKeep, "doc_id")
-        .select(col("doc_id"), col("pu_score"), col("n_paras"), col("n_dup"),
-          col("cen_id"), col("n_tokens"), col("n_pieces"), col("pieces_hash"),
-          col("pack_id"), col("pack_offset"), col("shard_id"))
-        .orderBy("doc_id")
+      val q = materialize(qualitySurvivors(docs).join(puKeep, "doc_id"))._1
+      puGatedChain(docs, q, puKeep)
     }),
 
     // The chain gated by the reference's SECOND algorithm, composed the
@@ -756,19 +756,12 @@ object CurationPipeline {
     // stage-1 decision engine changes.
     "pipeline_e2e_curate_pulea" -> ((s, dir) => {
       val docs = Spread.ifNarrow(Tables.documents(s, dir), col("doc_id"))
-      val puKeep = graft.CheckpointUtil.track(puLeaStubScores(s, dir)
+      val puKeep = materialize(puLeaStubScores(s, dir)
         .filter(col("pu_final") === 1 || col("score") >= LeaKeepTau)
-        .select(col("doc_id"), col("score").as("pu_score"))
-        .persist())
+        .select(col("doc_id"), col("score").as("pu_score")))._1
       // stage 1 IS the learned keep set (no Gopher conjunct — see above)
-      val q = graft.CheckpointUtil.track(
-        docs.join(puKeep, "doc_id").persist())
-      stages2to7(docs, q)
-        .join(puKeep, "doc_id")
-        .select(col("doc_id"), col("pu_score"), col("n_paras"), col("n_dup"),
-          col("cen_id"), col("n_tokens"), col("n_pieces"), col("pieces_hash"),
-          col("pack_id"), col("pack_offset"), col("shard_id"))
-        .orderBy("doc_id")
+      val q = materialize(docs.join(puKeep, "doc_id"))._1
+      puGatedChain(docs, q, puKeep)
     })
   )
 
@@ -899,41 +892,40 @@ object CurationPipeline {
        |  WHERE (${ph("('split' || CAST(doc_id AS VARCHAR))", "spi")}) % 100 < 90)""".stripMargin
   }
 
+  /** [[puStubBase]]'s twin (expects the `tf`/`st` CTEs): the Gopher∧even
+    * seed label `l0` and the quality feature `f0`. */
+  private def puBaseCtes: String =
+    s"""qf AS (SELECT doc_id, ${graft.functions.TextQueries.quality} AS f0 FROM documents),
+       |base AS (SELECT st.doc_id,
+       |  CASE WHEN (${TrainingDataQueries.GopherSql.keep}) AND st.doc_id % 2 = 0
+       |       THEN 1 ELSE -1 END AS l0,
+       |  qf.f0 AS f0
+       |  FROM st JOIN tf USING (doc_id) JOIN qf USING (doc_id))""".stripMargin
+
+  /** [[puStubScores]]' loop unrolled over `base`. */
+  private def traditionalUnroll: String = graft.SparkEntry.traditionalStubUnroll(
+    0.5, -0.125, 3, "SELECT * FROM base", "doc_id")
+
   def oracles: Map[String, String] = Map(
     // The Traditional loop unrolled ([[graft.SparkEntry.traditionalStubUnroll]])
     // over base = (gopher seed label, quality score) — the same shared
     // fragments as the e2e chain's stage-1 twin.
-    "pu_pipeline_filter_stub" -> {
-      val unroll = graft.SparkEntry.traditionalStubUnroll(
-        0.5, -0.125, 3, "SELECT * FROM base", "doc_id")
+    "pu_pipeline_filter_stub" ->
       s"""WITH t AS ($thCte),
          |tf AS (${TrainingDataQueries.GopherSql.tfCte}),
          |st AS (${TrainingDataQueries.GopherSql.stCte}),
-         |qf AS (SELECT doc_id, ${graft.functions.TextQueries.quality} AS f0 FROM documents),
-         |base AS (SELECT st.doc_id,
-         |  CASE WHEN (${TrainingDataQueries.GopherSql.keep}) AND st.doc_id % 2 = 0
-         |       THEN 1 ELSE -1 END AS l0,
-         |  qf.f0 AS f0
-         |  FROM st JOIN tf USING (doc_id) JOIN qf USING (doc_id))
+         |$puBaseCtes
          |SELECT doc_id, score, pu_final,
          |  (pu_final = 1 OR score >= 0.5) AS keep
-         |FROM ($unroll) ORDER BY doc_id""".stripMargin
-    },
+         |FROM ($traditionalUnroll) ORDER BY doc_id""".stripMargin,
 
     // calibration twin: the same base + unroll, then the decile aggregate
-    "pu_calibration" -> {
-      val unroll = graft.SparkEntry.traditionalStubUnroll(
-        0.5, -0.125, 3, "SELECT * FROM base", "doc_id")
+    "pu_calibration" ->
       s"""WITH t AS ($thCte),
          |tf AS (${TrainingDataQueries.GopherSql.tfCte}),
          |st AS (${TrainingDataQueries.GopherSql.stCte}),
-         |qf AS (SELECT doc_id, ${graft.functions.TextQueries.quality} AS f0 FROM documents),
-         |base AS (SELECT st.doc_id,
-         |  CASE WHEN (${TrainingDataQueries.GopherSql.keep}) AND st.doc_id % 2 = 0
-         |       THEN 1 ELSE -1 END AS l0,
-         |  qf.f0 AS f0
-         |  FROM st JOIN tf USING (doc_id) JOIN qf USING (doc_id)),
-         |sc AS (SELECT doc_id, score, pu_final FROM ($unroll)),
+         |$puBaseCtes,
+         |sc AS (SELECT doc_id, score, pu_final FROM ($traditionalUnroll)),
          |j AS (SELECT sc.doc_id, sc.score, sc.pu_final,
          |  CASE WHEN base.l0 = 1 THEN 1 ELSE 0 END AS seed_pos
          |  FROM sc JOIN base USING (doc_id)),
@@ -942,8 +934,7 @@ object CurationPipeline {
          |  CAST(sum(seed_pos) AS BIGINT) AS n_seed_pos,
          |  CAST(sum(CASE WHEN pu_final = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_final_pos,
          |  min(score) AS min_score, max(score) AS max_score
-         |FROM b GROUP BY decile ORDER BY decile""".stripMargin
-    },
+         |FROM b GROUP BY decile ORDER BY decile""".stripMargin,
 
     // Same hv/nn/assignment formulation as the e2e stage-3 twin, with
     // eval-derived centroids and a corpus×eval (never corpus×corpus) tau
@@ -985,16 +976,9 @@ object CurationPipeline {
     // stage-2-7 CTEs as the plain chain — twin composition mirrors the
     // Spark composition stage for stage.
     "pipeline_e2e_curate_pu" -> {
-      val unroll = graft.SparkEntry.traditionalStubUnroll(
-        0.5, -0.125, 3, "SELECT * FROM base", "doc_id")
       val preS1 =
-        s"""qf AS (SELECT doc_id, ${graft.functions.TextQueries.quality} AS f0 FROM documents),
-           |base AS (SELECT st.doc_id,
-           |  CASE WHEN (${TrainingDataQueries.GopherSql.keep}) AND st.doc_id % 2 = 0
-           |       THEN 1 ELSE -1 END AS l0,
-           |  qf.f0 AS f0
-           |  FROM st JOIN tf USING (doc_id) JOIN qf USING (doc_id)),
-           |puk AS MATERIALIZED (SELECT doc_id, score AS pu_score FROM ($unroll)
+        s"""$puBaseCtes,
+           |puk AS MATERIALIZED (SELECT doc_id, score AS pu_score FROM ($traditionalUnroll)
            |  WHERE pu_final = 1 OR score >= 0.5)""".stripMargin
       s"""WITH RECURSIVE t AS MATERIALIZED ($thCte),
          |${stage12CtesWith(preS1, " AND st.doc_id IN (SELECT doc_id FROM puk)")},
@@ -1012,12 +996,7 @@ object CurationPipeline {
       val unroll = graft.SparkEntry.gradReductionUnroll(
         0.5, 0.125, 6, "SELECT * FROM base", "doc_id")
       val preS1 =
-        s"""qf AS (SELECT doc_id, ${graft.functions.TextQueries.quality} AS f0 FROM documents),
-           |base AS (SELECT st.doc_id,
-           |  CASE WHEN (${TrainingDataQueries.GopherSql.keep}) AND st.doc_id % 2 = 0
-           |       THEN 1 ELSE -1 END AS l0,
-           |  qf.f0 AS f0
-           |  FROM st JOIN tf USING (doc_id) JOIN qf USING (doc_id)),
+        s"""$puBaseCtes,
            |puk AS MATERIALIZED (SELECT doc_id, score AS pu_score FROM ($unroll)
            |  WHERE pu_final = 1 OR score >= $LeaKeepTau)""".stripMargin
       s"""WITH RECURSIVE t AS MATERIALIZED ($thCte),

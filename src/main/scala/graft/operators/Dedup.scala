@@ -268,7 +268,7 @@ object Dedup {
     * undefined — [[Similarity.prepare]] drops them).
     *
     * `corpus` must be in [[Similarity.prepare]] shape (vec_id, v, nrm) and
-    * SHOULD be persisted by the caller (it feeds centroid selection,
+    * SHOULD be stored by the caller (it feeds centroid selection,
     * assignment, and both pair sides). Returns (vec_id, cen_id, keep).
     */
   def semanticDedup(corpus: DataFrame, nCentroids: Int, tau: Double): DataFrame =
@@ -289,8 +289,8 @@ object Dedup {
       return corpus.select(col("vec_id"),
         lit(null).cast(LongType).as("cen_id"), lit(true).as("keep"))
     }
-    val assigned = graft.CheckpointUtil.track(
-      Similarity.ivfAssignWith(corpus, collected).persist())
+    val assigned = graft.CheckpointUtil.materialize(
+      Similarity.ivfAssignWith(corpus, collected))._1
     val a = assigned.select(col("cen_id"), col("vec_id").as("id_a"),
       col("v").as("v_a"), col("nrm").as("nrm_a"))
     val b = assigned.select(col("cen_id"), col("vec_id").as("id_b"),

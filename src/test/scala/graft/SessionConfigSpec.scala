@@ -48,6 +48,17 @@ class SessionConfigSpec extends SparkSuite {
       assert(users == owner.toSeq, users)
     }
 
+  test(".persist( appears in neither CurationPipeline.scala nor Dedup.scala") {
+    // their intermediates are stored with materialize: a persisted frame
+    // reprints its whole cached plan under every reference in AQE's plan
+    // text, a materialized one is a one-line leaf
+    val files = scalaFiles("src/main/scala/graft/operators")
+      .filter(p => Set("CurationPipeline.scala", "Dedup.scala")(p.getFileName.toString))
+    assert(files.size == 2, files)
+    val users = files.filter(p => code(p).contains(".persist(")).map(_.getFileName.toString)
+    assert(users.isEmpty, users)
+  }
+
   test("the advisory partition size is read only by Spread's measured-size rule") {
     val readers = scalaFiles("src/main").filter { p =>
       val c = code(p)

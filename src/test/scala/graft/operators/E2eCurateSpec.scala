@@ -17,6 +17,25 @@ class E2eCurateSpec extends SparkSuite {
 
   private lazy val docs = Spread.ifNarrow(Tables.documents(spark, sf0001), col("doc_id"))
 
+  test("the quality filter tokenizes each document once and keeps the Gopher survivors") {
+    // the raw scan: no exchange, so the plan is not wrapped for AQE
+    val docs = Tables.documents(spark, sf0001)
+    val q = qualitySurvivors(docs)
+    val gen = q.queryExecution.executedPlan.collect {
+      case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w.doCodeGen()._2.body
+    }.mkString("\n")
+    def calls(kernel: String) =
+      gen.split(java.util.regex.Pattern.quote(s"NativeKernels.$kernel("), -1).length - 1
+    assert(calls("textStats") == 1 && calls("repetitionStats") == 1,
+      q.queryExecution.executedPlan.toString + gen)
+    // the rules applied to the kernel calls directly select the same docs
+    val st = graft.functions.NativeExpressions.textStats(col("text"))
+    val rep = graft.functions.NativeExpressions.repetitionStats(col("text"))
+    val direct = docs.filter(Gopher.keep(st, rep))
+    assert(q.columns.toSeq == docs.columns.toSeq)
+    assert(q.count() > 0 && q.exceptAll(direct).count() == 0 && direct.exceptAll(q).count() == 0)
+  }
+
   test("each curation stage is non-vacuous at sf0.001") {
     val n0 = docs.count()
     val q = qualitySurvivors(docs).persist()

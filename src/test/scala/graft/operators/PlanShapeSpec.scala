@@ -55,31 +55,39 @@ class PlanShapeSpec extends SparkSuite
   }
 
   test("semantic dedup assigns centroids IN-SCAN: no join, no exchange below the argmax project") {
-    val plan = graft.SparkEntry.queries("dedup_semantic")(spark, sf0001)
-      .queryExecution.executedPlan
-    val s = plan.toString
+    // the assignment is materialized, so the query's own plan reads it as a
+    // bare LogicalRDD leaf: check the plan of the job that stored it, as
+    // every QueryExecutionListener sees it
+    val stored = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") stored.add(qe.executedPlan)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val plans = try {
+      val plan = graft.SparkEntry.queries("dedup_semantic")(spark, sf0001)
+        .queryExecution.executedPlan
+      org.apache.spark.sql.GraftColumnBridge.waitForListeners(spark, 10000)
+      plan +: stored.toArray(Array.empty[org.apache.spark.sql.execution.SparkPlan]).toSeq
+    } finally spark.listenerManager.unregister(listener)
+    val s = plans.mkString("\n")
     // assignment is a per-row kernel over constant centroids — the centroid
     // fan-out join (even a broadcast one) must be GONE, and the corpus must
     // only ever join on cen_id/vec_id
     assert(s.toLowerCase.contains("argmaxcosine"), s)
     assert(!s.contains("BroadcastNestedLoopJoin") && !s.contains("CartesianProduct"), s)
-    // the assignment project may live inside a persisted (InMemoryRelation)
-    // segment — descend through cache boundaries to find it
-    def deepCollect[T](p: org.apache.spark.sql.execution.SparkPlan)(
-        f: PartialFunction[org.apache.spark.sql.execution.SparkPlan, T]): Seq[T] =
-      collectWithSubqueries(p)(f) ++ collectWithSubqueries(p) {
-        case c: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          deepCollect(c.relation.cachedPlan)(f)
-      }.flatten
-    val assigns = deepCollect(plan) {
+    val assigns = plans.flatMap(p => collectWithSubqueries(p) {
       case p: org.apache.spark.sql.execution.ProjectExec
           if p.projectList.exists(_.toString.toLowerCase.contains("argmaxcosine")) => p
-    }
+    })
     assert(assigns.nonEmpty, s)
-    // within the assignment's own (un-cached) plan segment there must be NO
-    // shuffle between it and its scan/cache leaf: assignment is map work.
+    // within the assignment's own plan segment there must be NO shuffle
+    // between it and its scan/stored leaf: assignment is map work.
     // (prepare()'s documented one-off spreading repartition sits behind the
-    // persisted-corpus cache boundary and is not part of assignment.)
+    // stored corpus leaf and is not part of assignment.)
     assigns.foreach { p =>
       val below = collectWithSubqueries(p) {
         case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e

@@ -23,7 +23,9 @@ class ShuffleAuditSpec extends SparkSuite {
     // crossJoin+window argmax) and every similarity tier selects top-k via
     // TopKAgg instead of a row_number window — measured counts dropped to
     // 9/6/7/6/5 (semantic/ivf/quantized/kmeans/lsh); bounds = measured + 2
-    "dedup_semantic" -> 11, "dedup_semantic_text" -> 11,
+    // (the semantic tiers read their assignment as a materialized leaf,
+    // whose build runs in its own store job: measured 3 each)
+    "dedup_semantic" -> 5, "dedup_semantic_text" -> 5,
     "sim_topk_ivf" -> 8, "sim_topk_ivf_kmeans" -> 8, "sim_topk_filtered" -> 8,
     "sim_topk_quantized" -> 9, "sim_topk_lsh" -> 7,
     // PQ tiers reference the persisted corpus from four branches, and a
@@ -66,12 +68,11 @@ class ShuffleAuditSpec extends SparkSuite {
     // persisted shingle base referenced from three branches (eval distinct,
     // exact semi-join, probe side) — cached-plan text repeats as above
     "pipeline_decontaminate_bloom" -> 11,
-    // measured 10 in plan text, of which 5 are the ONE Spread repartition
-    // reprinted under every scan/cached-emb reference; runtime shuffles
-    // are the two distinct aggs (sem + eval shingles) and the final sort.
-    // The tau join itself is a BROADCAST hash join on cen_id (eval side
-    // bounded by definition) — the corpus never shuffles for it.
-    "pipeline_decontaminate_semantic" -> 12,
+    // measured 6 in plan text, the embeddings and their assignment read
+    // as materialized leaves. The tau join is a BROADCAST hash join on
+    // cen_id (eval side bounded by definition) — the corpus never
+    // shuffles for it.
+    "pipeline_decontaminate_semantic" -> 8,
     "pipeline_bloom" -> 8, "dedup_srp_pairs" -> 8, "dedup_simhash_pairs" -> 8,
     "text_lm_score" -> 8, // persisted 2-branch base: plan text expands twice
     // persisted (doc,tok) tf grain referenced twice (df agg + scoring
@@ -80,24 +81,20 @@ class ShuffleAuditSpec extends SparkSuite {
     // gather, and the final sort (measured 7 in plan text)
     "text_keywords" -> 9,
     "text_hll_distinct" -> 7, "q_setop_nations" -> 7,
-    // the 7-stage composition: measured 21 in plan text, of which 16 are
-    // ONE cached Spread repartition reprinted under every InMemoryRelation
-    // reference — runtime shuffles are the stage set by design (paragraph
-    // canonical agg + join-back on h, survivor aggs on doc_id, the pack
-    // range exchange, semantic's cen_id); every stage-joining join is
-    // broadcast. No extra exchanges vs the sum of the standalone stages.
-    "pipeline_e2e_curate" -> 23,
-    // same chain with the PU stage-0 gate: the PU scoring lineage joins in
-    // twice (stage-1 gate + final evidence), both persisted; measured 21 in
-    // plan text with the same cached-Spread reprinting as above
-    "pipeline_e2e_curate_pu" -> 23,
-    // identical chain shape under the PU-LEA gate (measured 22 in plan
-    // text, same cached-Spread reprinting)
-    "pipeline_e2e_curate_pulea" -> 24,
-    // survivor chain + quota/mix/split/pack tail: the tail adds the
-    // source-quota agg, the pack range exchange, and the manifest pack_id
-    // agg on top of the stage 1-4 set; same plan-text doubling as above
-    "pipeline_e2e_full" -> 25,
+    // the 7-stage composition: measured 1 in plan text. The stage-1
+    // survivors, paragraphs, embeddings, assignment and s2/s4 are
+    // materialized, so the stage set by design (paragraph canonical agg +
+    // join-back on h, survivor aggs on doc_id, semantic's cen_id) runs in
+    // their own store jobs, and the final plan reads them as leaves.
+    "pipeline_e2e_curate" -> 3,
+    // same chain with the PU stage-0 gate, its keep set materialized too:
+    // measured 1
+    "pipeline_e2e_curate_pu" -> 3,
+    // identical chain shape under the PU-LEA gate: measured 1
+    "pipeline_e2e_curate_pulea" -> 3,
+    // survivor chain + quota/mix/split/pack tail over the materialized s4:
+    // measured 2
+    "pipeline_e2e_full" -> 4,
     // Gopher∧DSIR → survivor-scoped excision → shelf composition:
     // measured 18 in plan text — the persisted surv/after frames reprint
     // their build lineage (incl. the DSIR rank's range exchange and the
@@ -176,14 +173,10 @@ class ShuffleAuditSpec extends SparkSuite {
     // nothing corpus-sized crosses a wire after the arm top-ks
     "sim_hybrid_rrf" -> 12,
     // state and batch frames are eagerly localCheckpoint'd (lineage-free
-    // standing state), so most of the count is REAL: the batch-side
-    // canonical/evidence aggs, the cen_id self-join's two sides, the
-    // victims union-distinct, decontamination's distincts, and the final
-    // sort — all batch-sized; the corpus crosses no wire. Measured 20 in
-    // plan text, of which ~8 are the decontamination stage's persisted
-    // contaminated set reprinting its build lineage under the
-    // InMemoryRelation (runtime shuffles stay ~12)
-    "pipeline_e2e_incremental" -> 22,
+    // standing state), and so is decontamination's contaminated set, so
+    // the batch-side aggs run in those store jobs. Measured 3 in plan
+    // text; the corpus crosses no wire.
+    "pipeline_e2e_incremental" -> 5,
     // weighted sampling = the dedup_soft_weight chain (LSH→CC cluster
     // sizing + the corpus-side weight join) + the per-source TopKAgg's
     // two agg partials and the final sort — measured 7; everything past
