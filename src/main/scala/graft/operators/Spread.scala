@@ -75,22 +75,33 @@ object Spread {
     * alone), so estimates of derived frames undercount by about the vector
     * width.
     *
-    * Why it matters for the PU fits: Spark 4.1.2's LBFGS loss runs one
-    * `treeAggregate` per iteration with `finalAggregateOnExecutor`, which
-    * adds a shuffle to a single task whenever its input has more than one
-    * partition: over two partitions every iteration is two stages and
-    * three tasks, over one it is one stage and one task. */
+    * Why it matters for the PU fits: Spark ML's tree aggregations (one
+    * per LBFGS loss evaluation, with `finalAggregateOnExecutor`) add a
+    * shuffle to a single task whenever their input has more than one
+    * partition, and a logistic regression whose input fills at most one
+    * advisory partition fits in one task
+    * ([[org.apache.spark.ml.classification.LocalLogisticFit]]). */
   def toMeasuredSize(stored: DataFrame): DataFrame = {
-    val leaf = stored.queryExecution.logical match {
-      case lr: LogicalRDD => lr
-      case other => throw new IllegalArgumentException(
-        s"toMeasuredSize needs a materialized frame, got ${other.nodeName}")
-    }
+    val have = storedLeaf(stored).rdd.getNumPartitions
+    val want = measuredPartitions(stored).min(have).max(1).toInt
+    if (want < have) stored.coalesce(want) else stored
+  }
+
+  /** ceil(`stored`'s measured bytes / the session's advisory partition
+    * size), unclamped: the number of advisory partitions its bytes fill, a
+    * frame [[graft.CheckpointUtil.materialize]] returned. 1 means one task
+    * may hold all of it, which is when a PU logistic regression fits in one
+    * task. */
+  def measuredPartitions(stored: DataFrame): BigInt = {
     val advisory = JavaUtils.byteStringAsBytes(
       stored.sparkSession.conf.get(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES.key))
-    val have = leaf.rdd.getNumPartitions
-    val want = ((leaf.stats.sizeInBytes + advisory - 1) / advisory).min(have).max(1).toInt
-    if (want < have) stored.coalesce(want) else stored
+    (storedLeaf(stored).stats.sizeInBytes + advisory - 1) / advisory
+  }
+
+  private def storedLeaf(stored: DataFrame): LogicalRDD = stored.queryExecution.logical match {
+    case lr: LogicalRDD => lr
+    case other => throw new IllegalArgumentException(
+      s"a measured size needs a materialized frame, got ${other.nodeName}")
   }
 
   private def spreadIfNarrow(df: DataFrame, apply: Boolean => DataFrame): DataFrame = {

@@ -33,12 +33,12 @@ class GradualReductionPULearner[
 
   override def weight(df: DataFrame, labelColumnName: String,
                       featuresColumnName: String, finalLabel: String): DataFrame = {
-    val (input, zeroScored) = storedZeroStep(df, labelColumnName, featuresColumnName, finalLabel)
-    val oneStepPUDF = zeroScored.drop(transientCols: _*)
+    val zero = storedZeroStep(df, labelColumnName, featuresColumnName, finalLabel)
+    val oneStepPUDF = zero.scored.drop(transientCols: _*)
 
     val prevLabel = "prevLabel"
     val curLabel = "curLabel"
-    val state = new TwoStepPULearner.IterationState(prevLabel, curLabel, Some(input))
+    val state = new TwoStepPULearner.IterationState(prevLabel, curLabel, Some(zero.input))
 
     // entry thresholding considers undefined rows (reference :35-40)
     val (entryDF, entry) = state.advance(
@@ -72,7 +72,7 @@ class GradualReductionPULearner[
 
     do {
       // refit on positives + current reliable negatives, rescore all (reference :56-66)
-      curDF = refitAndRescore(curDF, curLabel, finalLabel)
+      curDF = refitAndRescore(zero.fit, curDF, curLabel, finalLabel)
       curDF = curDF.drop(prevLabel).withColumnRenamed(curLabel, prevLabel)
 
       // inner re-thresholding of RELIABLE NEGATIVES: the ones now scoring

@@ -9,7 +9,15 @@ import org.apache.spark.ml.linalg.Vector
   */
 sealed trait ProbabilisticClassifierConfig
 
-/** Defaults match the reference (ProbabilisticClassifierConfig.scala:11-13). */
+/** Defaults match the reference (ProbabilisticClassifierConfig.scala:11-13).
+  *
+  * In a PU learner, each fit of this classifier runs as one Spark job, in
+  * the one task that holds the training rows, when the learner's stored
+  * input measures within one `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+  * ([[org.apache.spark.ml.classification.LocalLogisticFit]]); the model is
+  * the one Spark ML's `fit` returns, bit for bit. A larger input fits with
+  * Spark ML's `fit`, one job per LBFGS loss evaluation.
+  */
 case class LogisticRegressionConfig(maxIter: Int = 100,
                                     regParam: Double = 1.0e-8,
                                     elasticNetParam: Double = 0.0)

@@ -27,15 +27,15 @@ class TraditionalPULearner[
 
   override def weight(df: DataFrame, labelColumnName: String,
                       featuresColumnName: String, finalLabel: String): DataFrame = {
-    val (input, zeroScored) = storedZeroStep(df, labelColumnName, featuresColumnName, finalLabel)
-    val oneStepPUDF = zeroScored.drop(transientCols: _*)
+    val zero = storedZeroStep(df, labelColumnName, featuresColumnName, finalLabel)
+    val oneStepPUDF = zero.scored.drop(transientCols: _*)
 
     val prevLabel = "prevLabel"
     val curLabel = "curLabel"
 
     // 0 -> undefined(-1), 1 stays positive (reference :40)
     var curDF = replaceZerosByUndefLabel(oneStepPUDF, labelColumnName, prevLabel, undefLabel)
-    val state = new TwoStepPULearner.IterationState(prevLabel, curLabel, Some(input))
+    val state = new TwoStepPULearner.IterationState(prevLabel, curLabel, Some(zero.input))
 
     for (_ <- 1 to maxIters) {
       // threshold unlabeled rows into reliable negatives (reference :44-46)
@@ -49,7 +49,7 @@ class TraditionalPULearner[
       }
 
       // refit on positives + reliable negatives, rescore all rows (reference :56-71)
-      curDF = refitAndRescore(thresholded, curLabel, finalLabel)
+      curDF = refitAndRescore(zero.fit, thresholded, curLabel, finalLabel)
       // rotate labels for the next iteration (reference :72-73)
       curDF = curDF.drop(prevLabel).withColumnRenamed(curLabel, prevLabel)
     }

@@ -1,6 +1,7 @@
 package graft.pu
 
-import org.apache.spark.ml.classification.{ProbabilisticClassificationModel, ProbabilisticClassifier}
+import org.apache.spark.ml.classification.{LocalLogisticFit, LogisticRegression,
+  ProbabilisticClassificationModel, ProbabilisticClassifier}
 import org.apache.spark.ml.feature.VectorIndexer
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.DataFrame
@@ -21,7 +22,15 @@ import org.apache.spark.sql.functions.col
   *    fit trains on that narrowed frame: each LBFGS iteration is then one
   *    stage and one task on a small input instead of a map stage plus a
   *    shuffle to one task, while an input whose partitions already average
-  *    the advisory size keeps all of them.
+  *    the advisory size keeps all of them;
+  *  - a logistic regression whose input measures within one advisory
+  *    partition fits as one Spark job ([[LocalLogisticFit]]): the whole
+  *    LBFGS/OWLQN optimization runs in the task holding the partition and
+  *    returns the model `LogisticRegression.fit` would, bit for bit; Spark
+  *    ML's `fit`, which the reference calls, dispatches one job per loss
+  *    evaluation. The decision is
+  *    made once per `weight`/`zeroStep` call from the stored input's
+  *    measured bytes; a wider input and RandomForest keep Spark ML's `fit`.
   */
 abstract class TwoStepPULearner[
     E <: ProbabilisticClassifier[Vector, E, M],
@@ -53,19 +62,20 @@ abstract class TwoStepPULearner[
     */
   def zeroStep(df: DataFrame, labelColumnName: String, featuresColumnName: String,
                finalLabel: String): DataFrame =
-    storedZeroStep(df, labelColumnName, featuresColumnName, finalLabel)._2
+    storedZeroStep(df, labelColumnName, featuresColumnName, finalLabel).scored
 
-  /** [[zeroStep]], with the stored input it scored. The input is
-    * materialized once and narrowed by its measured bytes; the indexer fit,
-    * the classifier fit and the transform all read the narrowed frame, so
-    * every generation computed from the scores keeps its partition count.
-    * The stored input stays tracked: a caller that runs iterations hands it
-    * to [[TwoStepPULearner.IterationState]], which frees it once the first
-    * generation exists. */
+  /** [[zeroStep]], with the stored input it scored and the fit every refit
+    * uses. The input is materialized once and narrowed by its measured
+    * bytes; the indexer fit, the classifier fit and the transform all read
+    * the narrowed frame, so every generation computed from the scores keeps
+    * its partition count. The stored input stays tracked: a caller that runs
+    * iterations hands it to [[TwoStepPULearner.IterationState]], which frees
+    * it once the first generation exists. */
   protected def storedZeroStep(df: DataFrame, labelColumnName: String,
-      featuresColumnName: String, finalLabel: String): (DataFrame, DataFrame) = {
+      featuresColumnName: String, finalLabel: String): TwoStepPULearner.ZeroStep[M] = {
     val (stored, _) = graft.CheckpointUtil.materialize(
       indexLabelColumn(df, labelColumnName, ProbabilisticClassifierConfig.labelName, Seq("0", "1")))
+    val fit = fitter(graft.operators.Spread.measuredPartitions(stored) == 1)
     val input = graft.operators.Spread.toMeasuredSize(stored)
     val featureIndexer = new VectorIndexer()
       .setInputCol(featuresColumnName)
@@ -73,21 +83,31 @@ abstract class TwoStepPULearner[
       .setMaxCategories(4) // >4 distinct values => treated as continuous
     val preparedDf = featureIndexer.fit(input).transform(input)
 
-    val model: M = classifier.fit(preparedDf)
+    val model: M = fit(preparedDf)
     val predictions = model.transform(preparedDf)
-    (stored, predictions.withColumn(finalLabel, probOfPositive(col("probability"))))
+    TwoStepPULearner.ZeroStep(stored,
+      predictions.withColumn(finalLabel, probOfPositive(col("probability"))), fit)
+  }
+
+  /** The classifier's fit: in one task for a logistic regression whose
+    * input fills at most one advisory partition (one task never holds more),
+    * else Spark ML's own. */
+  private def fitter(oneTask: Boolean): DataFrame => M = (classifier: AnyRef) match {
+    case lr: LogisticRegression if oneTask =>
+      prepared => LocalLogisticFit.fit(lr, prepared).asInstanceOf[M]
+    case _ => classifier.fit(_)
   }
 
   /** Fit on the currently-labeled subset and rescore ALL rows, overwriting
     * `finalLabel`; shared by both iterative learners (reference:
     * TraditionalPULearner.scala:56-71, GradualReductionPULearner.scala:54-66).
     */
-  protected def refitAndRescore(curDF: DataFrame, curLabel: String,
+  protected def refitAndRescore(fit: DataFrame => M, curDF: DataFrame, curLabel: String,
                                 finalLabel: String): DataFrame = {
     val labeled = curDF.filter(col(curLabel) =!= undefLabel)
     val prepared = indexLabelColumn(labeled, curLabel,
       ProbabilisticClassifierConfig.labelName, Seq("0", "1"))
-    val model = classifier.fit(prepared)
+    val model = fit(prepared)
     model.transform(curDF)
       .withColumn(finalLabel, probOfPositive(col("probability")))
       .drop(transientCols: _*)
@@ -97,6 +117,10 @@ abstract class TwoStepPULearner[
 
 object TwoStepPULearner {
   import PUExpressions.{IterMetrics, iterMetricCols}
+
+  /** [[TwoStepPULearner.zeroStep]]'s outcome: the stored input, its scores,
+    * and the classifier fit chosen for that input. */
+  final case class ZeroStep[M](input: DataFrame, scored: DataFrame, fit: DataFrame => M)
 
   /** Iteration-state manager: every generation is
     * [[graft.CheckpointUtil.materialize]]d — lineage-free (iterative

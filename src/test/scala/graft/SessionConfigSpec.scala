@@ -32,7 +32,9 @@ class SessionConfigSpec extends SparkSuite {
   // to store a generation, no library code changing a session's conf
   // (scoped settings go through Tables.scopedSession's child session), and
   // one home for codegen nodes (a new kernel goes through KernelCall or
-  // sits beside the few classes that do per-row work around their call)
+  // sits beside the few classes that do per-row work around their call),
+  // and one shim into Spark ML's internals (the one-task logistic
+  // regression fit, which must replay Spark's own training code)
   for ((pattern, owner) <- Seq(
       "SparkSession.builder" -> Some("Tables.scala"),
       "WeakHashMap" -> Some("SessionMemo.scala"),
@@ -40,7 +42,10 @@ class SessionConfigSpec extends SparkSuite {
       "localCheckpoint(" -> Some("CheckpointUtil.scala"),
       "conf.set(" -> Some("Tables.scala"),
       "conf.unset(" -> None,
-      "doGenCode" -> Some("NativeExpressions.scala")))
+      "doGenCode" -> Some("NativeExpressions.scala"),
+      "package org.apache.spark.ml" -> Some("LocalLogisticFit.scala"),
+      "BinaryLogisticBlockAggregator" -> Some("LocalLogisticFit.scala"),
+      "InstanceBlock" -> Some("LocalLogisticFit.scala")))
     test(s"$pattern appears under src/main ${owner.fold("nowhere")("only in " + _)}") {
       val users = scalaFiles("src/main")
         .filter(p => code(p).contains(pattern))

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,13 +14,19 @@ trait SparkSuite extends AnyFunSuite {
   val sf001 = "/root/testdata/sf0.01"
 
   /** `body`'s result and the jobs, stages and tasks that ran while it
-    * ran. Stages count only those submitted: a stage a job skips because
-    * its shuffle output already exists is not counted. */
+    * ran, with each job's call site. Stages count only those submitted: a
+    * stage a job skips because its shuffle output already exists is not
+    * counted. */
   def jobsDuring[T](body: => T): (T, SparkSuite.Sched) = {
     import org.apache.spark.scheduler._
     val jobs, stages, tasks = new java.util.concurrent.atomic.AtomicInteger
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        // the result stage, the job's last, is named after the job's call site
+        sites.add(e.stageInfos.maxBy(_.stageId).name)
+      }
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         stages.incrementAndGet()
       override def onTaskStart(e: SparkListenerTaskStart): Unit = tasks.incrementAndGet()
@@ -28,7 +36,7 @@ trait SparkSuite extends AnyFunSuite {
     try {
       val out = body
       org.apache.spark.sql.GraftColumnBridge.waitForListeners(spark, 10000)
-      (out, SparkSuite.Sched(jobs.get, stages.get, tasks.get))
+      (out, SparkSuite.Sched(jobs.get, stages.get, tasks.get, sites.asScala.toList))
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -52,5 +60,5 @@ trait SparkSuite extends AnyFunSuite {
 
 object SparkSuite {
   /** Scheduler work counted by [[SparkSuite.jobsDuring]]. */
-  final case class Sched(jobs: Int, stages: Int, tasks: Int)
+  final case class Sched(jobs: Int, stages: Int, tasks: Int, callSites: Seq[String])
 }

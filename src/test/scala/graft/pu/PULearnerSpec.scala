@@ -52,6 +52,12 @@ class PULearnerSpec extends SparkSuite {
     assert(s.stages == s.jobs, s)
     // every job runs one task, but the input's store: one per input partition
     assert(s.tasks == s.jobs + 1, s)
+    // each LR fit is one job (its input fills one advisory partition), so
+    // the pass is: the input's store, the indexer's two jobs, the zero-step
+    // fit, then a generation and a refit, and the generation that converts
+    // nothing; no summary or LBFGS loss job of Spark ML's own runs
+    assert(s.jobs == 7, s)
+    assert(!s.callSites.exists(c => c.contains("RDDLossFunction") || c.contains("Summarizer")), s)
     graft.CheckpointUtil.releaseStragglers()
   }
 
