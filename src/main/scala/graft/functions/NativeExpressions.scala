@@ -2,6 +2,7 @@ package graft.functions
 
 import java.util.Locale
 
+import org.apache.spark.ml.linalg.SQLDataTypes
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -389,6 +390,11 @@ object NativeExpressions {
   def residualNorm2(a: Column, w: Column, y: Column): Column =
     column(ResidualNorm2(expression(a), expression(w), expression(y)))
   def maxAbs(v: Column): Column = column(MaxAbs(expression(v)))
+
+  /** An ML vector's size, read from its stored struct without building the
+    * vector — see [[NativeKernels.vectorSize]]. */
+  def vectorSize(v: Column): Column =
+    kernel("vectorSize", IntegerType, Seq(v), inputTypes = Seq(SQLDataTypes.VectorType))
 
   /** DSIR bigram importance score over a shingle-hash array — see
     * [[NativeKernels.dsirScore]]. Null input → null (callers coalesce to

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -416,6 +417,12 @@ object NativeKernels {
     }
     acc
   }
+
+  /** The size of an ML vector in its `VectorUDT` struct (type, size,
+    * indices, values): a sparse vector (type 0) stores it, a dense one's is
+    * its values' length. */
+  def vectorSize(v: InternalRow): Int =
+    if (v.getByte(0) == 0) v.getInt(1) else v.getArray(3).numElements()
 
   /** max(|v_i|) in one pass — identical to `array_max(transform(v, abs))`
     * on non-null-element double arrays (inputs here are cast float arrays),

@@ -20,7 +20,8 @@ import org.apache.spark.sql.functions.col
   * The reference runs 4 separate `count()` actions per iteration
   * (reference :41-49, :74-79) — here they fuse into
   * [[PUExpressions.iterMetricCols]], riding the job that materializes the
-  * iteration.
+  * iteration; a logistic regression that fits in one task fits and scores
+  * the round in that job too.
   */
 class GradualReductionPULearner[
     E <: ProbabilisticClassifier[Vector, E, M],
@@ -71,12 +72,14 @@ class GradualReductionPULearner[
       return curDF.drop(ProbabilisticClassifierConfig.featuresName)
 
     do {
-      // refit on positives + current reliable negatives, rescore all (reference :56-66)
+      // refit on positives + current reliable negatives, rescore all
+      // (reference :56-66); a one-task fit is lazy and runs in the advance
       curDF = refitAndRescore(zero.fit, curDF, curLabel, finalLabel)
       curDF = curDF.drop(prevLabel).withColumnRenamed(curLabel, prevLabel)
 
       // inner re-thresholding of RELIABLE NEGATIVES: the ones now scoring
-      // >= threshold are promoted back to undefined (reference :70-71)
+      // >= threshold are promoted back to undefined (reference :70-71);
+      // one job stores the round with its metrics (and its one-task fit)
       val (next, m) = state.advance(
         curDF.withColumn(curLabel,
           binarize(col(finalLabel), col(prevLabel), relNegThreshold, relNegLabel)))

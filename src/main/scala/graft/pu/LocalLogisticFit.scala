@@ -3,7 +3,6 @@ package org.apache.spark.ml.classification
 import java.util.Locale
 
 import scala.reflect.ClassTag
-import scala.util.Try
 
 import breeze.linalg.{DenseVector => BDV}
 import breeze.optimize.{CachedDiffFunction, DiffFunction, FirstOrderMinimizer,
@@ -12,117 +11,94 @@ import breeze.optimize.{CachedDiffFunction, DiffFunction, FirstOrderMinimizer,
 import org.apache.spark.SparkException
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.ml.feature.{Instance, InstanceBlock, StandardScalerModel}
-import org.apache.spark.ml.linalg.{BLAS, DenseMatrix, Matrix, SparseMatrix, Vector, Vectors}
+import org.apache.spark.ml.linalg.{BLAS, DenseMatrix, Matrix, SparseMatrix, SQLDataTypes, Vector,
+  Vectors}
 import org.apache.spark.ml.optim.aggregator.BinaryLogisticBlockAggregator
 import org.apache.spark.ml.optim.loss.L2Regularization
-import org.apache.spark.ml.param.Params
 import org.apache.spark.ml.stat.{MultiClassSummarizer, Summarizer, SummarizerBuffer}
-import org.apache.spark.ml.util.{DatasetUtils, MetadataUtils}
-import org.apache.spark.sql.{Dataset, Row}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.ml.util.{DatasetUtils, MetadataUtils, SchemaUtils}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.functions.{col, struct, when}
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
-/** A binary logistic regression fit as ONE Spark job: Spark 4.1.2's
-  * `LogisticRegression.train`/`trainImpl`, replayed inside the single task
-  * that holds the training partition, from Spark's own classes. The result
-  * is a stock `LogisticRegressionModel` equal bit for bit to what
-  * `LogisticRegression.fit` returns: coefficients, intercept, params and
-  * the training summary's objective history.
+/** A binary logistic regression fit and applied in ONE Spark task: Spark
+  * 4.1.2's `LogisticRegression.train`/`trainImpl`, replayed inside the task
+  * that holds the partition, from Spark's own classes, then the model's own
+  * `transform` columns for every row of that partition. The scores are
+  * those `lr.fit(df.filter(train)).transform(df)` gives, bit for bit.
   *
   * Stock `fit` runs one `treeAggregate` job for the feature and label
   * summaries and one per LBFGS loss evaluation, each closure-cleaned,
-  * dispatched and collected by the driver; on a small input that dispatch is
-  * the fit's cost. On one partition `treeAggregate` folds the partition over
-  * a zero value and merges the result into another zero, which the task does
-  * too, so every sum is taken in the same order.
+  * dispatched and collected by the driver, and `transform` plans a further
+  * pass; on a small input that dispatch is the cost. On one partition
+  * `treeAggregate` folds the partition over a zero value and merges the
+  * result into another zero, which the task does too, so every sum is taken
+  * in the same order. The frame returned is lazy: the action that reads it
+  * runs the fit, so a PU round's fit, scores and store are one job.
   *
-  * The task sends the two summaries back and the driver replays `train`'s
-  * checks on them in `train`'s order, so an input `fit` rejects fails with
-  * the same error class and message; NaN/Inf features and out-of-domain
-  * labels fail inside the task, from `train`'s own check columns. What this
-  * does not replay goes to stock `fit`: more than one partition, a weight
-  * column, coefficient bounds, a multinomial fit. The estimator must carry no
-  * initial model (`setInitialModel` is `private[spark]`).
+  * `train`'s checks run in the task, in `train`'s order and with its
+  * messages, so an input `fit` rejects fails with the same error, thrown by
+  * the job; NaN/Inf features and out-of-domain labels fail from `train`'s
+  * own check columns. What this does not replay goes to stock `fit` and
+  * `transform`: more than one partition, a weight column, coefficient
+  * bounds, a label without two-class metadata (a multinomial fit), an empty
+  * output column. The estimator must carry no initial model
+  * (`setInitialModel` is `private[spark]`).
   */
 object LocalLogisticFit {
 
   /** `train`'s reading of the summaries, before it optimizes. */
-  private final case class Plan(numFeatures: Int, numClasses: Int, multinomial: Boolean,
-      constantLabel: Boolean, histogram: Array[Double])
+  private final case class Plan(numFeatures: Int, constantLabel: Boolean,
+      histogram: Array[Double])
 
-  /** The task's answer: the summaries, and the solution and objective
-    * history when `train` reaches its optimizer. */
-  private final case class Answer(features: SummarizerBuffer, labels: MultiClassSummarizer,
-      solved: Option[(Array[Double], Array[Double])])
-
-  def fit(lr: LogisticRegression, dataset: Dataset[_]): LogisticRegressionModel = {
-    // Predictor.fit: validate the schema, cast the label keeping its metadata
-    lr.transformSchema(dataset.schema)
+  /** `df` with the columns `lr.fit(df.filter(train)).transform(df)` appends,
+    * as a lazy frame whose one task fits and scores. */
+  def fitAndScore(lr: LogisticRegression, df: DataFrame, train: Column): DataFrame = {
+    lr.transformSchema(df.schema) // Predictor.fit's schema check
     val label = lr.getLabelCol
-    val casted = dataset.withColumn(label, col(label).cast(DoubleType),
-      dataset.schema(label).metadata)
-    val rows = casted.select(
+    val numClassesMeta = MetadataUtils.getNumClasses(df.schema(label))
+    val rows = df.select(col("*"), when(train, struct(
       DatasetUtils.checkClassificationLabels(label, None),
       DatasetUtils.checkNonNegativeWeights(None),
-      DatasetUtils.checkNonNanVectors(lr.getFeaturesCol)).rdd
+      DatasetUtils.checkNonNanVectors(lr.getFeaturesCol))))
+    val outCols = Seq(lr.getRawPredictionCol, lr.getProbabilityCol, lr.getPredictionCol)
     val bounded = Seq(lr.lowerBoundsOnCoefficients, lr.upperBoundsOnCoefficients,
       lr.lowerBoundsOnIntercepts, lr.upperBoundsOnIntercepts).exists(lr.isSet(_))
-    if (lr.isSet(lr.weightCol) || bounded ||
-        lr.getFamily.toLowerCase(Locale.ROOT) == "multinomial" || rows.getNumPartitions != 1)
-      return lr.fit(dataset)
-    val numClassesMeta = MetadataUtils.getNumClasses(casted.schema(label))
-    val answer = rows.mapPartitions { it =>
-      val instances = it.map { case Row(l: Double, w: Double, v: Vector) => Instance(l, w, v) }
-      Iterator(fitPartition(lr, numClassesMeta, instances.toArray))
-    }.collect().head
-
-    val plan = readSummaries(lr, numClassesMeta, answer.features, answer.labels)
-    if (plan.multinomial) return lr.fit(dataset)
-    val n = plan.numFeatures
-    val model = if (lr.getFitIntercept && plan.constantLabel) { // `train`'s early return
-      createModel(lr, casted, plan.numClasses,
-        new SparseMatrix(1, n, new Array[Int](2), Array.emptyIntArray, Array.emptyDoubleArray,
-          isTransposed = true).compressed,
-        Vectors.dense(if (plan.numClasses == 2) Double.PositiveInfinity
-          else Double.NegativeInfinity),
-        Array(0.0))
-    } else {
-      val (solution, history) = answer.solved.get
-      val featuresStd = answer.features.std.toArray
-      val coefficients = new DenseMatrix(1, n, new Array[Double](n), isTransposed = true)
-      val intercept = Vectors.zeros(1)
-      new DenseMatrix(1, solution.length, solution).foreachActive { (i, j, v) =>
-        val isIntercept = lr.getFitIntercept && j == n
-        if (!isIntercept && featuresStd(j) != 0.0) coefficients.update(i, j, v / featuresStd(j))
-        if (isIntercept) intercept.toArray(i) = v
-      }
-      createModel(lr, casted, plan.numClasses, coefficients.compressed, intercept.compressed,
-        history)
-    }
-    model.setParent(lr) // Predictor.fit
+    if (lr.isSet(lr.weightCol) || bounded || !numClassesMeta.exists(_ <= 2) ||
+        lr.getFamily.toLowerCase(Locale.ROOT) == "multinomial" || outCols.exists(_.isEmpty) ||
+        rows.rdd.getNumPartitions != 1)
+      return lr.fit(df.filter(train)).transform(df)
+    val (n, features) = (numClassesMeta.get, df.schema.fieldIndex(lr.getFeaturesCol))
+    // ClassificationModel.transformSchema's column metadata
+    def meta(c: String, update: (StructType, String, Int) => StructType) =
+      update(new StructType, c, n)(c).metadata
+    val schema = StructType(df.schema.fields ++ Seq(
+      StructField(outCols(0), SQLDataTypes.VectorType, true,
+        meta(outCols(0), SchemaUtils.updateAttributeGroupSize)),
+      StructField(outCols(1), SQLDataTypes.VectorType, true,
+        meta(outCols(1), SchemaUtils.updateAttributeGroupSize)),
+      StructField(outCols(2), DoubleType, false, meta(outCols(2), SchemaUtils.updateNumValues))))
+    // a Dataset map keeps `df`'s partitioning, as `transform`'s projection
+    // does; its encoder drops column metadata, which the select restores
+    val scored = rows.mapPartitions { it =>
+      val all = it.toArray
+      val model = fitPartition(lr, n, all.flatMap(r => Option(r.getStruct(r.length - 1)))
+        .map { case Row(l: Double, w: Double, v: Vector) => Instance(l, w, v) })
+      all.iterator.map(r => Row.fromSeq(r.toSeq.init ++ model.score(r.getAs[Vector](features))))
+    }(Encoders.row(schema))
+    scored.select(schema.map(f =>
+      scored("`" + f.name.replace("`", "``") + "`").as(f.name, f.metadata)): _*)
   }
 
   /** `train`'s checks and decisions on the two summaries, in its order and
-    * with its messages. */
-  private def readSummaries(lr: LogisticRegression, numClassesMeta: Option[Int],
+    * with its messages, for a label of `numClasses` <= 2 classes (so a
+    * binomial fit). */
+  private def readSummaries(lr: LogisticRegression, numClasses: Int,
       features: SummarizerBuffer, labels: MultiClassSummarizer): Plan = {
     val numFeatures = features.mean.size
     val histogram = labels.histogram
-    val numClasses = numClassesMeta match {
-      case Some(n) =>
-        require(n >= histogram.length, s"Specified number of classes $n was " +
-          s"less than the number of unique labels ${histogram.length}.")
-        n
-      case None => histogram.length
-    }
-    val multinomial = lr.getFamily.toLowerCase(Locale.ROOT) match {
-      case "multinomial" => true
-      case "binomial" =>
-        require(numClasses == 1 || numClasses == 2, "Binomial family only supports 1 or 2 " +
-          s"outcome classes but found $numClasses.")
-        false
-      case _ => numClasses > 2 // "auto"
-    }
+    require(numClasses >= histogram.length, s"Specified number of classes $numClasses was " +
+      s"less than the number of unique labels ${histogram.length}.")
     if (lr.isDefined(lr.thresholds)) {
       require(lr.getThresholds.length == numClasses, lr.getClass.getSimpleName +
         ".train() called with non-matching numClasses and thresholds.length." +
@@ -131,29 +107,46 @@ object LocalLogisticFit {
     if (labels.countInvalid != 0) throw new SparkException(
       s"Classification labels should be in [0 to ${numClasses - 1}]. " +
         s"Found ${labels.countInvalid} invalid labels.")
-    Plan(numFeatures, numClasses, multinomial, histogram.count(_ != 0.0) == 1, histogram)
+    Plan(numFeatures, histogram.count(_ != 0.0) == 1, histogram)
   }
 
   /** Runs in the task: the summaries as `treeAggregate` builds them on one
-    * partition, then the optimization when `train` would reach it. */
-  private def fitPartition(lr: LogisticRegression, numClassesMeta: Option[Int],
-      instances: Array[Instance]): Answer = {
+    * partition, `train`'s checks on them, then its early return or its
+    * optimization, and the model `createModel` builds from the result. */
+  private def fitPartition(lr: LogisticRegression, numClasses: Int,
+      instances: Array[Instance]): Scorer = {
     def zero = (Summarizer.createSummarizerBuffer("mean", "std", "count"), new MultiClassSummarizer)
     val (f, l) = instances.foldLeft(zero) { case ((f, l), i) =>
       (f.add(i.features, i.weight), l.add(i.label, i.weight))
     }
     val (z, zl) = zero
-    val (features, labels) = (z.merge(f), zl.merge(l))
-    val solved = Try(readSummaries(lr, numClassesMeta, features, labels)).toOption
-      .filter(p => !p.multinomial && !(lr.getFitIntercept && p.constantLabel))
-      .map(optimize(lr, _, features, instances))
-    Answer(features, labels, solved)
+    val features = z.merge(f)
+    val plan = readSummaries(lr, numClasses, features, zl.merge(l))
+    val n = plan.numFeatures
+    if (lr.getFitIntercept && plan.constantLabel) { // `train`'s early return
+      new Scorer(lr, numClasses,
+        new SparseMatrix(1, n, new Array[Int](2), Array.emptyIntArray, Array.emptyDoubleArray,
+          isTransposed = true).compressed,
+        Vectors.dense(if (numClasses == 2) Double.PositiveInfinity
+          else Double.NegativeInfinity))
+    } else {
+      val solution = optimize(lr, plan, features, instances)
+      val featuresStd = features.std.toArray
+      val coefficients = new DenseMatrix(1, n, new Array[Double](n), isTransposed = true)
+      val intercept = Vectors.zeros(1)
+      new DenseMatrix(1, solution.length, solution).foreachActive { (i, j, v) =>
+        val isIntercept = lr.getFitIntercept && j == n
+        if (!isIntercept && featuresStd(j) != 0.0) coefficients.update(i, j, v / featuresStd(j))
+        if (isIntercept) intercept.toArray(i) = v
+      }
+      new Scorer(lr, numClasses, coefficients.compressed, intercept.compressed)
+    }
   }
 
   /** `train` from its regularization through `trainImpl`, for one binary
-    * coefficient set: the solution and the objective history. */
+    * coefficient set: the solution. */
   private def optimize(lr: LogisticRegression, plan: Plan, features: SummarizerBuffer,
-      instances: Array[Instance]): (Array[Double], Array[Double]) = {
+      instances: Array[Instance]): Array[Double] = {
     val n = plan.numFeatures
     val (featuresMean, featuresStd) = (features.mean.toArray, features.std.toArray)
     val (fitIntercept, standardization) = (lr.getFitIntercept, lr.getStandardization)
@@ -209,36 +202,27 @@ object LocalLogisticFit {
 
     // fitWithMean: optimize the intercept of the centred problem
     if (fitIntercept) x0(n) += BLAS.javaBLAS.ddot(n, x0, 1, scaledMean, 1)
-    val history = Array.newBuilder[Double]
-    var state: optimizer.State = null
-    val states = optimizer.iterations(new CachedDiffFunction(loss), new BDV[Double](x0))
-    while (states.hasNext) {
-      state = states.next()
-      history += state.adjustedValue
-    }
-    val solution = state.x.toArray // Breeze yields the initial state first
+    // Breeze yields the initial state first; `trainImpl` keeps the last
+    val solution = optimizer.iterations(new CachedDiffFunction(loss), new BDV[Double](x0))
+      .reduceLeft((_, s) => s).x.toArray
     if (fitIntercept) solution(n) -= BLAS.javaBLAS.ddot(n, solution, 1, scaledMean, 1)
-    (solution, history.result())
+    solution
   }
 
-  /** `train`'s `createModel`: the model, `lr`'s params and the summary. */
-  private def createModel(lr: LogisticRegression, dataset: Dataset[_], numClasses: Int,
-      coefficients: Matrix, intercept: Vector, history: Array[Double]): LogisticRegressionModel = {
-    val model = copyValues(lr,
-      new LogisticRegressionModel(lr.uid, coefficients, intercept, numClasses, false))
-    model.createSummary(dataset, history)
-    model
-  }
+  /** The model `train`'s `createModel` builds, with `lr`'s params, scoring
+    * a row as `transform`'s three columns do: `predictRaw`, then
+    * `raw2probability` and `raw2prediction` of the raw vector. A subclass
+    * only to reach those two, which are protected. */
+  private final class Scorer(lr: LogisticRegression, numClasses: Int, coefficients: Matrix,
+      intercept: Vector)
+    extends LogisticRegressionModel(lr.uid, coefficients, intercept, numClasses, false) {
+    lr.extractParamMap().toSeq.filter(p => hasParam(p.param.name))
+      .foreach(p => set(getParam(p.param.name), p.value))
 
-  /** `Params.copyValues`, which is protected: `from`'s defaults and set
-    * values onto `to`'s params of the same name. */
-  private def copyValues[T <: Params](from: Params, to: T): T = {
-    for (p <- from.params if to.hasParam(p.name)) {
-      val tp = to.getParam(p.name)
-      from.getDefault(p).foreach(to.defaultParamMap.put(tp, _))
-      from.get(p).foreach(to.set(tp, _))
+    def score(features: Vector): Seq[Any] = {
+      val raw = predictRaw(features)
+      Seq(raw, raw2probability(raw), raw2prediction(raw))
     }
-    to
   }
 
   /** A broadcast whose value is already in the task: the aggregator reads

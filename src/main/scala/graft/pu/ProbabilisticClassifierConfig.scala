@@ -11,12 +11,13 @@ sealed trait ProbabilisticClassifierConfig
 
 /** Defaults match the reference (ProbabilisticClassifierConfig.scala:11-13).
   *
-  * In a PU learner, each fit of this classifier runs as one Spark job, in
-  * the one task that holds the training rows, when the learner's stored
-  * input measures within one `spark.sql.adaptive.advisoryPartitionSizeInBytes`
-  * ([[org.apache.spark.ml.classification.LocalLogisticFit]]); the model is
-  * the one Spark ML's `fit` returns, bit for bit. A larger input fits with
-  * Spark ML's `fit`, one job per LBFGS loss evaluation.
+  * In a PU learner, each fit of this classifier and the scoring of every
+  * row with it run in the one task that holds the rows, inside the job
+  * that stores the round, when the learner's stored input measures within
+  * one `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+  * ([[org.apache.spark.ml.classification.LocalLogisticFit]]); the scores
+  * are Spark ML's `fit` + `transform`'s, bit for bit. A larger input fits
+  * with Spark ML's `fit`, one job per LBFGS loss evaluation.
   */
 case class LogisticRegressionConfig(maxIter: Int = 100,
                                     regParam: Double = 1.0e-8,

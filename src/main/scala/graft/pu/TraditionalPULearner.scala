@@ -13,7 +13,9 @@ import org.apache.spark.sql.functions.col
   * Control flow lives on the driver (ML iteration, not tuple-at-a-time);
   * data stays distributed. Per iteration: one materializing job carrying
   * the fused metrics ([[PUExpressions.iterMetricCols]] — the reference runs
-  * a separate `count()`) + one fit + one transform.
+  * a separate `count()`), with the round's fit and scoring inside it when a
+  * logistic regression fits in one task
+  * ([[TwoStepPULearner.refitAndRescore]]), else + one fit + one transform.
   */
 class TraditionalPULearner[
     E <: ProbabilisticClassifier[Vector, E, M],

@@ -1,11 +1,14 @@
 package graft.pu
 
+import org.apache.spark.ml.attribute.AttributeGroup
 import org.apache.spark.ml.classification.{LocalLogisticFit, LogisticRegression,
   ProbabilisticClassificationModel, ProbabilisticClassifier}
 import org.apache.spark.ml.feature.VectorIndexer
-import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.ml.linalg.{SQLDataTypes, Vector}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.{col, lit, max, min}
+
+import graft.functions.NativeExpressions.vectorSize
 
 /** Two-step PU learning skeleton: step one picks "reliable negatives" from
   * the unlabeled pool, step two trains a binary classifier on positives +
@@ -24,13 +27,18 @@ import org.apache.spark.sql.functions.col
   *    shuffle to one task, while an input whose partitions already average
   *    the advisory size keeps all of them;
   *  - a logistic regression whose input measures within one advisory
-  *    partition fits as one Spark job ([[LocalLogisticFit]]): the whole
-  *    LBFGS/OWLQN optimization runs in the task holding the partition and
-  *    returns the model `LogisticRegression.fit` would, bit for bit; Spark
-  *    ML's `fit`, which the reference calls, dispatches one job per loss
-  *    evaluation. The decision is
-  *    made once per `weight`/`zeroStep` call from the stored input's
-  *    measured bytes; a wider input and RandomForest keep Spark ML's `fit`.
+  *    partition fits and scores in the task holding the partition
+  *    ([[LocalLogisticFit]]): a lazy frame whose task runs the whole
+  *    LBFGS/OWLQN optimization and appends `transform`'s columns, bit for
+  *    bit, so each round (fit, scores, thresholds, metrics, store) is one
+  *    job. Spark ML's `fit`, which the reference calls, dispatches one job
+  *    per loss evaluation and sends the model through the driver. The
+  *    decision is made once per `weight`/`zeroStep` call from the stored
+  *    input's measured bytes; a wider input and RandomForest keep Spark
+  *    ML's `fit` and `transform`;
+  *  - the input's store job observes its vectors' sizes; when they agree,
+  *    the indexer's fit reads that size from its input's schema, so
+  *    `VectorIndexer` runs no `head()` job to find it.
   */
 abstract class TwoStepPULearner[
     E <: ProbabilisticClassifier[Vector, E, M],
@@ -66,49 +74,72 @@ abstract class TwoStepPULearner[
 
   /** [[zeroStep]], with the stored input it scored and the fit every refit
     * uses. The input is materialized once and narrowed by its measured
-    * bytes; the indexer fit, the classifier fit and the transform all read
-    * the narrowed frame, so every generation computed from the scores keeps
-    * its partition count. The stored input stays tracked: a caller that runs
+    * bytes; the indexer fit and the scoring fit both read the narrowed
+    * frame, so every generation computed from the scores keeps its
+    * partition count. The stored input stays tracked: a caller that runs
     * iterations hands it to [[TwoStepPULearner.IterationState]], which frees
     * it once the first generation exists. */
   protected def storedZeroStep(df: DataFrame, labelColumnName: String,
-      featuresColumnName: String, finalLabel: String): TwoStepPULearner.ZeroStep[M] = {
-    val (stored, _) = graft.CheckpointUtil.materialize(
-      indexLabelColumn(df, labelColumnName, ProbabilisticClassifierConfig.labelName, Seq("0", "1")))
+      featuresColumnName: String, finalLabel: String): TwoStepPULearner.ZeroStep = {
+    val (stored, observed) = graft.CheckpointUtil.materialize(
+      indexLabelColumn(df, labelColumnName, ProbabilisticClassifierConfig.labelName, Seq("0", "1")),
+      sizeMetrics(df, featuresColumnName): _*)
     val fit = fitter(graft.operators.Spread.measuredPartitions(stored) == 1)
     val input = graft.operators.Spread.toMeasuredSize(stored)
     val featureIndexer = new VectorIndexer()
       .setInputCol(featuresColumnName)
       .setOutputCol(ProbabilisticClassifierConfig.featuresName)
       .setMaxCategories(4) // >4 distinct values => treated as continuous
-    val preparedDf = featureIndexer.fit(input).transform(input)
+    val preparedDf = featureIndexer.fit(withVectorSize(input, featuresColumnName, observed))
+      .transform(input)
 
-    val model: M = fit(preparedDf)
-    val predictions = model.transform(preparedDf)
     TwoStepPULearner.ZeroStep(stored,
-      predictions.withColumn(finalLabel, probOfPositive(col("probability"))), fit)
+      fit(preparedDf, lit(true)).withColumn(finalLabel, probOfPositive(col("probability"))), fit)
   }
 
-  /** The classifier's fit: in one task for a logistic regression whose
-    * input fills at most one advisory partition (one task never holds more),
-    * else Spark ML's own. */
-  private def fitter(oneTask: Boolean): DataFrame => M = (classifier: AnyRef) match {
-    case lr: LogisticRegression if oneTask =>
-      prepared => LocalLogisticFit.fit(lr, prepared).asInstanceOf[M]
-    case _ => classifier.fit(_)
-  }
+  /** The min and max size of `df`'s vectors in column `c`, as metrics of
+    * the input's store job, when `c` is a vector column without an ML
+    * attribute size. */
+  private def sizeMetrics(df: DataFrame, c: String): Seq[Column] =
+    df.schema.find(_.name == c).filter(f => f.dataType == SQLDataTypes.VectorType &&
+      AttributeGroup.fromStructField(f).size < 0).toSeq
+      .flatMap(_ => Seq(min(vectorSize(col(c))).as("minSize"),
+        max(vectorSize(col(c))).as("maxSize")))
+
+  /** `input` with its vector column `c` carrying the ML attribute size that
+    * [[sizeMetrics]] observed on every vector, so `VectorIndexer.fit` reads
+    * the feature count from the schema instead of running a `head()` job
+    * (its model's output is the same either way; the caller's column keeps
+    * its own metadata). Vectors of differing sizes leave the column alone,
+    * so the stock error still fires. */
+  private def withVectorSize(input: DataFrame, c: String, observed: Row): DataFrame =
+    if (!observed.schema.fieldNames.contains("minSize")) input
+    else (observed.getAs[Integer]("minSize"), observed.getAs[Integer]("maxSize")) match {
+      case (lo, hi) if lo != null && lo == hi => input.withColumn(c,
+        col(c).as(c, new AttributeGroup(c, lo).toMetadata(input.schema(c).metadata)))
+      case _ => input
+    }
+
+  /** The classifier's fit on the rows where `train` holds, scoring every
+    * row of the frame: in one task for a logistic regression whose input
+    * fills at most one advisory partition (one task never holds more), else
+    * Spark ML's own `fit` and `transform`. */
+  private def fitter(oneTask: Boolean): TwoStepPULearner.FitAndScore =
+    (classifier: AnyRef) match {
+      case lr: LogisticRegression if oneTask =>
+        (df, train) => LocalLogisticFit.fitAndScore(lr, df, train)
+      case _ => (df, train) => classifier.fit(df.filter(train)).transform(df)
+    }
 
   /** Fit on the currently-labeled subset and rescore ALL rows, overwriting
     * `finalLabel`; shared by both iterative learners (reference:
     * TraditionalPULearner.scala:56-71, GradualReductionPULearner.scala:54-66).
     */
-  protected def refitAndRescore(fit: DataFrame => M, curDF: DataFrame, curLabel: String,
-                                finalLabel: String): DataFrame = {
-    val labeled = curDF.filter(col(curLabel) =!= undefLabel)
-    val prepared = indexLabelColumn(labeled, curLabel,
+  protected def refitAndRescore(fit: TwoStepPULearner.FitAndScore, curDF: DataFrame,
+      curLabel: String, finalLabel: String): DataFrame = {
+    val prepared = indexLabelColumn(curDF, curLabel,
       ProbabilisticClassifierConfig.labelName, Seq("0", "1"))
-    val model = fit(prepared)
-    model.transform(curDF)
+    fit(prepared, col(curLabel) =!= undefLabel)
       .withColumn(finalLabel, probOfPositive(col("probability")))
       .drop(transientCols: _*)
   }
@@ -118,9 +149,13 @@ abstract class TwoStepPULearner[
 object TwoStepPULearner {
   import PUExpressions.{IterMetrics, iterMetricCols}
 
+  /** A classifier fit on a frame's rows where the column holds, and the
+    * frame with the model's `transform` columns for every row. */
+  type FitAndScore = (DataFrame, Column) => DataFrame
+
   /** [[TwoStepPULearner.zeroStep]]'s outcome: the stored input, its scores,
     * and the classifier fit chosen for that input. */
-  final case class ZeroStep[M](input: DataFrame, scored: DataFrame, fit: DataFrame => M)
+  final case class ZeroStep(input: DataFrame, scored: DataFrame, fit: FitAndScore)
 
   /** Iteration-state manager: every generation is
     * [[graft.CheckpointUtil.materialize]]d — lineage-free (iterative

@@ -34,7 +34,9 @@ class SessionConfigSpec extends SparkSuite {
   // one home for codegen nodes (a new kernel goes through KernelCall or
   // sits beside the few classes that do per-row work around their call),
   // and one shim into Spark ML's internals (the one-task logistic
-  // regression fit, which must replay Spark's own training code)
+  // regression fit, which must replay Spark's own training code, and the
+  // model's own scoring calls made in that task; `predictRaw` is not
+  // owned, as a stub model overrides it)
   for ((pattern, owner) <- Seq(
       "SparkSession.builder" -> Some("Tables.scala"),
       "WeakHashMap" -> Some("SessionMemo.scala"),
@@ -45,7 +47,9 @@ class SessionConfigSpec extends SparkSuite {
       "doGenCode" -> Some("NativeExpressions.scala"),
       "package org.apache.spark.ml" -> Some("LocalLogisticFit.scala"),
       "BinaryLogisticBlockAggregator" -> Some("LocalLogisticFit.scala"),
-      "InstanceBlock" -> Some("LocalLogisticFit.scala")))
+      "InstanceBlock" -> Some("LocalLogisticFit.scala"),
+      "raw2probability(" -> Some("LocalLogisticFit.scala"),
+      "raw2prediction(" -> Some("LocalLogisticFit.scala")))
     test(s"$pattern appears under src/main ${owner.fold("nowhere")("only in " + _)}") {
       val users = scalaFiles("src/main")
         .filter(p => code(p).contains(pattern))

@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, GraftColumnBridge, Row}
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
@@ -59,7 +61,8 @@ class KernelCallSpec extends SparkSuite {
     "bpeStats" -> bpeStats(col("text"), Seq("t" -> "h", "th" -> "e", "o" -> "f")),
     "windowHashes" -> windowHashes(col("text"), 4),
     "windowHashes64" -> windowHashes64(col("text"), 4),
-    "hashEmbed" -> hashEmbed(col("text"), 8))
+    "hashEmbed" -> hashEmbed(col("text"), 8),
+    "vectorSize" -> vectorSize(col("vec")))
 
   /** sf0.001 documents plus null, empty, whitespace-only, ragged and
     * non-finite rows; every kernel input is a column, cached so that no
@@ -89,8 +92,14 @@ class KernelCallSpec extends SparkSuite {
       .withColumn("sh1", shingleHashes(col("text"), 1))
       // an ANSI cast raises on a non-finite element, in both modes alike
       .withColumn("finite", filter(col("v"), e => !isnan(e) && abs(e) < lit(1e6)))
+      // dense and sparse ML vectors, alternating by row
+      .withColumn("vec", when(col("v").isNotNull, when(col("id") % 2 === 0,
+        array_to_vector(col("v"))).otherwise(sparseVector(col("v")))))
       .cache()
   }
+
+  private val sparseVector =
+    udf((a: Seq[Double]) => Vectors.dense(a.toArray).toSparse: org.apache.spark.ml.linalg.Vector)
 
   private def interpreted = Tables.scopedSession(spark,
     "spark.sql.codegen.wholeStage" -> "false",

@@ -1,21 +1,26 @@
 package graft.pu
 
+import org.apache.spark.ml.attribute.AttributeGroup
 import org.apache.spark.ml.classification.{LocalLogisticFit, LogisticRegression,
   LogisticRegressionModel}
 import org.apache.spark.ml.feature.VectorIndexer
+import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.linalg.{SparseVector, Vector, Vectors}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.{array_repeat, col, lit, size, when}
 
 import graft.SparkSuite
 import graft.CheckpointUtil.{materialize, releaseStragglers}
 import ProbabilisticClassifierConfig.{featuresName, labelName}
 
-/** The one-task logistic-regression fit against Spark ML's own: every case
-  * is a one-partition frame fit by a stock `LogisticRegression` and by
-  * [[LocalLogisticFit]] with the same params, and the two models must agree
-  * bit for bit. If either path drifts (a Spark upgrade that changes
-  * `LogisticRegression.train`, say) this fails.
+/** The one-task logistic-regression fit and scoring against Spark ML's
+  * own: every case is a one-partition frame scored by a stock
+  * `LogisticRegression`'s `fit` + `transform` and by
+  * [[LocalLogisticFit.fitAndScore]] with the same params, and the two must
+  * agree bit for bit, schema included. The learners' `weight()` is held to
+  * the same rows against its stock path (a 1k advisory size). If either
+  * path drifts (a Spark upgrade that changes `LogisticRegression.train`,
+  * say) this fails.
   */
 class LocalLogisticFitSpec extends SparkSuite {
 
@@ -35,37 +40,46 @@ class LocalLogisticFitSpec extends SparkSuite {
   /** Seeded rows: features on unequal scales, labels from a noisy linear
     * score; `row` may rewrite each row's features. */
   private def dense(n: Int = 400, label: Int => Option[Double] = _ => None,
+      row: Array[Double] => Array[Double] = identity): DataFrame =
+    onePartition(denseRows(n, label, row), "y", "x")
+
+  private def denseRows(n: Int = 400, label: Int => Option[Double] = _ => None,
       row: Array[Double] => Array[Double] = identity): DataFrame = {
     val rnd = new scala.util.Random(7)
     val rows = (0 until n).map { i =>
       val x = Array.tabulate(6)(j => rnd.nextGaussian() * (j + 1) + j)
       val score = 0.8 * x(0) - 0.3 * x(1) + 0.2 * x(4) - 1.0 + rnd.nextGaussian()
-      (label(i).getOrElse(if (score > 0) 1.0 else 0.0), Vectors.dense(row(x)))
+      (i.toLong, label(i).getOrElse(if (score > 0) 1.0 else 0.0), Vectors.dense(row(x)))
     }
-    onePartition(spark.createDataFrame(rows).toDF("y", "x"), "y", "x")
+    spark.createDataFrame(rows).toDF("id", "y", "x")
   }
 
-  private def bits(a: Array[Double]): Seq[Long] = a.toSeq.map(java.lang.Double.doubleToRawLongBits)
+  /** A row's values, every double and vector element as its bits. */
+  private def bits(r: Row): Seq[Any] = r.toSeq.map {
+    case d: Double => java.lang.Double.doubleToRawLongBits(d)
+    case v: Vector => v.getClass -> v.toArray.toSeq.map(java.lang.Double.doubleToRawLongBits)
+    case x => x
+  }
 
-  private def params(m: LogisticRegressionModel): Map[String, Any] =
-    m.extractParamMap().toSeq.map(p => p.param.name -> p.value).toMap
+  /** Asserts equal rows (in order, bit for bit) and equal schemas. */
+  private def assertSameRows(ours: DataFrame, stock: DataFrame): Unit = {
+    assert(ours.schema == stock.schema, s"${ours.schema.json} vs ${stock.schema.json}")
+    val (o, s) = (ours.collect().map(bits), stock.collect().map(bits))
+    assert(o.length == s.length && o.nonEmpty)
+    o.zip(s).zipWithIndex.foreach { case ((a, b), i) => assert(a == b, s"row $i") }
+  }
 
-  /** Fits `df` both ways and asserts equal models, one job and one task. */
-  private def assertSameFit(est: LogisticRegression, df: DataFrame): LogisticRegressionModel = {
-    val stock = est.fit(df)
-    val (local, sched) = jobsDuring(LocalLogisticFit.fit(est, df))
+  /** Scores `df` both ways after a fit on its rows where `train` holds, and
+    * asserts the same rows from one job with one task; the stock model. */
+  private def assertSameFit(est: LogisticRegression, df: DataFrame,
+      train: Column = lit(true)): LogisticRegressionModel = {
+    val stock = est.fit(df.filter(train))
+    val ours = LocalLogisticFit.fitAndScore(est, df, train)
+    val (_, sched) = jobsDuring(ours.collect())
     assert(sched.jobs == 1 && sched.tasks == 1, sched)
-    assert(bits(local.coefficients.toArray) == bits(stock.coefficients.toArray),
-      s"${local.coefficients} vs ${stock.coefficients}")
-    assert(bits(Array(local.intercept)) == bits(Array(stock.intercept)),
-      s"${local.intercept} vs ${stock.intercept}")
-    assert(bits(local.summary.objectiveHistory) == bits(stock.summary.objectiveHistory))
-    assert(local.coefficientMatrix.getClass == stock.coefficientMatrix.getClass)
-    assert(local.numClasses == stock.numClasses && local.uid == stock.uid)
-    assert(params(local) == params(stock))
-    assert(local.parent eq est)
+    assertSameRows(ours, stock.transform(df))
     releaseStragglers()
-    local
+    stock
   }
 
   test("default LogisticRegressionConfig fits bit for bit in one job") {
@@ -115,6 +129,13 @@ class LocalLogisticFitSpec extends SparkSuite {
     assertSameFit(lr(), onePartition(PU.puEmbeddings(spark, sf0001), "puLabel", "features"))
   }
 
+  test("a round's training rows are fit, and every row is scored, bit for bit") {
+    val df = dense()
+    // the rows whose second feature exceeds 1.5, about two in five
+    val m = assertSameFit(lr(), df, PUExpressions.probOfPositive(col(featuresName)) > 1.5)
+    assert(m.summary.totalIterations > 2)
+  }
+
   test("all-positive and all-negative labels take train's constant-label return") {
     for (y <- Seq(1.0, 0.0)) {
       val m = assertSameFit(lr(), dense(label = _ => Some(y)))
@@ -124,19 +145,25 @@ class LocalLogisticFitSpec extends SparkSuite {
 
   /** The error and its innermost cause, as class name and message. */
   private def failure(body: => Any): Seq[(String, String)] = {
-    val e = intercept[Exception](body)
-    val root = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq.last
-    // a job failure names its stage and task; those differ between any two runs
-    Seq(e, root).map(t =>
-      t.getClass.getName -> t.getMessage.replaceAll("stage [0-9.]+|TID [0-9]+", ""))
+    val c = chain(intercept[Exception](body))
+    Seq(c.head, c.last)
   }
+
+  /** An error and each of its causes, as class name and message. */
+  private def chain(e: Throwable): Seq[(String, String)] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq.map(t =>
+      // a job failure names its stage and task; those differ between any two runs
+      t.getClass.getName -> t.getMessage.replaceAll("stage [0-9.]+|TID [0-9]+", ""))
 
   test("a NaN feature and a label of 2 fail as stock fit fails") {
     val nan = dense(row = x => if (x(0) > 2.5) x.updated(1, Double.NaN) else x)
     val two = dense(label = i => if (i == 17) Some(2.0) else None)
     for (df <- Seq(nan, two)) {
-      val (stock, local) = (failure(lr().fit(df)), failure(LocalLogisticFit.fit(lr(), df)))
-      assert(local == stock)
+      // thrown by the job that reads the scores: the stock error, or its cause
+      val ours = chain(intercept[Exception](LocalLogisticFit.fitAndScore(lr(), df, lit(true))
+        .collect()))
+      val stock = failure(lr().fit(df))
+      assert(stock.forall(ours.contains), s"$stock not in $ours")
     }
     assert(failure(lr().fit(two)).last._2.contains("number of unique labels 3"))
     assert(failure(lr().fit(nan)).last._2.contains("NaN"))
@@ -146,29 +173,113 @@ class LocalLogisticFitSpec extends SparkSuite {
   test("weight() fits LR in one task within one advisory partition, else with Spark ML's fit") {
     val pu = PU.puEmbeddings(spark, sf0001)
     val learner = TraditionalPULearnerConfig(0.5, 1, LogisticRegressionConfig()).build()
-    def sites(df: DataFrame) =
-      jobsDuring(learner.weight(df, "puLabel", "features", "out").count())._2.callSites
-    val oneTask = sites(pu)
-    assert(oneTask.exists(_.contains("LocalLogisticFit")), oneTask)
-    assert(!oneTask.exists(s => s.contains("RDDLossFunction") || s.contains("Summarizer")), oneTask)
+    def sched(df: DataFrame) =
+      jobsDuring(learner.weight(df, "puLabel", "features", "out").collect())._2
+    // the input's store, the indexer's statistics, the first generation, and
+    // the collect that scores the refit: each fit rides the job reading it
+    val oneTask = sched(pu)
+    assert(oneTask.jobs == 4, oneTask)
+    assert(!oneTask.callSites.exists(s => Seq("RDDLossFunction", "Summarizer",
+      "LocalLogisticFit.scala", "DatasetUtils.scala").exists(s.contains)), oneTask)
     // one partition, but more bytes than the 1k advisory size: stock fit
     val tiny = graft.Tables.scopedSession(spark,
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k")
-    val over = sites(org.apache.spark.sql.GraftColumnBridge.ofRows(tiny, pu))
+    val over = sched(org.apache.spark.sql.GraftColumnBridge.ofRows(tiny, pu)).callSites
     assert(over.exists(_.contains("RDDLossFunction")), over)
-    assert(!over.exists(_.contains("LocalLogisticFit")), over)
     // RandomForest always fits with Spark ML
     val rf = jobsDuring(TraditionalPULearnerConfig(0.5, 1, RandomForestConfig(numTrees = 4))
       .build().weight(pu, "puLabel", "features", "out").count())._2.callSites
-    assert(!rf.exists(_.contains("LocalLogisticFit")), rf)
+    assert(rf.exists(_.contains("RandomForest")), rf)
     releaseStragglers()
   }
 
   test("more than one partition goes to Spark ML's fit") {
     val two = dense().repartition(2)
-    val (m, sched) = jobsDuring(LocalLogisticFit.fit(lr(), two))
+    val (rows, sched) = jobsDuring(LocalLogisticFit.fitAndScore(lr(), two, lit(true)).count())
     assert(sched.callSites.exists(_.contains("RDDLossFunction")), sched)
-    assert(m.summary.objectiveHistory.nonEmpty)
+    assert(rows == 400)
     releaseStragglers()
+  }
+
+  /** `learner()`'s `weight()` rows on `df` (on one partition) equal its
+    * stock path's (a 1k advisory size: Spark ML's fit and transform) bit
+    * for bit, both learners. */
+  private def assertSameWeights(df: DataFrame, label: String = "puLabel"): Unit = {
+    val one = df.coalesce(1)
+    val tiny = graft.Tables.scopedSession(spark,
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k")
+    for (learner <- Seq[() => PositiveUnlabeledLearner](
+        () => TraditionalPULearnerConfig(0.5, 3, LogisticRegressionConfig()).build(),
+        () => GradualReductionPULearnerConfig(0.5, LogisticRegressionConfig()).build())) {
+      val (ours, sched) = jobsDuring {
+        val out = learner().weight(one, label, "features", "out")
+        out.collect()
+        out
+      }
+      assert(!sched.callSites.exists(_.contains("RDDLossFunction")), sched)
+      assert(ours.schema("features") == one.schema("features")) // its metadata too
+      val stock = learner().weight(org.apache.spark.sql.GraftColumnBridge.ofRows(tiny, one),
+        label, "features", "out")
+      assertSameRows(ours, stock)
+      releaseStragglers()
+    }
+  }
+
+  test("weight() rows equal the stock path's bit for bit: the PU embeddings fixture") {
+    assertSameWeights(PU.puEmbeddings(spark, sf0001))
+  }
+
+  test("weight() rows equal the stock path's bit for bit: a categorical feature") {
+    val df = denseRows(row = x => x.updated(3, math.floor(math.abs(x(3))) % 3))
+      .withColumnRenamed("x", "features")
+      .withColumn("puLabel", (col("y") === 1.0 && col("id") % 2 === 0).cast("int"))
+    assertSameWeights(df)
+  }
+
+  test("weight() rows equal the stock path's bit for bit: sparse TF-IDF (pu_text_lr)") {
+    assertSameWeights(PU.puDocuments(spark, sf0001))
+  }
+
+  test("weight() rows equal the stock path's bit for bit: labels all of one class") {
+    for (y <- Seq(1, 0))
+      assertSameWeights(PU.puEmbeddings(spark, sf0001).withColumn("puLabel", lit(y)))
+  }
+
+  test("a maxIters = 0 weight() is a lazy frame with the same rows on two actions") {
+    val out = TraditionalPULearnerConfig(0.5, 0, LogisticRegressionConfig()).build()
+      .weight(PU.puEmbeddings(spark, sf0001), "puLabel", "features", "out")
+    val (first, sched) = jobsDuring(out.collect())
+    assert(sched.jobs == 1, sched)
+    assert(first.map(bits).toSeq == out.collect().map(bits).toSeq && first.nonEmpty)
+    releaseStragglers()
+  }
+
+  test("a NaN feature fails weight() with the stock error") {
+    val nan = PU.puEmbeddings(spark, sf0001).withColumn("features", array_to_vector(
+      when(col("vec_id") === 7, array_repeat(lit(Double.NaN), size(col("embedding"))))
+        .otherwise(col("embedding"))))
+    val tiny = graft.Tables.scopedSession(spark,
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k")
+    def run(df: DataFrame) = TraditionalPULearnerConfig(0.5, 3, LogisticRegressionConfig())
+      .build().weight(df.coalesce(1), "puLabel", "features", "out").collect()
+    val stock = failure(run(org.apache.spark.sql.GraftColumnBridge.ofRows(tiny, nan)))
+    val ours = chain(intercept[Exception](run(nan)))
+    assert(stock.last._2.contains("NaN"), stock)
+    assert(ours.contains(stock.last), s"$stock not in $ours")
+    releaseStragglers()
+  }
+
+  test("VectorIndexer's output is the same with and without a stored size attribute") {
+    val df = PU.puEmbeddings(spark, sf0001).select(col("vec_id"), col("features"))
+    val size = df.head().getAs[Vector]("features").size
+    val sized = df.withColumn("features", col("features").as("features",
+      new AttributeGroup("features", size).toMetadata()))
+    def indexed(in: DataFrame) = jobsDuring(new VectorIndexer().setInputCol("features")
+      .setOutputCol("indexed").setMaxCategories(4).fit(in).transform(in))
+    val ((plain, bare), (withSize, attr)) = (indexed(df), indexed(sized))
+    assert(bare.callSites.exists(_.contains("DatasetUtils")), bare)
+    assert(!attr.callSites.exists(_.contains("DatasetUtils")) && attr.jobs == bare.jobs - 1, attr)
+    assert(withSize.schema("indexed") == plain.schema("indexed"))
+    assertSameRows(withSize.drop("features"), plain.drop("features"))
   }
 }
