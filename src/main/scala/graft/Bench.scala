@@ -19,10 +19,11 @@ import java.nio.file.{Files, Paths}
   * reads) — steady-state throughput is the number that answers "would this
   * hold at 100 TB". `Tables.localSession` sizes Spark's codegen class
   * cache above one full sweep's classes (2542 at sf0.1), so the steady
-  * sweep reuses the classes the cold sweep compiled. 122 still compile
-  * again at sf0.1: those inspected differ from a cached class only in the
-  * codegen stage id in the class name, which AQE can number differently
-  * from run to run.
+  * sweep reuses the classes the cold sweep compiled, and it names
+  * whole-stage classes without the codegen stage id, which AQE can number
+  * differently from run to run. At sf0.1 the steady sweep compiles 22
+  * classes again, in 10 queries (122 in 17 while the names carried the
+  * stage id).
   * Analysis and planning still run on every execution. Total also
   * includes cold time so regressions in planning cost stay visible.
   */
@@ -60,8 +61,7 @@ object Bench {
       catch { case e: Throwable =>
         errors(s"$n@$sweepName") = e.getClass.getName; -1.0 }
       finally {
-        spark.catalog.clearCache() // free per-query persists
-        CheckpointUtil.releaseStragglers() // and checkpoint blocks
+        CheckpointUtil.releaseStragglers() // free the query's stored intermediates
       }
     }
     def sweep(sweepName: String,

@@ -3,39 +3,39 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{count, lit}
 
-/** How operators store a generation of intermediate state, and how that
-  * storage is freed.
+/** How operators store an intermediate, and how that storage is freed.
   *
-  * [[materialize]] is the one way a generation is stored: one eager
-  * `localCheckpoint` job, its loop metrics observed in that same job, and a
-  * plan leaf that carries the generation's measured size. A materialized
-  * generation is lineage-free — its plan is a bare `LogicalRDD` leaf — so
-  * nothing reads the generation before it once it exists: a loop frees the
-  * superseded generation with [[releaseCheckpoint]] as soon as its
-  * successor is materialized. (Only then: a locally-checkpointed RDD cannot
-  * be recomputed after its blocks are freed.)
+  * [[materialize]] is the one storage verb: one eager `localCheckpoint`
+  * job, the caller's metrics observed in that same job, and a plan leaf
+  * that carries the stored frame's measured size and row count
+  * ([[measuredLeaf]] reads them back). Every intermediate that more than
+  * one consumer reads — a loop's generation, a shared corpus, a join's
+  * small side — is materialized; nothing under `src/main` persists or
+  * caches. A materialized frame is lineage-free — its plan is a bare
+  * `LogicalRDD` leaf — so nothing reads what came before it once it
+  * exists: a loop frees the superseded generation with
+  * [[releaseCheckpoint]] as soon as its successor is materialized. (Only
+  * then: a locally-checkpointed RDD cannot be recomputed after its blocks
+  * are freed.)
   *
-  * A multiply-read intermediate is materialized, not persisted: Spark 4.1's
-  * AQE re-describes the whole running query after every stage, and a
-  * persisted frame prints its cached plan under each reference, doubling
-  * the text per nesting level (a materialized leaf is one line). In one
-  * curation-chain update an InMemoryRelation printed 1,120 times (2.67 MB);
-  * materializing three of its persists cut a run's plan text from 42.6 MB
-  * to 7.3 MB, text the driver had spent 45% of its samples building.
+  * Why not `persist()`: Spark 4.1's AQE re-describes the whole running
+  * query after every stage, and a persisted frame prints its cached plan
+  * under each reference, doubling the text per nesting level (a
+  * materialized leaf is one line). In one curation-chain update an
+  * InMemoryRelation printed 1,120 times (2.67 MB); materializing three of
+  * its persists cut a run's plan text from 42.6 MB to 7.3 MB, text the
+  * driver had spent 45% of its samples building.
   *
-  * Storage that outlives its builder (a returned result's checkpoint, a
-  * loop's last generation, helper-scoped persists) is registered by
-  * [[track]] and freed BETWEEN queries via [[releaseStragglers]] — after the
-  * query's output is fully materialized — because
-  * `spark.catalog.clearCache()` never reaches checkpoint blocks (ADVICE
-  * r01). References are STRONG: release must be deterministic (a round-9
-  * weak-ref design raced the GC — a collected weak entry could never be
-  * unpersisted again, because the CacheManager's InMemoryRelation pins
-  * cached RDDs against ContextCleaner forever). A caller that never drains
-  * leaks exactly what an unreleased cache always leaked; the Verify and
-  * Bench mains and every spec drain between queries.
+  * Storage that outlives its builder (a returned result's leaf, a loop's
+  * last generation, a query's shared intermediates) is registered when
+  * stored and freed BETWEEN queries, once the query's output is fully
+  * materialized, by [[releaseStragglers]]: a library caller's one release
+  * call. References are STRONG so release is deterministic (a round-9
+  * weak-ref design raced the GC). The Verify and Bench mains and every
+  * spec drain between queries.
   */
 object CheckpointUtil {
 
@@ -44,10 +44,9 @@ object CheckpointUtil {
 
   private val observeIds = new AtomicLong
 
-  /** Record a frame whose storage outlives its builder; anything not
-    * explicitly released by its loop is freed at the next
-    * [[releaseStragglers]]. */
-  def track(df: DataFrame): DataFrame = synchronized {
+  /** Record a stored frame; anything not explicitly released by its loop
+    * is freed at the next [[releaseStragglers]]. */
+  private def track(df: DataFrame): DataFrame = synchronized {
     stragglers += df
     df
   }
@@ -99,17 +98,19 @@ object CheckpointUtil {
     pending.foreach(freeBlocks)
   }
 
-  /** A frame's OWN storage: its CacheManager entry, plus its checkpoint
-    * blocks when its plan IS the `LogicalRDD` leaf [[materialize]] returns.
-    * Leaves deeper in the plan belong to other generations, each tracked or
-    * released on its own; freeing them here too released a generation
-    * twice when a tracked persist was built over it. */
-  private def freeBlocks(df: DataFrame): Unit = {
-    df.unpersist(blocking = false)
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ =>
-    }
+  /** The `LogicalRDD` leaf of a frame [[materialize]] returned: its RDD,
+    * and the stored bytes and row count `materialize` measured as its
+    * `stats`. Fails loudly on any other frame — a derived frame's
+    * statistics are optimizer estimates, never measurements. */
+  def measuredLeaf(stored: DataFrame): LogicalRDD = stored.queryExecution.logical match {
+    case lr: LogicalRDD => lr
+    case other => throw new IllegalArgumentException(
+      s"a measured size needs a materialized frame, got ${other.nodeName}")
   }
+
+  /** A frame's OWN storage: the checkpoint blocks of the leaf
+    * [[materialize]] returned. Leaves deeper in a derived plan belong to
+    * other generations, each tracked or released on its own. */
+  private def freeBlocks(df: DataFrame): Unit =
+    measuredLeaf(df).rdd.unpersist(blocking = false)
 }

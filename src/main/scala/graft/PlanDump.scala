@@ -28,7 +28,6 @@ object PlanDump {
         println(s"[plandump] $q FAILED: ${e.getMessage}")
         false
       } finally {
-        spark.catalog.clearCache()
         CheckpointUtil.releaseStragglers()
       }
     }

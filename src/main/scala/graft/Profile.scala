@@ -61,7 +61,6 @@ object Profile {
         val wall = (System.nanoTime() - t0) / 1e9
         val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - cg0
         val compileMs = (CodeGenerator.compileTime - cgNs0) / 1e6
-        spark.catalog.clearCache()
         CheckpointUtil.releaseStragglers()
         // drain listener events deterministically (ADVICE r16: the fixed
         // sleep could read a short buffer on a loaded box)

@@ -76,6 +76,11 @@ object Tables {
     * sweep, `jcmd VM.metaspace`); `curate_corpus` peak RSS went from 3364
     * to 3453 MB (+2.6%, medians of 10 pairs) while its warm pass wall
     * fell from 5.70 to 4.05 s. Bounded on purpose: 0 means unbounded.
+    *
+    * `useIdInClassName=false`: a whole-stage class named after its codegen
+    * stage id, which AQE numbers as it plans, compiled again whenever a
+    * rerun numbered the stage differently. The cost: a stack trace no
+    * longer names the stage.
     */
   def localSession(
       cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4),
@@ -93,6 +98,7 @@ object Tables {
       .config("spark.sql.codegen.fallback", "false")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
@@ -100,8 +106,8 @@ object Tables {
 
   /** A child of `s` with `confs` set, so library code can run with other
     * settings without changing its caller's session. It shares the
-    * SparkContext, CacheManager and catalog (persisted frames and saved
-    * tables are still hit; rebind a frame with `GraftColumnBridge.ofRows`),
+    * SparkContext and catalog (stored frames and saved tables are still
+    * read; rebind a frame with `GraftColumnBridge.ofRows`),
     * and is built once per (session, confs): a fresh session's first query
     * pays ~0.2 s of session-state construction. */
   def scopedSession(s: SparkSession, confs: (String, String)*): SparkSession =

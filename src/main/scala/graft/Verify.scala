@@ -26,11 +26,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failures += name -> String.valueOf(e.getMessage)
       }
-      // queries persist() intermediates they fan out over; free them so
-      // later ML fits don't run with storage pinned by dead caches.
-      // clearCache never reaches localCheckpoint blocks — the straggler
-      // registry does (the result is fully written by now).
-      spark.catalog.clearCache()
+      // queries store the intermediates they fan out over; free them so
+      // later ML fits don't run with storage pinned by dead blocks (the
+      // result is fully written by now).
       CheckpointUtil.releaseStragglers()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

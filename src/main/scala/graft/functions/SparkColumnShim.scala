@@ -32,10 +32,14 @@ object GraftColumnBridge {
       df.queryExecution.analyzed)
 
   /** An eager checkpoint (a bare `LogicalRDD` leaf) rebuilt with the same
-    * RDD, partitioning and ordering, but planned against the bytes its RDD
-    * actually stores and `rowCount` instead of its origin plan's estimate.
-    * The block-manager status is `private[spark]`; the master holds every
-    * block's status synchronously once the checkpoint job has finished. */
+    * RDD and ordering, but planned against the bytes its RDD actually
+    * stores and `rowCount` instead of its origin plan's estimate. A
+    * one-partition RDD declares `SinglePartition`: the checkpoint otherwise
+    * carries `UnknownPartitioning`, and an aggregate over it plans an
+    * `Exchange SinglePartition` and a second job for data already in one
+    * place. The block-manager status is `private[spark]`; the master holds
+    * every block's status synchronously once the checkpoint job has
+    * finished. */
   def withMeasuredStats(checkpointed: DataFrame, rowCount: Long): DataFrame = {
     val leaf = checkpointed.queryExecution.logical
       .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
@@ -47,8 +51,10 @@ object GraftColumnBridge {
       }.sum
     val stats = org.apache.spark.sql.catalyst.plans.logical.Statistics(
       sizeInBytes = BigInt(bytes), rowCount = Some(BigInt(rowCount)))
+    val partitioning = if (leaf.rdd.getNumPartitions != 1) leaf.outputPartitioning
+      else org.apache.spark.sql.catalyst.plans.physical.SinglePartition
     classic.Dataset.ofRows(session,
-      leaf.copy()(session, Some(stats), Some(leaf.constraints)))
+      leaf.copy(outputPartitioning = partitioning)(session, Some(stats), Some(leaf.constraints)))
   }
 
   /** Register a function into a LIVE session's registry (the

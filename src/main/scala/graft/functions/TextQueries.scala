@@ -137,11 +137,12 @@ object TextQueries {
     * Shared by `text_lm_score` — one score definition, no fork. */
   private[graft] def lmScored(s: SparkSession, dir: String,
                               extra: Seq[(String, Column)] = Nil): DataFrame = {
-    // persist: the tokenized corpus feeds the vocabulary branch AND the
-    // scoring branch — without it the split+filter runs twice per doc
-    val base = graft.operators.Spread.ifNarrow(Tables.documents(s, dir), col("doc_id"))
-      .select(col("doc_id") +: extra.map { case (n, c) => c.as(n) } :+
-        TextFunctions.tokens(col("text")).as("toks"): _*).persist()
+    // stored: the tokenized corpus feeds the vocabulary branch AND the
+    // scoring branch — unstored, the split+filter runs twice per doc
+    val base = graft.CheckpointUtil.materialize(
+      graft.operators.Spread.pinIfNarrow(Tables.documents(s, dir), col("doc_id"))
+        .select(col("doc_id") +: extra.map { case (n, c) => c.as(n) } :+
+          TextFunctions.tokens(col("text")).as("toks"): _*))._1
     val counts = base.select(explode(col("toks")).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
     // sorted (keys, vals) ARRAYS, not a map: element_at on a map literal is

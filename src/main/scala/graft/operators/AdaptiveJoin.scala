@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.broadcast
 
-/** The probe-adaptive small-side join used everywhere a join's build side
+/** The size-adaptive small-side join used everywhere a join's build side
   * is *duplicate-proportional* (ownership tables, boilerplate sets, near-dup
   * cluster maps): tiny on a clean corpus, but unbounded in the adversarial
   * direction — a duplicate- or boilerplate-heavy corpus can push it past any
@@ -11,18 +11,18 @@ import org.apache.spark.sql.functions.broadcast
   * driver at exactly the scale that needs the degrade (the ADVICE-r11
   * mismatch class: a comment promising a degrade the hint makes impossible).
   *
-  * A limit-bounded size probe (`limit(max+1).count()` — never materializes
-  * more than max+1 rows, and only on executors) picks the arm: broadcast
-  * while the build side holds at most `maxRows` rows, shuffle-hash join on
-  * the keys beyond. Row-identical by construction — the join type and
-  * predicate are the same either way, only the physical strategy moves —
-  * so the degrade can never change results; each call site's spec pins
-  * both arms (ParagraphHygieneSpec, SubstringDedupSpec, DedupSpec).
-  *
-  * `small` MUST be persisted (registry-tracked) by the caller: the probe
-  * and the join both consume it, and for the duplicate-proportional frames
-  * here the lineage above it (LSH→CC, shingle-grain aggs) is the expensive
-  * part. The cache is partition-spillable, never driver-resident.
+  * The small side's exact row count picks the arm: broadcast while it
+  * holds at most `maxRows` rows, shuffle-hash join on the keys beyond.
+  * `small` MUST be materialized ([[graft.CheckpointUtil.materialize]]) by
+  * the caller: the count is the one `materialize` observed in its store
+  * job, read off the stored leaf, so the decision runs no job of its own,
+  * and the join reads the stored rows instead of re-running the lineage
+  * above them (LSH→CC, shingle-grain aggs), which is the expensive part.
+  * The stored blocks are partition-spillable, never driver-resident.
+  * Row-identical by construction — the join type and predicate are the
+  * same either way, only the physical strategy moves — so the degrade can
+  * never change results; each call site's spec pins both arms
+  * (ParagraphHygieneSpec, SubstringDedupSpec, DedupSpec).
   */
 private[graft] object AdaptiveJoin {
 
@@ -33,11 +33,7 @@ private[graft] object AdaptiveJoin {
 
   def apply(big: DataFrame, small: DataFrame, keys: Seq[String],
       joinType: String, maxRows: Long): DataFrame = {
-    // the probe is Int-limited; a budget at/above Int.MaxValue could never
-    // be exceeded by it and would silently disable the degrade
-    require(maxRows < Int.MaxValue,
-      s"broadcast budget $maxRows would defeat the size probe")
-    val fits = small.limit(maxRows.toInt + 1).count() <= maxRows
+    val fits = graft.CheckpointUtil.measuredLeaf(small).stats.rowCount.exists(_ <= maxRows)
     if (fits) big.join(broadcast(small), keys, joinType)
     else big.join(small.hint("shuffle_hash"), keys, joinType)
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType}
 
+import graft.CheckpointUtil.materialize
 import graft.Tables
 import graft.functions.TextFunctions
 
@@ -24,14 +25,14 @@ object DedupQueries {
   private def docsSpread(s: SparkSession, dir: String): DataFrame =
     Spread.ifNarrow(Tables.documents(s, dir), col("doc_id"))
 
-  /** embeddings, spread under the same gate. */
-  private def embSpread(s: SparkSession, dir: String): DataFrame =
-    Spread.ifNarrow(Tables.embeddings(s, dir), col("vec_id"))
+  /** documents spread under the same gate to full width, for a frame
+    * stored before per-pair kernels read it ([[Spread.pinIfNarrow]]). */
+  private def docsPinned(s: SparkSession, dir: String): DataFrame =
+    Spread.pinIfNarrow(Tables.documents(s, dir), col("doc_id"))
 
-  /** documents + per-doc trigram shingle-hash set. */
-  private def docShingles(s: SparkSession, dir: String, n: Int = 3): DataFrame =
-    docsSpread(s, dir)
-      .select(col("doc_id"), col("source"), shingleHashes(col("text"), n).as("shh"))
+  /** `docs` + per-doc n-gram shingle-hash set. */
+  private def docShingles(docs: DataFrame, n: Int = 3): DataFrame =
+    docs.select(col("doc_id"), col("source"), shingleHashes(col("text"), n).as("shh"))
 
   /** LSH candidates -> verified >=0.5-Jaccard pairs -> connected
     * components (id, canonical_id): the ONE near-dup cluster definition,
@@ -40,9 +41,8 @@ object DedupQueries {
     * threshold or band tweak can no longer fork the cluster definition
     * between the three. */
   private def nearDupClusters(s: SparkSession, dir: String): DataFrame = {
-    val d = docShingles(s, dir)
-      .withColumn("bands", bandHashes(minhashSignature(col("shh"))))
-      .persist()
+    val d = materialize(docShingles(docsPinned(s, dir))
+      .withColumn("bands", bandHashes(minhashSignature(col("shh")))))._1
     val cands = lshCandidatePairs(d.select("doc_id", "bands"), "doc_id", "bands")
     val pairs = cands
       .join(d.select(col("doc_id").as("id_a"), col("shh").as("shh_a")), "id_a")
@@ -67,13 +67,12 @@ object DedupQueries {
     val w = 20
     val wh = if (wide) NativeExpressions.windowHashes64(col("text"), w)
              else NativeExpressions.windowHashes(col("text"), w)
-    // persist: the exploded paragraph set feeds the canonical agg AND the
-    // join-back — without it the scan + kernel pass runs twice
-    val paras = docs
+    // stored: the exploded paragraph set feeds the canonical agg AND the
+    // join-back — unstored, the scan + kernel pass runs twice
+    val paras = materialize(docs
       .select(col("doc_id"), posexplode(wh))
       .select(col("doc_id"), col("pos").cast(LongType).as("pidx"),
-        col("col").as("h"))
-      .persist()
+        col("col").as("h")))._1
     val canon = paras.groupBy(col("h"))
       .agg(min(struct(col("doc_id"), col("pidx"))).as("c"))
       .select(col("h"), col("c").getField("doc_id").as("c_doc"),
@@ -99,7 +98,7 @@ object DedupQueries {
     }),
 
     "dedup_minhash_sig" -> ((s, dir) => {
-      docShingles(s, dir).select(
+      docShingles(docsSpread(s, dir)).select(
         col("doc_id"),
         size(col("shh")).cast(LongType).as("n_shingles"),
         combineHashes(minhashSignature(col("shh"))).as("sig_hash"))
@@ -107,11 +106,10 @@ object DedupQueries {
     }),
 
     "dedup_minhash_pairs" -> ((s, dir) => {
-      // persist: the signature table feeds the explode AND both join
-      // branches — without it the per-doc signature pipeline runs 3×
-      val d = docShingles(s, dir)
-        .withColumn("bands", bandHashes(minhashSignature(col("shh"))))
-        .persist()
+      // stored: the signature table feeds the explode AND both join
+      // branches — unstored, the per-doc signature pipeline runs 3×
+      val d = materialize(docShingles(docsPinned(s, dir))
+        .withColumn("bands", bandHashes(minhashSignature(col("shh")))))._1
       val cands = lshCandidatePairs(d.select("doc_id", "bands"), "doc_id", "bands")
       cands
         .join(d.select(col("doc_id").as("id_a"), col("shh").as("shh_a")), "id_a")
@@ -126,7 +124,7 @@ object DedupQueries {
       // one-permutation MinHash: ONE pass over the shingle set (vs k=16
       // passes) — the k× cheaper signature tier for a 100 TB scan, same
       // compact output surface as dedup_minhash_sig
-      docShingles(s, dir).select(
+      docShingles(docsSpread(s, dir)).select(
         col("doc_id"),
         size(col("shh")).cast(LongType).as("n_shingles"),
         combineHashes(ophSignature(col("shh"))).as("sig_hash"))
@@ -138,9 +136,8 @@ object DedupQueries {
       // verify as dedup_minhash_pairs — only the signature pass changes.
       // Output surface identical, so the two tiers are directly
       // comparable (recall overlap pinned in OphSpec).
-      val d = docShingles(s, dir)
-        .withColumn("bands", bandHashes(ophSignature(col("shh"))))
-        .persist()
+      val d = materialize(docShingles(docsPinned(s, dir))
+        .withColumn("bands", bandHashes(ophSignature(col("shh")))))._1
       val cands = lshCandidatePairs(d.select("doc_id", "bands"), "doc_id", "bands")
       cands
         .join(d.select(col("doc_id").as("id_a"), col("shh").as("shh_a")), "id_a")
@@ -155,9 +152,8 @@ object DedupQueries {
       // the daily-ingest shape: the docs with doc_id % 5 == 4 play the NEW
       // batch, the rest the existing corpus; candidates = new×corpus ∪
       // new×new — the corpus is never self-joined or re-banded
-      val d = docShingles(s, dir)
-        .withColumn("bands", bandHashes(minhashSignature(col("shh"))))
-        .persist()
+      val d = materialize(docShingles(docsPinned(s, dir))
+        .withColumn("bands", bandHashes(minhashSignature(col("shh")))))._1
       val isNew = col("doc_id") % 5 === 4
       val cands = incrementalCandidatePairs(
         d.filter(isNew).select("doc_id", "bands"),
@@ -197,11 +193,10 @@ object DedupQueries {
     }),
 
     "dedup_simhash_pairs" -> ((s, dir) => {
-      val d = docsSpread(s, dir).select(
+      val d = materialize(docsPinned(s, dir).select( // explode + both join branches
         col("doc_id"),
         simhash(shingleHashes(col("text"), 3)).as("sh"))
-        .withColumn("bands", simhashBands(col("sh")))
-        .persist() // reused by explode + both join branches
+        .withColumn("bands", simhashBands(col("sh"))))._1
       val cands = lshCandidatePairs(d.select("doc_id", "bands"), "doc_id", "bands")
       cands
         .join(d.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), "id_a")
@@ -216,7 +211,7 @@ object DedupQueries {
     // pipeline runs: quality-filter, drop near-duplicates (keep each
     // cluster's canonical doc), emit per-doc stats. One scan + the
     // banded near-dup machinery; the dedup decision is an anti-join whose
-    // victim list is duplicate-proportional — probe-adaptive
+    // victim list is duplicate-proportional — size-adaptive
     // ([[AdaptiveJoin]]): broadcast on a clean corpus, shuffle-hash on a
     // duplicate-heavy one (both arms pinned in DedupSpec).
     "pipeline_corpus_prep" -> ((s, dir) => corpusPrepFrame(s, dir)),
@@ -225,7 +220,7 @@ object DedupQueries {
     // source over all its docs' shingles — map-side partial agg, only
     // (groups × 16 longs) cross the shuffle.
     "dedup_minhash_by_source" -> ((s, dir) => {
-      docShingles(s, dir)
+      docShingles(docsSpread(s, dir))
         // drop shingle-less docs so a source with ONLY short docs is absent
         // on both engines (the oracle's unnest produces no rows for it;
         // without this filter Spark would emit its sentinel signature)
@@ -305,7 +300,7 @@ object DedupQueries {
     // CC the hard keep/drop queries use, so soft and hard dedup cannot
     // fork. weight_ppm = 1e6 div |cluster| keeps the compared surface
     // integer-only. The cluster map is duplicate-proportional, so the
-    // corpus-side join is probe-adaptive ([[AdaptiveJoin]]): broadcast
+    // corpus-side join is size-adaptive ([[AdaptiveJoin]]): broadcast
     // while it fits — the corpus itself never shuffles to learn its
     // weights — shuffle-hash on a duplicate-heavy corpus.
     "dedup_soft_weight" -> ((s, dir) => softWeightFrame(s, dir).drop("source")),
@@ -334,7 +329,7 @@ object DedupQueries {
     // codegen'd intersect as the Jaccard query; the training-data use is
     // boilerplate/quotation pruning that symmetric near-dup passes miss.
     "dedup_containment" -> ((s, dir) => {
-      val d = docShingles(s, dir, n = 2).persist()
+      val d = materialize(docShingles(docsPinned(s, dir), n = 2))._1
       gridBlockedPairs(d, "source", "doc_id")
         .withColumn("containment", containment(col("shh_a"), col("shh_b")))
         .filter(col("containment") >= 0.3)
@@ -345,7 +340,7 @@ object DedupQueries {
     }),
 
     "dedup_jaccard_blocked" -> ((s, dir) => {
-      val d = docShingles(s, dir, n = 2).persist()
+      val d = materialize(docShingles(docsPinned(s, dir), n = 2))._1
       gridBlockedPairs(d, "source", "doc_id")
         // necessary condition: J(A,B) <= min(|A|,|B|)/max(|A|,|B|) — prunes
         // most pairs before the expensive intersect, result-identical
@@ -367,13 +362,12 @@ object DedupQueries {
     // literal ±1 hyperplane dots (codegen'd), banded 4×4, candidates
     // verified with exact cosine.
     "dedup_srp_pairs" -> ((s, dir) => {
-      val e = embSpread(s, dir).select(
+      val e = materialize(Spread.pinIfNarrow(Tables.embeddings(s, dir), col("vec_id")).select(
         col("vec_id"), toDoubleArray(col("embedding")).as("v"))
         .withColumn("nrm", l2norm(col("v")))
         .filter(col("nrm") > 0.0)
         .withColumn("sig", srpSignature(col("v")))
-        .withColumn("bands", simhashBands(col("sig"), 4, 4))
-        .persist()
+        .withColumn("bands", simhashBands(col("sig"), 4, 4)))._1
       lshCandidatePairs(e.select("vec_id", "bands"), "vec_id", "bands")
         .join(e.select(col("vec_id").as("id_a"), col("v").as("v_a"),
           col("nrm").as("nrm_a")), "id_a")
@@ -386,14 +380,13 @@ object DedupQueries {
     }),
 
     "dedup_cosine_pairs" -> ((s, dir) => {
-      val e = embSpread(s, dir).select(
+      val e = materialize(Spread.pinIfNarrow(Tables.embeddings(s, dir), col("vec_id")).select(
         col("vec_id"), col("label"), toDoubleArray(col("embedding")).as("v"))
         .withColumn("nrm", l2norm(col("v")))
         // a zero vector has no defined cosine — drop it like every other
         // family (prepare's rule); without this the ANSI division throws
         // on a zero-norm corpus row (adversarial fixture)
-        .filter(col("nrm") > 0.0)
-        .persist()
+        .filter(col("nrm") > 0.0))._1
       gridBlockedPairs(e, "label", "vec_id")
         .withColumn("cos", cosine(col("v_a"), col("v_b"), col("nrm_a"), col("nrm_b")))
         .filter(col("cos") >= 0.4)
@@ -424,7 +417,7 @@ object DedupQueries {
     // some lower-id list-mate is tau-near it. Zero-norm vectors never enter
     // (cosine undefined — Similarity.prepare drops them).
     "dedup_semantic" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       semanticDedup(corpus, nCentroids = 16, tau = 0.4).orderBy("vec_id")
     }),
 
@@ -439,12 +432,11 @@ object DedupQueries {
     // are globally similar; only near-identical profiles are dups).
     "dedup_semantic_text" -> ((s, dir) => {
       import graft.functions.NativeExpressions
-      val emb = docsSpread(s, dir)
+      val emb = materialize(docsPinned(s, dir)
         .select(col("doc_id").as("vec_id"),
           NativeExpressions.hashEmbed(col("text"), 64).as("v"))
         .withColumn("nrm", l2norm(col("v")))
-        .filter(col("nrm") > 0.0)
-        .persist()
+        .filter(col("nrm") > 0.0))._1
       semanticDedup(emb, nCentroids = 16, tau = 0.9).orderBy("vec_id")
     }),
 
@@ -476,7 +468,7 @@ object DedupQueries {
     // levenshtein counts UTF-8 BYTES ('é'→2, astral→4), so cross-engine
     // distances diverge on any non-ASCII pair — a DuckDB limitation, not
     // an engine one. Driver testdata is ASCII, so the gate is unaffected.
-    "dedup_editdist_pairs" -> ((s, dir) => editDistPairs(docsSpread(s, dir))),
+    "dedup_editdist_pairs" -> ((s, dir) => editDistPairs(docsPinned(s, dir))),
 
     // Daily-ingest arm of the char-level family (the standing pattern:
     // every dedup family carries batch + incremental arms). Docs with
@@ -489,7 +481,7 @@ object DedupQueries {
     // Emitted pairs are EXACTLY the full rebuild restricted to pairs
     // touching the batch (the oracle runs the full CTE + that filter).
     "dedup_editdist_incremental" -> ((s, dir) =>
-      editDistPairsIncremental(docsSpread(s, dir), col("doc_id") % 5 === 4)
+      editDistPairsIncremental(docsPinned(s, dir), col("doc_id") % 5 === 4)
         .orderBy("id_a", "id_b")),
 
     // Canonical clusters over the char-level near-dup graph — the same
@@ -498,7 +490,7 @@ object DedupQueries {
     // composes the SAME shared recursive closure tail, so neither the
     // pair definition nor the closure can fork between the two graphs.
     "dedup_editdist_clusters" -> ((s, dir) =>
-      connectedComponents(editDistPairsUnordered(docsSpread(s, dir))
+      connectedComponents(editDistPairsUnordered(docsPinned(s, dir))
         .select(col("id_a"), col("id_b"))).orderBy("id")),
 
     // Leakage-safe train/valid/test split: `pipeline_split` keyed on the
@@ -508,7 +500,7 @@ object DedupQueries {
     // their own id), so every near-dup cluster lands wholly on one side
     // by construction. Cluster definition is the ONE [[nearDupClusters]]
     // (no fork); the cluster map is duplicate-proportional, so the
-    // corpus-side join is probe-adaptive ([[AdaptiveJoin]]).
+    // corpus-side join is size-adaptive ([[AdaptiveJoin]]).
     "pipeline_split_leakproof" -> ((s, dir) => leakproofSplit(s, dir))
   )
 
@@ -516,10 +508,9 @@ object DedupQueries {
     * degrade-arm spec. */
   private[operators] def leakproofSplit(s: SparkSession, dir: String,
       maxRows: Long = AdaptiveJoin.DefaultMaxBroadcastRows): DataFrame = {
-    // persist: the probe and the join both consume the cluster map
-    val canon = graft.CheckpointUtil.track(nearDupClusters(s, dir)
-      .select(col("id").as("doc_id"), col("canonical_id"))
-      .persist())
+    // stored: the join's arm is picked by its measured row count
+    val canon = materialize(nearDupClusters(s, dir)
+      .select(col("id").as("doc_id"), col("canonical_id")))._1
     val bucket = pmod(
       TextFunctions.polyHash(col("cluster_id").cast(StringType)), lit(100))
     AdaptiveJoin(docsSpread(s, dir).select(col("doc_id")), canon,
@@ -549,16 +540,15 @@ object DedupQueries {
     * reshuffles by key immediately; a sort ahead of it is a wasted
     * range exchange). */
   private[operators] def editDistPairsUnordered(docs: DataFrame): DataFrame = {
-    // persist: index explode, probe explode, and both text join-backs
+    // stored: index explode, probe explode, and both text join-backs
     // all re-consume the filtered corpus slice. The slice keeps every
     // doc that can be the SHORTER member of a guaranteed pair (length
     // band: longer >= EdMinLen and |la-lb| <= EdK implies shorter >=
     // EdMinLen - EdK); only the INDEX role requires the full EdMinLen
     // (its k+1 anchor blocks must exist).
-    val d = graft.CheckpointUtil.track(docs
+    val d = materialize(docs
       .filter(length(col("text")) >= EdMinLen - EdK)
-      .select(col("doc_id"), col("text"), length(col("text")).as("l"))
-      .persist())
+      .select(col("doc_id"), col("text"), length(col("text")).as("l")))._1
     editDistCandidates(d)
       .join(d.select(col("doc_id").as("id_a"), col("text").as("ta")), "id_a")
       .join(d.select(col("doc_id").as("id_b"), col("text").as("tb")), "id_b")
@@ -574,19 +564,18 @@ object DedupQueries {
   /** Incremental edit-distance near-dup pairs: [[editDistPairsUnordered]]
     * with the candidate stage swapped for the batch-scoped
     * [[editDistCandidatesIncremental]]; the verify stage (thresholded
-    * levenshtein over the SAME persisted corpus slice) is shared, so the
+    * levenshtein over the SAME stored corpus slice) is shared, so the
     * pair definition cannot fork between the batch and full arms.
     * Oracle = the full-rebuild pair CTE restricted to batch ids — the
     * standing equivalence every incremental dedup arm in this file is
     * held to. */
   private[operators] def editDistPairsIncremental(
       docs: DataFrame, isNew: org.apache.spark.sql.Column): DataFrame = {
-    // persist: probe/index explodes and both text join-backs re-consume
+    // stored: probe/index explodes and both text join-backs re-consume
     // the filtered slice (same band rationale as editDistPairsUnordered)
-    val d = graft.CheckpointUtil.track(docs
+    val d = materialize(docs
       .filter(length(col("text")) >= EdMinLen - EdK)
-      .select(col("doc_id"), col("text"), length(col("text")).as("l"))
-      .persist())
+      .select(col("doc_id"), col("text"), length(col("text")).as("l")))._1
     editDistCandidatesIncremental(d.filter(isNew), d.filter(!isNew))
       .join(d.select(col("doc_id").as("id_a"), col("text").as("ta")), "id_a")
       .join(d.select(col("doc_id").as("id_b"), col("text").as("tb")), "id_b")
@@ -656,15 +645,13 @@ object DedupQueries {
   private[operators] def softWeightFrame(s: SparkSession, dir: String,
       maxRows: Long = AdaptiveJoin.DefaultMaxBroadcastRows): DataFrame = {
     import Packing.DivOps
-    // persist: the LSH->CC lineage would otherwise evaluate THRICE
-    // (size agg, member join, and the adaptive probe)
-    val members = graft.CheckpointUtil.track(
-      nearDupClusters(s, dir).persist()) // (id, canonical_id)
-    val sized = graft.CheckpointUtil.track(members.join(
+    // the cluster map is connected components' stored last generation
+    val members = nearDupClusters(s, dir) // (id, canonical_id)
+    // stored: the join's arm is picked by its measured row count
+    val sized = materialize(members.join(
       members.groupBy(col("canonical_id")).agg(count(lit(1)).as("n_members")),
       "canonical_id")
-      .select(col("id").as("doc_id"), col("canonical_id"), col("n_members"))
-      .persist())
+      .select(col("id").as("doc_id"), col("canonical_id"), col("n_members")))._1
     AdaptiveJoin(docsSpread(s, dir).select(col("doc_id"), col("source")), sized,
       Seq("doc_id"), "left", maxRows)
       .select(col("doc_id"), col("source"),
@@ -719,12 +706,10 @@ object DedupQueries {
     * force the degrade arm (see the query comment). */
   private[operators] def corpusPrepFrame(s: SparkSession, dir: String,
       maxRows: Long = AdaptiveJoin.DefaultMaxBroadcastRows): DataFrame = {
-    // persist: the probe and the anti-join both consume the victim list,
-    // and its LSH->CC lineage is the expensive part
-    val victims = graft.CheckpointUtil.track(nearDupClusters(s, dir)
+    // stored: the anti-join's arm is picked by its measured row count
+    val victims = materialize(nearDupClusters(s, dir)
       .filter(col("id") =!= col("canonical_id"))
-      .select(col("id").as("doc_id"))
-      .persist())
+      .select(col("id").as("doc_id")))._1
     val filtered = docsSpread(s, dir)
       // compute the (large, interpreted) quality tree once and reuse
       .withColumn("quality", TextFunctions.qualityScore(col("text")))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.CheckpointUtil.materialize
 import graft.Tables
 import graft.functions.TextFunctions
 
@@ -69,11 +70,9 @@ object MultimodalQueries {
     * by construction (spec- and oracle-pinned). */
   private[operators] def perceptualPairs(feats: DataFrame,
       batchMin: Option[Long] = None): DataFrame = {
-    // registry-tracked (ADVICE r15): both persists outlive this builder —
-    // the between-queries sweep frees them instead of accumulating blocks
-    // over a 212-query bench session
-    val f = graft.CheckpointUtil.track(
-      feats.persist()) // bands + two verify join-backs
+    // stored frames outlive this builder — the between-queries sweep frees
+    // them instead of accumulating blocks over a 212-query bench session
+    val f = materialize(feats)._1 // bands + two verify join-backs
     // only NONZERO bands generate candidates: an all-zero band is the
     // absence of evidence, and on a same-length cohort it matches every
     // member — the 1M-payload scale probe measured the blowup (a ~50k-doc
@@ -81,24 +80,21 @@ object MultimodalQueries {
     // pairs). The standard ignore-empty-features LSH rule; the planted
     // re-encode classes keep >= 1 nonzero intact band by construction
     // (any nonempty payload has one), and the twin applies the same gate.
-    val allBands = f
+    val allBands = materialize(f
       .withColumn("bi", explode(sequence(lit(0L), lit(3L))))
       .select(col("id"), col("bi"), col("n_bytes"),
         slice(col("hist"), (col("bi") * 16 + 1).cast("int"), lit(16)).as("bc"))
-      .filter(aggregate(col("bc"), lit(0L), (a, x) => a + x) > 0)
-      .persist()
-    graft.CheckpointUtil.track(allBands)
+      .filter(aggregate(col("bc"), lit(0L), (a, x) => a + x) > 0))._1
     // the frequency cap (see [[PerceptualBandDf]]): one band-grain agg +
     // anti-join. The hot set is tiny on any discriminative corpus (a
     // value is hot because many rows share it, so there are few such
     // values) but adversarially it is corpus-proportional (bands/cap), so
     // the join degrades through AdaptiveJoin, never a forced broadcast.
-    val hot = graft.CheckpointUtil.track(
+    val hot = materialize(
       allBands.groupBy(col("bi"), col("n_bytes"), col("bc"))
         .agg(count(lit(1)).as("m"))
         .filter(col("m") > PerceptualBandDf)
-        .select(col("bi"), col("n_bytes"), col("bc"))
-        .persist())
+        .select(col("bi"), col("n_bytes"), col("bc")))._1
     val bands = AdaptiveJoin(allBands, hot, Seq("bi", "n_bytes", "bc"),
       "left_anti", AdaptiveJoin.DefaultMaxBroadcastRows)
     val bSide = batchMin.fold(bands)(m => bands.filter(col("id") >= m))

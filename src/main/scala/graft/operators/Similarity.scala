@@ -64,6 +64,17 @@ object Similarity {
       .withColumn("nrm", l2norm(col("v")))
       .filter(col("nrm") > 0.0)
 
+  /** [[prepareWith]] over `dir`'s embeddings table, stored with
+    * [[graft.CheckpointUtil.materialize]]: the corpus every query that reads
+    * the prepared vectors more than once (corpus and query sides,
+    * centroids, assignment, probes) starts from. Spread at full width
+    * ([[Spread.pinIfNarrow]]; `prepareWith`'s gate then passes it through):
+    * every reader runs dot-product kernels over the stored partitions. */
+  def storedCorpus(s: org.apache.spark.sql.SparkSession, dir: String,
+      extra: Column*): DataFrame =
+    graft.CheckpointUtil.materialize(prepareWith(
+      Spread.pinIfNarrow(graft.Tables.embeddings(s, dir), col("vec_id")), extra: _*))._1
+
   /** Probe rows for a query relation: (query_id, qv, qnrm) exploded to the
     * `nProbe` nearest centroid ids — the ONE probe shape every IVF tier
     * joins against (in-flight, distributed-join, salted, filtered). */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -159,7 +159,7 @@ object SimilarityQueries {
     * exact arm on the planted fixture. */
   private[operators] def maxsimTopKIvf(docs: DataFrame, k: Int): DataFrame = {
     import graft.functions.NativeExpressions
-    val ch = chunkVecs(docs).persist() // feeds centroids, assignment, query side
+    val ch = materialize(chunkVecs(docs))._1 // feeds centroids, assignment, query side
     val centSeq = Similarity.collectCentroids(
       ch.filter(col("chunk_idx") === 0L && col("doc_id") < NCentroids)
         .select(col("doc_id").as("cen_id"), col("v").as("cv"), col("nrm").as("cnrm")))
@@ -210,16 +210,16 @@ object SimilarityQueries {
   private[operators] def maxsimServing(s: SparkSession, dir: String,
       docs: => DataFrame): MaxsimArtifact =
     maxsimMemo.getOrBuild(s, dir, a => s.catalog.tableExists(a._1)) {
-      // scoped persist: the chunk frame feeds the centroid collect AND the
-      // bucketed write, both materialized inside this call — released here,
-      // not left for the between-queries sweep
-      val ch = chunkVecs(docs).persist()
+      // scoped: the chunk frame feeds the centroid collect AND the
+      // bucketed write, both run inside this call — released here, not
+      // left for the between-queries sweep
+      val ch = materialize(chunkVecs(docs))._1
       try {
         val centSeq = maxsimCentroids(ch)
         val tbl = scratchTable(s, "graft_maxsim_lists" + dirTag(dir))
         writeMaxsimChunks(ch, tbl, centSeq)
         (tbl, centSeq)
-      } finally ch.unpersist(blocking = false)
+      } finally graft.CheckpointUtil.releaseCheckpoint(ch)
     }
 
   /** The chunk-grain coarse quantizer: first chunk of the first
@@ -373,9 +373,11 @@ object SimilarityQueries {
     * ServedRetrieveSpec). */
   private[operators] def hybridRrfServed(s: SparkSession, dir: String,
       nProbe: Int = NProbe, candidates: Int = NCandidates): DataFrame = {
-    val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
-    val (tbl, centSeq, codebook) = ivfPqServing(s, dir, corpus)
+    // a served index reads the corpus once, for the query vector: only
+    // an index build stores it
+    val (tbl, centSeq, codebook) = ivfPqServing(s, dir, Similarity.storedCorpus(s, dir))
     val lex = lexTopK(s.table(bm25Served(s, dir)))
+    val corpus = Similarity.prepare(Tables.embeddings(s, dir))
     val probeRows = Similarity.collectProbes(corpus.filter(col("vec_id") === HybridQueryVec),
       centSeq, nProbe, "hybridRrfServed")
     val vec = probePqLists(s, tbl, codebook, PqM, probeRows, candidates, HybridK)
@@ -423,15 +425,15 @@ object SimilarityQueries {
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // persist: the prepared corpus (cast + interpreted norm per row) feeds
+    // stored: the prepared corpus (cast + interpreted norm per row) feeds
     // multiple branches (corpus/query sides; centroids/assign/probe)
     "sim_topk_brute" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       Similarity.bruteForceTopK(corpus, corpus.filter(col("vec_id") < NQueries), K)
         .orderBy("query_id", "rank")
     }),
     "sim_topk_ivf" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       Similarity.ivfTopK(corpus, col("vec_id") < NQueries, NCentroids, NProbe, K)
         .orderBy("query_id", "rank")
     }),
@@ -445,7 +447,7 @@ object SimilarityQueries {
     // rule would degenerate to 1 probe on them; measured spread on these
     // queries is 2-7 lists at sf0.001).
     "sim_topk_ivf_adaptive" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       Similarity.ivfTopKAdaptive(corpus,
           col("vec_id") >= NCentroids && col("vec_id") < NCentroids + NQueries,
           NCentroids, NProbeMax, ProbeDelta, K)
@@ -456,7 +458,7 @@ object SimilarityQueries {
     // threshold". Same centroids/assign/probe machinery as sim_topk_ivf;
     // the tau gate replaces the per-query selection state entirely.
     "sim_range_search" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       Similarity.ivfRangeSearch(corpus, col("vec_id") < NQueries,
           NCentroids, NProbe, TauRange)
         .orderBy("query_id", "vec_id")
@@ -469,7 +471,7 @@ object SimilarityQueries {
     // assignment and probe selection in-scan, ONE shuffle-hash join on
     // cen_id, TopKAgg per node. KGraph = 5 bounds the output at 5·|V|.
     "sim_knn_graph" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       Similarity.ivfJoinTopK(corpus, corpus, NCentroids, NProbe, KGraph)
         .orderBy("query_id", "rank")
     }),
@@ -483,7 +485,7 @@ object SimilarityQueries {
     // union — the equivalence is exact, so this shares sim_knn_graph's
     // twin construction verbatim.
     "sim_knn_graph_incremental" -> ((s, dir) => {
-      val full = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val full = Similarity.storedCorpus(s, dir)
       val isBatch = col("vec_id") >= NCentroids && col("vec_id") % 10 === 7
       val standing = full.filter(!isBatch)
       // the pre-existing graph, standing state
@@ -503,11 +505,11 @@ object SimilarityQueries {
     // left-semi join of the graph against its own reversal — graph-sized,
     // never corpus².
     "sim_cluster_knn" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
-      val g = Similarity.ivfJoinTopK(corpus, corpus, NCentroids, NProbe, KGraph)
-        .filter(col("cos") >= KnnClusterTau)
-        .select(col("query_id").as("id_a"), col("vec_id").as("id_b"))
-        .persist() // feeds both sides of the mutuality semi-join
+      val corpus = Similarity.storedCorpus(s, dir)
+      val g = materialize( // feeds both sides of the mutuality semi-join
+        Similarity.ivfJoinTopK(corpus, corpus, NCentroids, NProbe, KGraph)
+          .filter(col("cos") >= KnnClusterTau)
+          .select(col("query_id").as("id_a"), col("vec_id").as("id_b")))._1
       val mutual = g.join(
         g.select(col("id_b").as("id_a"), col("id_a").as("id_b")),
         Seq("id_a", "id_b"), "left_semi")
@@ -521,8 +523,7 @@ object SimilarityQueries {
     // [[Similarity.marginPairs]] for the two-directional-kNN shape and
     // the rank-ordered float folds that keep it hash-exact.
     "sim_margin_pairs" -> ((s, dir) => {
-      val corpus = Similarity.prepareWith(Tables.embeddings(s, dir), col("label"))
-        .persist()
+      val corpus = Similarity.storedCorpus(s, dir, col("label"))
       Similarity.marginPairs(corpus, col("label") % 2 === 0, KGraph,
           NCentroids, NProbe)
         .orderBy("query_id")
@@ -550,7 +551,7 @@ object SimilarityQueries {
     // scale arm of late interaction — chunk-grain IVF probing instead of
     // the all-chunks cross join (see [[maxsimTopKIvf]])
     "sim_maxsim_ivf" -> ((s, dir) =>
-      maxsimTopKIvf(Spread.ifNarrow(Tables.documents(s, dir), col("doc_id")),
+      maxsimTopKIvf(Spread.pinIfNarrow(Tables.documents(s, dir), col("doc_id")),
         MaxsimK).orderBy("rank")),
     // PERSISTED maxsim serving — the chunk table bucketed by cen_id once,
     // probed per query batch (see [[maxsimServed]]); row-identical to the
@@ -687,7 +688,7 @@ object SimilarityQueries {
     // no window anywhere. Twin: the shared ivfPqRankedCtes chain at 4
     // queries feeding the shared per-query mmrGreedyCtes steps.
     "pipeline_retrieve_multi" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       val (tbl, centSeq, codebook) = ivfPqServing(s, dir, corpus)
       val topn = probePqLists(s, tbl, codebook, PqM,
           serveProbeRows(corpus, centSeq, MultiNQueries), NCandidates, MmrN)
@@ -748,7 +749,7 @@ object SimilarityQueries {
     // cen_id shuffle-hash join as sim_join_ivf, tau gate instead of
     // per-query top-k state.
     "sim_range_join" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       Similarity.ivfRangeJoin(corpus, corpus.filter(col("vec_id") % 5 === 2),
           NCentroids, NProbe, TauRange)
         .orderBy("query_id", "vec_id")
@@ -758,7 +759,7 @@ object SimilarityQueries {
     // distributed relation end to end; both sides meet in ONE shuffle-hash
     // join on cen_id. See Similarity.ivfJoinTopK for the shuffle story.
     "sim_join_ivf" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       Similarity.ivfJoinTopK(corpus, corpus.filter(col("vec_id") % 5 === 2),
           NCentroids, NProbe, K)
         .orderBy("query_id", "rank")
@@ -771,7 +772,7 @@ object SimilarityQueries {
     // demo parameterization — production picks the threshold from the
     // same sampled stats pass joinSkewAwareSampled already runs.
     "sim_join_ivf_salted" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       Similarity.ivfJoinTopKSalted(corpus, corpus.filter(col("vec_id") % 5 === 2),
           NCentroids, NProbe, K, s = 4,
           hotThreshold = math.max(1L, corpus.count() / NCentroids))
@@ -785,7 +786,7 @@ object SimilarityQueries {
     // joinPqTopK for the shuffle story; oracle = the shared
     // ivfPqRankedCtes replay at this query predicate.
     "sim_join_pq" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       val (tbl, centSeq, codebook) = ivfPqServing(s, dir, corpus)
       joinPqTopK(s, tbl, codebook, PqM, corpus.filter(col("vec_id") % 5 === 2),
           centSeq, NProbe, NCandidates, K)
@@ -796,7 +797,7 @@ object SimilarityQueries {
     // fixture, as in sim_join_ivf_salted); row-identical to sim_join_pq —
     // the oracle is shared verbatim
     "sim_join_pq_salted" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       val (tbl, centSeq, codebook) = ivfPqServing(s, dir, corpus)
       joinPqTopK(s, tbl, codebook, PqM, corpus.filter(col("vec_id") % 5 === 2),
           centSeq, NProbe, NCandidates, K,
@@ -808,8 +809,7 @@ object SimilarityQueries {
     // never short of k the way post-filtering is); label=3 is a ~10%
     // selective filter on the fixture
     "sim_topk_filtered" -> ((s, dir) => {
-      val corpus = Similarity.prepareWith(Tables.embeddings(s, dir), col("label"))
-        .persist()
+      val corpus = Similarity.storedCorpus(s, dir, col("label"))
       Similarity.ivfTopKWhere(corpus, col("vec_id") < NQueries,
           col("label") === 3, NCentroids, NProbe, K)
         .orderBy("query_id", "rank")
@@ -820,7 +820,7 @@ object SimilarityQueries {
     // internals) can only be rows-only; that query stays as the ML
     // comparison arm. Recall vs brute is pinned in SimilaritySpec.
     "sim_topk_srp" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       Similarity.srpTopK(corpus, col("vec_id") < NQueries, K)
         .orderBy("query_id", "rank")
     }),
@@ -841,7 +841,7 @@ object SimilarityQueries {
     // trainer is the stride-init Lloyd below, so the twin replays training
     // and the tier is hash-exact.
     "sim_topk_ivf_kmeans" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       Similarity.ivfTopKLloyd(corpus, col("vec_id") < NQueries, NCentroids, NProbe, K,
           Similarity.TrainIters, Similarity.TrainSamplePct, Similarity.TrainMaxSample)
         .orderBy("query_id", "rank")
@@ -853,7 +853,7 @@ object SimilarityQueries {
     // unrolled in-order list_reduce CTEs and the whole tier (training
     // included) is hash-exact.
     "sim_topk_ivf_lloyd" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       Similarity.ivfTopKLloyd(corpus, col("vec_id") < NQueries, NCentroids,
           NProbe, K, iters = LloydIters, samplePct = 60, maxSample = LloydMaxSample)
         .orderBy("query_id", "rank")
@@ -872,17 +872,16 @@ object SimilarityQueries {
     // ASSIGNED docs).
     "pipeline_domain_discover" -> ((s, dir) => {
       import Packing.DivOps
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       val cents = Similarity.lloydCentroids(corpus, NCentroids, LloydIters,
         samplePct = 60, maxSample = LloydMaxSample)
       val assigned = Similarity.ivfAssign(corpus, cents)
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("source"))
-      // persist: the (cluster, source) counts feed BOTH the grand total
+      // stored: the (cluster, source) counts feed BOTH the grand total
       // and the per-cluster report — k·|sources|-bounded, tiny
-      val bySrc = assigned.join(docs, col("vec_id") === col("doc_id"))
+      val bySrc = materialize(assigned.join(docs, col("vec_id") === col("doc_id"))
         .groupBy(col("cen_id"), col("source"))
-        .agg(count(lit(1)).as("n_src"))
-        .persist()
+        .agg(count(lit(1)).as("n_src")))._1
       val tot = bySrc.agg(sum(col("n_src")).as("t"))
       bySrc.groupBy(col("cen_id"))
         .agg(sum(col("n_src")).as("n_docs"),
@@ -907,7 +906,7 @@ object SimilarityQueries {
     // no window, no second pass. Query side is the broadcast serving
     // regime; rel and the unit vector are in-scan expressions.
     "sim_mmr_rerank" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       val q = corpus.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("query_id"), col("v").as("qv"),
           col("nrm").as("qnrm"))
@@ -932,15 +931,15 @@ object SimilarityQueries {
     // neighborhood's consensus). Two synchronous modal-vote rounds
     // ([[Similarity.lpRound]]: most frequent neighbor label, tie to the
     // smallest) over the SAME distributed kNN graph sim_knn_graph builds
-    // — the graph is built once (the dominant cost) and persisted; each
+    // — the graph is built once (the dominant cost) and stored; each
     // round is one graph-sized equi-join + two partial-aggregable aggs,
     // integer votes end to end, so the whole pass is hash-exact. Emits
     // the full trajectory (label_0/1/2) so downstream filters can key on
     // "changed at round t" (disagreement with the neighborhood == the
     // standard noisy-label signal).
     "sim_label_prop" -> ((s, dir) => {
-      val corpus = Similarity.prepareWith(Tables.embeddings(s, dir), col("label"))
-        .persist() // feeds both join sides of the graph build + the seeds
+      // feeds both join sides of the graph build + the seeds
+      val corpus = Similarity.storedCorpus(s, dir, col("label"))
       // iterative state rolls as materialized generations (the loop
       // convention): each round's plan roots at lineage-free leaves, so
       // round T's plan — and the assembly's — never re-embeds the graph
@@ -960,7 +959,7 @@ object SimilarityQueries {
     }),
 
     "sim_topk_quantized" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       Similarity.quantizedTopK(corpus, col("vec_id") < NQueries, NCandidates, K)
         .orderBy("query_id", "rank")
     }),
@@ -968,7 +967,7 @@ object SimilarityQueries {
     // scoring (full-precision query vs PQ reconstruction), exact rescore of
     // survivors — deterministic end to end, hash-exact oracle.
     "sim_topk_pq" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       Similarity.pqTopK(corpus, col("vec_id") < NQueries, PqCodewords, PqM,
         NCandidates, K)
         .orderBy("query_id", "rank")
@@ -977,7 +976,7 @@ object SimilarityQueries {
     // is read per scored row — the canonical 100 TB ANN composition, still
     // hash-exact (deterministic quantizers + pinned tie-breaks).
     "sim_topk_ivfpq" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       Similarity.ivfPqTopK(corpus, col("vec_id") < NQueries, NCentroids, NProbe,
         PqCodewords, PqM, NCandidates, K)
         .orderBy("query_id", "rank")
@@ -990,7 +989,7 @@ object SimilarityQueries {
     // replays all m training chains as one subspace-grouped unrolled CTE
     // sequence, so codebook training itself is inside the driver gate.
     "sim_topk_pq_lloyd" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       Similarity.pqTopKWith(corpus, col("vec_id") < NQueries,
           Similarity.trainPqCodebook(corpus, PqCodewords, PqM,
             samplePct = 60, maxSample = LloydMaxSample, iters = LloydIters),
@@ -1003,7 +1002,7 @@ object SimilarityQueries {
     // sim_topk_pq; recall@10 >= 0.9 is pinned in SimilaritySpec, and the
     // twin replays training, so the tier is hash-exact.
     "sim_topk_pq_trained" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       Similarity.pqTopKTrained(corpus, col("vec_id") < NQueries,
         PqCodewordsTrained, PqMTrained, NCandidatesTrained, K)
         .orderBy("query_id", "rank")
@@ -1012,7 +1011,7 @@ object SimilarityQueries {
     // trained per-subspace codebooks, both at the Train* sizes. Recall is
     // spec-pinned; the twin replays both trainers, so the tier is hash-exact.
     "sim_topk_ivfpq_trained" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       Similarity.ivfPqTopKTrained(corpus, col("vec_id") < NQueries, NCentroids,
         NProbeTrained, PqCodewordsTrained, PqMTrained, NCandidatesIvfPqTrained, K)
         .orderBy("query_id", "rank")
@@ -1022,7 +1021,7 @@ object SimilarityQueries {
     // probe machinery is hash-exact for externally supplied centers (cen_id
     // independent of vec_id), whatever produced them.
     "sim_topk_ivf_fixed" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       val cents = corpus
         .filter(col("vec_id") >= 3 && col("vec_id") < 3 + 7 * NCentroids &&
           (col("vec_id") - 3) % 7 === 0)
@@ -1042,7 +1041,7 @@ object SimilarityQueries {
     // ones from prior sessions are dead files in spark-warehouse, never
     // reused (deleting them here would race a concurrent driver).
     "src_ivf_bucketed" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       val centSeq = Similarity.collectCentroids(
         Similarity.centroids(corpus, NCentroids))
       val tbl = scratchTable(s, "graft_ivf_lists")
@@ -1072,10 +1071,10 @@ object SimilarityQueries {
     // same as sim_topk_ivfpq) -> hash-exact oracle at the serving query
     // count.
     "src_ivfpq_bucketed" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
-      val (tbl, centSeq, codebook) = ivfPqServing(s, dir, corpus)
+      // the probe set reads the corpus once: only an index build stores it
+      val (tbl, centSeq, codebook) = ivfPqServing(s, dir, Similarity.storedCorpus(s, dir))
       probePqLists(s, tbl, codebook, PqM,
-        serveProbeRows(corpus, centSeq), NCandidates, K)
+        serveProbeRows(Similarity.prepare(Tables.embeddings(s, dir)), centSeq), NCandidates, K)
     }),
     // Append-maintained IVF-PQ serving — the daily-ingest arm of the
     // compressed index (the src_ivf_append lifecycle, PQ edition): the
@@ -1089,7 +1088,7 @@ object SimilarityQueries {
     // ARE the full corpus's first-N, require-pinned): ingest must not
     // change answers.
     "src_ivfpq_append" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       val base = corpus.filter(col("vec_id") < 400)
       val incr = corpus.filter(col("vec_id") >= 400)
       // quantizers from the BASE partition — identical to full-corpus
@@ -1105,7 +1104,7 @@ object SimilarityQueries {
         serveProbeRows(corpus, centSeq), NCandidates, K)
     }),
     "src_ivf_append" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       val base = corpus.filter(col("vec_id") < 400)
       val incr = corpus.filter(col("vec_id") >= 400)
       val centSeq = Similarity.collectCentroids(
@@ -1126,7 +1125,7 @@ object SimilarityQueries {
     // and the probe of the compacted table must be row-identical to the
     // in-flight IVF (same oracle as the append query proves it).
     "src_ivf_compact" -> ((s, dir) => {
-      val corpus = Similarity.prepare(Tables.embeddings(s, dir)).persist()
+      val corpus = Similarity.storedCorpus(s, dir)
       val base = corpus.filter(col("vec_id") < 400)
       val incr = corpus.filter(col("vec_id") >= 400)
       val centSeq = Similarity.collectCentroids(
@@ -1288,47 +1287,50 @@ object SimilarityQueries {
     // unpinned spread is AQE-coalescible and the stock 1 MB byte floor
     // re-serializes this small-byte/compute-dense frame (measured 1.65x
     // slower); pinIfNarrow keeps the 4 rounds parallel. Gated, so a real
-    // multi-split corpus never repartitions. Persisted across the rounds:
-    // every round re-reads the SAME spread frame — without the persist the
-    // scan + spread exchange re-runs per round (4 identical shuffles).
-    val emb = Spread.pinIfNarrow(Tables.embeddings(s, dir), col("vec_id"))
-      .select(col("embedding")).persist()
+    // multi-split corpus never repartitions. Stored across the rounds:
+    // every round re-reads the SAME spread frame — unstored, the scan +
+    // spread exchange re-runs per round (4 identical shuffles).
+    // native sequential dot (bit-identical to the aggregate(zip_with...)
+    // HOF by DotProduct's contract) — the HOF is interpreted per row
+    def y(v: Array[Double]) = graft.functions.NativeExpressions.dot(
+      Dedup.toDoubleArray(col("embedding")), array(v.toSeq.map(lit): _*))
+    // 64 ungrouped sums instead of posexplode + groupBy(j): the explode
+    // multiplied every row 64x through a hash aggregation; per-dim sums
+    // of the SAME floor(y*e_j*2^20) long terms are associative, so the
+    // result is bit-identical while the whole round stays one
+    // partial-agg pass with a 64-long row per task (guide §2.3:
+    // aggregate before you shuffle).
+    val sumCols = (0 until 64).map(j =>
+      sum(floor(col("y") * element_at(col("embedding"), j + 1).cast("double")
+        * 1048576.0).cast("long")).as(s"s$j"))
     var v = Array.fill(64)(0.125)
     var su = Array.fill(64)(0L)
+    def step(row: Row): Unit = {
+      su = Array.tabulate(64)(j => Option(row.getAs[java.lang.Long](s"s$j")).fold(0L)(_.longValue))
+      val z = su.map(_.toDouble / 1048576.0)
+      val norm = math.sqrt(z.foldLeft(0.0)((a, x) => a + x * x))
+      v = z.map(_ / norm)
+    }
+    // the first round's sums ride the store job
+    val (emb, first) = materialize(Spread.pinIfNarrow(Tables.embeddings(s, dir), col("vec_id"))
+      .select(col("embedding"), y(v).as("y")), sumCols: _*)
     try {
+      step(first)
       // AQE off for the loop's own tiny actions: each round is ONE 64-long
-      // aggregate over the persisted spread frame, but under AQE every
+      // aggregate over the stored spread frame, but under AQE every
       // exchange materializes as its own job (plus re-planning), so the
       // 4-round loop ran 14 driver jobs of pure orchestration (profiled:
       // stage time 0.4 s vs 1.4 s wall). With AQE off each round is exactly
       // one 2-stage job. Run on a child session, so the caller's session is
-      // untouched; it shares the CacheManager, so `emb`'s cache is still hit.
+      // untouched; the rebound plan is `emb`'s stored leaf, whose RDD the
+      // child reads as the parent would.
       val embOff = GraftColumnBridge.ofRows(
         Tables.scopedSession(s, "spark.sql.adaptive.enabled" -> "false"), emb)
-      for (_ <- 0 until PcaIters) {
-        val vLit = array(v.toSeq.map(lit): _*)
-        // native sequential dot (bit-identical to the aggregate(zip_with...)
-        // HOF by DotProduct's contract) — the HOF is interpreted per row
-        val y = graft.functions.NativeExpressions.dot(
-          Dedup.toDoubleArray(col("embedding")), vLit)
-        // 64 ungrouped sums instead of posexplode + groupBy(j): the explode
-        // multiplied every row 64x through a hash aggregation; per-dim sums
-        // of the SAME floor(y*e_j*2^20) long terms are associative, so the
-        // result is bit-identical while the whole round stays one
-        // partial-agg pass with a 64-long row per task (guide §2.3:
-        // aggregate before you shuffle).
-        val sumCols = (0 until 64).map(j =>
-          sum(floor(col("y") * element_at(col("embedding"), j + 1).cast("double")
-            * 1048576.0).cast("long")).as(s"s$j"))
-        val row = embOff.select(y.as("y"), col("embedding"))
+      for (_ <- 1 until PcaIters)
+        step(embOff.select(y(v).as("y"), col("embedding"))
           .agg(sumCols.head, sumCols.tail: _*)
-          .collect()(0)
-        su = Array.tabulate(64)(j => if (row.isNullAt(j)) 0L else row.getLong(j))
-        val z = su.map(_.toDouble / 1048576.0)
-        val norm = math.sqrt(z.foldLeft(0.0)((a, x) => a + x * x))
-        v = z.map(_ / norm)
-      }
-    } finally emb.unpersist(blocking = false)
+          .collect()(0))
+    } finally graft.CheckpointUtil.releaseCheckpoint(emb)
     (v, su)
   }
 

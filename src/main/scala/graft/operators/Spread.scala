@@ -2,8 +2,9 @@ package graft.operators
 
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.internal.SQLConf
+
+import graft.CheckpointUtil.measuredLeaf
 
 /** Parallelism gate for the ingest-side "spreading" repartition.
   *
@@ -52,10 +53,12 @@ object Spread {
     * `coalescePartitions.minPartitionSize` floor) re-serializes a keyed
     * spread of a small-byte frame to ONE task — bytes are the wrong cost
     * proxy for kernel work (r16/r17 measured: the PCA power-iteration scan
-    * lost 1.6x when its spread coalesced). Do NOT use on cheap frames: the
-    * same pin measured as a regression when applied to every ifNarrow site
-    * (32 tasks of dispatch on sub-millisecond work). Same gate as
-    * [[ifNarrow]], so a real multi-split corpus never repartitions. */
+    * lost 1.6x when its spread coalesced; a materialized spread that
+    * per-pair kernels read ran as one task, 5x slower than four). Do NOT
+    * use on cheap frames: the same pin measured as a regression when
+    * applied to every ifNarrow site (32 tasks of dispatch on
+    * sub-millisecond work). Same gate as [[ifNarrow]], so a real
+    * multi-split corpus never repartitions. */
   def pinIfNarrow(df: DataFrame, key: Column): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     spreadIfNarrow(df, w => if (w) df.repartition(target, key) else df)
@@ -82,7 +85,7 @@ object Spread {
     * advisory partition fits in one task
     * ([[org.apache.spark.ml.classification.LocalLogisticFit]]). */
   def toMeasuredSize(stored: DataFrame): DataFrame = {
-    val have = storedLeaf(stored).rdd.getNumPartitions
+    val have = measuredLeaf(stored).rdd.getNumPartitions
     val want = measuredPartitions(stored).min(have).max(1).toInt
     if (want < have) stored.coalesce(want) else stored
   }
@@ -95,13 +98,7 @@ object Spread {
   def measuredPartitions(stored: DataFrame): BigInt = {
     val advisory = JavaUtils.byteStringAsBytes(
       stored.sparkSession.conf.get(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES.key))
-    (storedLeaf(stored).stats.sizeInBytes + advisory - 1) / advisory
-  }
-
-  private def storedLeaf(stored: DataFrame): LogicalRDD = stored.queryExecution.logical match {
-    case lr: LogicalRDD => lr
-    case other => throw new IllegalArgumentException(
-      s"a measured size needs a materialized frame, got ${other.nodeName}")
+    (measuredLeaf(stored).stats.sizeInBytes + advisory - 1) / advisory
   }
 
   private def spreadIfNarrow(df: DataFrame, apply: Boolean => DataFrame): DataFrame = {

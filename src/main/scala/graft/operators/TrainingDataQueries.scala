@@ -132,6 +132,10 @@ object TrainingDataQueries {
   private def docsSpread(s: SparkSession, dir: String): DataFrame =
     Spread.ifNarrow(Tables.documents(s, dir), col("doc_id"))
 
+  /** [[docsSpread]] at full width, for a stored frame ([[Spread.pinIfNarrow]]). */
+  private def docsPinned(s: SparkSession, dir: String): DataFrame =
+    Spread.pinIfNarrow(Tables.documents(s, dir), col("doc_id"))
+
   /** Learn the [[BpeRounds]]-merge BPE table from `docs`' token-frequency
     * histogram (capped at [[BpeVocabCap]] — the driver collect stays
     * constant-size at any corpus scale). Shared by `pipeline_bpe` and the
@@ -230,9 +234,8 @@ object TrainingDataQueries {
     * family, the corpus is scanned twice rather than persisting the
     * token-grain exploded form (which is larger than the corpus).
     *
-    * ADAPTIVE (same limit-bounded-probe pattern as
-    * [[CurationPipeline.decontaminate]]): the broadcast is taken only
-    * while the ownership table holds at most `maxOwnersBroadcast` rows
+    * ADAPTIVE ([[AdaptiveJoin]]): the broadcast is taken only while the
+    * stored ownership table holds at most `maxOwnersBroadcast` rows
     * (16-byte (sh, own) pairs → ~160 MB at the default). A
     * boilerplate-heavy corpus whose repeated-shingle set outgrows that
     * budget degrades to a shuffle-hash join on sh — the same key the
@@ -249,15 +252,13 @@ object TrainingDataQueries {
       maxOwnersBroadcast: Long = SpanOwnersExactMax): DataFrame = {
     val ps = positionalShingles(docs, SubstrNgram, wide)
       .select(col("doc_id"), col("pos"), col("sh"))
-    // persisted (registry-tracked): the size probe and the join both
-    // consume it — unpersisted, the shingle-grain shuffle would run twice
-    val owners = graft.CheckpointUtil.track(ps.groupBy(col("sh"))
+    // stored: the join's arm is picked by its measured row count, and
+    // both arms re-read the stored owners (unlike decontaminate's
+    // Bloom arm, the degraded join still needs the ownership rows)
+    val owners = materialize(ps.groupBy(col("sh"))
       .agg(min(col("doc_id")).as("own"), max(col("doc_id")).as("mx"))
       .filter(col("own") =!= col("mx"))
-      .select(col("sh"), col("own"))
-      .persist())
-    // both arms re-consume the persisted owners (unlike decontaminate's
-    // Bloom arm, the degraded join still needs the ownership rows)
+      .select(col("sh"), col("own")))._1
     AdaptiveJoin(ps, owners, Seq("sh"), "inner", maxOwnersBroadcast)
       .filter(col("doc_id") =!= col("own"))
       .select(col("doc_id"), col("pos"))
@@ -337,21 +338,19 @@ object TrainingDataQueries {
     // fixture) — the substring family's r12 convention.
     val wh = if (wide) NativeExpressions.windowHashes64(col("text"), w)
              else NativeExpressions.windowHashes(col("text"), w)
-    // persist: the exploded paragraph set feeds the frequency chain AND
-    // the drop join — without it the scan + kernel pass runs twice
-    val paras = graft.CheckpointUtil.track(docs
+    // stored: the exploded paragraph set feeds the frequency chain AND
+    // the drop join — unstored, the scan + kernel pass runs twice
+    val paras = materialize(docs
       .select(col("doc_id"), posexplode(wh))
       .select(col("doc_id"), col("pos").cast(LongType).as("pidx"),
-        col("col").as("h"))
-      .persist())
-    // persisted: the size probe and the join both consume it
-    val boiler = graft.CheckpointUtil.track(paras
+        col("col").as("h")))._1
+    // stored: the join's arm is picked by its measured row count
+    val boiler = materialize(paras
       .groupBy(col("h"), col("doc_id"))
       .agg(count(lit(1)).as("occ"))
       .groupBy(col("h")).agg(count(lit(1)).as("nd"))
       .filter(col("nd") >= BoilerplateDf)
-      .select(col("h"), lit(true).as("bp"))
-      .persist())
+      .select(col("h"), lit(true).as("bp")))._1
     AdaptiveJoin(paras, boiler, Seq("h"), "left_outer", maxBoilerBroadcast)
       .withColumn("kept", coalesce(col("bp"), lit(false)) === false)
       .groupBy(col("doc_id"))
@@ -370,13 +369,12 @@ object TrainingDataQueries {
   private[operators] def tokenDrift(docs: DataFrame): DataFrame = {
     import Packing.DivOps
     val boundary = idBoundary(docs)
-    val counts = graft.CheckpointUtil.track(docs
+    val counts = materialize(docs // consumed by the totals agg AND the head selection
       .select((col("doc_id") <= boundary).as("base"),
         explode(TextFunctions.tokens(col("text"))).as("tok"))
       .groupBy(col("tok"))
       .agg(sum(when(col("base"), 1L).otherwise(0L)).as("n_base"),
-        sum(when(!col("base"), 1L).otherwise(0L)).as("n_new"))
-      .persist()) // consumed by the totals agg AND the head selection
+        sum(when(!col("base"), 1L).otherwise(0L)).as("n_new")))._1
     val totals = counts.agg(
       sum(col("n_base")).as("t_base"), sum(col("n_new")).as("t_new"))
     counts
@@ -439,10 +437,9 @@ object TrainingDataQueries {
       .filter(col("doc_id") <= boundary)
       .select(explode(shh).as("sh")).distinct())._1
     // batch arrays computed ONCE (explode consumer + size consumer)
-    val batch = graft.CheckpointUtil.track(docs
+    val batch = materialize(docs
       .filter(col("doc_id") > boundary)
-      .select(col("doc_id"), shh.as("shh"))
-      .persist())
+      .select(col("doc_id"), shh.as("shh")))._1
     val novel = batch
       .select(col("doc_id"), explode(col("shh")).as("sh"))
       .join(baseShh, Seq("sh"), "left_anti")
@@ -952,10 +949,9 @@ object TrainingDataQueries {
     // FP pattern oracle-replicable.
     "pipeline_decontaminate_bloom" -> ((s, dir) => {
       val n = 8
-      val withShh = docsSpread(s, dir)
+      val withShh = materialize(docsPinned(s, dir)
         .select(col("doc_id"), col("source"),
-          TextFunctions.shingleHashes(col("text"), n).as("shh"))
-        .persist()
+          TextFunctions.shingleHashes(col("text"), n).as("shh")))._1
       val evalShh = withShh.filter(col("source") === "src19")
         .select(explode(col("shh")).as("sh")).distinct()
       val bloom = evalShh.agg(
@@ -1064,10 +1060,9 @@ object TrainingDataQueries {
     // against the distinct build fingerprints) exposes the false-positive
     // rows to the oracle.
     "pipeline_bloom" -> ((s, dir) => {
-      val f = docsSpread(s, dir)
+      val f = materialize(docsPinned(s, dir)
         .select(col("doc_id"), col("source"),
-          TextFunctions.fingerprint(col("text")).as("fp"))
-        .persist()
+          TextFunctions.fingerprint(col("text")).as("fp")))._1
       val build = f.filter(col("source")
         .isin("src0", "src1", "src2", "src3", "src4"))
       val bloom = build.agg(
@@ -1123,11 +1118,11 @@ object TrainingDataQueries {
     // persisted manifest (production reads it back), and the compaction
     // prefix sum runs over affected survivors only.
     "pipeline_delete_propagate" -> ((s, dir) => {
-      val packed = Packing
+      // stored: feeds the dirty set, the tail agg, and the status join
+      val packed = materialize(Packing
         .packAssignments(docTokens(s, dir), "doc_id", "n_tokens", PackTokens)
         .withColumn("is_del", pmod(TextFunctions.polyHash(
-          concat(lit("del"), col("doc_id").cast(StringType))), lit(41)) === 0)
-        .persist() // feeds the dirty set, the tail agg, and the status join
+          concat(lit("del"), col("doc_id").cast(StringType))), lit(41)) === 0))._1
       val dirty = packed.filter(col("is_del")).select(col("pack_id")).distinct()
       val maxPack = packed.agg(max(col("pack_id")).as("max_pack"))
       val repacked = Packing.packAssignments(
@@ -1202,7 +1197,7 @@ object TrainingDataQueries {
     // degrades to the shingle-grain shuffle join at corpus scale — the
     // incremental-substring shape. The batch side's shingle arrays are
     // computed once and persisted (ingest-bounded). Integer ppm surface.
-    "pipeline_ngram_novelty" -> ((s, dir) => ngramNovelty(docsSpread(s, dir))),
+    "pipeline_ngram_novelty" -> ((s, dir) => ngramNovelty(docsPinned(s, dir))),
 
     // Curriculum ordering — emit the corpus in training order: highest-
     // quality bin first (clean text before noisy), and WITHIN a bin a
@@ -1333,18 +1328,16 @@ object TrainingDataQueries {
       // stage 1+2: quality ∧ importance gates
       val keep = dsirRanked(s, dir).filter(col("keep"))
         .select(col("doc_id"), col("dsir_rank"))
-      val surv = graft.CheckpointUtil.track(
-        CurationPipeline.qualitySurvivors(docsSpread(s, dir))
-          .join(keep, "doc_id").persist())
+      val surv = materialize(
+        CurationPipeline.qualitySurvivors(docsSpread(s, dir)).join(keep, "doc_id"))._1
       // stage 3: surgical substring excision within the survivor corpus
       val cov = excisedCoverage(repeatedSpanHits(surv), SubstrNgram)
-      val after = graft.CheckpointUtil.track(surv
+      val after = materialize(surv
         .select(col("doc_id"), col("dsir_rank"),
           TextFunctions.tokenCount(col("text")).cast(LongType).as("n_before"))
         .join(cov, Seq("doc_id"), "left")
         .withColumn("n_removed", coalesce(col("n_removed"), lit(0L)))
-        .withColumn("n_after", col("n_before") - col("n_removed"))
-        .persist())
+        .withColumn("n_after", col("n_before") - col("n_removed")))._1
       // stage 4: shelf-pack the surviving token mass (docs excised to
       // zero tokens drop here, like any empty doc)
       shelfPack(after.select(col("doc_id"), col("n_after").as("n_tokens")))
@@ -1423,12 +1416,11 @@ object TrainingDataQueries {
     // divide are correctly-rounded IEEE ops written as the identical
     // tree on both engines, so even the derived rate is hash-exact.
     "pipeline_mix_temperature" -> ((s, dir) => {
-      // persist: the tiny per-lang count frame feeds BOTH the min() agg
-      // and the rates projection — unpersisted, each branch re-scans the
+      // stored: the tiny per-lang count frame feeds BOTH the min() agg
+      // and the rates projection — unstored, each branch re-scans the
       // corpus (the dedup_soft_weight lesson)
-      val counts = docsSpread(s, dir)
-        .groupBy(col("lang")).agg(count(lit(1)).as("n_lang"))
-        .persist()
+      val counts = materialize(docsSpread(s, dir)
+        .groupBy(col("lang")).agg(count(lit(1)).as("n_lang")))._1
       val rates = counts
         .crossJoin(broadcast(counts.agg(min(col("n_lang")).as("n_min"))))
         .select(col("lang"), col("n_lang"),
@@ -1542,9 +1534,8 @@ object TrainingDataQueries {
     // at 100 TB you'd ship only the sketch.
     "text_cms_counts" -> ((s, dir) => {
       import s.implicits._
-      val toks = docsSpread(s, dir)
-        .select(explode(TextFunctions.tokenHashes(col("text"))).as("h"))
-        .persist() // feeds the sketch build AND the exact-count join
+      val toks = materialize(docsPinned(s, dir) // the sketch build AND the exact-count join
+        .select(explode(TextFunctions.tokenHashes(col("text"))).as("h")))._1
       val sketch = toks.agg(
         new CountMinAgg(CmsWidth, CmsDepth).column(col("h")).as("cms"))
       val probes = CmsProbeTerms.toDF("term")
@@ -1619,11 +1610,10 @@ object TrainingDataQueries {
       // df derives FROM the tf grain (each (doc,tok) row is one distinct
       // doc for tok) — same trick as the inverted index's postings-derived
       // df: drops the separate distinct pass and its exchange entirely.
-      // persist: tf feeds the df aggregate AND the scoring join.
-      val tf = docsSpread(s, dir)
+      // stored: tf feeds the df aggregate AND the scoring join.
+      val tf = materialize(docsSpread(s, dir)
         .select(col("doc_id"), explode(TextFunctions.tokens(col("text"))).as("tok"))
-        .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
-        .persist()
+        .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf")))._1
       val df = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
       val nd = docsSpread(s, dir).agg(count(lit(1)).as("nd"))
       val scored = tf.join(df, "tok").crossJoin(broadcast(nd))
@@ -1652,7 +1642,7 @@ object TrainingDataQueries {
     // paragraph dedup deliberately keeps once. See [[boilerplateAgg]] for
     // the plan shape and the adaptive broadcast-vs-shuffle degrade.
     "pipeline_boilerplate" -> ((s, dir) =>
-      boilerplateAgg(docsSpread(s, dir)).orderBy("doc_id")),
+      boilerplateAgg(docsPinned(s, dir)).orderBy("doc_id")),
 
     // IN-DOCUMENT repetition removal: later occurrences of a paragraph
     // already seen EARLIER IN THE SAME DOC are dropped (the self-repetition

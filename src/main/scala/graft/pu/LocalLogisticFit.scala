@@ -8,7 +8,7 @@ import breeze.linalg.{DenseVector => BDV}
 import breeze.optimize.{CachedDiffFunction, DiffFunction, FirstOrderMinimizer,
   LBFGS => BreezeLBFGS, OWLQN => BreezeOWLQN}
 
-import org.apache.spark.SparkException
+import org.apache.spark.{SparkException, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.ml.feature.{Instance, InstanceBlock, StandardScalerModel}
 import org.apache.spark.ml.linalg.{BLAS, DenseMatrix, Matrix, SparseMatrix, SQLDataTypes, Vector,
@@ -40,10 +40,16 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * messages, so an input `fit` rejects fails with the same error, thrown by
   * the job; NaN/Inf features and out-of-domain labels fail from `train`'s
   * own check columns. What this does not replay goes to stock `fit` and
-  * `transform`: more than one partition, a weight column, coefficient
-  * bounds, a label without two-class metadata (a multinomial fit), an empty
-  * output column. The estimator must carry no initial model
-  * (`setInitialModel` is `private[spark]`).
+  * `transform`: a weight column, coefficient bounds, a label without
+  * two-class metadata (a multinomial fit), an empty output column. The
+  * estimator must carry no initial model (`setInitialModel` is
+  * `private[spark]`).
+  *
+  * The input must be one partition. The caller decides that from the
+  * input's measured bytes (`TwoStepPULearner`'s fitter), so it is not
+  * re-derived here by planning the frame a second time on the driver; a
+  * task that reads any partition other than the first fails the job
+  * instead of fitting a model per partition.
   */
 object LocalLogisticFit {
 
@@ -52,7 +58,8 @@ object LocalLogisticFit {
       histogram: Array[Double])
 
   /** `df` with the columns `lr.fit(df.filter(train)).transform(df)` appends,
-    * as a lazy frame whose one task fits and scores. */
+    * as a lazy frame whose one task fits and scores. `df` must be one
+    * partition. */
   def fitAndScore(lr: LogisticRegression, df: DataFrame, train: Column): DataFrame = {
     lr.transformSchema(df.schema) // Predictor.fit's schema check
     val label = lr.getLabelCol
@@ -65,8 +72,7 @@ object LocalLogisticFit {
     val bounded = Seq(lr.lowerBoundsOnCoefficients, lr.upperBoundsOnCoefficients,
       lr.lowerBoundsOnIntercepts, lr.upperBoundsOnIntercepts).exists(lr.isSet(_))
     if (lr.isSet(lr.weightCol) || bounded || !numClassesMeta.exists(_ <= 2) ||
-        lr.getFamily.toLowerCase(Locale.ROOT) == "multinomial" || outCols.exists(_.isEmpty) ||
-        rows.rdd.getNumPartitions != 1)
+        lr.getFamily.toLowerCase(Locale.ROOT) == "multinomial" || outCols.exists(_.isEmpty))
       return lr.fit(df.filter(train)).transform(df)
     val (n, features) = (numClassesMeta.get, df.schema.fieldIndex(lr.getFeaturesCol))
     // ClassificationModel.transformSchema's column metadata
@@ -81,6 +87,9 @@ object LocalLogisticFit {
     // a Dataset map keeps `df`'s partitioning, as `transform`'s projection
     // does; its encoder drops column metadata, which the select restores
     val scored = rows.mapPartitions { it =>
+      val partition = TaskContext.getPartitionId()
+      if (partition != 0) throw new IllegalStateException(s"a one-task logistic regression " +
+        s"fit read partition $partition: its input must be one partition")
       val all = it.toArray
       val model = fitPartition(lr, n, all.flatMap(r => Option(r.getStruct(r.length - 1)))
         .map { case Row(l: Double, w: Double, v: Vector) => Instance(l, w, v) })

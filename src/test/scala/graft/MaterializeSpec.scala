@@ -104,13 +104,12 @@ class MaterializeSpec extends SparkSuite {
     try body(log) finally spark.sparkContext.removeSparkListener(log.listener)
   }
 
-  test("release frees each stored RDD once, even under a tracked persist built over it") {
+  test("release frees each stored RDD once, even under a frame stored from it") {
     CheckpointUtil.releaseStragglers()
-    // the curate_corpus shape: a materialized generation, and a tracked
-    // persist whose plan reads it (semantic survivors over CC labels)
+    // the curate_corpus shape: a materialized generation, and a stored
+    // frame computed from it (semantic survivors over CC labels)
     val (gen, _) = CheckpointUtil.materialize(spark.range(0, 100).toDF("id"))
-    val derived = CheckpointUtil.track(
-      gen.withColumn("sq", col("id") * col("id")).persist())
+    val (derived, _) = CheckpointUtil.materialize(gen.withColumn("sq", col("id") * col("id")))
     assert(derived.count() == 100)
     val counts = withStorageLog { log =>
       CheckpointUtil.releaseStragglers()

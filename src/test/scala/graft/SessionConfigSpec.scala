@@ -29,7 +29,10 @@ class SessionConfigSpec extends SparkSuite {
 
   // (pattern, the one src/main file allowed to use it, or None for no
   // file): one session builder, one hand-rolled per-session memo, one way
-  // to store a generation, no library code changing a session's conf
+  // to store an intermediate (materialize: a persisted or cached frame
+  // reprints its whole cached plan under every reference in AQE's plan
+  // text, a materialized one is a one-line leaf), no library code changing
+  // a session's conf
   // (scoped settings go through Tables.scopedSession's child session), and
   // one home for codegen nodes (a new kernel goes through KernelCall or
   // sits beside the few classes that do per-row work around their call),
@@ -42,6 +45,8 @@ class SessionConfigSpec extends SparkSuite {
       "WeakHashMap" -> Some("SessionMemo.scala"),
       "CompletableFuture" -> Some("SessionMemo.scala"),
       "localCheckpoint(" -> Some("CheckpointUtil.scala"),
+      ".persist(" -> None,
+      ".cache()" -> None,
       "conf.set(" -> Some("Tables.scala"),
       "conf.unset(" -> None,
       "doGenCode" -> Some("NativeExpressions.scala"),
@@ -56,17 +61,6 @@ class SessionConfigSpec extends SparkSuite {
         .map(_.getFileName.toString)
       assert(users == owner.toSeq, users)
     }
-
-  test(".persist( appears in neither CurationPipeline.scala nor Dedup.scala") {
-    // their intermediates are stored with materialize: a persisted frame
-    // reprints its whole cached plan under every reference in AQE's plan
-    // text, a materialized one is a one-line leaf
-    val files = scalaFiles("src/main/scala/graft/operators")
-      .filter(p => Set("CurationPipeline.scala", "Dedup.scala")(p.getFileName.toString))
-    assert(files.size == 2, files)
-    val users = files.filter(p => code(p).contains(".persist(")).map(_.getFileName.toString)
-    assert(users.isEmpty, users)
-  }
 
   test("the advisory partition size is read only by Spread's measured-size rule") {
     val readers = scalaFiles("src/main").filter { p =>
@@ -98,6 +92,7 @@ class SessionConfigSpec extends SparkSuite {
     val key = "spark.sql.codegen.cache.maxEntries"
     assert(spark.sparkContext.getConf.get(key) == "4096")
     assert(spark.conf.get(key) == "4096")
+    assert(spark.conf.get("spark.sql.codegen.useIdInClassName") == "false")
   }
 
   test("AQE keys localSession leaves alone resolve to SQLConf's defaults") {

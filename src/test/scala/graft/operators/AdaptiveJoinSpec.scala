@@ -2,20 +2,22 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
+import graft.CheckpointUtil.{materialize, releaseStragglers}
 import graft.SparkSuite
 
-/** Unit pins for the shared probe-adaptive join: the arm flips at
+/** Unit pins for the shared size-adaptive join: the arm flips at
   * EXACTLY maxRows (<=: broadcast, maxRows+1: shuffle-hash), both arms
-  * agree row-for-row on every join type the call sites use, and a budget
-  * at/above Int.MaxValue is rejected loudly (it would silently disable
-  * the degrade by capping the probe). The call-site specs pin each
-  * production frame; this suite pins the helper itself. */
+  * agree row-for-row on every join type the call sites use, the arm is
+  * read off the small side's stored row count without a job of its own,
+  * and a small side that was not materialized is rejected loudly. The
+  * call-site specs pin each production frame; this suite pins the helper
+  * itself. */
 class AdaptiveJoinSpec extends SparkSuite {
   import spark.implicits._
 
   private def big = (1L to 100L).map(i => (i, i % 7)).toDF("k", "v")
   private def small(n: Int) =
-    (1L to n.toLong).map(i => (i, i * 10)).toDF("k", "w").persist()
+    materialize((1L to n.toLong).map(i => (i, i * 10)).toDF("k", "w"))._1
 
   test("the arm flips at exactly the budget") {
     val s5 = small(5)
@@ -27,7 +29,7 @@ class AdaptiveJoinSpec extends SparkSuite {
       .contains("ShuffledHashJoin"), "n == maxRows+1 must degrade")
     assert(atBudget.exceptAll(overBudget).count() == 0 &&
       overBudget.exceptAll(atBudget).count() == 0)
-    s5.unpersist()
+    releaseStragglers()
   }
 
   test("arms agree on every call-site join type") {
@@ -38,14 +40,22 @@ class AdaptiveJoinSpec extends SparkSuite {
       assert(b.exceptAll(d).count() == 0 && d.exceptAll(b).count() == 0,
         s"arms diverge for $jt")
     }
-    s3.unpersist()
+    releaseStragglers()
   }
 
-  test("a probe-defeating budget is rejected") {
-    val s1 = small(1)
-    intercept[IllegalArgumentException] {
-      AdaptiveJoin(big, s1, Seq("k"), "inner", maxRows = Int.MaxValue.toLong)
+  test("the arm is picked without a job") {
+    val s5 = small(5)
+    for (maxRows <- Seq(5L, 4L)) {
+      val (_, sched) = jobsDuring(AdaptiveJoin(big, s5, Seq("k"), "left", maxRows))
+      assert(sched.jobs == 0, sched)
     }
-    s1.unpersist()
+    releaseStragglers()
+  }
+
+  test("a small side that is not materialized is rejected") {
+    val unstored = (1L to 3L).map(i => (i, i * 10)).toDF("k", "w")
+    intercept[IllegalArgumentException] {
+      AdaptiveJoin(big, unstored, Seq("k"), "inner", maxRows = 10L)
+    }
   }
 }

@@ -36,8 +36,9 @@ class PcaPowerSpec extends SparkSuite {
     val pca = SparkEntry.queries("sim_pca_power")
     pca(spark, sf001) // the spread probe is memoized per session: warm it
     val jobs = jobsDuring(pca(spark, sf001))._2.jobs
-    // one per round, plus the parquet schema read and the spread exchange
-    // under the cached frame (built at persist, under the caller's AQE)
+    // one per round (the first riding the store job), plus the parquet
+    // schema read and the spread exchange under the stored frame (built at
+    // the store, under the caller's AQE)
     assert(jobs == SimilarityQueries.PcaIters + 2, s"$jobs jobs")
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
   }

@@ -193,11 +193,14 @@ class LocalLogisticFitSpec extends SparkSuite {
     releaseStragglers()
   }
 
-  test("more than one partition goes to Spark ML's fit") {
+  test("a second partition fails the one-task fit loudly") {
+    // the caller decides one task from the measured bytes; a wider input
+    // is a caller bug, never a silent fit per partition
     val two = dense().repartition(2)
-    val (rows, sched) = jobsDuring(LocalLogisticFit.fitAndScore(lr(), two, lit(true)).count())
-    assert(sched.callSites.exists(_.contains("RDDLossFunction")), sched)
-    assert(rows == 400)
+    val (err, sched) = jobsDuring(intercept[Exception](
+      LocalLogisticFit.fitAndScore(lr(), two, lit(true)).count()))
+    assert(chain(err).exists(_._2.contains("read partition 1")), chain(err))
+    assert(!sched.callSites.exists(_.contains("RDDLossFunction")), sched)
     releaseStragglers()
   }
 
@@ -251,6 +254,10 @@ class LocalLogisticFitSpec extends SparkSuite {
     val (first, sched) = jobsDuring(out.collect())
     assert(sched.jobs == 1, sched)
     assert(first.map(bits).toSeq == out.collect().map(bits).toSeq && first.nonEmpty)
+    // the stored one-partition input declares one partition, so the count
+    // aggregates in the job that scores
+    val (n, counted) = jobsDuring(out.count())
+    assert(counted.jobs == 1 && n == first.length, counted)
     releaseStragglers()
   }
 

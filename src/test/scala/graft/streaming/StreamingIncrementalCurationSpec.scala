@@ -26,10 +26,10 @@ class StreamingIncrementalCurationSpec extends AnyFunSuite with SparkSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  /** Eager checkpoint REGISTERED for release — the spec's state frames
-    * must not outlive the test in the shared session. */
+  /** Stored REGISTERED for release — the spec's state frames must not
+    * outlive the test in the shared session. */
   private implicit class Ck(df: DataFrame) {
-    def ckpt: DataFrame = graft.CheckpointUtil.track(df.localCheckpoint(true))
+    def ckpt: DataFrame = graft.CheckpointUtil.materialize(df)._1
   }
 
   test("doc_id-ordered micro-batch ingest == one-shot pipeline_e2e_incremental") {

@@ -150,9 +150,9 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     val boundary = docs.agg(max(col("doc_id"))).head().getLong(0) * 4 / 5
     val shh = graft.functions.TextFunctions.shingleHashes(col("text"),
       graft.operators.TrainingDataQueries.SubstrNgram)
-    val baseShh = graft.CheckpointUtil.track(
+    val baseShh = graft.CheckpointUtil.materialize(
       docs.filter(col("doc_id") <= boundary)
-        .select(explode(shh).as("sh")).distinct().localCheckpoint(true))
+        .select(explode(shh).as("sh")).distinct())._1
     val arrivals = docs.filter(col("doc_id") > boundary)
       .as[(Long, String)].collect()
     assert(arrivals.length >= 3, "fixture must leave a non-trivial new batch")
